@@ -13,8 +13,14 @@ keeps the config-file-drives-everything shape:
   "sinks": [ {"name": "...", "predicate": "...", "path": "...",
               "format": "parquet"}, ... ],
   "enrich_defaults": {"facility": "unknown", "team": "unassigned",
-                      "min_level": 0}
+                      "min_level": 0},
+  "ship_mode":   "rename"                # or "iceberg" (table sinks)
 }
+
+A run stages every pending (sink, part), reconciles the staged
+readback against the write's own observation, ships, then commits the
+manifest under `workdir`, holding `workdir`'s lease throughout
+(`manifest.py`).
 """
 
 from __future__ import annotations
@@ -23,9 +29,8 @@ import json
 import os
 from dataclasses import dataclass, field
 
+from llogtail_spark.operators.parse import DEFAULT_GROK
 from llogtail_spark.operators.route import SinkRule, load_rules
-
-DEFAULT_GROK = r"^%{LOGLEVEL:level} %{WORD:component} %{GREEDYDATA:msg}$"
 
 
 @dataclass
@@ -38,10 +43,6 @@ class PipelineConf:
     enrich_defaults: dict = field(
         default_factory=lambda: {"facility": "unknown", "team": "unassigned", "min_level": 0}
     )
-    # retained for config compatibility; the pipeline now always uses
-    # the one-pass exploded staged write (see pipeline.py docstring) —
-    # profiling showed the persist variant regressed with cores.
-    scan_strategy: str = "one_pass"
     committed_at: str = "1970-01-01T00:00:00Z"  # injected, deterministic tests
     validate_on_start: bool = False
     # ship_mode:
@@ -52,11 +53,6 @@ class PipelineConf:
     #               requires the iceberg-spark-runtime jar). The
     #               cluster-scale answer to 10^6 serial driver renames.
     ship_mode: str = "rename"
-    # rename-mode parallelism: >1 ships a sink's staged partition dirs
-    # with a thread pool (renames are independent metadata ops); the
-    # manifest commits stay ordered after ALL of the sink's renames
-    # land, preserving push-then-checkpoint
-    ship_workers: int = 1
 
     @property
     def manifest_dir(self) -> str:

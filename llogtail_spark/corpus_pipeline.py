@@ -7,19 +7,23 @@ independent query; this module COMPOSES them into the one pipeline a
 pretraining-data team actually runs, with the same consistency
 contract as the log pipeline (`pipeline.py`):
 
-- every stage materializes its output, then commits a stage manifest
-  (push-then-checkpoint, log_collector.go:208-215) recording input
-  identity, output (rows, token total, xor checksum), and a params
-  fingerprint;
+- the whole run holds the workdir lease (`manifest.lease`);
+- every stage materializes its output with an observed write, its
+  readback is reconciled against the observation, and only then does
+  its stage manifest commit (push-then-checkpoint,
+  log_collector.go:208-215) recording input identity, output (rows,
+  token total, xor checksum), and a params fingerprint — so a
+  partial/corrupted stage file refuses to become lineage;
 - a killed run resumes by SKIPPING every stage whose manifest still
   validates against its upstream chain (input unchanged, same params)
   and recomputing from the first broken link — the batch analog of
   llogtail's offset-checkpoint recovery (utils.go:128-133);
-- each stage write is reconciled observe()-vs-readback before its
-  manifest commits, so a partial/corrupted stage file refuses to
-  become lineage (the pipeline.py job-2/job-3 discipline);
-- the final ship emits per-shard manifest rows (sink="packed"), and
+- the final ship copies the pending packed shards from a thread pool,
+  then commits one manifest row per shard (sink="packed"), and
   shipped shards are skipped on re-run (effectively-once).
+
+Records, the observe/readback aggregates, the reconciliation and the
+ship-then-commit step are `manifest.py`'s, shared with `pipeline.py`.
 
 Stage semantics are EXACTLY the oracle-green operators they compose
 (same functions, same constants), so the whole pipeline is
@@ -60,7 +64,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
+import time
 import zlib
 from dataclasses import dataclass, field
 from typing import Callable
@@ -69,6 +73,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from llogtail_spark import manifest as mf
+from llogtail_spark.manifest import StageManifest, commit_stage, read_stage
 from llogtail_spark.sources import reader
 
 # default mixture targets (basis points, sum 10000) over the `lang`
@@ -126,12 +131,6 @@ class CorpusConf:
     nshards: int = 8
     committed_at: str = ""
     validate_on_start: bool = True
-    # ship parallelism (the pipeline.py ship_workers discipline):
-    # per-shard copies out of the pack stage dir are independent
-    # filesystem ops, so >1 ships them from a thread pool; the
-    # manifest commits stay ordered after ALL pending copies land,
-    # preserving push-then-checkpoint. 1 = the serial loop.
-    ship_workers: int = 8
     # parquet row-group size for STAGE outputs: stage files are read
     # back by the next stage, and splits cannot cross row groups, so
     # one-row-group files cap the next stage's scan parallelism at
@@ -360,52 +359,6 @@ def corpus_funnel_counts(docs: DataFrame, benchmark: DataFrame,
     return rows
 
 
-# ------------------------------------------------------- stage manifests
-
-_STAGE_MF_SUFFIX = ".stage.json"
-
-
-@dataclass
-class StageManifest:
-    stage: str
-    in_rows: int
-    in_checksum: int
-    out_rows: int
-    tok_total: int
-    out_checksum: int
-    params_crc: int
-    committed_at: str = ""
-    # the stage output's Spark schema (StructType.json()): lets a
-    # resume read a SKIPPED stage's dir without inference — which
-    # raises on a legitimately empty output (zero data files)
-    schema_json: str = ""
-
-
-def _stage_mf_path(manifest_dir: str, stage: str) -> str:
-    return os.path.join(manifest_dir, f"{stage}{_STAGE_MF_SUFFIX}")
-
-
-def commit_stage(manifest_dir: str, m: StageManifest) -> str:
-    """Atomic temp-then-rename stage-manifest commit (the mf.commit
-    discipline — checkpoint.go:34-58's atomic write analog)."""
-    os.makedirs(manifest_dir, exist_ok=True)
-    path = _stage_mf_path(manifest_dir, m.stage)
-    fd, tmp = tempfile.mkstemp(dir=manifest_dir, suffix=".tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump(m.__dict__, f)
-    os.replace(tmp, path)
-    return path
-
-
-def read_stage(manifest_dir: str, stage: str) -> StageManifest | None:
-    path = _stage_mf_path(manifest_dir, stage)
-    try:
-        with open(path) as f:
-            return StageManifest(**json.load(f))
-    except (OSError, json.JSONDecodeError, TypeError):
-        return None
-
-
 # -------------------------------------------------------------- runner
 
 
@@ -468,13 +421,17 @@ def run_corpus_pipeline(
         raise NotImplementedError(
             f"workdir must be local (got {conf.workdir!r}); on a cluster "
             "each stage is an Iceberg table commit (pipeline.py ship path)")
+    with mf.lease(workdir):
+        return _run(spark, conf, failpoint)
+
+
+def _run(spark: SparkSession, conf: CorpusConf,
+         failpoint: Failpoint | None) -> CorpusRunResult:
     os.makedirs(conf.stages_dir, exist_ok=True)
 
     in_rows, in_crc = _input_identity(conf.input_path)
     docs0 = spark.read.parquet(conf.input_path)
     corpus, benchmark, bench_crc = _read_benchmark(spark, docs0, conf)
-
-    import time
 
     stages_run: list[str] = []
     stages_skipped: list[str] = []
@@ -511,10 +468,7 @@ def run_corpus_pipeline(
         if conf.validate_on_start and not valid and m is not None:
             # stale manifest: drop it so a crash mid-recompute can't
             # resurrect it (validateCpt analog, utils.go:128-133)
-            try:
-                os.remove(_stage_mf_path(conf.stage_manifest_dir, stage))
-            except OSError:
-                pass
+            mf.invalidate_stage(conf.stage_manifest_dir, stage)
         t_stage = time.time()
         if valid:
             stages_skipped.append(stage)
@@ -553,15 +507,9 @@ def run_corpus_pipeline(
             ck = F.xxhash64(F.col(conf.id_col))
             tok = F.lit(0)
         obs = Observation(f"stage-{stage}")
-        observed = out.withColumn("_ck", ck).observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.coalesce(F.sum(tok), F.lit(0)).alias("tok_total"),
-            F.coalesce(F.bit_xor("_ck"), F.lit(0)).alias("checksum"),
-        ).drop("_ck")
         tmp_dir = os.path.join(conf.stages_dir, f"_tmp_{stage}")
         shutil.rmtree(tmp_dir, ignore_errors=True)
-        writer = observed.write.mode("overwrite") \
+        writer = out.observe(obs, *mf.lineage(tok, ck)).write.mode("overwrite") \
             .option("parquet.block.size", str(conf.stage_block_bytes))
         if stage == "pack":
             writer = writer.partitionBy("shard")
@@ -572,30 +520,17 @@ def run_corpus_pipeline(
         if failpoint:
             failpoint(stage, "after_data")  # tests corrupt/kill here
 
-        # observe-vs-readback reconciliation BEFORE the manifest
-        # commit (pipeline.py job-3 discipline): checksum what landed
-        # in the files, refuse to commit lineage over a partial write.
-        # Explicit schema: a legitimately EMPTY stage (e.g. a quality
-        # gate that kills everything, or a mixture whose scarcest
-        # group vanished) writes no data files, and schema inference
-        # would raise instead of reconciling rows=0 against rows=0.
-        rb_df = spark.read.schema(observed.schema).parquet(data_dir)
+        # readback reconciliation BEFORE the manifest commit: checksum
+        # what landed in the files. Explicit schema: a legitimately
+        # EMPTY stage (e.g. a quality gate that kills everything, or a
+        # mixture whose scarcest group vanished) writes no data files,
+        # and schema inference would raise instead of reconciling
+        # rows=0 against rows=0.
+        rb_df = spark.read.schema(out.schema).parquet(data_dir)
         if stage == "pack":
             rb_df = _cast_pack(rb_df, conf)
-        rb = rb_df.agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.coalesce(F.sum(tok), F.lit(0)).alias("tok_total"),
-            F.coalesce(F.bit_xor(ck), F.lit(0)).alias("checksum"),
-        ).collect()[0]
-        if (int(rb["rows"]), int(rb["tok_total"]), int(rb["checksum"])) != (
-            int(got["rows"]), int(got["tok_total"]), int(got["checksum"])
-        ):
-            raise RuntimeError(
-                f"corpus stage {stage!r}: readback (rows={rb['rows']}, "
-                f"tok={rb['tok_total']}, xor={rb['checksum']}) disagrees "
-                f"with the write-stage observation (rows={got['rows']}, "
-                f"tok={got['tok_total']}, xor={got['checksum']}) — staged "
-                "files are incomplete or corrupted; refusing to commit")
+        mf.reconcile(f"corpus stage {stage!r}", got,
+                     mf.readback(rb_df, tok, ck).values())
         if failpoint:
             failpoint(stage, "before_commit")
         commit_stage(conf.stage_manifest_dir, StageManifest(
@@ -603,7 +538,7 @@ def run_corpus_pipeline(
             out_rows=int(got["rows"]), tok_total=int(got["tok_total"]),
             out_checksum=int(got["checksum"]), params_crc=params,
             committed_at=conf.committed_at,
-            schema_json=observed.schema.json(),
+            schema_json=out.schema.json(),
         ))
         if failpoint:
             failpoint(stage, "after_commit")
@@ -617,7 +552,7 @@ def run_corpus_pipeline(
     # commit (sink="packed"). Copy, not rename: the stage dir stays
     # intact as the resume source of truth, and the pack table is
     # metadata-sized next to the corpus (56 B/doc vs KBs of text). On
-    # a cluster this whole loop is ONE Iceberg overwritePartitions
+    # a cluster this whole step is ONE Iceberg overwritePartitions
     # commit (pipeline._ship_sink_iceberg).
     pack_dir = os.path.join(conf.stages_dir, "pack")
     pack_m = read_stage(conf.stage_manifest_dir, "pack")
@@ -635,83 +570,48 @@ def run_corpus_pipeline(
             done.add(e.part)
         else:
             mf.invalidate(conf.manifest_dir, e.sink, e.part)
-    shard_dirs = sorted(
-        e.name for e in os.scandir(pack_dir) if e.name.startswith("shard="))
+    shards = sorted(e.name.removeprefix("shard=") for e in os.scandir(pack_dir)
+                    if e.name.startswith("shard="))
     # ADVICE r05 #2: a shard present in out_path but absent from the
     # CURRENT pack output (nshards reduced, shard emptied on
     # recompute) is a stale product — read_packed would return its
     # phantom rows. Remove it and its manifest entry.
-    cur_shards = set(shard_dirs)
+    live = set(shards)
     if os.path.isdir(conf.out_path):
         for e in os.scandir(conf.out_path):
-            if e.name.startswith("shard=") and e.name not in cur_shards:
-                shutil.rmtree(os.path.join(conf.out_path, e.name),
-                              ignore_errors=True)
-                mf.invalidate(conf.manifest_dir, "packed",
-                              e.name.split("=", 1)[1])
-    committed: list[str] = []
-    skipped: list[str] = []
+            part = e.name.removeprefix("shard=")
+            if e.name.startswith("shard=") and part not in live:
+                shutil.rmtree(e.path, ignore_errors=True)
+                mf.invalidate(conf.manifest_dir, "packed", part)
     # per-shard stats in ONE column-pruned readback pass (an empty
     # pack output has no shard dirs and nothing to ship or read)
-    shard_stats = {} if not shard_dirs else {
-        str(r["shard"]): r
-        for r in spark.read.parquet(pack_dir)
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.coalesce(F.sum("n_tok"), F.lit(0)).alias("tok_total"),
-            F.coalesce(F.bit_xor(_pack_ck(conf)), F.lit(0)).alias("checksum"),
-        )
-        .collect()
-    }
-    # copy phase: pending shards ship concurrently (VERDICT r05 #2 —
-    # the pipeline.py ship_workers discipline; copies of distinct
-    # shard dirs are independent, and a crash mid-copy commits
-    # nothing, so the re-run re-copies idempotently). Commits follow
-    # in the serial loop below, preserving push-then-checkpoint and
-    # the per-shard failpoint semantics.
-    pending = [sd for sd in shard_dirs if sd.split("=", 1)[1] not in done]
+    shard_stats = {} if not shards else mf.readback(
+        spark.read.parquet(pack_dir), "n_tok", _pack_ck(conf), keys=("shard",))
+    pending = [p for p in shards if p not in done]
 
-    def _copy_shard(sd: str) -> None:
-        src = os.path.join(pack_dir, sd)
-        dst = os.path.join(conf.out_path, sd)
+    def _copy_shard(part: str) -> None:
+        src = os.path.join(pack_dir, f"shard={part}")
+        dst = os.path.join(conf.out_path, f"shard={part}")
         shutil.rmtree(dst, ignore_errors=True)
         shutil.copytree(src, dst)
 
     if pending:
         os.makedirs(conf.out_path, exist_ok=True)
-        if conf.ship_workers > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(conf.ship_workers) as ex:
-                list(ex.map(_copy_shard, pending))
-        else:
-            for sd in pending:
-                _copy_shard(sd)
-    for sd in shard_dirs:
-        part = sd.split("=", 1)[1]
-        if part in done:
-            skipped.append(part)
-            continue
-        if failpoint:
-            failpoint(f"ship:{part}", "before_commit")
-        s = shard_stats.get(part)
-        mf.commit(conf.manifest_dir, mf.ManifestEntry(
-            sink="packed", part=part,
-            row_count=int(s["row_count"]) if s else 0,
-            tok_total=int(s["tok_total"]) if s else 0,
-            checksum=int(s["checksum"]) if s else 0,
-            watermark_offset=pack_m.out_rows if pack_m else 0,
-            committed_at=conf.committed_at,
-            in_row_count=pack_m.out_rows if pack_m else 0,
-            in_checksum=pack_m.out_checksum if pack_m else 0,
-        ))
-        committed.append(part)
+    identity = (pack_m.out_rows, pack_m.out_checksum) if pack_m else None
+    committed = mf.ship_and_commit(
+        conf.manifest_dir,
+        [mf.lineage_entry("packed", p, shard_stats.get((p,)), identity,
+                          conf.committed_at)
+         for p in pending],
+        _copy_shard,
+        failpoint and (lambda phase, p: failpoint(f"ship:{p}", phase)),
+    )
 
     metrics = _metrics(spark, conf)
     return CorpusRunResult(
         stages_run=stages_run, stages_skipped=stages_skipped,
-        shards_committed=committed, shards_skipped=skipped,
+        shards_committed=committed,
+        shards_skipped=[p for p in shards if p in done],
         funnel=funnel, metrics=metrics, stage_timings=stage_timings,
     )
 

@@ -66,16 +66,6 @@ def order_hash(h_col, i: int) -> "F.Column":
     return (h * a + b) % MOD
 
 
-def fold_values(cols: list) -> "F.Column":
-    """Combine already-reduced hash values (each < MOD) into one —
-    the band-hash combiner."""
-    out = F.lit(0).cast("long")
-    for c in cols:
-        c = F.col(c) if isinstance(c, str) else c
-        out = (out * BAND_MULT + c) % MOD
-    return out
-
-
 # ---- SQL twins (DuckDB dialect) — used by oracle_sql() generators ----
 
 def char_fold_hash_sql(expr: str) -> str:

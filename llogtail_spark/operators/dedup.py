@@ -381,17 +381,7 @@ def _resolve_components_driver(
     (node -> root) table is broadcast back; untouched nodes are their
     own root via coalesce, so the table holds only nodes that appear
     in an edge."""
-    import os as _os
-    import sys as _sys
-    import time as _time
-
-    _timing = _os.environ.get("LLOGTAIL_STAGE_TIMING") == "1"
-    _t0 = _time.time()
     pdf = edges.filter(F.col("src") < F.col("dst")).select("src", "dst").toPandas()
-    if _timing:
-        print(f"[resolve-timing] driver-collect rows={len(pdf)}: "
-              f"{_time.time() - _t0:.2f}s", file=_sys.stderr, flush=True)
-        _t0 = _time.time()
     a = pdf["src"].to_numpy()
     b = pdf["dst"].to_numpy()
     ids = np.unique(np.concatenate([a, b])) if len(a) else np.array([])
@@ -422,9 +412,6 @@ def _resolve_components_driver(
     moved = np.nonzero(lab != np.arange(nv))[0]
     if stats_out is not None:
         stats_out["n_dropped"] = int(len(moved))
-    if _timing:
-        print(f"[resolve-timing] driver-numpy nv={nv} moved={len(moved)}: "
-              f"{_time.time() - _t0:.2f}s", file=_sys.stderr, flush=True)
 
     # broadcast-back table built as ONE pandas frame (Arrow path):
     # the previous per-tuple Python list serialized row-at-a-time and
@@ -547,26 +534,10 @@ def resolve_components(
     # LAZY checkpoint: materialized by the first action that
     # reads it (the gate count), so candidate generation costs zero
     # extra driver jobs
-    import os as _os
-    import sys as _sys
-    import time as _time
-
-    _timing = _os.environ.get("LLOGTAIL_STAGE_TIMING") == "1"
-
-    def _lap(label: str, t0: float) -> float:
-        if _timing:
-            print(f"[resolve-timing] {label}: {_time.time() - t0:.2f}s",
-                  file=_sys.stderr, flush=True)
-        return _time.time()
-
-    t = _time.time()
     edges = checkpoint(edges, eager=False)
     n_edges = edges.count()  # materializes the checkpoint either way
-    t = _lap(f"gate-count n_edges={n_edges}", t)
     if n_edges <= 2 * driver_edge_threshold:  # edges carry both directions
-        out = _resolve_components_driver(edges, nodes, id_col, stats_out)
-        _lap("driver-union-find", t)
-        return out
+        return _resolve_components_driver(edges, nodes, id_col, stats_out)
 
     # Above the driver gate: CONTRACT the edge set before resolving
     # (round-6 scaling fix — the distributed min-label rounds below
@@ -579,14 +550,10 @@ def resolve_components(
     # the level-independent-but-small driver union-find gate.
     # Components (and thus rep/keep labels) are provably unchanged.
     und = edges.filter(F.col("src") < F.col("dst"))
-    for _pass in range(max(0, contraction_passes)):
+    for _ in range(max(0, contraction_passes)):
         und = checkpoint(_contract_edges_once(und), eager=False)
-        n_und = und.count()
-        t = _lap(f"contraction-pass-{_pass} n_und={n_und}", t)
-        if n_und <= driver_edge_threshold:
-            out = _resolve_components_driver(und, nodes, id_col, stats_out)
-            _lap("driver-union-find", t)
-            return out
+        if und.count() <= driver_edge_threshold:
+            return _resolve_components_driver(und, nodes, id_col, stats_out)
     # still too large: fall back to the distributed rounds, but over
     # the CONTRACTED graph — fewer edges per round and star-shaped
     # components (diameter ~2), so the loop converges in ~2 rounds

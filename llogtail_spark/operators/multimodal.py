@@ -1,13 +1,11 @@
 """Multimodal column plumbing: image/audio/video as opaque binary
 columns with typed metadata.
 
-The decode kernels themselves are STUBBED (this container ships no
-image/audio libraries): `use_real_decoders()` flips to real libs when
-`PIL`/`soundfile` are importable, otherwise every byte-level decode is
+The decode kernels themselves are STUBBED: every byte-level decode is
 a clearly-marked deterministic fake derived from xxhash-like mixing of
 the payload — so the Spark-side plumbing (schema, Arrow batch shape,
 mapInPandas signatures, partitioning) is fully real and testable, and
-swapping in a real decoder changes one function.
+swapping in a real decoder (`PIL`, `soundfile`) changes one function.
 
 Scale shape: all operators are mapInPandas over binary columns —
 payload bytes never leave the executor, never shuffle (feature
@@ -51,15 +49,6 @@ def _digest_lanes(payload: bytes) -> list[int]:
     deterministic, engine-portable stand-in for a real encoder."""
     d = hashlib.sha256(payload).digest()
     return [int.from_bytes(d[4 * i: 4 * i + 4], "big") for i in range(FEATURE_DIM)]
-
-
-def have_real_decoders() -> bool:
-    try:  # pragma: no cover - absent in this container
-        import PIL  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def _fake_pixels(payload: bytes, width: int, height: int) -> np.ndarray:

@@ -3,15 +3,15 @@
 The reference ships opaque byte lines (buffer.go:13-16) and never
 parses them; the north rule adds a parse stage. This is the one place
 the engine leaves JVM expressions — and it does so via Arrow: the
-whole decode+regex path is pyarrow/pandas C-level kernels per batch
-(`pc.take` + `pc.binary_join` + pandas `.str.extract`), never
-per-row Python.
+whole decode+regex path is pyarrow C-level kernels per batch
+(`pc.take` + `pc.binary_join` + `pc.extract_regex`), never per-row
+Python.
 
 Scale notes (100 TB):
 - the vocabulary is a pure function of the token id (no driver-side
   broadcast, no shuffling a vocab table) — each executor builds it
   once and caches it at module level;
-- one pandas UDF computes ALL parsed fields in a single decode pass,
+- one Arrow UDF computes ALL parsed fields in a single decode pass,
   so token arrays cross the Arrow boundary exactly once;
 - batch size is bounded by spark.sql.execution.arrow.maxRecordsPerBatch
   (the analog of the reference's 4 MB buffer cap, buffer.go:31-36).
@@ -20,12 +20,12 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions import arrow_udf
 
 from llogtail_spark.functions.grok import compile_grok
 from llogtail_spark.generate import LEVEL_NUMS, LEVELS, build_vocab
@@ -63,21 +63,6 @@ def _vocab_pa() -> pa.Array:
     return _VOCAB_PA
 
 
-def _flatten(tokens: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Series of int32 ndarrays -> (flat int64 values, int64 offsets
-    [n+1], int64 lengths). One pass shared by decode and hash."""
-    arrays = tokens.to_numpy()
-    lengths = np.fromiter((len(a) for a in arrays), dtype=np.int64, count=len(arrays))
-    offsets = np.zeros(len(arrays) + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offsets[1:])
-    flat = (
-        np.concatenate(arrays).astype(np.int64, copy=False)
-        if len(arrays)
-        else np.empty(0, dtype=np.int64)
-    )
-    return flat, offsets, lengths
-
-
 _H_OFF = np.uint64(0x9E3779B97F4A7C15)
 _H_MUL = np.uint64(0xBF58476D1CE4E5B9)
 
@@ -103,52 +88,25 @@ def content_hash_np(flat: np.ndarray, offsets: np.ndarray, lengths: np.ndarray) 
     return out.view(np.int64)
 
 
-def _decode_batch(tokens: pd.Series) -> pa.Array:
-    """Series of int32 ndarrays -> pa.StringArray of space-joined words.
+@arrow_udf(T.LongType())
+def token_hash(tokens: pa.Array) -> pa.Array:
+    """Standalone tok_hash column (for frames that skip parse_stage).
+    Identical definition to parse_stage's tok_hash."""
+    vals, offs, lens = _list_parts_zero_copy(tokens)
+    h = content_hash_np(
+        vals.to_numpy(zero_copy_only=False).astype(np.int64, copy=False),
+        offs, lens,
+    )
+    return pa.array(h, type=pa.int64())
 
-    All heavy steps are Arrow C++ kernels: fancy-take of the vocab,
-    list reassembly, binary_join.
-    """
-    flat, offsets, _ = _flatten(tokens)
-    words = pc.take(_vocab_pa(), pa.array(flat))
-    lists = pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)), words)
+
+@arrow_udf(T.StringType())
+def detokenize(tokens: pa.Array) -> pa.Array:
+    """tokens array<int> -> decoded text (vectorized, zero-copy in)."""
+    vals, offs, _ = _list_parts_zero_copy(tokens)
+    words = pc.take(_vocab_pa(), vals)
+    lists = pa.ListArray.from_arrays(pa.array(offs.astype(np.int32)), words)
     return pc.binary_join(lists, " ")
-
-
-try:
-    from pyspark.sql.functions import arrow_udf as _arrow_udf
-
-    @_arrow_udf(T.LongType())
-    def token_hash(tokens: pa.Array) -> pa.Array:
-        """Standalone tok_hash column (for frames that skip
-        parse_stage). Identical definition to parse_stage's tok_hash."""
-        vals, offs, lens = _list_parts_zero_copy(tokens)
-        h = content_hash_np(
-            vals.to_numpy(zero_copy_only=False).astype(np.int64, copy=False),
-            offs, lens,
-        )
-        return pa.array(h, type=pa.int64())
-
-    @_arrow_udf(T.StringType())
-    def detokenize(tokens: pa.Array) -> pa.Array:
-        """tokens array<int> -> decoded text (vectorized, zero-copy in)."""
-        vals, offs, _ = _list_parts_zero_copy(tokens)
-        words = pc.take(_vocab_pa(), vals)
-        lists = pa.ListArray.from_arrays(pa.array(offs.astype(np.int32)), words)
-        return pc.binary_join(lists, " ")
-
-except ImportError:  # pre-4.x Spark: pandas UDF fallbacks
-
-    @F.pandas_udf(T.LongType())
-    def token_hash(tokens: pd.Series) -> pd.Series:
-        flat, offsets, lengths = _flatten(tokens)
-        return pd.Series(content_hash_np(flat, offsets, lengths))
-
-    @F.pandas_udf(T.StringType())
-    def detokenize(tokens: pd.Series) -> pd.Series:
-        return _decode_batch(tokens).to_pandas()
-
-
 
 
 def _list_parts_zero_copy(tokens: pa.Array) -> tuple[pa.Array, np.ndarray, np.ndarray]:
@@ -204,43 +162,22 @@ def _parse_kernel(tokens: pa.Array, rx: str, code_rx: str,
 def make_parse_udf(grok_pattern: str = DEFAULT_GROK):
     """Build the parse UDF for a grok pattern.
 
-    The grok regex is compiled to RE2 syntax once. Preferred form is a
-    native Arrow UDF (Spark 4.x): the tokens ListArray arrives as a
-    pyarrow array — flat values and offsets are ZERO-COPY views, and
-    the result StructArray goes straight back over Arrow, skipping the
-    pandas materialization entirely (profiled: the pandas conversion
-    built an object-dtype Series of numpy arrays per batch — pure
-    overhead). Falls back to a pandas UDF on older Spark."""
+    The grok regex is compiled to RE2 syntax once. The UDF is a native
+    Arrow UDF: the tokens ListArray arrives as a pyarrow array — flat
+    values and offsets are ZERO-COPY views, and the result StructArray
+    goes straight back over Arrow, skipping the pandas materialization
+    entirely (profiled: the pandas conversion built an object-dtype
+    Series of numpy arrays per batch — pure overhead)."""
     rx = compile_grok(grok_pattern).pattern  # RE2-compatible source
     code_rx = r"code=(?P<code>\d+)"
     levels = pa.array(LEVELS, type=pa.string())
     level_nums = pa.array(LEVEL_NUMS + [None], type=pa.int32())
 
-    try:
-        from pyspark.sql.functions import arrow_udf
+    @arrow_udf(PARSED_SCHEMA)
+    def parse(tokens: pa.Array) -> pa.Array:
+        return _parse_kernel(tokens, rx, code_rx, levels, level_nums)
 
-        @arrow_udf(PARSED_SCHEMA)
-        def parse(tokens: pa.Array) -> pa.Array:
-            return _parse_kernel(tokens, rx, code_rx, levels, level_nums)
-
-        return parse
-    except ImportError:
-        pass
-
-    @F.pandas_udf(PARSED_SCHEMA)
-    def parse_pd(tokens: pd.Series) -> pd.DataFrame:
-        flat, offsets, lengths = _flatten(tokens)
-        lists = pa.ListArray.from_arrays(
-            pa.array(offsets.astype(np.int32)), pa.array(flat, type=pa.int32())
-        )
-        st = _parse_kernel(lists, rx, code_rx, levels, level_nums)
-        # StructType pandas_udf must return a DataFrame (a StructArray
-        # .to_pandas() is a Series of dicts)
-        return pa.Table.from_arrays(
-            st.flatten(), names=[f.name for f in st.type]
-        ).to_pandas()
-
-    return parse_pd
+    return parse
 
 
 def parse_stage(df: DataFrame, grok_pattern: str = DEFAULT_GROK) -> DataFrame:

@@ -71,12 +71,9 @@ def assign_sinks(df: DataFrame, rules: list[SinkRule]) -> DataFrame:
 
 
 def explode_routed(df: DataFrame, rules: list[SinkRule]) -> DataFrame:
-    """Routed view: one output row per (input row, matched sink).
-
-    Used for single-pass per-sink aggregation; the write path instead
-    uses per-sink filters (fan_out) so each sink write only shuffles
-    its own rows.
-    """
+    """Routed view: one output row per (input row, matched sink) —
+    what the pipeline's staged write partitions by (sink, part), and
+    what single-pass per-sink aggregation groups by."""
     # explode_outer + null filter, NOT plain explode: non-outer explode
     # makes the optimizer synthesize a `size(sinks) > 0` filter below
     # the projection, re-inlining the sinks expression — which
@@ -92,12 +89,3 @@ def explode_routed(df: DataFrame, rules: list[SinkRule]) -> DataFrame:
         .drop("sinks")
     )
 
-
-def fan_out(df: DataFrame, rules: list[SinkRule]) -> dict[str, DataFrame]:
-    """Per-sink filtered views over one shared (persisted) upstream.
-
-    K filtered writes over a persisted parse output beats re-running
-    the Arrow parse per sink; with non-overlapping predicates Catalyst
-    additionally pushes each predicate into the scan.
-    """
-    return {r.name: df.filter(F.expr(r.predicate)) for r in rules}

@@ -454,23 +454,3 @@ def priority_sample_per_group(df: DataFrame, key_col: str,
         .select(group_col, key_col, weight_col, "priority")
     )
 
-
-def priority_sample_per_group_sql(key_col: str, weight_col: str,
-                                  group_col: str, k: int,
-                                  table: str) -> str:
-    """DuckDB twin of priority_sample_per_group."""
-    return f"""
-        WITH pri AS (
-            SELECT {group_col}, {key_col}, {weight_col},
-                   (CAST({weight_col} AS BIGINT) * 4294967296)
-                     // ((({key_col} * 2654435761) % 4294967296) + 1)
-                     AS priority
-            FROM {table}
-            WHERE {key_col} IS NOT NULL AND {weight_col} > 0)
-        SELECT {group_col}, {key_col}, {weight_col}, priority
-        FROM (SELECT *, row_number() OVER (
-                  PARTITION BY {group_col}
-                  ORDER BY priority DESC, {key_col}) AS rn
-              FROM pri)
-        WHERE rn <= {k}
-    """

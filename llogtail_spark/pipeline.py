@@ -7,68 +7,52 @@ declarative DAG per run: the Iceberg/parquet snapshot IS the set of
 "modify events"; partitions above the committed manifest are the
 un-consumed bytes; there is nothing to poll.
 
+The commit protocol is `manifest.py`'s, shared with the corpus
+pipeline, and the whole run holds the workdir lease:
+- stage: ONE heavy pass — scan -> Arrow parse UDF -> broadcast enrich
+  -> route-explode -> write partitionBy(sink, part) to staging; one
+  stage, no shuffle, no persist (a persist+K-writes variant REGRESSED
+  with cores from cache memory pressure);
+- observe: the staged write counts its own (rows, tok_total, xor
+  checksum) — no extra scan;
+- readback reconcile: a column-pruned scan of the staged files
+  (n_tok, row_hash + partition cols, megabytes not data) gives the
+  per-(sink, part) lineage, which must fold to the observation;
+- ship: per sink, a thread pool renames staging/sink=X/part=Y ->
+  sink_path/part=Y (metadata-only), or ONE Iceberg commit;
+- commit: then the sink's manifest entries, in order
+  (push-then-checkpoint, log_collector.go:208-215).
+
 Consistency contract preserved (SURVEY.md §3.5):
-- sink write strictly before manifest commit (push-then-checkpoint,
-  log_collector.go:208-215);
 - idempotent dynamic-partition overwrite upgrades the reference's
   at-least-once to effectively-once across kill/resume;
 - per-row atomicity: a routed row carries its full token array —
-  never a partial record (line-framing analog, buffer.go:103-104).
-
-Scale shape (profiled on this host, see BENCH/BASELINE.md):
+  never a partial record (line-framing analog, buffer.go:103-104);
 - resume pruning happens at the FILE LIST level (driver-side set
-  difference, metadata-only) so committed data is never scanned;
-- exactly THREE jobs per run:
-  1. input identity — column-pruned JVM-only scan (no Python);
-  2. the heavy pass — scan -> Arrow parse UDF -> broadcast enrich ->
-     route-explode -> write partitionBy(sink, part) to staging; one
-     stage, no shuffle, no persist (a persist+K-writes variant
-     REGRESSED with cores from cache memory pressure);
-  3. readback stats — column-pruned scan of the staged files
-     (n_tok, row_hash + partition cols), megabytes not data;
-- ship = metadata-only directory rename staging/sink=X/part=Y ->
-  sink_path/part=Y, then the manifest commit (push-then-checkpoint).
+  difference, metadata-only) so committed data is never scanned.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
-import sys
-import time
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from llogtail_spark import manifest as mf
 from llogtail_spark.config import PipelineConf
 from llogtail_spark.operators.enrich import enrich_stage
 from llogtail_spark.operators.parse import parse_stage
-from llogtail_spark.operators.route import explode_routed
+from llogtail_spark.operators.route import SAFE_NAME, explode_routed
 from llogtail_spark.sources import reader
 
 # failpoint(stage, sink, part) — tests inject crashes between the sink
 # write and the manifest commit to prove effectively-once resume.
 Failpoint = Callable[[str, str, str], None]
-
-# LLOGTAIL_STAGE_TIMING=1 prints per-stage wall seconds to stderr —
-# used to attribute the run's fixed (row-independent) cost when tuning
-# the scaling floor; free when unset.
-_TIMING = os.environ.get("LLOGTAIL_STAGE_TIMING") == "1"
-
-
-class _stage_timer:
-    def __init__(self) -> None:
-        self.t = time.time()
-
-    def lap(self, label: str) -> None:
-        if _TIMING:
-            now = time.time()
-            print(f"[stage-timing] {label}: {now - self.t:.3f}s",
-                  file=sys.stderr, flush=True)
-            self.t = now
 
 
 @dataclass
@@ -122,14 +106,18 @@ def run_pipeline(
     # the literal 'file:/...' string found nothing — staged_any=False
     # and the ship loop would rmtree real sink data, the exact failure
     # this guard exists to prevent (ADVICE r02).
-    tm = _stage_timer()
     workdir = reader.local_path(conf.workdir)
     if workdir is None:
         raise NotImplementedError(
             f"workdir must be a local path (got {conf.workdir!r}); on a "
             "cluster, stage to an Iceberg table commit instead"
         )
+    with mf.lease(workdir):
+        return _run(spark, conf, workdir, failpoint)
 
+
+def _run(spark: SparkSession, conf: PipelineConf, workdir: str,
+         failpoint: Failpoint | None) -> RunResult:
     if conf.validate_on_start:
         validate_manifest(spark, conf)
 
@@ -146,8 +134,6 @@ def run_pipeline(
         return RunResult(processed={r.name: [] for r in conf.sinks},
                          skipped=skipped, metrics=None)
 
-    from llogtail_spark.operators.route import SAFE_NAME
-
     bad = [p for p in union_parts if not SAFE_NAME.match(p)]
     if bad:
         raise ValueError(
@@ -163,19 +149,16 @@ def run_pipeline(
         )
     fmt, fmt_opts = conf.sinks[0].format, conf.sinks[0].options
 
-    tm.lap("plan:list+resume-prune")
     files = [parts[p] for p in union_parts]
     df = _prepare(spark, conf, files)
-    tm.lap("plan:prepare-dag")
 
     # --- input-partition identity from parquet FOOTER metadata only
     # (driver-side parallel footer reads, no scan, no Spark job) —
     # the validateCpt analog (utils.go:128-133). At cluster scale
     # these stats come from the Iceberg manifest.
     in_stats = reader.files_identity({p: parts[p] for p in union_parts})
-    tm.lap("job1:input-identity-footers")
 
-    # --- job 2 (the ONE heavy pass): parse -> enrich -> route-explode
+    # --- stage (the ONE heavy pass): parse -> enrich -> route-explode
     # -> staged write partitioned by (sink, part). parse runs exactly
     # once, inside the write stage (scan -> Arrow UDF -> broadcast join
     # -> explode -> write: a single stage, no shuffle, no persist).
@@ -184,7 +167,7 @@ def run_pipeline(
     # this shape scales with the writes (~3.4x at 4x cores).
     routed = explode_routed(df, conf.sinks).withColumn(
         # per-row content hash shipped WITH the data: the readback
-        # stats (job 3) checksum what actually landed in the files
+        # checksums what actually landed in the files
         "row_hash", F.xxhash64("doc_id", "tok_hash")
     )
     pair_pred = F.lit(False)
@@ -195,83 +178,33 @@ def run_pipeline(
             )
     staging = os.path.join(workdir, "staging")
     shutil.rmtree(staging, ignore_errors=True)
-    # observe(): global (rows, tok_total, xor-checksum) accumulated BY
-    # the write stage itself — zero extra scan (Spark accumulator
-    # metrics piggyback on the tasks). Job 3's readback must
-    # reproduce these totals from the staged FILES; a mismatch means
-    # rows were lost/corrupted between write and readback (a partial
-    # task file, a vanished part dir) and the run must fail rather
-    # than commit wrong lineage. xor is associative+commutative, so
-    # the global xor equals the xor of job 3's per-(sink, part) xors.
-    from pyspark.sql import Observation
-
+    # observe(): global lineage accumulated BY the write stage itself —
+    # zero extra scan (Spark accumulator metrics piggyback on the
+    # tasks); the readback below must reproduce it from the files
     obs = Observation("staged")
     routed.filter(pair_pred).observe(
-        obs,
-        F.count(F.lit(1)).alias("rows"),
-        F.coalesce(F.sum("n_tok"), F.lit(0)).alias("tok_total"),
-        F.coalesce(F.bit_xor("row_hash"), F.lit(0)).alias("checksum"),
+        obs, *mf.lineage("n_tok", "row_hash")
     ).write.format(fmt).mode("overwrite").partitionBy(
         "sink", "part"
     ).options(**fmt_opts).save(staging)
-    tm.lap("job2:heavy-pass-staged-write")
     observed = obs.get
     if failpoint:
         # tests corrupt staged files here to prove the
         # observe-vs-readback reconciliation refuses to commit
         failpoint("after_stage", "", "")
 
-    # --- job 3 (tiny): per-(sink, part) lineage stats read back from
-    # the staged files themselves — column-pruned to (n_tok, row_hash)
-    # + partition columns, so it scans megabytes, not the data.
-    # Zero rows staged is detected explicitly (no sink= dirs), NOT by
-    # swallowing exceptions — a transient readback failure must fail
-    # the run rather than commit row_count=0 manifests over real data.
+    # --- readback: per-(sink, part) lineage of the staged files
+    # themselves. Zero rows staged is detected explicitly (no sink=
+    # dirs), NOT by swallowing exceptions — a transient readback
+    # failure must fail the run rather than commit row_count=0
+    # manifests over real data.
     staged_any = any(
         e.name.startswith("sink=") for e in os.scandir(staging)
     ) if os.path.isdir(staging) else False
     if staged_any:
-        # belt-and-braces with the session-level inference-off config:
-        # sink/part are OUR string keys; a numeric basename read back
-        # as int would miss the stats lookup and commit zero counts.
-        stats = {
-            (str(r["sink"]), str(r["part"])): r
-            for r in spark.read.format(fmt)
-            .load(staging)
-            .groupBy(
-                F.col("sink").cast("string").alias("sink"),
-                F.col("part").cast("string").alias("part"),
-            )
-            .agg(
-                F.count("*").alias("row_count"),
-                # mirror the observe() side's coalesce: an all-NULL
-                # n_tok group must reconcile as 0, not raise TypeError
-                # on int(None) below (ADVICE r03)
-                F.coalesce(F.sum("n_tok"), F.lit(0)).alias("tok_total"),
-                F.coalesce(F.bit_xor("row_hash"), F.lit(0)).alias("checksum"),
-            )
-            .collect()
-        }
-        # write-stage vs file-readback reconciliation (observe() docs
-        # above): totals must match exactly or lineage would lie
-        rb_rows = sum(int(r["row_count"]) for r in stats.values())
-        rb_tok = sum(int(r["tok_total"]) for r in stats.values())
-        rb_x = 0
-        for r in stats.values():
-            rb_x ^= int(r["checksum"])
-        if (rb_rows, rb_tok, rb_x) != (
-            int(observed["rows"]),
-            int(observed["tok_total"]),
-            int(observed["checksum"]),
-        ):
-            raise RuntimeError(
-                "staged readback disagrees with the write-stage "
-                f"observation: readback (rows={rb_rows}, tok={rb_tok}, "
-                f"xor={rb_x}) vs observed (rows={observed['rows']}, "
-                f"tok={observed['tok_total']}, xor={observed['checksum']})"
-                " — staged files are incomplete or corrupted; refusing"
-                " to commit lineage"
-            )
+        stats = mf.readback(spark.read.format(fmt).load(staging),
+                            "n_tok", "row_hash", keys=("sink", "part"))
+        mf.reconcile("staged sinks", observed, stats.values())
     else:
         stats = {}
         if int(observed["rows"]) != 0:
@@ -280,67 +213,29 @@ def run_pipeline(
                 "sink= directories were staged — staging output is "
                 "missing; refusing to commit lineage"
             )
-    tm.lap("job3:readback-stats")
 
-    # --- ship + checkpoint, per sink in rule order: move the staged
-    # partitions to the sink (rename, parallel rename, or one Iceberg
-    # commit — conf.ship_mode/ship_workers), THEN commit manifest
-    # rows — push-then-checkpoint ordering (log_collector.go:208-215).
+    # --- ship + commit, per sink in rule order (push-then-checkpoint).
     # Idempotent: a re-run replaces the same partitions exactly
     # (effectively-once).
     processed: dict[str, list[str]] = {}
     for rule in conf.sinks:
         todo = pending[rule.name]
-        if not todo:
-            processed[rule.name] = []
-            continue
-        pre_shipped = False
+        move = functools.partial(_ship_part, staging, rule)
         if conf.ship_mode == "iceberg":
-            _ship_sink_iceberg(spark, staging, rule, todo)
-            pre_shipped = True
-        elif conf.ship_workers > 1:
-            # renames of distinct partition dirs are independent
-            # metadata ops — at 10^6 input partitions the serial
-            # driver loop is the bottleneck (VERDICT r02); commits
-            # follow only after every rename of this sink landed, so
-            # a crash mid-ship commits nothing and the re-run replaces
-            # the same dirs idempotently
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(conf.ship_workers) as ex:
-                list(ex.map(lambda p: _ship_part(staging, rule, p), todo))
-            pre_shipped = True
-        committed = []
-        for p in todo:
-            if not pre_shipped:
-                _ship_part(staging, rule, p)
-            if failpoint:
-                failpoint("before_commit", rule.name, p)
-            s = stats.get((rule.name, p))
-            ins = in_stats.get(p)
-            mf.commit(
-                conf.manifest_dir,
-                mf.ManifestEntry(
-                    sink=rule.name,
-                    part=p,
-                    row_count=int(s["row_count"]) if s else 0,
-                    tok_total=int(s["tok_total"]) if s else 0,
-                    checksum=int(s["checksum"]) if s else 0,
-                    watermark_offset=int(ins[0]) if ins else 0,
-                    committed_at=conf.committed_at,
-                    in_row_count=int(ins[0]) if ins else 0,
-                    in_checksum=int(ins[1]) if ins else 0,
-                ),
-            )
-            committed.append(p)
-            if failpoint:
-                failpoint("after_commit", rule.name, p)
-        processed[rule.name] = committed
+            move = None  # one atomic table commit for the whole sink
+            if todo:
+                _ship_sink_iceberg(spark, staging, rule, todo)
+        processed[rule.name] = mf.ship_and_commit(
+            conf.manifest_dir,
+            [mf.lineage_entry(rule.name, p, stats.get((rule.name, p)),
+                              in_stats.get(p), conf.committed_at)
+             for p in todo],
+            move,
+            failpoint and (lambda phase, p: failpoint(phase, rule.name, p)),
+        )
     shutil.rmtree(staging, ignore_errors=True)
-    tm.lap("ship:rename+manifest-commit")
 
     metrics = _metrics_from_manifest(spark, conf, live_parts=set(parts))
-    tm.lap("metrics:manifest-rollup")
     return RunResult(processed=processed, skipped=skipped, metrics=metrics)
 
 

@@ -24,6 +24,8 @@ def get_spark(
     cores: parallelism for local mode; defaults to $SPARK_GRAFT_CPUS or '*'.
     shuffle_partitions: defaults to max(2*cores, 32) — at cluster scale
       this would be set to ~2-3x total executor cores instead.
+    extra_conf: Spark settings applied last; its spark.driver.memory,
+      else $SPARK_DRIVER_MEM (default 8g), sizes the fixed heap.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -34,7 +36,12 @@ def get_spark(
         n = cores
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * n, 32)
-    mem = os.environ.get("SPARK_DRIVER_MEM", "8g")
+    extra_conf = extra_conf or {}
+    # one value sizes the whole fixed heap (-Xms below and the -Xmx
+    # that spark.driver.memory sets): an -Xms above -Xmx kills the JVM
+    # at start
+    mem = extra_conf.get("spark.driver.memory") or os.environ.get(
+        "SPARK_DRIVER_MEM", "8g")
 
     builder = (
         SparkSession.builder.master(master)
@@ -105,7 +112,7 @@ def get_spark(
             f"-Xms{mem} -XX:+UseParallelGC -XX:+AlwaysPreTouch",
         )
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

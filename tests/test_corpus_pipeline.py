@@ -247,26 +247,6 @@ def test_params_change_invalidates_only_downstream(
                          != F.floor(F.col("tok_start") / 64)).count() == 0
 
 
-def test_parallel_ship_equals_serial(spark, corpus_input, tmp_path, golden):
-    """ship_workers > 1 (the default, VERDICT r05 #2) must produce the
-    byte-identical shipped product and manifest as the serial loop."""
-    _, _, want = golden
-    c1 = _conf(corpus_input, str(tmp_path / "serial"))
-    c1.ship_workers = 1
-    r1 = run_corpus_pipeline(spark, c1)
-    c8 = _conf(corpus_input, str(tmp_path / "par"))
-    c8.ship_workers = 8
-    r8 = run_corpus_pipeline(spark, c8)
-    assert sorted(r1.shards_committed) == sorted(r8.shards_committed)
-    assert _packed_rows(read_packed(spark, c1)) == want
-    assert _packed_rows(read_packed(spark, c8)) == want
-    m1 = {(r["shard"], r["row_count"], r["tok_total"], r["checksum"])
-          for r in r1.metrics.collect()}
-    m8 = {(r["shard"], r["row_count"], r["tok_total"], r["checksum"])
-          for r in r8.metrics.collect()}
-    assert m1 == m8
-
-
 def test_nshards_reduction_removes_stale_shards(
         spark, corpus_input, tmp_path):
     """ADVICE r05 #2: recompute with fewer shards must delete the

@@ -130,40 +130,76 @@ def test_entry_filenames_unambiguous(tmp_path):
     assert mf.committed_parts(d, "a") == {"b__c"}
 
 
-def test_legacy_named_entry_migrates_and_invalidates(tmp_path):
-    """ADVICE r02: entries written by pre-separator-rename runs as
-    'sink__part.json' parsed as committed but invalidate() could never
-    delete them — the stale partition was flagged every run yet never
-    reprocessed. read_all must migrate them to the canonical name so
-    the normal invalidate path works."""
+def _stage(stage="quality", rows=7):
+    return mf.StageManifest(stage=stage, in_rows=10, in_checksum=1,
+                            out_rows=rows, tok_total=0, out_checksum=2,
+                            params_crc=3, committed_at="t")
+
+
+def test_stage_commit_read_invalidate_roundtrip(tmp_path):
+    d = str(tmp_path / "sm")
+    assert mf.read_stage(d, "quality") is None  # missing dir = absent
+    mf.commit_stage(d, _stage(rows=1))
+    mf.commit_stage(d, _stage(rows=2))
+    assert mf.read_stage(d, "quality") == _stage(rows=2)
+    mf.invalidate_stage(d, "quality")
+    assert mf.read_stage(d, "quality") is None
+    mf.invalidate_stage(d, "quality")  # no-op, no raise
+
+
+def test_failed_write_leaves_no_temp_file(tmp_path, monkeypatch):
+    """Both record kinds share one writer: a write that fails midway
+    leaves neither a record nor a .tmp behind."""
+    import os
+
+    import pytest
+
+    d = str(tmp_path / "m")
+
+    def boom(*a, **k):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(mf, "asdict", boom)
+    with pytest.raises(OSError, match="disk full"):
+        mf.commit_stage(d, _stage())
+    with pytest.raises(OSError, match="disk full"):
+        mf.commit(d, _entry())
+    assert os.listdir(d) == []
+
+
+def test_read_stage_follows_read_all_policy(tmp_path):
+    """Corrupt bytes are dropped (recompute); a schema mismatch or any
+    other read error is surfaced, never a silent recompute."""
     import json
     import os
 
-    d = str(tmp_path / "m")
-    os.makedirs(d)
-    e = _entry(sink="a", part="p-0")
-    with open(os.path.join(d, "a__p-0.json"), "w") as f:
-        json.dump(
-            {k: getattr(e, k) for k in e.__dataclass_fields__}, f
-        )
-    assert mf.committed_parts(d, "a") == {"p-0"}  # migrated on read
-    assert os.path.exists(os.path.join(d, "a=p-0.json"))
-    assert not os.path.exists(os.path.join(d, "a__p-0.json"))
-    mf.invalidate(d, "a", "p-0")
-    assert mf.committed_parts(d, "a") == set()  # deletable now
+    import pytest
+
+    d = str(tmp_path)
+    path = mf.commit_stage(d, _stage())
+    with open(path, "w") as f:
+        f.write('{"stage": "qual')  # truncated
+    assert mf.read_stage(d, "quality") is None
+    assert not os.path.exists(path)
+
+    with open(path, "w") as f:
+        json.dump({"stage": "quality"}, f)
+    with pytest.raises(ValueError, match="unrecognized schema"):
+        mf.read_stage(d, "quality")
+    assert os.path.exists(path)
+
+    os.remove(path)
+    os.mkdir(path)  # open() fails with an OSError other than ENOENT
+    with pytest.raises(OSError):
+        mf.read_stage(d, "quality")
 
 
-def test_legacy_entry_loses_to_canonical_twin(tmp_path):
-    """If both the legacy and canonical files exist, the canonical one
-    (written by a newer run) wins and the legacy file is removed."""
-    import json
-    import os
+def test_reconcile_folds_groups_and_refuses_mismatch():
+    import pytest
 
-    d = str(tmp_path / "m")
-    mf.commit(d, _entry(sink="a", part="p-0", irc=42))
-    stale = _entry(sink="a", part="p-0", irc=7)
-    with open(os.path.join(d, "a__p-0.json"), "w") as f:
-        json.dump({k: getattr(stale, k) for k in stale.__dataclass_fields__}, f)
-    entries = mf.read_all(d)
-    assert [e.in_row_count for e in entries] == [42]
-    assert not os.path.exists(os.path.join(d, "a__p-0.json"))
+    observed = {"rows": 3, "tok_total": 9, "checksum": 5 ^ 6}
+    groups = [{"rows": 1, "tok_total": 4, "checksum": 5},
+              {"rows": 2, "tok_total": 5, "checksum": 6}]
+    mf.reconcile("t", observed, groups)
+    with pytest.raises(RuntimeError, match="readback disagrees.*refusing to commit"):
+        mf.reconcile("t", observed, groups[:1])

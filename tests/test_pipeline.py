@@ -285,29 +285,6 @@ def test_file_uri_workdir_resolves_not_corrupts(spark, data_dir, tmp_path, oracl
     assert not os.path.exists("file:")
 
 
-def test_parallel_ship_equals_sequential(spark, data_dir, oracle_pdf, tmp_path):
-    """VERDICT r02 next-round #4: the serial per-part driver rename
-    loop is the 10^6-partition bottleneck; ship_workers > 1 renames a
-    sink's staged partition dirs concurrently. Results — sink
-    contents, manifests, metrics — must be identical to sequential."""
-    outs = []
-    for workers in (1, 8):
-        wd = tmp_path / f"w{workers}"
-        base = make_conf(data_dir, wd)
-        conf = PipelineConf(
-            input_path=base.input_path, lookup_path=base.lookup_path,
-            workdir=str(wd), sinks=base.sinks, ship_workers=workers,
-        )
-        res = run_pipeline(spark, conf)
-        assert all(len(v) == 6 for v in res.processed.values())
-        for sink, want in _expected(oracle_pdf).items():
-            _assert_sink_equals_oracle(spark, conf, sink, want)
-        m = {(e.sink, e.part): (e.row_count, e.tok_total, e.checksum)
-             for e in mf.read_all(conf.manifest_dir)}
-        outs.append(m)
-    assert outs[0] == outs[1]
-
-
 def test_parallel_ship_crash_before_commit_resumes(spark, data_dir, tmp_path):
     """With parallel ship, a crash after the renames but before any
     manifest commit must leave all partitions uncommitted; the re-run
@@ -318,7 +295,7 @@ def test_parallel_ship_crash_before_commit_resumes(spark, data_dir, tmp_path):
     base = make_conf(data_dir, wd)
     conf = PipelineConf(
         input_path=base.input_path, lookup_path=base.lookup_path,
-        workdir=str(wd), sinks=base.sinks[:1], ship_workers=4,
+        workdir=str(wd), sinks=base.sinks[:1],
     )
 
     class Boom(RuntimeError):
