@@ -4,8 +4,8 @@ llogtail ships raw bytes with no parse stage; the north rule adds a
 grok/regex parse over decoded token spans. This module turns grok
 pattern strings (`%{LOGLEVEL:level} %{WORD:component} ...`) into
 ordinary Python regexes with named groups, which the vectorized parse
-stage (operators/parse.py) applies with pandas `.str.extract` — one
-C-level pass per Arrow batch, no per-row Python.
+stage (operators/parse.py) applies with Arrow's `pc.extract_regex`
+(RE2) — one C++ pass per Arrow batch, no per-row Python.
 
 Only the pattern-compilation logic lives here so it is trivially
 unit-testable without Spark.

@@ -184,7 +184,8 @@ def parse_stage(df: DataFrame, grok_pattern: str = DEFAULT_GROK) -> DataFrame:
     """Add parsed fields to a sequences DataFrame in ONE Arrow pass.
 
     Input:  (doc_id, tokens, n_tok, source, ...)
-    Output: input columns + (level, level_num, component, code, msg_ntok)
+    Output: input columns + (level, level_num, component, code, msg_ntok,
+            tok_hash)
     """
     parse = make_parse_udf(grok_pattern)
     return df.withColumn("_p", parse(F.col("tokens"))).select("*", "_p.*").drop("_p")

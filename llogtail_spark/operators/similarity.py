@@ -40,37 +40,53 @@ def cosine_sim(a, b) -> "F.Column":
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def _make_pair_cos_arrow():
-    """Arrow pandas_udf twin of cosine_sim for BULK pair reranks:
-    vectorized over pairs, SEQUENTIAL over dims — `acc += A[:,j]*B[:,j]`
+def _pair_cos_np(va: np.ndarray, vb: np.ndarray) -> np.ndarray:
+    """cosine_sim over aligned object arrays of vectors, vectorized
+    over pairs and SEQUENTIAL over dims — `acc += A[:,j]*B[:,j]`
     replays the HOF left fold's exact double-addition order (float32
-    products are exact in double), so the returned cosine is
-    bit-identical to dot/(norm*norm) while the per-pair work runs as
-    ~3*dim numpy array ops per Arrow batch instead of an interpreted
-    per-element lambda fold (guide §4.2; measured ~1.3s -> ~0.3s on
-    the 1.44M-pair sf0.1 rerank). Non-deterministic marker for the
-    same reason as make_bucket_udf below: the >= threshold filter on
-    the derived column must not re-inline a second Python eval.
-    Division edge (zero-norm vector) yields NaN here exactly as the
-    HOF expression does; the caller's floor/cast stays in Catalyst so
-    downstream semantics are unchanged."""
-
-    @F.pandas_udf(T.DoubleType())
-    def pair_cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if len(va) == 0:
-            return pd.Series(np.zeros(0))
-        A = np.vstack(va.to_numpy()).astype(np.float64)
-        B = np.vstack(vb.to_numpy()).astype(np.float64)
-        n, d = A.shape
-        accd = np.zeros(n)
-        acca = np.zeros(n)
-        accb = np.zeros(n)
+    products are exact in double), so each cosine is bit-identical to
+    dot/(norm*norm). Rows are grouped by dimension, so a batch may mix
+    dims. A row whose vectors are NULL or of different lengths is NaN
+    where the fold yields NULL (zip_with pads the shorter side with
+    NULLs); a zero-norm row divides to NaN."""
+    n = len(va)
+    la = np.fromiter((-1 if v is None else len(v) for v in va), np.int64, n)
+    lb = np.fromiter((-1 if v is None else len(v) for v in vb), np.int64, n)
+    ok = (la >= 0) & (la == lb)
+    out = np.full(n, np.nan)
+    for d in np.unique(la[ok]):
+        rows = np.flatnonzero(ok & (la == d))
+        A = np.vstack(va[rows]).astype(np.float64)
+        B = np.vstack(vb[rows]).astype(np.float64)
+        accd = np.zeros(len(rows))
+        acca = np.zeros(len(rows))
+        accb = np.zeros(len(rows))
         for j in range(d):
             accd += A[:, j] * B[:, j]
             acca += A[:, j] * A[:, j]
             accb += B[:, j] * B[:, j]
         with np.errstate(divide="ignore", invalid="ignore"):
-            return pd.Series(accd / (np.sqrt(acca) * np.sqrt(accb)))
+            out[rows] = accd / (np.sqrt(acca) * np.sqrt(accb))
+    return out
+
+
+def _make_pair_cos_arrow():
+    """Arrow pandas_udf twin of cosine_sim for BULK pair reranks
+    (`_pair_cos_np`): ~3*dim numpy array ops per Arrow batch instead of
+    an interpreted per-element lambda fold (guide §4.2; measured ~1.3s
+    -> ~0.3s on the 1.44M-pair sf0.1 rerank). Non-deterministic marker
+    for the same reason as make_bucket_udf below: the >= threshold
+    filter on the derived column must not re-inline a second Python
+    eval. Every NaN — NULL, ragged and zero-norm rows — reaches Spark
+    as NULL (the pandas -> Arrow conversion maps NaN to null). The
+    fold agrees on NULL and ragged rows; on a zero-norm row it raises
+    DIVIDE_BY_ZERO under ANSI and is NULL without it. The caller's
+    floor/cast stays in Catalyst so downstream semantics are
+    unchanged."""
+
+    @F.pandas_udf(T.DoubleType())
+    def pair_cos(va: pd.Series, vb: pd.Series) -> pd.Series:
+        return pd.Series(_pair_cos_np(va.to_numpy(), vb.to_numpy()))
 
     return pair_cos.asNondeterministic()
 

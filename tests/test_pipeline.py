@@ -401,3 +401,89 @@ def test_observe_readback_reconciliation_catches_lost_staged_file(
     # nothing was committed: a clean rerun processes everything
     res = run_pipeline(spark, conf)
     assert all(len(v) > 0 for v in res.processed.values())
+
+
+def _sink_files(conf, sink):
+    import glob
+
+    rule = next(r for r in conf.sinks if r.name == sink)
+    files = sorted(glob.glob(os.path.join(rule.path, "part=*", "*.parquet")))
+    assert files, sink
+    return files
+
+
+def _chunk_encodings(path, column):
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    out = set()
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        for c in range(rg.num_columns):
+            if rg.column(c).path_in_schema == column:
+                out |= set(rg.column(c).encodings)
+    assert out, (path, column)
+    return out
+
+
+def _with_options(conf, options):
+    import dataclasses
+
+    return dataclasses.replace(conf, sinks=[
+        dataclasses.replace(r, options=options) for r in conf.sinks
+    ])
+
+
+def test_staged_parquet_is_v2_delta_without_dictionary(spark, data_dir, tmp_path):
+    """Sink files are staged as parquet v2 pages with no dictionary:
+    token ids DELTA_BINARY_PACKED, strings DELTA_BYTE_ARRAY. A rule's
+    own writer options still win over the staged defaults."""
+    dicts = {"PLAIN_DICTIONARY", "RLE_DICTIONARY"}
+    conf = make_conf(data_dir, tmp_path / "wenc")
+    run_pipeline(spark, conf)
+    for rule in conf.sinks:
+        for f in _sink_files(conf, rule.name):
+            tok = _chunk_encodings(f, "tokens.list.element")
+            src = _chunk_encodings(f, "source")
+            assert "DELTA_BINARY_PACKED" in tok and not tok & dicts, (f, tok)
+            assert "DELTA_BYTE_ARRAY" in src and not src & dicts, (f, src)
+
+    # the token dictionary falls back to PLAIN on small files even with
+    # v1 defaults, so the override is pinned on `source`
+    conf = _with_options(
+        make_conf(data_dir, tmp_path / "wenc_v1"),
+        {"parquet.writer.version": "v1", "parquet.enable.dictionary": "true"},
+    )
+    run_pipeline(spark, conf)
+    for rule in conf.sinks:
+        for f in _sink_files(conf, rule.name):
+            assert "PLAIN_DICTIONARY" in _chunk_encodings(f, "source"), f
+
+
+def test_sinks_readable_by_duckdb_and_pyarrow(spark, data_dir, tmp_path):
+    """Readers without parquet v2 page / DELTA support are the
+    compatibility risk of the staged format: DuckDB and pyarrow must
+    read every sink back to the run's own per-sink metrics."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    conf = make_conf(data_dir, tmp_path / "wread")
+    res = run_pipeline(spark, conf)
+    metrics = {r["sink"]: r.asDict() for r in res.metrics.collect()}
+    con = duckdb.connect()
+    for rule in conf.sinks:
+        m = metrics[rule.name]
+        want = (m["row_count"], m["tok_total"], m["checksum"])
+        files = _sink_files(conf, rule.name)
+        duck = con.execute(
+            "SELECT count(*), sum(n_tok), bit_xor(row_hash) "
+            "FROM read_parquet(?)", [files]
+        ).fetchone()
+        assert tuple(int(v) for v in duck) == want, (rule.name, duck, want)
+        t = pq.ParquetDataset(files).read(columns=["n_tok", "row_hash"])
+        arrow = (
+            t.num_rows,
+            int(t.column("n_tok").to_numpy().sum()),
+            int(np.bitwise_xor.reduce(t.column("row_hash").to_numpy())),
+        )
+        assert arrow == want, (rule.name, arrow, want)

@@ -446,3 +446,59 @@ def test_pair_cos_arrow_bit_identical_to_hof_fold(spark):
     assert len(got) == rid
     for r in got:
         assert r["arrow"] == r["hof"], (r["id"], r["arrow"], r["hof"])
+
+
+def test_pair_cos_arrow_masks_null_ragged_and_zero_norm(spark):
+    """ADVICE r06 #2: NULL or ragged vectors must not fail the Arrow
+    batch. Over ONE batch that mixes dims, NULL, ragged, empty and
+    zero-norm rows, pair_cos_arrow equals the cosine_sim fold row for
+    row: NULL where the fold is NULL, bit-identical elsewhere. The fold
+    raises DIVIDE_BY_ZERO on a zero-norm row under ANSI, so the
+    comparison runs with ANSI off, where the fold is NULL there; the
+    kernel itself divides to NaN on those rows."""
+    import numpy as np
+
+    from pyspark.sql import functions as F
+    from llogtail_spark.operators.similarity import (
+        _pair_cos_np, cosine_sim, pair_cos_arrow,
+    )
+
+    rng = np.random.default_rng(3)
+
+    def vec(dim):
+        return rng.standard_normal(dim).astype(np.float32).tolist()
+
+    rows = [
+        (0, vec(4), vec(4)),
+        (1, None, vec(4)),
+        (2, vec(4), None),
+        (3, None, None),
+        (4, vec(4), vec(3)),  # ragged
+        (5, [0.0] * 4, vec(4)),  # zero norm
+        (6, [], []),  # zero norm, no dims
+        (7, vec(16), vec(16)),  # another dim in the same batch
+        (8, vec(3), vec(5)),  # ragged
+        (9, vec(4), vec(4)),
+    ]
+    df = spark.createDataFrame(
+        rows, "id int, va array<float>, vb array<float>").coalesce(1)
+    arrow = {r["id"]: r["c"] for r in df.select(
+        "id", pair_cos_arrow(F.col("va"), F.col("vb")).alias("c")).collect()}
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        fold = {r["id"]: r["c"] for r in df.select(
+            "id", cosine_sim("va", "vb").alias("c")).collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert arrow == fold
+    assert {i for i, c in arrow.items() if c is None} == {1, 2, 3, 4, 5, 6, 8}
+
+    def col(i):
+        v = [None if r[i] is None else np.asarray(r[i], np.float32)
+             for r in rows]
+        out = np.empty(len(v), dtype=object)
+        out[:] = v
+        return out
+
+    assert np.isnan(_pair_cos_np(col(1), col(2))[[5, 6]]).all()
