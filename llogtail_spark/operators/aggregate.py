@@ -135,34 +135,6 @@ def salted_event_rollup_sql(key_col: str = "event_type",
     """
 
 
-def pipeline_stats(df: DataFrame, rules) -> DataFrame:
-    """ONE-job lineage stats for the pipeline: per input partition,
-    the input identity (in_row_count, in_tok_total, in_checksum) plus
-    per-sink (rc__<name>, tt__<name>, ck__<name>) via conditional
-    aggregates over the routing predicates.
-
-    Replaces 1 + K separate aggregation jobs (input stats + one per
-    sink) with a single map-side-combined groupBy — at cluster scale
-    this is the difference between K+1 scans of the parse output and
-    one. bit_xor skips nulls, so `when(pred, hash)` yields exactly
-    the per-sink XOR of matching rows."""
-    cks = "tok_hash" if "tok_hash" in df.columns else "tokens"
-    row_h = F.xxhash64("doc_id", cks)
-    aggs = [
-        F.count("*").alias("in_row_count"),
-        F.sum("n_tok").alias("in_tok_total"),
-        F.coalesce(F.bit_xor(row_h), F.lit(0)).alias("in_checksum"),
-    ]
-    for r in rules:
-        p = F.expr(r.predicate)
-        aggs += [
-            F.count(F.when(p, True)).alias(f"rc__{r.name}"),
-            F.coalesce(F.sum(F.when(p, F.col("n_tok"))), F.lit(0)).alias(f"tt__{r.name}"),
-            F.coalesce(F.bit_xor(F.when(p, row_h)), F.lit(0)).alias(f"ck__{r.name}"),
-        ]
-    return df.groupBy("part").agg(*aggs)
-
-
 def partition_stats(df: DataFrame, part_col: str = "part") -> DataFrame:
     """Per-partition lineage stats for the manifest: the
     (row_count, checksum) identity that validates resume

@@ -2207,6 +2207,29 @@ DUP_WIN = 8  # duplicated-substring window length (tokens)
 _DUP_WIN_UDFS: dict = {}
 
 
+def _char_fold_np(words: list[str]) -> np.ndarray:
+    """fold(chars, 0, (h, c) -> (h*MULT + cp(c)) % MOD) of every word
+    at once. Words are visited longest first, so step j touches only
+    the words longer than j: O(total chars), however long the longest
+    word (a base64 blob) is."""
+    from llogtail_spark.functions import portable_hash as ph
+
+    lens = np.fromiter(map(len, words), dtype=np.int64, count=len(words))
+    codes = np.frombuffer(
+        "".join(words).encode("utf-32-le"), dtype=np.uint32
+    ).astype(np.int64)
+    order = np.argsort(-lens, kind="stable")
+    starts = (np.cumsum(lens) - lens)[order]
+    # n_active[j] = how many words are longer than j
+    n_active = np.searchsorted(-lens[order], -np.arange(lens.max(initial=0)))
+    h = np.zeros(len(words), dtype=np.int64)
+    for j, n in enumerate(n_active):
+        h[:n] = (h[:n] * ph.MULT + codes[starts[:n] + j]) % ph.MOD
+    out = np.empty_like(h)
+    out[order] = h
+    return out
+
+
 def _dup_win_hashes(k: int):
     """Arrow pandas_udf: token array -> struct(wh1, wh2) of the two
     k-window rolling fingerprints (dup_token_spans' scan stage),
@@ -2249,20 +2272,7 @@ def _dup_win_hashes(k: int):
         if ndocs == 0:
             return pd.DataFrame({"wh1": [], "wh2": []})
         nw = np.array([len(d) for d in docs], dtype=np.int64)
-        flat_words = [w for d in docs for w in d]
-        W = len(flat_words)
-        lens = np.fromiter((len(w) for w in flat_words), dtype=np.int64,
-                           count=W)
-        codes = np.frombuffer(
-            "".join(flat_words).encode("utf-32-le"), dtype=np.uint32
-        ).astype(np.int64)
-        ends = np.cumsum(lens)
-        starts = ends - lens
-        th = np.zeros(W, dtype=np.int64)
-        for j in range(int(lens.max()) if W else 0):
-            active = lens > j
-            idx = np.minimum(starts + j, max(len(codes) - 1, 0))
-            th = np.where(active, (th * MULT + codes[idx]) % M, th)
+        th = _char_fold_np([w for d in docs for w in d])
         th2 = (th * a2 + b2) % M
         # per-doc window starts, flattened: doc d owns nw[d]-k+1
         # windows beginning at its word offset

@@ -7,8 +7,17 @@ declarative DAG per run: the Iceberg/parquet snapshot IS the set of
 "modify events"; partitions above the committed manifest are the
 un-consumed bytes; there is nothing to poll.
 
-The commit protocol is `manifest.py`'s, shared with the corpus
-pipeline, and the whole run holds the workdir lease:
+A run has two parts:
+- the plan (`_run`): ONE input listing and ONE manifest read, shared
+  by the optional validation, every sink's pending set and the
+  metrics; footer identities only for the pending parts;
+- the core (`stage_and_ship`), the package's one writer of log-sink
+  lineage. The streaming tail (`streaming/tail.py`) calls it too, per
+  micro-batch and per rescan, so stream and batch sinks get the same
+  format, reconcile, empty-partition clearing and ship mode.
+
+The core follows `manifest.py`'s commit protocol, shared with the
+corpus pipeline, and its caller holds the workdir lease:
 - stage: ONE heavy pass — scan -> Arrow parse UDF -> broadcast enrich
   -> route-explode -> write partitionBy(sink, part) to staging; one
   stage, no shuffle, no persist (a persist+K-writes variant REGRESSED
@@ -90,15 +99,42 @@ def validate_manifest(spark: SparkSession, conf: PipelineConf) -> list[str]:
     entries = mf.read_all(conf.manifest_dir)
     if not entries:
         return []
-    parts = reader.list_parts(spark, conf.input_path)
-    live = reader.files_identity(parts)
+    live = reader.files_identity(reader.list_parts(spark, conf.input_path))
+    return [f"{e.sink}/{e.part}"
+            for e in _invalidate_stale(conf.manifest_dir, entries, live)]
+
+
+def _invalidate_stale(manifest_dir: str, entries: list[mf.ManifestEntry],
+                      live: dict[str, tuple[int, int]]) -> list[mf.ManifestEntry]:
+    """Drop the entries whose input part is gone or changed; returns them."""
     stale = []
     for e in entries:
         got = live.get(e.part)
         if got is None or not mf.validate(e, got[0], got[1]):
-            mf.invalidate(conf.manifest_dir, e.sink, e.part)
-            stale.append(f"{e.sink}/{e.part}")
+            mf.invalidate(manifest_dir, e.sink, e.part)
+            stale.append(e)
     return stale
+
+
+def local_workdir(conf: PipelineConf) -> str:
+    """The workdir as a local path, or a loud failure.
+
+    The staging/ship/manifest machinery walks and renames the workdir
+    with local filesystem calls; a remote workdir URI would silently
+    find no staged files and commit zero-count manifests over real
+    data (the cluster-scale path is Iceberg data-file commits). Callers
+    use the resolved path throughout: a 'file:' URI passes, but staging
+    built on the raw string would be written by Spark under the
+    resolved /path while os.scandir on the literal 'file:/...' found
+    nothing, and the ship loop would rmtree real sink data (ADVICE
+    r02)."""
+    workdir = reader.local_path(conf.workdir)
+    if workdir is None:
+        raise NotImplementedError(
+            f"workdir must be a local path (got {conf.workdir!r}); on a "
+            "cluster, stage to an Iceberg table commit instead"
+        )
+    return workdir
 
 
 def run_pipeline(
@@ -106,37 +142,27 @@ def run_pipeline(
     conf: PipelineConf,
     failpoint: Failpoint | None = None,
 ) -> RunResult:
-    # the staging/ship/manifest machinery below walks and renames the
-    # workdir with local filesystem calls; a remote workdir URI would
-    # silently find no staged files and commit zero-count manifests
-    # over real data. Fail loudly instead (the cluster-scale path is
-    # Iceberg data-file commits, as documented in the module header).
-    # Resolve ONCE and use the resolved path throughout: a 'file:' URI
-    # passes the guard, but if staging were built on the raw string,
-    # Spark would write under the resolved /path while os.scandir on
-    # the literal 'file:/...' string found nothing — staged_any=False
-    # and the ship loop would rmtree real sink data, the exact failure
-    # this guard exists to prevent (ADVICE r02).
-    workdir = reader.local_path(conf.workdir)
-    if workdir is None:
-        raise NotImplementedError(
-            f"workdir must be a local path (got {conf.workdir!r}); on a "
-            "cluster, stage to an Iceberg table commit instead"
-        )
+    workdir = local_workdir(conf)
     with mf.lease(workdir):
         return _run(spark, conf, workdir, failpoint)
 
 
 def _run(spark: SparkSession, conf: PipelineConf, workdir: str,
          failpoint: Failpoint | None) -> RunResult:
-    if conf.validate_on_start:
-        validate_manifest(spark, conf)
-
+    # --- the plan: ONE listing and ONE manifest read, shared by the
+    # validation, every sink's pending set and the metrics
     parts = reader.list_parts(spark, conf.input_path)  # {part: file}
+    entries = mf.read_all(conf.manifest_dir)
+    identity: dict[str, tuple[int, int]] = {}
+    if conf.validate_on_start and entries:
+        identity = reader.files_identity(parts)
+        stale = set(_invalidate_stale(conf.manifest_dir, entries, identity))
+        entries = [e for e in entries if e not in stale]
+
     pending: dict[str, list[str]] = {}
     skipped: dict[str, list[str]] = {}
     for rule in conf.sinks:
-        done = mf.committed_parts(conf.manifest_dir, rule.name)
+        done = {e.part for e in entries if e.sink == rule.name}
         pending[rule.name] = sorted(set(parts) - done)
         skipped[rule.name] = sorted(set(parts) & done)
 
@@ -144,8 +170,35 @@ def _run(spark: SparkSession, conf: PipelineConf, workdir: str,
     if not union_parts:
         return RunResult(processed={r.name: [] for r in conf.sinks},
                          skipped=skipped, metrics=None)
+    files = {p: parts[p] for p in union_parts}
+    # --- input-partition identity from parquet FOOTER metadata only
+    # (driver-side parallel footer reads, no scan, no Spark job) —
+    # the validateCpt analog (utils.go:128-133). At cluster scale
+    # these stats come from the Iceberg manifest.
+    if not identity:
+        identity = reader.files_identity(files)
 
-    bad = [p for p in union_parts if not SAFE_NAME.match(p)]
+    committed = stage_and_ship(spark, conf, workdir, files, identity, pending,
+                               failpoint)
+    entries += [e for es in committed.values() for e in es]
+    metrics = _metrics_from_manifest(spark, conf, entries, live_parts=set(parts))
+    return RunResult(
+        processed={s: [e.part for e in es] for s, es in committed.items()},
+        skipped=skipped, metrics=metrics)
+
+
+def stage_and_ship(
+    spark: SparkSession, conf: PipelineConf, workdir: str,
+    files: dict[str, str], identity: dict[str, tuple[int, int]],
+    pending: dict[str, list[str]], failpoint: Failpoint | None = None,
+) -> dict[str, list[mf.ManifestEntry]]:
+    """The one writer of log-sink lineage: stage, reconcile, ship and
+    commit `pending` ({sink: [part]}) from `files` ({part: file}),
+    recording each part's input `identity` ({part: (rows, checksum)}).
+    The caller holds the workdir lease. A pending part that routes no
+    row to a sink clears that sink's partition. Returns the committed
+    entries per sink, in rule order."""
+    bad = [p for p in files if not SAFE_NAME.match(p)]
     if bad:
         raise ValueError(
             f"partition ids {bad[:3]} contain characters Spark would "
@@ -162,14 +215,7 @@ def _run(spark: SparkSession, conf: PipelineConf, workdir: str,
     if fmt == "parquet":
         fmt_opts = {**STAGE_OPTS, **fmt_opts}
 
-    files = [parts[p] for p in union_parts]
-    df = _prepare(spark, conf, files)
-
-    # --- input-partition identity from parquet FOOTER metadata only
-    # (driver-side parallel footer reads, no scan, no Spark job) —
-    # the validateCpt analog (utils.go:128-133). At cluster scale
-    # these stats come from the Iceberg manifest.
-    in_stats = reader.files_identity({p: parts[p] for p in union_parts})
+    df = _prepare(spark, conf, [files[p] for p in sorted(files)])
 
     # --- stage (the ONE heavy pass): parse -> enrich -> route-explode
     # -> staged write partitioned by (sink, part). parse runs exactly
@@ -230,7 +276,7 @@ def _run(spark: SparkSession, conf: PipelineConf, workdir: str,
     # --- ship + commit, per sink in rule order (push-then-checkpoint).
     # Idempotent: a re-run replaces the same partitions exactly
     # (effectively-once).
-    processed: dict[str, list[str]] = {}
+    committed: dict[str, list[mf.ManifestEntry]] = {}
     for rule in conf.sinks:
         todo = pending[rule.name]
         move = functools.partial(_ship_part, staging, rule)
@@ -238,18 +284,17 @@ def _run(spark: SparkSession, conf: PipelineConf, workdir: str,
             move = None  # one atomic table commit for the whole sink
             if todo:
                 _ship_sink_iceberg(spark, staging, rule, todo)
-        processed[rule.name] = mf.ship_and_commit(
-            conf.manifest_dir,
-            [mf.lineage_entry(rule.name, p, stats.get((rule.name, p)),
-                              in_stats.get(p), conf.committed_at)
-             for p in todo],
-            move,
+        committed[rule.name] = [
+            mf.lineage_entry(rule.name, p, stats.get((rule.name, p)),
+                             identity.get(p), conf.committed_at)
+            for p in todo
+        ]
+        mf.ship_and_commit(
+            conf.manifest_dir, committed[rule.name], move,
             failpoint and (lambda phase, p: failpoint(phase, rule.name, p)),
         )
     shutil.rmtree(staging, ignore_errors=True)
-
-    metrics = _metrics_from_manifest(spark, conf, live_parts=set(parts))
-    return RunResult(processed=processed, skipped=skipped, metrics=metrics)
+    return committed
 
 
 def _ship_part(staging: str, rule, p: str) -> None:
@@ -323,9 +368,11 @@ def _ship_sink_iceberg(spark: SparkSession, staging: str, rule, todo: list[str])
 
 
 def _metrics_from_manifest(
-    spark: SparkSession, conf: PipelineConf, live_parts: set[str]
+    spark: SparkSession, conf: PipelineConf, entries: list[mf.ManifestEntry],
+    live_parts: set[str],
 ) -> DataFrame:
-    """Per-sink rollups derived from the lineage manifest — zero data
+    """Per-sink rollups derived from the lineage manifest `entries` (as
+    read at the start of the run plus this run's commits) — zero data
     scans. The manifest rows ARE the job-3 readback stats (row_count,
     tok_total, checksum per (sink, part)), so folding them reproduces
     sink_aggregates' totals exactly (sum/sum/XOR are decomposable)
@@ -340,7 +387,7 @@ def _metrics_from_manifest(
     # current-run metrics
     live_sinks = {r.name for r in conf.sinks}
     per_sink: dict[str, dict[str, int]] = {}
-    for e in mf.read_all(conf.manifest_dir):
+    for e in entries:
         if e.sink not in live_sinks or e.part not in live_parts:
             continue
         m = per_sink.setdefault(

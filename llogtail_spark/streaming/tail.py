@@ -5,18 +5,26 @@ Semantics parity with the reference's live loop:
   == inotify Discover/Modify events (log_watcher.go:369-394) — Spark's
   file-stream source tracks seen files in its checkpoint exactly the
   way llogtail tracks per-file offsets;
-- `foreachBatch` applies the same parse -> enrich -> route stages and
-  writes each sink, then commits manifest rows — push-then-checkpoint
-  ordering preserved per micro-batch (log_collector.go:208-215);
+- `foreachBatch` hands each micro-batch's files to the batch
+  pipeline's own core, `pipeline.stage_and_ship`: the same parse ->
+  enrich -> route -> staged write -> readback reconcile -> ship ->
+  commit, under the same workdir lease. llogtail likewise has ONE
+  push-then-checkpoint path whether a batch came from the initial
+  scan or a live Modify event (log_collector.go:208-215), so a stream
+  sink gets the same staged format, the same reconcile and the same
+  empty-partition clearing as a batch sink;
 - the streaming checkpointLocation + our manifest give resumability:
   a restarted stream reprocesses at most the last uncommitted batch,
-  and idempotent per-partition overwrite keeps sinks exact;
+  and the idempotent per-partition ship keeps sinks exact;
 - Trigger.AvailableNow drains everything currently discoverable and
   stops — the batch-catch-up mode (poller analog, log_watcher.go:167).
 
-At cluster scale this runs continuously against a landing directory /
-Iceberg table feed; maxFilesPerTrigger bounds micro-batch size the
-way the 4 MB buffer bounds a fetch (buffer.go:31-36).
+A micro-batch learns its files from `input_file_name()` (a streaming
+frame's `inputFiles()` is empty) and reads only their footers for the
+input identity: O(batch) driver work per trigger, never a table
+listing. At cluster scale this runs continuously against a landing
+directory / Iceberg table feed; maxFilesPerTrigger bounds micro-batch
+size the way the 4 MB buffer bounds a fetch (buffer.go:31-36).
 
 IN-PLACE ROTATION (log_watcher.go:228-261): Spark's file-stream
 source assumes files are IMMUTABLE once seen, so a file rewritten in
@@ -33,8 +41,9 @@ forever. Two coverage modes:
   live-loop twin of the reference's rotation branch. Stat-gated
   (O(table) stats per trigger, the poller cadence; footer reads only
   O(changed)), it re-ships exactly the rewritten partitions through
-  the same stages with the same idempotent per-partition overwrite +
-  manifest recommit. For landing dirs fed by rewriting writers.
+  the same core. For landing dirs fed by rewriting writers, including
+  copytruncate: a part truncated to an empty file is cleared from
+  every sink.
 Writers that rotate files INTO the directory (create-then-move) are
 handled by both modes without rescan.
 """
@@ -42,16 +51,14 @@ handled by both modes without rescan.
 from __future__ import annotations
 
 import os
-import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from llogtail_spark import manifest as mf
+from llogtail_spark import pipeline
 from llogtail_spark.config import PipelineConf
-from llogtail_spark.operators.enrich import enrich_stage
-from llogtail_spark.operators.parse import parse_stage
 from llogtail_spark.sources import reader
 
 SEQUENCES_SCHEMA = T.StructType(
@@ -64,141 +71,30 @@ SEQUENCES_SCHEMA = T.StructType(
 )
 
 
-def _resolve_batch_files(
-    spark: SparkSession, input_path: str, parts: list[str], cache: dict
-) -> dict[str, str]:
-    """{part: file} for just this micro-batch's partitions — O(batch),
-    not O(table). Partition ids are file basenames directly under the
-    table dir, so the common case is a pure path construction with no
-    listing at all; a part that doesn't resolve (nested layout, URI
-    scheme) falls back to ONE table listing cached for the stream's
-    lifetime and refreshed only when a part is genuinely unknown."""
-    def _alive(path: str) -> bool:
-        # the vanished-file staleness check only applies to files we
-        # can stat locally; remote paths (hdfs://, s3a://) are trusted
-        # as listed — a wrong guess there would force an O(table)
-        # re-list per batch AND never resolve, the worst of both
-        lp = reader.local_path(path)
-        return True if lp is None else os.path.exists(lp)
-
-    out: dict[str, str] = {}
-    missing: list[str] = []
-    local_root = reader.local_path(input_path)
-    for p in parts:
-        cand = os.path.join(local_root, f"{p}.parquet") if local_root else None
-        if cand is not None and os.path.exists(cand):
-            out[p] = cand
-        else:
-            missing.append(p)
-    if missing:
-        listed = cache.get("parts")
-        # a cached entry whose local file has vanished is STALE, not
-        # resolved — feeding a dead path to the footer reader would
-        # kill the stream instead of hitting the skip-commit branch
-        if listed is None or any(
-            p not in listed or not _alive(listed[p]) for p in missing
-        ):
-            listed = cache["parts"] = reader.list_parts(spark, input_path)
-        for p in missing:
-            f = listed.get(p)
-            if f is not None and _alive(f):
-                out[p] = f
-            # else: unresolved -> caller skips the manifest commit
-    return out
+def _ship_all(spark: SparkSession, conf: PipelineConf, workdir: str,
+              files: dict[str, str], identity: dict[str, tuple[int, int]]) -> None:
+    """Ship every part of `files` to every sink through the batch core."""
+    with mf.lease(workdir):
+        pipeline.stage_and_ship(spark, conf, workdir, files, identity,
+                                {r.name: sorted(files) for r in conf.sinks})
 
 
-def _run_stages(spark: SparkSession, conf: PipelineConf, df: DataFrame) -> DataFrame:
-    """The shared parse -> enrich -> hash stage chain (batch parity)."""
-    df = reader.with_partition_id(df)
-    df = parse_stage(df, conf.grok)
-    if conf.lookup_path:
-        lookup = spark.read.parquet(conf.lookup_path)
-        df = enrich_stage(df, lookup, defaults=conf.enrich_defaults)
-    # schema parity with the batch pipeline's sinks: the same per-row
-    # content hash ships WITH the data, so batch and streaming runs
-    # against the same sink paths stay single-schema.
-    return df.withColumn("row_hash", F.xxhash64("doc_id", "tok_hash"))
-
-
-def _ship_and_commit(
-    spark: SparkSession,
-    conf: PipelineConf,
-    df: DataFrame,
-    in_ids_for,
-    batch_label,
-) -> dict:
-    """Route `df` (already staged + persisted) to every sink and commit
-    manifest rows. `in_ids_for(parts)` resolves the input identity for
-    exactly the parts present — O(batch) work, never O(table)."""
-    from llogtail_spark.operators.aggregate import pipeline_stats
-
-    # ONE stats job per micro-batch for per-sink lineage counts.
-    stats = {r["part"]: r for r in pipeline_stats(df, conf.sinks).collect()}
-    in_ids = in_ids_for(list(stats)) if stats else {}
-    for rule in conf.sinks:
-        sdf = df.filter(F.expr(rule.predicate))
-        (
-            sdf.write.format(rule.format)
-            .mode("overwrite")
-            .partitionBy("part")
-            .save(rule.path)
-        )
-        for p, s in stats.items():
-            ins = in_ids.get(p)
-            if ins is None:
-                # identity unresolved (file vanished/renamed mid-
-                # batch): committing in_checksum=0 would create an
-                # entry validate_manifest always flags stale. Leave
-                # the part UNCOMMITTED — the sink write above is
-                # idempotent, so the reprocess on restart is exact.
-                print(
-                    f"llogtail_spark: batch {batch_label} part {p!r} has no "
-                    "resolvable input identity; skipping manifest commit",
-                    file=sys.stderr,
-                )
-                continue
-            mf.commit(
-                conf.manifest_dir,
-                mf.ManifestEntry(
-                    sink=rule.name, part=p,
-                    row_count=int(s[f"rc__{rule.name}"]),
-                    tok_total=int(s[f"tt__{rule.name}"]),
-                    checksum=int(s[f"ck__{rule.name}"]),
-                    watermark_offset=int(ins[0]),
-                    committed_at=conf.committed_at,
-                    in_row_count=int(ins[0]),
-                    in_checksum=int(ins[1]),
-                ),
-            )
-    return stats
-
-
-def _process_batch(spark: SparkSession, conf: PipelineConf, batch_df: DataFrame,
-                   batch_id: int, cache: dict | None = None) -> None:
-    """One micro-batch through parse -> enrich -> route -> ship -> cpt."""
-    df = _run_stages(spark, conf, batch_df).persist()
-    batch_files: dict[str, str] = {}
-    try:
+def _process_batch(spark: SparkSession, conf: PipelineConf, workdir: str,
+                   batch_df: DataFrame, ledger: dict | None) -> None:
+    """One micro-batch: its files through the batch core, then the
+    rescan when in-place rotation handling is on (`ledger` not None)."""
+    # input_file_name() is a URI with escaped characters; local_path
+    # turns a file: URI back into the path that is on disk
+    uris = [r[0] for r in batch_df.select(F.input_file_name()).distinct().collect()]
+    files = {reader.part_of(f): f for f in (reader.local_path(u) or u for u in uris if u)}
+    if files:
         # input identity from parquet FOOTER metadata — the SAME
-        # definition validate_manifest recomputes (a content-hash
-        # in_checksum here would make every streamed entry look
-        # stale). batch_df.inputFiles() is empty for streaming frames,
-        # so resolve only THIS batch's parts to files (O(batch) work).
-        def _in_ids(parts: list[str]) -> dict:
-            batch_files.update(_resolve_batch_files(
-                spark, conf.input_path, parts,
-                cache if cache is not None else {},
-            ))
-            return reader.files_identity(batch_files) if batch_files else {}
-
-        _ship_and_commit(spark, conf, df, _in_ids, batch_id)
-    finally:
-        df.unpersist()
-    if cache is not None and cache.get("rescan"):
-        ledger = cache.setdefault("ledger", {})
+        # definition validate_manifest recomputes
+        _ship_all(spark, conf, workdir, files, reader.files_identity(files))
+    if ledger is not None:
         # seed the ledger with this batch's just-committed files so the
         # rescan's footer reads stay O(changed), not O(committed)
-        for p, f in batch_files.items():
+        for p, f in files.items():
             ledger[p] = _stat_of(f)
         rescan_rewritten(spark, conf, ledger)
 
@@ -232,15 +128,15 @@ def rescan_rewritten(spark: SparkSession, conf: PipelineConf,
     reads only parts whose stat moved since the ledger saw them
     (O(changed); a cold ledger — fresh stream or restart — pays one
     metadata-only footer sweep over committed parts, exactly the
-    batch validate_manifest cost), and pushes just the rewritten
-    files through the same parse -> enrich -> route -> ship -> commit
-    stages. Per-partition dynamic overwrite + manifest recommit make
-    it idempotent. A file mid-rewrite (unreadable footer) is skipped
+    batch validate_manifest cost), and ships just the rewritten
+    files to every sink through the batch core with the identities it
+    already read. A file mid-rewrite (unreadable footer) is skipped
     this round and re-checked next rescan — the writer is still
     active, the same wait-for-quiesce the watcher applies to a file
     growing under its tail.
 
     Returns the sorted list of re-shipped partition ids."""
+    workdir = pipeline.local_workdir(conf)
     entries = mf.read_all(conf.manifest_dir)
     by_part: dict[str, mf.ManifestEntry] = {}
     for e in entries:
@@ -282,17 +178,7 @@ def rescan_rewritten(spark: SparkSession, conf: PipelineConf,
             changed[part] = path
             ids[part] = (rc, ck)
     if changed:
-        df = _run_stages(
-            spark, conf, reader.read_files(spark, list(changed.values()))
-        ).persist()
-        try:
-            _ship_and_commit(
-                spark, conf, df,
-                lambda parts: {p: ids[p] for p in parts if p in ids},
-                "rescan",
-            )
-        finally:
-            df.unpersist()
+        _ship_all(spark, conf, workdir, changed, ids)
     return sorted(changed)
 
 
@@ -311,6 +197,7 @@ def stream_pipeline(
     micro-batch — in-place-rewritten files are detected and re-shipped
     by the stream itself (see module header for the trade).
     """
+    workdir = pipeline.local_workdir(conf)
     opts = {}
     if max_files_per_trigger:
         opts["maxFilesPerTrigger"] = str(max_files_per_trigger)
@@ -319,12 +206,11 @@ def stream_pipeline(
         .options(**opts)
         .parquet(conf.input_path)
     )
-    # per-stream part->file listing cache (fallback only) + the
-    # rescan flag/ledger when in-place rotation handling is on
-    cache: dict = {"rescan": True} if rescan else {}
+    # the rescan's stat ledger lives for the stream's lifetime
+    ledger: dict | None = {} if rescan else None
     writer = (
         stream.writeStream.foreachBatch(
-            lambda bdf, bid: _process_batch(spark, conf, bdf, bid, cache)
+            lambda bdf, _: _process_batch(spark, conf, workdir, bdf, ledger)
         )
         .option("checkpointLocation", os.path.join(conf.workdir, "stream_cpt"))
     )

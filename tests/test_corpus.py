@@ -1334,3 +1334,27 @@ def test_dup_win_hashes_matches_hof_fold(spark):
     for r in got:
         assert list(r["w"]["wh1"]) == list(r["e1"]), r["doc_id"]
         assert list(r["w"]["wh2"]) == list(r["e2"]), r["doc_id"]
+
+
+def test_char_fold_with_a_base64_token_matches_per_word_fold():
+    """One base64-sized token among short words: the vectorized char
+    fold is bit-identical to folding each word on its own."""
+    import base64
+
+    import numpy as np
+
+    from llogtail_spark.functions.portable_hash import MOD, MULT
+    from llogtail_spark.operators.corpus import _char_fold_np
+
+    def fold(w):
+        h = 0
+        for c in w:
+            h = (h * MULT + ord(c)) % MOD
+        return h
+
+    blob = base64.b64encode(np.random.default_rng(3).bytes(48_000)).decode()
+    words = ["foo", "", "café", blob, "naïve", "x" * 40, "0", blob[:7]]
+    got = _char_fold_np(words)
+    assert got.dtype == np.int64
+    assert got.tolist() == [fold(w) for w in words]
+    assert _char_fold_np([]).tolist() == []

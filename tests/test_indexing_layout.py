@@ -4,6 +4,7 @@ integer PageRank, and SCD-2 intervals."""
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -677,3 +678,15 @@ def test_copurchase_lift_hand_case(spark):
     # pair (1,3) co-occurs once in 9 baskets with n1=5, n3=5:
     # lift = 1*9*1000//25 = 360 (< 1000: anti-correlated)
     assert out[(1, 3)]["lift_x3"] == 360
+
+
+@pytest.mark.parametrize("bad", [-1, 2**31])
+def test_triangle_counts_rejects_ids_outside_31_bits(spark, bad):
+    """The (degree, id) and (b, c) keys pack ids into 31 bits; an id
+    outside [0, 2^31) fails the job instead of colliding silently."""
+    from llogtail_spark.operators.indexing import triangle_counts
+
+    tri = [(0, 1), (min(0, bad), max(0, bad)), (min(1, bad), max(1, bad))]
+    edges = spark.createDataFrame(tri, "u long, v long")
+    with pytest.raises(Exception, match=r"outside \[0, 2\^31\)"):
+        triangle_counts(edges).collect()

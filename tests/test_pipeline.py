@@ -251,6 +251,7 @@ def test_remote_workdir_rejected_loudly(spark, data_dir, tmp_path):
     from llogtail_spark.config import PipelineConf
     from llogtail_spark.operators.route import SinkRule
     from llogtail_spark.pipeline import run_pipeline
+    from llogtail_spark.streaming.tail import stream_pipeline
 
     conf = PipelineConf(
         input_path=os.path.join(data_dir, "sequences"),
@@ -258,8 +259,9 @@ def test_remote_workdir_rejected_loudly(spark, data_dir, tmp_path):
         workdir="hdfs://nn/flow/work",
         sinks=[SinkRule("all", "true", str(tmp_path / "out"))],
     )
-    with pytest.raises(NotImplementedError, match="workdir"):
-        run_pipeline(spark, conf)
+    for run in (run_pipeline, stream_pipeline):
+        with pytest.raises(NotImplementedError, match="workdir"):
+            run(spark, conf)
 
 
 def test_file_uri_workdir_resolves_not_corrupts(spark, data_dir, tmp_path, oracle_pdf):

@@ -5,6 +5,7 @@ register -> discover existing files -> new file appears -> only the
 new data flows -> restart resumes from the stream checkpoint."""
 
 import os
+import re
 import shutil
 
 import pytest
@@ -459,6 +460,78 @@ def test_stream_rescan_reships_rewritten_during_stream(spark, tmp_path):
     assert fire.filter(F.col("part") == "part-99999").count() == 50
     # every shipped row is committed and consistent
     assert len(mf.committed_parts(conf.manifest_dir, "firehose")) == 4
+
+
+def _stream_then_rewrite(spark, tmp_path, seed, table):
+    """Stream 3 parts, then rewrite part-00001 in place with `table`."""
+    import pyarrow.parquet as pq
+
+    data = str(tmp_path / "data")
+    write_fixture(data, 300, seed=seed, n_files=3)
+    conf = _conf(data, tmp_path / "w")
+    stream_pipeline(spark, conf).awaitTermination(120)
+    for rule in conf.sinks:
+        sink = spark.read.parquet(rule.path)
+        assert sink.filter(F.col("part") == "part-00001").count() > 0
+    pq.write_table(table, os.path.join(data, "sequences", "part-00001.parquet"))
+    return conf
+
+
+def test_rescan_clears_a_sink_the_rewrite_no_longer_routes_to(spark, tmp_path):
+    """A part rewritten with rows that route none to `errors` must
+    leave no `errors` rows for it: the rescan ships the part to every
+    sink, and a sink that stages nothing is cleared."""
+    import pyarrow.compute as pc
+
+    from llogtail_spark.pipeline import validate_manifest
+    from llogtail_spark.streaming.tail import rescan_rewritten
+
+    t = generate_sequences(150, seed=91)
+    quiet = t.filter(pc.less(pc.list_element(t["tokens"], 0), 4))  # below ERROR
+    conf = _stream_then_rewrite(spark, tmp_path, 45, quiet)
+
+    assert rescan_rewritten(spark, conf) == ["part-00001"]
+    err = spark.read.parquet(conf.sinks[0].path)
+    assert err.filter(F.col("part") == "part-00001").count() == 0
+    fire = spark.read.parquet(conf.sinks[1].path)
+    assert fire.filter(F.col("part") == "part-00001").count() == quiet.num_rows
+    assert validate_manifest(spark, conf) == []
+
+
+def test_rescan_of_a_truncated_part_clears_every_sink(spark, tmp_path):
+    """llogtail's copytruncate case: a part truncated to an empty
+    parquet file is cleared from every sink and re-committed with its
+    new (empty) identity."""
+    from llogtail_spark.pipeline import validate_manifest
+    from llogtail_spark.streaming.tail import rescan_rewritten
+
+    empty = generate_sequences(10, seed=92).slice(0, 0)
+    conf = _stream_then_rewrite(spark, tmp_path, 46, empty)
+
+    assert rescan_rewritten(spark, conf) == ["part-00001"]
+    for rule in conf.sinks:
+        sink = spark.read.parquet(rule.path)
+        assert sink.filter(F.col("part") == "part-00001").count() == 0, rule.name
+    got = [e for e in mf.read_all(conf.manifest_dir) if e.part == "part-00001"]
+    assert sorted(e.sink for e in got) == ["errors", "firehose"]
+    assert all(e.in_row_count == 0 and e.row_count == 0 for e in got)
+    assert validate_manifest(spark, conf) == []
+
+
+def test_stream_refuses_a_held_workdir(spark, tmp_path):
+    """A stream on a workdir another run holds fails loudly, naming
+    the workdir, and writes no sink and no manifest entry."""
+    from pyspark.errors import StreamingQueryException
+
+    data = str(tmp_path / "data")
+    write_fixture(data, 200, seed=47, n_files=2)
+    conf = _conf(data, tmp_path / "w")
+    with mf.lease(conf.workdir):
+        q = stream_pipeline(spark, conf)
+        with pytest.raises(StreamingQueryException, match=re.escape(conf.workdir)):
+            q.awaitTermination(120)
+    assert not any(os.path.exists(r.path) for r in conf.sinks)
+    assert mf.read_all(conf.manifest_dir) == []
 
 
 def _docs_table(rows):
