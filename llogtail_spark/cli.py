@@ -29,7 +29,8 @@ def main(argv: list[str] | None = None) -> int:
                          "pack->ship with per-stage resume instead of the "
                          "log pipeline)")
     ap.add_argument("--validate", action="store_true",
-                    help="re-validate manifest identities before resume")
+                    help="re-validate manifest identities before resume "
+                         "(the corpus pipeline always validates)")
     args = ap.parse_args(argv)
     if bool(args.conf) == bool(args.corpus_conf):
         ap.error("exactly one of --conf / --corpus-conf is required")
@@ -42,8 +43,6 @@ def main(argv: list[str] | None = None) -> int:
 
         with open(args.corpus_conf) as f:
             cc = CorpusConf(**json.load(f))
-        if args.validate:
-            cc.validate_on_start = True
         spark = get_spark("llogtail_spark.cli")
         res = run_corpus_pipeline(spark, cc)
         print(json.dumps({

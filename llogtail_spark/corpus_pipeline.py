@@ -7,22 +7,33 @@ independent query; this module COMPOSES them into the one pipeline a
 pretraining-data team actually runs, with the same consistency
 contract as the log pipeline (`pipeline.py`):
 
-- the whole run holds the workdir lease (`manifest.lease`);
-- every stage materializes its output with an observed write, its
-  readback is reconciled against the observation, and only then does
-  its stage manifest commit (push-then-checkpoint,
-  log_collector.go:208-215) recording input identity, output (rows,
-  token total, xor checksum), and a params fingerprint — so a
-  partial/corrupted stage file refuses to become lineage;
+- the whole run holds the workdir lease (`manifest.lease`); the
+  workdir and out_path go through the log pipeline's local-dir guard
+  (`pipeline.local_dir`), so a 'file:' URI behaves as its path;
+- the run walks ONE ordered stage table, `STAGES` (stage -> transform
+  and the CorpusConf knobs its params fingerprint reads); the lazy
+  composition and the eager funnel walk the same table;
 - a killed run resumes by SKIPPING every stage whose manifest still
-  validates against its upstream chain (input unchanged, same params)
-  and recomputing from the first broken link — the batch analog of
-  llogtail's offset-checkpoint recovery (utils.go:128-133);
+  validates against its upstream chain (input unchanged, same params,
+  a recorded schema) and recomputing from the first broken link — the
+  batch analog of llogtail's offset-checkpoint recovery
+  (utils.go:128-133); a stale manifest is dropped before the recompute;
+- a recomputed stage writes straight into stages_dir/<stage> with
+  `manifest.write_reconciled` (remove the dir, observed write,
+  `after_data` failpoint, readback, reconcile; the pack table is
+  partitioned by shard), and only then does its stage manifest commit
+  (push-then-checkpoint, log_collector.go:208-215) recording input
+  identity, output (rows, token total, xor checksum), params
+  fingerprint and schema — so a partial/corrupted stage file refuses
+  to become lineage;
+- the next stage reads the stage dir with that schema, whether the
+  stage ran or was skipped;
 - the final ship copies the pending packed shards from a thread pool,
-  then commits one manifest row per shard (sink="packed"), and
-  shipped shards are skipped on re-run (effectively-once).
+  then commits one manifest row per shard (sink="packed") with the
+  pack write's per-shard readback, and shipped shards are skipped on
+  re-run (effectively-once).
 
-Records, the observe/readback aggregates, the reconciliation and the
+Records, the observed write and its reconciled readback, and the
 ship-then-commit step are `manifest.py`'s, shared with `pipeline.py`.
 
 Stage semantics are EXACTLY the oracle-green operators they compose
@@ -56,7 +67,7 @@ straggler idled the rest (2->8 cores gave 2.3x, not 4x). Set
   spark.sql.adaptive.advisoryPartitionSizeInBytes=16m..64m
 so partition counts follow DATA SIZE, not cluster size (the benches
 set exactly this; see bench/corpus_scaling.py). Stage outputs write
-32 MB row groups for the same reason (stage_block_bytes).
+32 MB row groups for the same reason (STAGE_BLOCK_BYTES).
 """
 
 from __future__ import annotations
@@ -69,11 +80,13 @@ import zlib
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from llogtail_spark import manifest as mf
 from llogtail_spark.manifest import StageManifest, commit_stage, read_stage
+from llogtail_spark.pipeline import local_dir
 from llogtail_spark.sources import reader
 
 # default mixture targets (basis points, sum 10000) over the `lang`
@@ -82,9 +95,12 @@ DEFAULT_TARGETS_BP = {
     "en": 4000, "zh": 2000, "es": 2000, "de": 1000, "fr": 1000,
 }
 
-CORPUS_STAGES = (
-    "exact_dedup", "near_dedup", "decontaminate", "quality", "sample", "pack",
-)
+# parquet row-group size for STAGE outputs: stage files are read back
+# by the next stage, and splits cannot cross row groups, so
+# one-row-group files cap the next stage's scan parallelism at the
+# file count. 32 MB keeps slack (~4 splits/file) at bench scale and is
+# a sane row-group size at cluster scale too.
+STAGE_BLOCK_BYTES = 32 * 1024 * 1024
 
 Failpoint = Callable[[str, str], None]  # (stage, phase)
 
@@ -130,60 +146,32 @@ class CorpusConf:
     seq_len: int = 128
     nshards: int = 8
     committed_at: str = ""
-    validate_on_start: bool = True
-    # parquet row-group size for STAGE outputs: stage files are read
-    # back by the next stage, and splits cannot cross row groups, so
-    # one-row-group files cap the next stage's scan parallelism at
-    # the file count. 32 MB keeps slack (~4 splits/file) at bench
-    # scale and is a sane row-group size at cluster scale too.
-    stage_block_bytes: int = 32 * 1024 * 1024
 
     def params_crc(self, stage: str) -> int:
         """Stage-scoped params fingerprint: changing a knob invalidates
         exactly the stages whose semantics it feeds (and, through the
         identity chain, everything downstream)."""
-        scoped: dict = {}
-        if stage == "exact_dedup":
-            scoped = {}
-        elif stage == "near_dedup":
-            scoped = {"num_hashes": self.num_hashes, "bands": self.bands,
-                      "cap_reps": self.cap_reps,
-                      "shingle_n": self.shingle_n,
-                      "hash_mode": self.hash_mode}
-        elif stage == "decontaminate":
-            scoped = {"n": self.contam_n, "min_hits": self.contam_min_hits,
-                      "benchmark_path": self.benchmark_path,
-                      "benchmark_mod": self.benchmark_mod}
-        elif stage == "quality":
-            scoped = {"min_toks": self.min_toks,
-                      "max_dup_bp": self.max_dup_bp,
-                      "max_pii": self.max_pii}
-        elif stage == "sample":
-            scoped = {"targets_bp": self.targets_bp, "seed_i": self.seed_i,
-                      "group_col": self.group_col}
-        elif stage == "pack":
-            scoped = {"seq_len": self.seq_len, "nshards": self.nshards}
+        scoped = {k: getattr(self, attr) for k, attr in STAGES[stage][1].items()}
         blob = json.dumps(
-            {"stage": stage, "id": self.id_col, "text": self.text_col,
-             **{k: scoped[k] for k in sorted(scoped)}},
+            {"stage": stage, "id": self.id_col, "text": self.text_col, **scoped},
             sort_keys=True).encode()
         return zlib.crc32(blob)
 
     @property
     def stages_dir(self) -> str:
-        return os.path.join(self.workdir, "corpus_stages")
+        return os.path.join(local_dir(self.workdir), "corpus_stages")
 
     @property
     def manifest_dir(self) -> str:
         """Ship (per-shard) manifest entries — mf.ManifestEntry files."""
-        return os.path.join(self.workdir, "corpus_manifest")
+        return os.path.join(local_dir(self.workdir), "corpus_manifest")
 
     @property
     def stage_manifest_dir(self) -> str:
         """Stage manifests live in their OWN dir: mf.read_all parses
         every *.json under manifest_dir, and a stage manifest is not a
         ManifestEntry."""
-        return os.path.join(self.workdir, "stage_manifest")
+        return os.path.join(local_dir(self.workdir), "stage_manifest")
 
 
 # ---------------------------------------------------------------- stages
@@ -191,7 +179,8 @@ class CorpusConf:
 # oracle-green individual queries, so the composition inherits their
 # verified semantics and their certified plan shapes.
 
-def stage_exact_dedup(df: DataFrame, conf: CorpusConf) -> DataFrame:
+def stage_exact_dedup(df: DataFrame, benchmark: DataFrame,
+                      conf: CorpusConf) -> DataFrame:
     from llogtail_spark.operators.dedup import exact_dedup
 
     return exact_dedup(df, key=conf.text_col, id_col=conf.id_col)
@@ -204,7 +193,8 @@ def stage_exact_dedup(df: DataFrame, conf: CorpusConf) -> DataFrame:
 NEAR_DEDUP_ANTI_BROADCAST_MAX = 30_000_000
 
 
-def stage_near_dedup(df: DataFrame, conf: CorpusConf) -> DataFrame:
+def stage_near_dedup(df: DataFrame, benchmark: DataFrame,
+                     conf: CorpusConf) -> DataFrame:
     from llogtail_spark.operators.dedup import (
         minhash_lsh_pairs,
         resolve_components,
@@ -248,7 +238,8 @@ def stage_decontaminate(df: DataFrame, benchmark: DataFrame,
     return df.join(hits.select(conf.id_col), conf.id_col, "left_anti")
 
 
-def stage_quality(df: DataFrame, conf: CorpusConf) -> DataFrame:
+def stage_quality(df: DataFrame, benchmark: DataFrame,
+                  conf: CorpusConf) -> DataFrame:
     from llogtail_spark.functions.text import (
         EMAIL_RX,
         IPV4_RX,
@@ -273,7 +264,8 @@ def stage_quality(df: DataFrame, conf: CorpusConf) -> DataFrame:
     )
 
 
-def stage_sample(df: DataFrame, conf: CorpusConf) -> DataFrame:
+def stage_sample(df: DataFrame, benchmark: DataFrame,
+                 conf: CorpusConf) -> DataFrame:
     if not conf.targets_bp:
         return df
     from llogtail_spark.operators.sampling import mixture_resample
@@ -283,21 +275,44 @@ def stage_sample(df: DataFrame, conf: CorpusConf) -> DataFrame:
     return df.join(kept.select(conf.id_col), conf.id_col, "semi")
 
 
-def stage_pack(df: DataFrame, conf: CorpusConf) -> DataFrame:
+def stage_pack(df: DataFrame, benchmark: DataFrame,
+               conf: CorpusConf) -> DataFrame:
     from llogtail_spark.operators.corpus import seq_packing
 
     return seq_packing(df, text_col=conf.text_col, id_col=conf.id_col,
                        seq_len=conf.seq_len, nshards=conf.nshards)
 
 
+# The funnel, in order: stage -> (transform(df, benchmark, conf),
+# {params_crc key: CorpusConf attr}). The params map scopes each
+# stage's fingerprint to the knobs its semantics read.
+STAGES: dict[str, tuple[Callable[[DataFrame, DataFrame, CorpusConf], DataFrame],
+                        dict[str, str]]] = {
+    "exact_dedup": (stage_exact_dedup, {}),
+    "near_dedup": (stage_near_dedup, {
+        "num_hashes": "num_hashes", "bands": "bands", "cap_reps": "cap_reps",
+        "shingle_n": "shingle_n", "hash_mode": "hash_mode"}),
+    "decontaminate": (stage_decontaminate, {
+        "n": "contam_n", "min_hits": "contam_min_hits",
+        "benchmark_path": "benchmark_path", "benchmark_mod": "benchmark_mod"}),
+    "quality": (stage_quality, {
+        "min_toks": "min_toks", "max_dup_bp": "max_dup_bp", "max_pii": "max_pii"}),
+    "sample": (stage_sample, {
+        "targets_bp": "targets_bp", "seed_i": "seed_i", "group_col": "group_col"}),
+    "pack": (stage_pack, {"seq_len": "seq_len", "nshards": "nshards"}),
+}
+CORPUS_STAGES = tuple(STAGES)
+
+
 def corpus_stages(docs: DataFrame, benchmark: DataFrame,
                   conf: CorpusConf) -> dict[str, DataFrame]:
     """The LAZY composition: every stage's output frame, keyed by
-    stage name (the last is the packed placement table). Shared by
-    the resumable runner's per-stage transforms and the oracle-paired
-    query entry, so materialized == lazy == DuckDB oracle.
+    stage name (the last is the packed placement table). Built from
+    the same STAGES table the resumable runner materializes, and used
+    by the oracle-paired query entry, so materialized == lazy ==
+    DuckDB oracle.
 
-    Each doc-stage output is lineage-cut (lazy — ckpt.py knob:
+    Each stage reads its upstream through a lineage cut (lazy — ckpt.py knob:
     localCheckpoint, or reliable checkpoint when a checkpoint dir is
     set). Round-6 measurement: the chain prefix otherwise executes
     ~3x per run — resolve_components' gate count materializes the
@@ -311,15 +326,13 @@ def corpus_stages(docs: DataFrame, benchmark: DataFrame,
     from llogtail_spark.operators.ckpt import checkpoint
 
     out: dict[str, DataFrame] = {}
-    df = out["exact_dedup"] = checkpoint(stage_exact_dedup(docs, conf),
-                                         eager=False)
-    df = out["near_dedup"] = checkpoint(stage_near_dedup(df, conf),
-                                        eager=False)
-    df = out["decontaminate"] = checkpoint(
-        stage_decontaminate(df, benchmark, conf), eager=False)
-    df = out["quality"] = checkpoint(stage_quality(df, conf), eager=False)
-    df = out["sample"] = checkpoint(stage_sample(df, conf), eager=False)
-    out["pack"] = stage_pack(df, conf)
+    df = docs
+    for stage, (transform, _) in STAGES.items():
+        if out:
+            # cut where the upstream output feeds this stage; nothing
+            # here consumes the last output, so it stays uncut
+            df = checkpoint(df, eager=False)
+        df = out[stage] = transform(df, benchmark, conf)
     return out
 
 
@@ -341,20 +354,8 @@ def corpus_funnel_counts(docs: DataFrame, benchmark: DataFrame,
 
     rows: list[tuple[int, str, int]] = []
     df = docs
-    for i, stage in enumerate(CORPUS_STAGES):
-        if stage == "exact_dedup":
-            df = stage_exact_dedup(df, conf)
-        elif stage == "near_dedup":
-            df = stage_near_dedup(df, conf)
-        elif stage == "decontaminate":
-            df = stage_decontaminate(df, benchmark, conf)
-        elif stage == "quality":
-            df = stage_quality(df, conf)
-        elif stage == "sample":
-            df = stage_sample(df, conf)
-        else:
-            df = stage_pack(df, conf)
-        df = checkpoint(df, eager=True)
+    for i, (stage, (transform, _)) in enumerate(STAGES.items()):
+        df = checkpoint(transform(df, benchmark, conf), eager=True)
         rows.append((i, stage, df.count()))
     return rows
 
@@ -416,19 +417,12 @@ def run_corpus_pipeline(
     conf: CorpusConf,
     failpoint: Failpoint | None = None,
 ) -> CorpusRunResult:
-    workdir = reader.local_path(conf.workdir)
-    if workdir is None:
-        raise NotImplementedError(
-            f"workdir must be local (got {conf.workdir!r}); on a cluster "
-            "each stage is an Iceberg table commit (pipeline.py ship path)")
-    with mf.lease(workdir):
+    with mf.lease(local_dir(conf.workdir)):
         return _run(spark, conf, failpoint)
 
 
 def _run(spark: SparkSession, conf: CorpusConf,
          failpoint: Failpoint | None) -> CorpusRunResult:
-    os.makedirs(conf.stages_dir, exist_ok=True)
-
     in_rows, in_crc = _input_identity(conf.input_path)
     docs0 = spark.read.parquet(conf.input_path)
     corpus, benchmark, bench_crc = _read_benchmark(spark, docs0, conf)
@@ -452,101 +446,57 @@ def _run(spark: SparkSession, conf: CorpusConf,
         b"benchmark:external" if conf.benchmark_path is not None
         else f"benchmark:split:{conf.benchmark_mod}".encode())
     upstream_df = corpus
-    for stage in CORPUS_STAGES:
+    for stage, (transform, _) in STAGES.items():
         params = conf.params_crc(stage)
         if stage == "decontaminate":
             params ^= bench_crc
         m = read_stage(conf.stage_manifest_dir, stage)
         data_dir = os.path.join(conf.stages_dir, stage)
-        valid = (
-            m is not None
-            and m.in_rows == chain_rows
-            and m.in_checksum == chain_crc
-            and m.params_crc == params
-            and os.path.isdir(data_dir)
-        )
-        if conf.validate_on_start and not valid and m is not None:
+        stats = None  # the recomputed stage's per-key readback
+        if (m is not None and m.schema_json
+                and (m.in_rows, m.in_checksum) == (chain_rows, chain_crc)
+                and m.params_crc == params and os.path.isdir(data_dir)):
+            stages_skipped.append(stage)
+            schema = StructType.fromJson(json.loads(m.schema_json))
+            out_rows, out_ck = m.out_rows, m.out_checksum
+        else:
             # stale manifest: drop it so a crash mid-recompute can't
             # resurrect it (validateCpt analog, utils.go:128-133)
-            mf.invalidate_stage(conf.stage_manifest_dir, stage)
-        t_stage = time.time()
-        if valid:
-            stages_skipped.append(stage)
-            rd = spark.read
-            if m.schema_json:
-                from pyspark.sql.types import StructType
-
-                rd = rd.schema(StructType.fromJson(json.loads(m.schema_json)))
-            upstream_df = rd.parquet(data_dir)
-            funnel[stage] = m.out_rows
-            chain_rows, chain_crc = m.out_rows, m.out_checksum
-            continue
-
-        # ---- recompute this stage from the materialized upstream
-        if stage == "exact_dedup":
-            out = stage_exact_dedup(upstream_df, conf)
-        elif stage == "near_dedup":
-            out = stage_near_dedup(upstream_df, conf)
-        elif stage == "decontaminate":
-            out = stage_decontaminate(upstream_df, benchmark, conf)
-        elif stage == "quality":
-            out = stage_quality(upstream_df, conf)
-        elif stage == "sample":
-            out = stage_sample(upstream_df, conf)
-        else:
-            out = stage_pack(upstream_df, conf)
-
-        # checksum key: doc identity for doc stages; the full
-        # placement (doc, offset, bins) for the pack table — bins must
-        # participate or a seq_len change that keeps offsets would
-        # leave stale ship entries "valid" and skip re-shipping
-        if stage == "pack":
-            ck = _pack_ck(conf)
-            tok = F.col("n_tok")
-        else:
-            ck = F.xxhash64(F.col(conf.id_col))
-            tok = F.lit(0)
-        obs = Observation(f"stage-{stage}")
-        tmp_dir = os.path.join(conf.stages_dir, f"_tmp_{stage}")
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        writer = out.observe(obs, *mf.lineage(tok, ck)).write.mode("overwrite") \
-            .option("parquet.block.size", str(conf.stage_block_bytes))
-        if stage == "pack":
-            writer = writer.partitionBy("shard")
-        writer.parquet(tmp_dir)
-        got = obs.get
-        shutil.rmtree(data_dir, ignore_errors=True)
-        os.replace(tmp_dir, data_dir)
-        if failpoint:
-            failpoint(stage, "after_data")  # tests corrupt/kill here
-
-        # readback reconciliation BEFORE the manifest commit: checksum
-        # what landed in the files. Explicit schema: a legitimately
-        # EMPTY stage (e.g. a quality gate that kills everything, or a
-        # mixture whose scarcest group vanished) writes no data files,
-        # and schema inference would raise instead of reconciling
-        # rows=0 against rows=0.
-        rb_df = spark.read.schema(out.schema).parquet(data_dir)
-        if stage == "pack":
-            rb_df = _cast_pack(rb_df, conf)
-        mf.reconcile(f"corpus stage {stage!r}", got,
-                     mf.readback(rb_df, tok, ck).values())
-        if failpoint:
-            failpoint(stage, "before_commit")
-        commit_stage(conf.stage_manifest_dir, StageManifest(
-            stage=stage, in_rows=chain_rows, in_checksum=chain_crc,
-            out_rows=int(got["rows"]), tok_total=int(got["tok_total"]),
-            out_checksum=int(got["checksum"]), params_crc=params,
-            committed_at=conf.committed_at,
-            schema_json=out.schema.json(),
-        ))
-        if failpoint:
-            failpoint(stage, "after_commit")
-        stages_run.append(stage)
-        stage_timings[stage] = round(time.time() - t_stage, 3)
-        funnel[stage] = int(got["rows"])
-        chain_rows, chain_crc = int(got["rows"]), int(got["checksum"])
-        upstream_df = rb_df
+            if m is not None:
+                mf.invalidate_stage(conf.stage_manifest_dir, stage)
+            t_stage = time.time()
+            out = transform(upstream_df, benchmark, conf)
+            # checksum key: doc identity for doc stages; the full
+            # placement (doc, offset, bins) for the pack table — bins
+            # must participate or a seq_len change that keeps offsets
+            # would leave stale ship entries "valid" and skip re-shipping
+            if stage == "pack":
+                tok, ck, keys = F.col("n_tok"), _pack_ck(conf), ("shard",)
+            else:
+                tok, ck, keys = F.lit(0), F.xxhash64(F.col(conf.id_col)), ()
+            got, stats = mf.write_reconciled(
+                f"corpus stage {stage!r}", out, data_dir, tok, ck, keys=keys,
+                options={"parquet.block.size": str(STAGE_BLOCK_BYTES)},
+                hook=failpoint and (lambda: failpoint(stage, "after_data")))
+            if failpoint:
+                failpoint(stage, "before_commit")
+            schema = out.schema
+            out_rows, out_ck = int(got["rows"]), int(got["checksum"])
+            commit_stage(conf.stage_manifest_dir, StageManifest(
+                stage=stage, in_rows=chain_rows, in_checksum=chain_crc,
+                out_rows=out_rows, tok_total=int(got["tok_total"]),
+                out_checksum=out_ck, params_crc=params,
+                committed_at=conf.committed_at, schema_json=schema.json(),
+            ))
+            if failpoint:
+                failpoint(stage, "after_commit")
+            stages_run.append(stage)
+            stage_timings[stage] = round(time.time() - t_stage, 3)
+        funnel[stage] = out_rows
+        chain_rows, chain_crc = out_rows, out_ck
+        # explicit schema: a skipped stage may legitimately be EMPTY
+        # (no data files), where schema inference would raise
+        upstream_df = spark.read.schema(schema).parquet(data_dir)
 
     # ---- ship: per-shard COPY out of the pack stage dir + manifest
     # commit (sink="packed"). Copy, not rename: the stage dir stays
@@ -555,18 +505,18 @@ def _run(spark: SparkSession, conf: CorpusConf,
     # a cluster this whole step is ONE Iceberg overwritePartitions
     # commit (pipeline._ship_sink_iceberg).
     pack_dir = os.path.join(conf.stages_dir, "pack")
-    pack_m = read_stage(conf.stage_manifest_dir, "pack")
-    # a ship entry is valid only against the CURRENT pack output: its
-    # in_checksum recorded the pack manifest it shipped from, so a
-    # recomputed pack stage (new params, new input) invalidates every
-    # stale entry and the shard re-ships (validateCpt discipline,
-    # utils.go:128-133)
+    out_path = local_dir(conf.out_path)
+    # a ship entry is valid only against the CURRENT pack output (the
+    # chain's last identity): its in_checksum recorded the pack output
+    # it shipped from, so a recomputed pack stage (new params, new
+    # input) invalidates every stale entry and the shard re-ships
+    # (validateCpt discipline, utils.go:128-133)
+    identity = (chain_rows, chain_crc)
     done: set[str] = set()
     for e in mf.read_all(conf.manifest_dir):
         if e.sink != "packed":
             continue
-        if pack_m is not None and e.in_row_count == pack_m.out_rows \
-                and e.in_checksum == pack_m.out_checksum:
+        if (e.in_row_count, e.in_checksum) == identity:
             done.add(e.part)
         else:
             mf.invalidate(conf.manifest_dir, e.sink, e.part)
@@ -577,30 +527,29 @@ def _run(spark: SparkSession, conf: CorpusConf,
     # recompute) is a stale product — read_packed would return its
     # phantom rows. Remove it and its manifest entry.
     live = set(shards)
-    if os.path.isdir(conf.out_path):
-        for e in os.scandir(conf.out_path):
+    if os.path.isdir(out_path):
+        for e in os.scandir(out_path):
             part = e.name.removeprefix("shard=")
             if e.name.startswith("shard=") and part not in live:
                 shutil.rmtree(e.path, ignore_errors=True)
                 mf.invalidate(conf.manifest_dir, "packed", part)
-    # per-shard stats in ONE column-pruned readback pass (an empty
-    # pack output has no shard dirs and nothing to ship or read)
-    shard_stats = {} if not shards else mf.readback(
-        spark.read.parquet(pack_dir), "n_tok", _pack_ck(conf), keys=("shard",))
     pending = [p for p in shards if p not in done]
+    # per-shard lineage: the pack write's own readback (`stats` of the
+    # loop's last stage), or one readback pass if pack was skipped
+    if stats is None and pending:
+        stats = mf.readback(upstream_df, "n_tok", _pack_ck(conf), keys=("shard",))
 
     def _copy_shard(part: str) -> None:
         src = os.path.join(pack_dir, f"shard={part}")
-        dst = os.path.join(conf.out_path, f"shard={part}")
+        dst = os.path.join(out_path, f"shard={part}")
         shutil.rmtree(dst, ignore_errors=True)
         shutil.copytree(src, dst)
 
     if pending:
-        os.makedirs(conf.out_path, exist_ok=True)
-    identity = (pack_m.out_rows, pack_m.out_checksum) if pack_m else None
+        os.makedirs(out_path, exist_ok=True)
     committed = mf.ship_and_commit(
         conf.manifest_dir,
-        [mf.lineage_entry("packed", p, shard_stats.get((p,)), identity,
+        [mf.lineage_entry("packed", p, stats.get((p,)), identity,
                           conf.committed_at)
          for p in pending],
         _copy_shard,
@@ -635,19 +584,13 @@ def _pack_ck(conf: CorpusConf):
                       F.col("bin_first"), F.col("bin_last"))
 
 
-def _cast_pack(df: DataFrame, conf: CorpusConf) -> DataFrame:
-    """Partition-type inference is off session-wide (session.py), so
-    a partitioned pack dir reads `shard` back as string and moves it
-    last; restore seq_packing's exact schema and column order."""
+def read_packed(spark: SparkSession, conf: CorpusConf) -> DataFrame:
+    """The shipped product: every packed shard under out_path, in
+    seq_packing's schema. Partition-type inference is off session-wide
+    (session.py), so `shard` reads back as a string and last; restore
+    its type and position."""
+    df = spark.read.option("basePath", conf.out_path).parquet(conf.out_path)
     return df.select(
         F.col("shard").cast("int").alias("shard"),
         conf.id_col, "n_tok", "tok_start", "bin_first", "bin_last",
         "crosses")
-
-
-def read_packed(spark: SparkSession, conf: CorpusConf) -> DataFrame:
-    """The shipped product: every packed shard under out_path, in
-    seq_packing's schema."""
-    return _cast_pack(
-        spark.read.option("basePath", conf.out_path).parquet(conf.out_path),
-        conf)

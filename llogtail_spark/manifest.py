@@ -10,11 +10,14 @@ between "staged" and "committed" lives here:
    instead of deleting the first run's staging mid-write; the kernel
    drops the lock when the process dies, so a crash leaves nothing
    stale;
-2. stage + observe — the staged write carries `observe(*lineage(...))`,
-   so the write job itself counts (rows, tok_total, xor checksum);
-3. readback reconcile — `readback` re-derives the same triple from the
-   files that landed and `reconcile` refuses to commit lineage that
-   disagrees with the observation;
+2. stage + observe — `write_reconciled` removes the target dir and
+   writes with `observe(*lineage(...))`, so the write job itself
+   counts (rows, tok_total, xor checksum);
+3. readback reconcile — it then runs the caller's failpoint hook,
+   `readback` re-derives the same triple from the files that landed
+   (read with the frame's own schema, so an empty output is zero
+   rows) and `reconcile` refuses to commit lineage that disagrees
+   with the observation;
 4. ship — `ship_and_commit` moves the pending partitions with a
    fixed-size thread pool;
 5. commit — then commits their records in order (push-then-checkpoint,
@@ -53,12 +56,13 @@ import functools
 import json
 import operator
 import os
+import shutil
 import tempfile
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass
 from typing import Callable, Iterable
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame, Observation, Row
 from pyspark.sql import functions as F
 
 # renames/copies of distinct partition dirs are independent metadata
@@ -97,7 +101,8 @@ class StageManifest:
     committed_at: str = ""
     # the stage output's Spark schema (StructType.json()): lets a
     # resume read a SKIPPED stage's dir without inference — which
-    # raises on a legitimately empty output (zero data files)
+    # raises on a legitimately empty output (zero data files). A
+    # record without it is stale: its stage recomputes once.
     schema_json: str = ""
 
 
@@ -298,6 +303,34 @@ def reconcile(what: str, observed, rows: Iterable[Row]) -> None:
             f"xor={want[2]}) — staged files are incomplete or corrupted; "
             "refusing to commit lineage"
         )
+
+
+def write_reconciled(
+    what: str, df: DataFrame, path: str, tok, ck, keys: tuple[str, ...] = (),
+    fmt: str = "parquet", options: dict | None = None,
+    hook: Callable[[], None] | None = None,
+) -> tuple[Row, dict[tuple, Row]]:
+    """Write `df` to `path` partitioned by `keys` and reconcile what
+    landed: returns (the write's observed lineage, the per-`keys`
+    readback). `path` is removed first: under dynamic partition
+    overwrite a smaller output would otherwise keep stale partition
+    dirs, and the readback would count them. `hook()` runs between the
+    write and the readback (the failpoint tests corrupt files there).
+    The readback uses `df.schema`, so an output with no data files
+    reads as zero rows instead of failing schema inference."""
+    shutil.rmtree(path, ignore_errors=True)
+    # observe(): lineage accumulated BY the write job itself — no extra
+    # scan; the readback below must reproduce it from the files
+    obs = Observation(what)
+    df.observe(obs, *lineage(tok, ck)).write.format(fmt).mode("overwrite") \
+        .partitionBy(*keys).options(**(options or {})).save(path)
+    observed = obs.get
+    if hook:
+        hook()
+    stats = readback(df.sparkSession.read.format(fmt).schema(df.schema).load(path),
+                     tok, ck, keys)
+    reconcile(what, observed, stats.values())
+    return observed, stats
 
 
 def lineage_entry(sink: str, part: str, stats: Row | None,

@@ -88,18 +88,6 @@ def content_hash_np(flat: np.ndarray, offsets: np.ndarray, lengths: np.ndarray) 
     return out.view(np.int64)
 
 
-@arrow_udf(T.LongType())
-def token_hash(tokens: pa.Array) -> pa.Array:
-    """Standalone tok_hash column (for frames that skip parse_stage).
-    Identical definition to parse_stage's tok_hash."""
-    vals, offs, lens = _list_parts_zero_copy(tokens)
-    h = content_hash_np(
-        vals.to_numpy(zero_copy_only=False).astype(np.int64, copy=False),
-        offs, lens,
-    )
-    return pa.array(h, type=pa.int64())
-
-
 @arrow_udf(T.StringType())
 def detokenize(tokens: pa.Array) -> pa.Array:
     """tokens array<int> -> decoded text (vectorized, zero-copy in)."""

@@ -28,11 +28,14 @@ corpus pipeline, and its caller holds the workdir lease:
   abandoned for most files anyway (bulk_fresh on a 4-vCPU host:
   median run_cpu_s 7.93 -> 6.46 over ten pairs, 52.2 -> 40.3 MB
   written in a traced run);
-- observe: the staged write counts its own (rows, tok_total, xor
-  checksum) — no extra scan;
-- readback reconcile: a column-pruned scan of the staged files
-  (n_tok, row_hash + partition cols, megabytes not data) gives the
-  per-(sink, part) lineage, which must fold to the observation;
+- observe + readback reconcile: ONE `manifest.write_reconciled` call
+  removes the staging dir, makes the staged write count its own
+  (rows, tok_total, xor checksum) — no extra scan — runs the
+  `after_stage` failpoint, then reads the staged files back with the
+  routed frame's schema: a column-pruned scan (n_tok, row_hash +
+  partition cols, megabytes not data) gives the per-(sink, part)
+  lineage, which must fold to the observation (nothing staged reads
+  as zero rows, so lost staging output fails the reconcile);
 - ship: per sink, a thread pool renames staging/sink=X/part=Y ->
   sink_path/part=Y (metadata-only), or ONE Iceberg commit;
 - commit: then the sink's manifest entries, in order
@@ -55,7 +58,7 @@ import shutil
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from llogtail_spark import manifest as mf
@@ -116,25 +119,24 @@ def _invalidate_stale(manifest_dir: str, entries: list[mf.ManifestEntry],
     return stale
 
 
-def local_workdir(conf: PipelineConf) -> str:
-    """The workdir as a local path, or a loud failure.
+def local_dir(path: str) -> str:
+    """A workdir or output dir as a local path, or a loud failure.
 
-    The staging/ship/manifest machinery walks and renames the workdir
-    with local filesystem calls; a remote workdir URI would silently
-    find no staged files and commit zero-count manifests over real
-    data (the cluster-scale path is Iceberg data-file commits). Callers
-    use the resolved path throughout: a 'file:' URI passes, but staging
-    built on the raw string would be written by Spark under the
-    resolved /path while os.scandir on the literal 'file:/...' found
-    nothing, and the ship loop would rmtree real sink data (ADVICE
-    r02)."""
-    workdir = reader.local_path(conf.workdir)
-    if workdir is None:
+    The staging/ship/manifest machinery walks and renames these dirs
+    with local filesystem calls; a remote URI would silently find no
+    staged files and commit zero-count manifests over real data (the
+    cluster-scale path is Iceberg data-file commits). Callers use the
+    resolved path throughout: a 'file:' URI passes, but paths joined
+    onto the raw string would be written by Spark under the resolved
+    /path while os-level calls on the literal 'file:/...' saw a
+    different (cwd-relative) tree (ADVICE r02)."""
+    local = reader.local_path(path)
+    if local is None:
         raise NotImplementedError(
-            f"workdir must be a local path (got {conf.workdir!r}); on a "
-            "cluster, stage to an Iceberg table commit instead"
+            f"workdir and output dirs must be local paths (got {path!r}); "
+            "on a cluster, stage to an Iceberg table commit instead"
         )
-    return workdir
+    return local
 
 
 def run_pipeline(
@@ -142,7 +144,7 @@ def run_pipeline(
     conf: PipelineConf,
     failpoint: Failpoint | None = None,
 ) -> RunResult:
-    workdir = local_workdir(conf)
+    workdir = local_dir(conf.workdir)
     with mf.lease(workdir):
         return _run(spark, conf, workdir, failpoint)
 
@@ -235,43 +237,15 @@ def stage_and_ship(
             pair_pred = pair_pred | (
                 (F.col("sink") == rule.name) & F.col("part").isin(pending[rule.name])
             )
+    # --- observed staged write + per-(sink, part) readback of the
+    # staged files themselves, reconciled before anything ships. Tests
+    # corrupt staged files at the after_stage failpoint to prove the
+    # reconciliation refuses to commit.
     staging = os.path.join(workdir, "staging")
-    shutil.rmtree(staging, ignore_errors=True)
-    # observe(): global lineage accumulated BY the write stage itself —
-    # zero extra scan (Spark accumulator metrics piggyback on the
-    # tasks); the readback below must reproduce it from the files
-    obs = Observation("staged")
-    routed.filter(pair_pred).observe(
-        obs, *mf.lineage("n_tok", "row_hash")
-    ).write.format(fmt).mode("overwrite").partitionBy(
-        "sink", "part"
-    ).options(**fmt_opts).save(staging)
-    observed = obs.get
-    if failpoint:
-        # tests corrupt staged files here to prove the
-        # observe-vs-readback reconciliation refuses to commit
-        failpoint("after_stage", "", "")
-
-    # --- readback: per-(sink, part) lineage of the staged files
-    # themselves. Zero rows staged is detected explicitly (no sink=
-    # dirs), NOT by swallowing exceptions — a transient readback
-    # failure must fail the run rather than commit row_count=0
-    # manifests over real data.
-    staged_any = any(
-        e.name.startswith("sink=") for e in os.scandir(staging)
-    ) if os.path.isdir(staging) else False
-    if staged_any:
-        stats = mf.readback(spark.read.format(fmt).load(staging),
-                            "n_tok", "row_hash", keys=("sink", "part"))
-        mf.reconcile("staged sinks", observed, stats.values())
-    else:
-        stats = {}
-        if int(observed["rows"]) != 0:
-            raise RuntimeError(
-                f"write stage observed {observed['rows']} rows but no "
-                "sink= directories were staged — staging output is "
-                "missing; refusing to commit lineage"
-            )
+    _, stats = mf.write_reconciled(
+        "staged sinks", routed.filter(pair_pred), staging, "n_tok", "row_hash",
+        keys=("sink", "part"), fmt=fmt, options=fmt_opts,
+        hook=failpoint and (lambda: failpoint("after_stage", "", "")))
 
     # --- ship + commit, per sink in rule order (push-then-checkpoint).
     # Idempotent: a re-run replaces the same partitions exactly

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from llogtail_spark.operators.dedup import exact_dedup, normalize_text
+from llogtail_spark.streaming import start_file_stream
 
 DOCS_SCHEMA = T.StructType(
     [
@@ -111,21 +112,14 @@ def stream_dedup_ingest(
     max_files_per_trigger: int | None = None,
 ):
     """Start the streaming dedup ingest. Returns the StreamingQuery."""
-    opts = {}
-    if max_files_per_trigger:
-        opts["maxFilesPerTrigger"] = str(max_files_per_trigger)
-    stream = (
-        spark.readStream.schema(schema).options(**opts).parquet(input_path)
-    )
-    writer = stream.writeStream.foreachBatch(
+    return start_file_stream(
+        spark, schema, input_path, checkpoint_dir,
         lambda bdf, bid: ingest_batch(
             spark, bdf, bid, index_path, out_path,
             text_col=text_col, id_col=id_col,
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        ),
+        available_now, max_files_per_trigger,
+    )
 
 
 def boilerplate_ingest_batch(
@@ -213,21 +207,14 @@ def stream_boilerplate_ingest(
 ):
     """Start the streaming boilerplate ingest. Returns the
     StreamingQuery."""
-    opts = {}
-    if max_files_per_trigger:
-        opts["maxFilesPerTrigger"] = str(max_files_per_trigger)
-    stream = (
-        spark.readStream.schema(schema).options(**opts).parquet(input_path)
-    )
-    writer = stream.writeStream.foreachBatch(
+    return start_file_stream(
+        spark, schema, input_path, checkpoint_dir,
         lambda bdf, bid: boilerplate_ingest_batch(
             spark, bdf, bid, index_path, out_path,
             text_col=text_col, id_col=id_col, min_docs=min_docs,
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        ),
+        available_now, max_files_per_trigger,
+    )
 
 
 def hll_ingest_batch(
@@ -300,21 +287,14 @@ def stream_hll_ingest(
                 T.StructField(text_col, T.StringType()),
             ]
         )
-    opts = {}
-    if max_files_per_trigger:
-        opts["maxFilesPerTrigger"] = str(max_files_per_trigger)
-    stream = (
-        spark.readStream.schema(schema).options(**opts).parquet(input_path)
-    )
-    writer = stream.writeStream.foreachBatch(
+    return start_file_stream(
+        spark, schema, input_path, checkpoint_dir,
         lambda bdf, bid: hll_ingest_batch(
             spark, bdf, bid, index_path,
             text_col=text_col, group_col=group_col,
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        ),
+        available_now, max_files_per_trigger,
+    )
 
 
 def packing_ingest_batch(
@@ -403,22 +383,15 @@ def stream_packing_ingest(
 ):
     """Start the streaming packing ingest. Returns the
     StreamingQuery."""
-    opts = {}
-    if max_files_per_trigger:
-        opts["maxFilesPerTrigger"] = str(max_files_per_trigger)
-    stream = (
-        spark.readStream.schema(schema).options(**opts).parquet(input_path)
-    )
-    writer = stream.writeStream.foreachBatch(
+    return start_file_stream(
+        spark, schema, input_path, checkpoint_dir,
         lambda bdf, bid: packing_ingest_batch(
             spark, bdf, bid, index_path, out_path,
             text_col=text_col, id_col=id_col,
             seq_len=seq_len, nshards=nshards,
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        ),
+        available_now, max_files_per_trigger,
+    )
 
 
 def dau_ingest_batch(
@@ -495,18 +468,11 @@ def stream_dau_ingest(
                 T.StructField(user_col, T.LongType()),
             ]
         )
-    opts = {}
-    if max_files_per_trigger:
-        opts["maxFilesPerTrigger"] = str(max_files_per_trigger)
-    stream = (
-        spark.readStream.schema(schema).options(**opts).parquet(input_path)
-    )
-    writer = stream.writeStream.foreachBatch(
+    return start_file_stream(
+        spark, schema, input_path, checkpoint_dir,
         lambda bdf, bid: dau_ingest_batch(
             spark, bdf, bid, index_path,
             user_col=user_col, ts_col=ts_col,
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        ),
+        available_now, max_files_per_trigger,
+    )

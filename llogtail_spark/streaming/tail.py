@@ -60,6 +60,7 @@ from llogtail_spark import manifest as mf
 from llogtail_spark import pipeline
 from llogtail_spark.config import PipelineConf
 from llogtail_spark.sources import reader
+from llogtail_spark.streaming import start_file_stream
 
 SEQUENCES_SCHEMA = T.StructType(
     [
@@ -136,7 +137,7 @@ def rescan_rewritten(spark: SparkSession, conf: PipelineConf,
     growing under its tail.
 
     Returns the sorted list of re-shipped partition ids."""
-    workdir = pipeline.local_workdir(conf)
+    workdir = pipeline.local_dir(conf.workdir)
     entries = mf.read_all(conf.manifest_dir)
     by_part: dict[str, mf.ManifestEntry] = {}
     for e in entries:
@@ -197,26 +198,15 @@ def stream_pipeline(
     micro-batch — in-place-rewritten files are detected and re-shipped
     by the stream itself (see module header for the trade).
     """
-    workdir = pipeline.local_workdir(conf)
-    opts = {}
-    if max_files_per_trigger:
-        opts["maxFilesPerTrigger"] = str(max_files_per_trigger)
-    stream = (
-        spark.readStream.schema(SEQUENCES_SCHEMA)
-        .options(**opts)
-        .parquet(conf.input_path)
-    )
+    workdir = pipeline.local_dir(conf.workdir)
     # the rescan's stat ledger lives for the stream's lifetime
     ledger: dict | None = {} if rescan else None
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda bdf, _: _process_batch(spark, conf, workdir, bdf, ledger)
-        )
-        .option("checkpointLocation", os.path.join(conf.workdir, "stream_cpt"))
+    return start_file_stream(
+        spark, SEQUENCES_SCHEMA, conf.input_path,
+        os.path.join(conf.workdir, "stream_cpt"),
+        lambda bdf, _: _process_batch(spark, conf, workdir, bdf, ledger),
+        available_now, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_severity_counts(

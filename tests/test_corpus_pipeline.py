@@ -143,6 +143,70 @@ def test_funnel_semantics(spark, golden):
     assert bad == []
 
 
+def test_params_crc_is_pinned():
+    """Stage params fingerprints are stored in every stage manifest: a
+    change to their values would recompute every committed chain."""
+    conf = CorpusConf(input_path="i", workdir="w", out_path="o")
+    assert {s: conf.params_crc(s) for s in CORPUS_STAGES} == {
+        "exact_dedup": 2040910162, "near_dedup": 1076240981,
+        "decontaminate": 17498429, "quality": 3337481045,
+        "sample": 1797396976, "pack": 3206221222,
+    }
+    conf = CorpusConf(input_path="i", workdir="w", out_path="o",
+                      benchmark_path="b", targets_bp=None)
+    assert conf.params_crc("decontaminate") == 2429294930
+    assert conf.params_crc("sample") == 427346920
+
+
+def test_file_uri_workdir_and_out_path(spark, corpus_input, tmp_path,
+                                       golden, monkeypatch):
+    """'file:' URIs for workdir and out_path behave as their paths:
+    the run completes, a rerun skips every stage, the product equals
+    the plain-path run's, and no literal 'file:' tree appears in the
+    cwd."""
+    _, _, want = golden
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    conf = CorpusConf(input_path=corpus_input,
+                      workdir=(tmp_path / "wd").as_uri(),
+                      out_path=(tmp_path / "out").as_uri(),
+                      committed_at="t0")
+    res = run_corpus_pipeline(spark, conf)
+    assert res.stages_run == list(CORPUS_STAGES)
+    res2 = run_corpus_pipeline(spark, conf)
+    assert res2.stages_skipped == list(CORPUS_STAGES)
+    assert res2.shards_committed == []
+    assert _packed_rows(read_packed(spark, conf)) == want
+    assert os.listdir(cwd) == []
+
+
+def test_stage_manifest_without_schema_recomputes_once(
+        spark, corpus_input, tmp_path, golden):
+    """A stage manifest with no recorded schema (a layout this package
+    no longer writes) counts as stale: that stage recomputes, its
+    unchanged output identity keeps every downstream stage skipped,
+    and the next run is a no-op."""
+    import json
+
+    _, _, want = golden
+    conf = _conf(corpus_input, str(tmp_path))
+    run_corpus_pipeline(spark, conf)
+    path = os.path.join(conf.stage_manifest_dir, "quality.stage.json")
+    with open(path) as f:
+        rec = json.load(f)
+    del rec["schema_json"]
+    with open(path, "w") as f:
+        json.dump(rec, f)
+
+    res = run_corpus_pipeline(spark, conf)
+    assert res.stages_run == ["quality"]
+    assert res.stages_skipped == [s for s in CORPUS_STAGES if s != "quality"]
+    assert read_stage(conf.stage_manifest_dir, "quality").schema_json
+    assert run_corpus_pipeline(spark, conf).stages_run == []
+    assert _packed_rows(read_packed(spark, conf)) == want
+
+
 def test_resume_noop(spark, golden):
     conf, _, want = golden
     res2 = run_corpus_pipeline(spark, conf)

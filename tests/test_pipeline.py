@@ -405,6 +405,29 @@ def test_observe_readback_reconciliation_catches_lost_staged_file(
     assert all(len(v) > 0 for v in res.processed.values())
 
 
+def test_lost_staging_output_refuses_to_commit(spark, data_dir, tmp_path):
+    """Every staged sink= dir vanishing between the write and the
+    readback (the observation counted rows that no file holds) must
+    fail the run before anything ships or commits."""
+    import shutil
+
+    conf = make_conf(data_dir, tmp_path / "wlost")
+    staging = tmp_path / "wlost" / "staging"
+
+    def failpoint(s, sink, part):
+        if s == "after_stage":
+            victims = [e.path for e in os.scandir(staging)
+                       if e.name.startswith("sink=")]
+            assert victims
+            for v in victims:
+                shutil.rmtree(v)
+
+    with pytest.raises(RuntimeError, match="refusing to commit lineage"):
+        run_pipeline(spark, conf, failpoint=failpoint)
+    assert mf.read_all(conf.manifest_dir) == []
+    assert not any(os.path.exists(r.path) for r in conf.sinks)
+
+
 def _sink_files(conf, sink):
     import glob
 
