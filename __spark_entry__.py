@@ -152,7 +152,6 @@ def _q_json_extract_events(spark, sf):
 
 
 def _q_window_tumbling_counts(spark, sf):
-    # batch twin of streaming.windowed_severity_counts (tail.py):
     # tumbling 1h windows over event time
     ev = _t(spark, sf, "events")
     return (
@@ -3844,8 +3843,8 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT node AS part, count(*) AS n_tri FROM nodes GROUP BY node
         """,
-        # twin of operators/sampling.priority_sample_sql (same integer
-        # arithmetic), with the query's weight alias applied
+        # same integer arithmetic as operators/sampling.priority_sample,
+        # with the query's weight alias applied
         "priority_sample_docs": """
             SELECT doc_id, n_chars AS weight,
                    (CAST(n_chars AS BIGINT) * 4294967296)

@@ -30,7 +30,7 @@ import os
 from dataclasses import dataclass, field
 
 from llogtail_spark.operators.parse import DEFAULT_GROK
-from llogtail_spark.operators.route import SinkRule, load_rules
+from llogtail_spark.operators.route import SinkRule, check_unique_names, load_rules
 
 
 @dataclass
@@ -53,6 +53,9 @@ class PipelineConf:
     #               requires the iceberg-spark-runtime jar). The
     #               cluster-scale answer to 10^6 serial driver renames.
     ship_mode: str = "rename"
+
+    def __post_init__(self) -> None:
+        check_unique_names(self.sinks)
 
     @property
     def manifest_dir(self) -> str:

@@ -64,8 +64,3 @@ def _expand(pattern: str, table: dict[str, str]) -> str:
         out = _GROK_REF.sub(sub, out)
     return out
 
-
-def group_names(pattern: str, extra: dict[str, str] | None = None) -> list[str]:
-    """Ordered capture-field names of a grok pattern."""
-    rx = compile_grok(pattern, extra)
-    return sorted(rx.groupindex, key=rx.groupindex.get)

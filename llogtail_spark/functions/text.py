@@ -69,23 +69,11 @@ def quality_features(col: Column | str, stopwords: list[str] | None = None) -> C
     )
 
 
-def lang_scores(col: Column | str, markers: dict[str, list[str]] | None = None) -> Column:
-    """struct of per-language marker-word hit counts."""
-    m = markers or LANG_MARKERS
-    ws = words(col)
-    return F.struct(
-        *[
-            F.size(F.filter(ws, lambda w: w.isin(mk))).cast("long").alias(lang)
-            for lang, mk in m.items()
-        ]
-    )
-
-
 def lang_id(col: Column | str, markers: dict[str, list[str]] | None = None) -> Column:
     """argmax language by marker hits; 'und' when all scores are 0.
     Ties break by the (deterministic) ordering of `markers`.
 
-    One Arrow UDF, not the lang_scores expression: the argmax
+    One Arrow UDF, not a struct-of-scores expression: the argmax
     references the scores struct ~3x per language, and Catalyst
     inlines the full struct — 4 marker filters, each re-splitting the
     text — into every reference (~N_langs^2 split+filter passes per

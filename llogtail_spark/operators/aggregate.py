@@ -135,17 +135,6 @@ def salted_event_rollup_sql(key_col: str = "event_type",
     """
 
 
-def partition_stats(df: DataFrame, part_col: str = "part") -> DataFrame:
-    """Per-partition lineage stats for the manifest: the
-    (row_count, checksum) identity that validates resume
-    (validateCpt analog, utils.go:128-133)."""
-    return df.groupBy(part_col).agg(
-        F.count("*").alias("row_count"),
-        F.sum("n_tok").alias("tok_total"),
-        _cksum_for(df).alias("checksum"),
-    )
-
-
 # ------------------------------------------- incremental MV merge
 
 MV_SPLIT_DAY = 15  # synthetic batch boundary: days < 15 = old MV

@@ -137,7 +137,6 @@ def strip_chunks(chunks: DataFrame, bp: DataFrame,
     LEFT join (not anti): fully-stripped documents must survive with
     empty text_clean so the output row count equals the input
     document count. Both sides shuffle on `chunk` — co-partitioned.
-    Shared by the batch operator and the streaming ingest twin.
     """
     flagged = chunks.join(
         bp.select("chunk").withColumn("_bp", F.lit(1)), "chunk", "left"

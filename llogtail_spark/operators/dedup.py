@@ -12,8 +12,8 @@ Four tiers, all shuffle-conscious:
   verification). Hot buckets cap to O(R*k) representative pairs.
 - resolve_components: candidate pairs -> connected components ->
   deterministic keep-list (min-label propagation).
-- simhash64 / simhash_portable: majority-vote simhash via explode +
-  conditional sums (narrow agg, map-side combined).
+- simhash_portable: majority-vote simhash via explode + conditional
+  sums (narrow agg, map-side combined).
 - ngram_jaccard_pairs: exact verification of candidate pairs
   (typically the output of LSH) via array_intersect/array_union.
 
@@ -58,21 +58,6 @@ def exact_dedup(df: DataFrame, key: str = "text", id_col: str = "doc_id") -> Dat
         .filter(F.col("_rn") == 1)
         .drop("_k", "_rn")
     )
-
-
-def word_shingles(col, n: int = 3, distinct: bool = True) -> "F.Column":
-    """Word n-gram shingles as array<string> (expression).
-
-    distinct=True dedups in the array (needed when the ARRAY itself is
-    the value, e.g. jaccard's array_intersect). Pass distinct=False
-    when a downstream explode feeds an aggregation that dedups anyway
-    (countDistinct / min): array_distinct compares every pair of
-    ~doc-length strings per row — O(n^2) string equality that measured
-    ~2x the whole decontamination query."""
-    ws = F.split(normalize_text(col), " ")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(ws) - (n - 1), F.lit(1)))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(ws, i, n)))
-    return F.array_distinct(grams) if distinct else grams
 
 
 def _portable_band_keys_udf(num_hashes: int, bands: int, shingle_n: int):
@@ -204,7 +189,7 @@ def minhash_lsh_pairs(
             F.posexplode(band_udf(F.col(text_col))).alias("band", "h"),
         )
     elif hash_mode == "xxhash64":
-        # Arrow-UDF grams, not the word_shingles expression: HOF
+        # Arrow-UDF grams, not a split/transform expression: HOF
         # lambda bodies evaluate per ELEMENT, so the expression form
         # re-ran regexp+split once per shingle (measured 4.3s -> ~1s
         # at sf0.1). No distinct: the seeded mins are invariant under
@@ -292,7 +277,7 @@ def ngram_jaccard(df_pairs: DataFrame, a_col: str, b_col: str, n: int = 3) -> Da
     Expects columns a_col/b_col holding the two texts.
 
     The shingle arrays come from one Arrow UDF per side (materialized
-    by the eval node) rather than the word_shingles expression:
+    by the eval node) rather than a split/transform expression:
     array_intersect AND array_union each reference both arrays, and a
     Catalyst HOF expression would rebuild them — with regexp+split
     re-run per element — once per reference."""
@@ -332,30 +317,6 @@ def shingle_containment(
     return staged.withColumn(
         "containment_x10000", F.floor(inter * 10000 / low).cast("long")
     ).drop("_sa", "_sb")
-
-
-def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """64-bit simhash per document: majority vote per bit over
-    xxhash64 of distinct words. explode + 64 conditional sums — a
-    narrow, map-side-combinable aggregation. Output: (id, simhash)."""
-    from llogtail_spark.sources.reader import ensure_parallelism
-
-    df = ensure_parallelism(df, id_col)
-    wordsdf = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.array_distinct(F.split(normalize_text(text_col), " "))).alias("_w"),
-    ).withColumn("_h", F.xxhash64("_w"))
-    bit_sums = [
-        F.sum(F.shiftright("_h", j).bitwiseAND(F.lit(1)).cast("long") * 2 - 1).alias(f"_s{j}")
-        for j in range(64)
-    ]
-    agg = wordsdf.groupBy("_id").agg(*bit_sums)
-    sim = F.lit(0).cast("long")
-    for j in range(64):
-        sim = sim + F.when(F.col(f"_s{j}") > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        ) * F.lit(1 << j if j < 63 else -(1 << 63)).cast("long")
-    return agg.select(F.col("_id").alias(id_col), sim.alias("simhash"))
 
 
 def _resolve_components_driver(
@@ -622,10 +583,10 @@ def simhash_portable(
 ) -> DataFrame:
     """Portable-hash simhash: majority vote per bit over the
     char-fold hash of distinct words (functions/portable_hash.py) —
-    same explode + conditional-sum shape as simhash64, but value-
-    reproducible by an independent SQL engine. The base hash carries
-    30 useful bits (mod is ~2^30), so `bits` defaults to 30; hamming
-    geometry at 30 bits is equivalent for near-dup thresholds.
+    explode + conditional sums, value-reproducible by an independent
+    SQL engine. The base hash carries 30 useful bits (mod is ~2^30),
+    so `bits` defaults to 30; hamming geometry at 30 bits is
+    equivalent for near-dup thresholds.
     Output: (id_col, simhash)."""
     from llogtail_spark.functions import portable_hash as ph
     from llogtail_spark.sources.reader import ensure_parallelism
@@ -673,7 +634,7 @@ def embedding_near_dup_pairs(
 def _word_grams_udf(n: int, distinct: bool = False):
     """Arrow UDF: text -> array of word n-gram strings (NOT distinct).
 
-    A UDF rather than the word_shingles Catalyst expression because
+    A UDF rather than a Catalyst split/transform expression because
     expressions in a HOF lambda body are re-evaluated PER ELEMENT:
     `transform(idx, i -> concat_ws(slice(split(regexp(text)),i,n)))`
     re-runs the regexp+split once per gram — measured ~50x per doc and
@@ -744,133 +705,6 @@ def contamination_hits(
     )
 
 
-def _index_exists(index_path: str) -> bool:
-    """True iff the fingerprint index has data files. Local-path check
-    here; on a cluster filesystem this is one driver-side listing (or
-    an Iceberg catalog lookup) — never a data read."""
-    import glob
-    import os
-
-    if not os.path.isdir(index_path):
-        return False
-    return bool(glob.glob(os.path.join(index_path, "*.parquet")))
-
-
-def incremental_dedup(
-    new_docs: DataFrame,
-    index_path: str,
-    key: str = "text",
-    id_col: str = "doc_id",
-):
-    """Dedup a NEW batch against the corpus history: the production
-    pattern where 100 TB of already-ingested documents live behind a
-    compact persistent fingerprint index and each incoming increment
-    must drop (a) repeats of history and (b) repeats within itself.
-
-    Returns (survivors_df, commit_fn). survivors_df is lazily planned:
-    within-batch exact dedup, then a LEFT ANTI join against the index
-    (shuffle keyed on the 8-byte fingerprint — the index side carries
-    no payload, so the shuffle is fingerprints only, not documents).
-    commit_fn(survivors_df) appends the survivors' fingerprints to the
-    index AFTER the caller has durably shipped the batch — the same
-    push-then-checkpoint ordering as the pipeline manifest
-    (llogtail checkpoints only after a successful sink push,
-    log_collector.go:209-214), so a crash between ship and commit
-    re-processes and re-ships idempotently rather than losing docs.
-
-    At cluster scale the index is an Iceberg table (compaction,
-    snapshot isolation between concurrent increments); here it is a
-    parquet directory appended per batch. The index stays ~16 bytes
-    per historical doc — 10^12 docs is ~16 TB of fingerprints vs the
-    corpus' 100 TB+, and the anti join prunes on the fingerprint
-    column alone.
-    """
-    spark = new_docs.sparkSession
-    batch = exact_dedup(new_docs, key=key, id_col=id_col).withColumn(
-        "_fp", F.xxhash64(normalize_text(key))
-    )
-    # ONLY a missing index (first increment ever) may skip the anti
-    # join; a corrupt/unreadable index must fail loudly — silently
-    # skipping it would ship duplicates of the whole corpus history
-    if _index_exists(index_path):
-        seen = spark.read.parquet(index_path).select("fp")
-        have_index = True
-    else:
-        have_index = False
-    if have_index:
-        survivors = batch.join(
-            seen, batch["_fp"] == seen["fp"], "left_anti"
-        ).drop("_fp")
-    else:
-        survivors = batch.drop("_fp")
-
-    def commit_fn(shipped: DataFrame) -> None:
-        shipped.select(
-            F.xxhash64(normalize_text(key)).alias("fp")
-        ).distinct().write.mode("append").parquet(index_path)
-        compact_index(spark, index_path)
-
-    return survivors, commit_fn
-
-
-def compact_index(
-    spark,
-    index_path: str,
-    target_files: int = 8,
-    trigger_files: int = 64,
-) -> bool:
-    """Size-triggered compaction of the fingerprint index: per-batch
-    appends create unbounded small parquet files (10^6 increments ->
-    10^6 footers to open per anti-join plan); once the count exceeds
-    `trigger_files`, rewrite to `target_files` and drop the originals.
-    Returns True iff a compaction ran.
-
-    Crash-safety without a directory swap: anti-join semantics are
-    invariant under DUPLICATE fingerprints, so the compacted files are
-    moved INTO the live directory first (temp dir + per-file rename,
-    the manifest's atomicity discipline) and the old files deleted
-    after. Every crash window leaves the index a superset of the
-    truth — over-filtering is impossible, the next run re-compacts.
-    A directory swap would instead have a window with NO index, which
-    incremental_dedup reads as 'first increment ever' and ships the
-    entire corpus history as duplicates. At cluster scale this is an
-    Iceberg rewrite_data_files action; same invariant.
-    """
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    old_files = sorted(glob.glob(os.path.join(index_path, "*.parquet")))
-    if len(old_files) <= trigger_files:
-        return False
-    tmp = tempfile.mkdtemp(dir=index_path, prefix=".compact-")
-    try:
-        # distinct() also dedups fingerprints accumulated across prior
-        # crash-window re-runs; one shuffle over 8-byte keys
-        spark.read.parquet(*old_files).distinct().coalesce(
-            target_files
-        ).write.mode("overwrite").parquet(tmp)
-        import uuid
-
-        # fresh random names: a re-compaction's old_files can contain
-        # earlier compacted-* files — a name collision would rename
-        # over one and then unlink it, losing the new data
-        run_id = uuid.uuid4().hex[:12]
-        for i, f in enumerate(
-            sorted(glob.glob(os.path.join(tmp, "*.parquet")))
-        ):
-            dst = os.path.join(
-                index_path, f"compacted-{run_id}-{i:05d}.parquet"
-            )
-            os.rename(f, dst)
-        for f in old_files:
-            os.unlink(f)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return True
-
-
 def dup_cluster_histogram(df: DataFrame, key: str = "text") -> DataFrame:
     """Duplicate-cluster-size histogram — the dedup telemetry table:
     for each exact-duplicate cluster size k (rows sharing a normalized
@@ -886,8 +720,7 @@ def dup_cluster_histogram(df: DataFrame, key: str = "text") -> DataFrame:
     never shuffles), then a tiny second agg on cluster size (domain ~
     log-scale handful of values, map-side combine collapses it).
     Fingerprint is the engine-portable char-fold family for the
-    value-exact DuckDB twin; production swaps xxhash64/128 in one
-    place (same discipline as incremental_dedup's index).
+    value-exact DuckDB twin; production swaps in xxhash64/128.
 
     Reference anchor: llogtail counts per-sink shipped units as its
     health metric (collector.go:125-174); the cluster histogram is

@@ -22,7 +22,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -51,15 +50,6 @@ def _digest_lanes(payload: bytes) -> list[int]:
     return [int.from_bytes(d[4 * i: 4 * i + 4], "big") for i in range(FEATURE_DIM)]
 
 
-def _fake_pixels(payload: bytes, width: int, height: int) -> np.ndarray:
-    """DETERMINISTIC FAKE decode: derive a pixel grid from a digest of
-    the payload. Stands in for PIL.Image.open(...); same signature
-    contract (H x W x 3 uint8)."""
-    seed = int.from_bytes(hashlib.blake2b(payload, digest_size=8).digest(), "big")
-    rng = np.random.default_rng(seed)
-    return rng.integers(0, 256, size=(height, width, 3), dtype=np.uint8)
-
-
 def synth_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
     """Deterministic fake media table matching MEDIA_SCHEMA."""
     rng = np.random.default_rng(seed)
@@ -83,50 +73,12 @@ def synth_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
-def extract_features(df: DataFrame) -> DataFrame:
-    """payload -> fixed-dim feature vector (array<float>), dropping the
-    payload before anything wide happens downstream.
-
-    Output: (media_id, kind, source, features array<float>).
-    """
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.StringType()),
-            T.StructField("kind", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("features", T.ArrayType(T.FloatType())),
-        ]
-    )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # the per-payload digest IS the stub decode kernel (a real
-            # impl runs the vision/audio model here); everything around
-            # it stays columnar
-            feats = [
-                None if p is None
-                else (np.asarray(_digest_lanes(bytes(p)), dtype=np.float64)
-                      / 2**32).astype(np.float32)
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "source": pdf["source"],
-                    "features": feats,
-                }
-            )
-
-    return df.mapInPandas(op, schema)
-
-
 def media_digest_features(df: DataFrame) -> DataFrame:
-    """Integer-lane twin of extract_features for exact cross-engine
-    verification: (media_id, kind, source, payload_bytes,
-    features array<long>) where features are the 8 big-endian uint32
-    lanes of sha256(payload). Same mapInPandas plumbing (payload never
-    leaves the executor, projected away before anything wide)."""
+    """payload -> fixed-dim integer feature vector, exact across
+    engines: (media_id, kind, source, payload_bytes, features
+    array<long>) where features are the 8 big-endian uint32 lanes of
+    sha256(payload). The payload never leaves the executor and is
+    projected away before anything wide."""
     schema = T.StructType(
         [
             T.StructField("media_id", T.StringType()),
@@ -156,48 +108,6 @@ def media_digest_features(df: DataFrame) -> DataFrame:
             )
 
     return df.mapInPandas(op, schema)
-
-
-def resize_images(df: DataFrame, out_w: int = 32, out_h: int = 32) -> DataFrame:
-    """Decode -> nearest-neighbor resize -> re-encode (raw RGB bytes).
-
-    Output: input columns with payload/width/height replaced. Non-image
-    rows pass through untouched.
-    """
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        grid_cache: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
-        for pdf in batches:
-            # columnar pass (no iterrows/.at): the per-payload decode is
-            # the stub kernel; the resize index grids are numpy and
-            # cached per source geometry
-            new_p, new_w, new_h = [], [], []
-            for kind, payload, w, h in zip(
-                pdf["kind"], pdf["payload"], pdf["width"], pdf["height"]
-            ):
-                if kind != "image" or payload is None:
-                    new_p.append(payload)
-                    new_w.append(w)
-                    new_h.append(h)
-                    continue
-                w, h = int(w), int(h)  # nullable ints arrive as float64
-                grids = grid_cache.get((w, h))
-                if grids is None:
-                    grids = grid_cache[(w, h)] = (
-                        np.arange(out_h) * h // out_h,
-                        np.arange(out_w) * w // out_w,
-                    )
-                px = _fake_pixels(bytes(payload), w, h)
-                new_p.append(px[np.ix_(*grids)].tobytes())
-                new_w.append(out_w)
-                new_h.append(out_h)
-            out = pdf.copy()
-            out["payload"] = pd.Series(new_p, index=pdf.index, dtype="object")
-            out["width"] = pd.Series(new_w, index=pdf.index, dtype=pdf["width"].dtype)
-            out["height"] = pd.Series(new_h, index=pdf.index, dtype=pdf["height"].dtype)
-            yield out
-
-    return df.mapInPandas(op, MEDIA_SCHEMA)
 
 
 def sample_frames(df: DataFrame, every: int = 8) -> DataFrame:
@@ -249,12 +159,3 @@ def sample_frames(df: DataFrame, every: int = 8) -> DataFrame:
 
     return df.mapInPandas(op, schema)
 
-
-def media_stats(df: DataFrame) -> DataFrame:
-    """Per (kind, source) rollup over metadata only — Catalyst-only,
-    payload column pruned out of the scan entirely."""
-    return df.groupBy("kind", "source").agg(
-        F.count("*").alias("n"),
-        F.sum(F.length("payload")).alias("payload_bytes"),
-        F.avg("width").alias("avg_width"),
-    )

@@ -32,7 +32,6 @@ from llogtail_spark.generate import LEVEL_NUMS, LEVELS, build_vocab
 
 # "<LEVEL> <component> <msg>" — the shape generate.py emits
 DEFAULT_GROK = r"^%{LOGLEVEL:level} %{WORD:component} %{GREEDYDATA:msg}$"
-CODE_RX = r"code=(\d+)"
 
 PARSED_SCHEMA = T.StructType(
     [
@@ -49,8 +48,6 @@ PARSED_SCHEMA = T.StructType(
         T.StructField("tok_hash", T.LongType()),
     ]
 )
-
-_LEVEL_NUM = dict(zip(LEVELS, LEVEL_NUMS))
 
 _VOCAB_PA: pa.Array | None = None
 
@@ -88,15 +85,6 @@ def content_hash_np(flat: np.ndarray, offsets: np.ndarray, lengths: np.ndarray) 
     return out.view(np.int64)
 
 
-@arrow_udf(T.StringType())
-def detokenize(tokens: pa.Array) -> pa.Array:
-    """tokens array<int> -> decoded text (vectorized, zero-copy in)."""
-    vals, offs, _ = _list_parts_zero_copy(tokens)
-    words = pc.take(_vocab_pa(), vals)
-    lists = pa.ListArray.from_arrays(pa.array(offs.astype(np.int32)), words)
-    return pc.binary_join(lists, " ")
-
-
 def _list_parts_zero_copy(tokens: pa.Array) -> tuple[pa.Array, np.ndarray, np.ndarray]:
     """ListArray<int32> -> (flat values pa.Array, int64 offsets starting
     at 0, int64 lengths) — all zero-copy views (no pandas, no Python
@@ -121,7 +109,18 @@ def _parse_kernel(tokens: pa.Array, rx: str, code_rx: str,
         vals.to_numpy(zero_copy_only=False).astype(np.int64, copy=False),
         offsets, lengths,
     )
-    words = pc.take(_vocab_pa(), vals)
+    vocab = _vocab_pa()
+    # an out-of-range id would fail the take below with an error the
+    # job surfaces without the id; min_max skips null elements, which
+    # the take maps to null text
+    mm = pc.min_max(vals)
+    lo, hi = mm["min"].as_py(), mm["max"].as_py()
+    if lo is not None and (lo < 0 or hi >= len(vocab)):
+        bad = lo if lo < 0 else hi
+        raise ValueError(
+            f"token id {bad} is outside the vocab of {len(vocab)} ids "
+            f"[0, {len(vocab)})")
+    words = pc.take(vocab, vals)
     lists = pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)), words)
     text = pc.binary_join(lists, " ")
     # flatten() (not .field()) propagates the no-match struct null

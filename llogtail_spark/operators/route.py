@@ -52,10 +52,16 @@ def load_rules(conf: str | list[dict]) -> list[SinkRule]:
         with open(conf) as f:
             conf = json.load(f)
     rules = [SinkRule(**r) for r in conf]
+    check_unique_names(rules)
+    return rules
+
+
+def check_unique_names(rules: list[SinkRule]) -> None:
+    """Sink names key the staging dirs and the manifest: two rules
+    with one name would stage into one dir and commit as one sink."""
     names = [r.name for r in rules]
     if len(set(names)) != len(names):
         raise ValueError(f"duplicate sink names: {names}")
-    return rules
 
 
 def assign_sinks(df: DataFrame, rules: list[SinkRule]) -> DataFrame:

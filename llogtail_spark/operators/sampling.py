@@ -395,21 +395,6 @@ def priority_sample(df: DataFrame, key_col: str, weight_col: str,
     )
 
 
-def priority_sample_sql(key_col: str, weight_col: str, k: int,
-                        table: str) -> str:
-    """DuckDB twin of priority_sample — identical integer arithmetic."""
-    return f"""
-        SELECT {key_col}, {weight_col},
-               (CAST({weight_col} AS BIGINT) * 4294967296)
-                 // ((({key_col} * 2654435761) % 4294967296) + 1)
-                 AS priority
-        FROM {table}
-        WHERE {key_col} IS NOT NULL AND {weight_col} > 0
-        ORDER BY priority DESC, {key_col}
-        LIMIT {k}
-    """
-
-
 def priority_sample_per_group(df: DataFrame, key_col: str,
                               weight_col: str, group_col: str,
                               k: int) -> DataFrame:

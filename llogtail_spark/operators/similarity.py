@@ -303,51 +303,12 @@ def rounded_centroids(
     engine recomputes identical cell assignments from the same
     constants (the oracle path — same technique as
     rounded_hyperplanes). At production scale the centroids come from
-    train_centroids() over a sample instead; the query plan is
-    identical either way."""
+    a k-means fit over a sample instead; the query plan is identical
+    either way."""
     rng = np.random.default_rng(seed)
     c = rng.standard_normal((n_cells, dim))
     c /= np.linalg.norm(c, axis=1, keepdims=True)
     return np.round(c, decimals)
-
-
-def train_centroids(
-    sample: np.ndarray, n_cells: int, seed: int = 11, iters: int = 10
-) -> np.ndarray:
-    """Seeded spherical k-means (Lloyd) over a driver-side sample —
-    the production coarse-quantizer fit. Assignment is max dot
-    product against unit centroids (ties -> lowest cell id, matching
-    make_cell_udf); update is the renormalized mean. Deterministic:
-    fixed rng for init, empty cells re-seeded from the farthest
-    points. At 10^12 vectors the sample is a bounded reservoir pulled
-    by one Spark job; fitting 2^10..2^16 centroids on the driver is
-    trivial next to the scan."""
-    m = sample.astype(np.float64)
-    m = m / np.linalg.norm(m, axis=1, keepdims=True)
-    rng = np.random.default_rng(seed)
-    cents = m[rng.choice(len(m), size=n_cells, replace=False)]
-    for _ in range(iters):
-        scores = m @ cents.T
-        assign = np.argmax(scores, axis=1)  # ties -> lowest id
-        # distinct reseeds: the j-th empty cell takes the j-th
-        # worst-covered point. Reseeding every empty cell from the same
-        # argmin (stale pre-update scores) would set them all to ONE
-        # point; argmax ties then resolve to the lowest cell id, the
-        # higher-id duplicates stay memberless every later round, and
-        # the codebook silently loses distinct centroids.
-        worst = np.argsort(scores.max(axis=1), kind="stable")
-        next_worst = 0
-        for c in range(n_cells):
-            members = m[assign == c]
-            if len(members) == 0:
-                cents[c] = m[worst[next_worst]]
-                next_worst += 1
-            else:
-                mean = members.mean(axis=0)
-                n = np.linalg.norm(mean)
-                if n > 0:
-                    cents[c] = mean / n
-    return cents
 
 
 def make_cell_udf(centroids: np.ndarray, nprobe: int):
@@ -587,8 +548,7 @@ def kmeans_cluster_profile(
     integer arithmetic so an independent engine reproduces it
     bit-for-bit. This is the evaluation loop of semantic-mixture
     balancing / topic bucketing over a training corpus: fit centroids
-    on a sample (train_centroids), then profile how the full corpus
-    lands.
+    on a sample, then profile how the full corpus lands.
 
     Spark-first shape: the assignment is the shared IVF coarse-
     quantizer Arrow UDF (one numpy matmul per batch, JVM->Arrow->BLAS,
@@ -602,7 +562,7 @@ def kmeans_cluster_profile(
     Default centroids are the seeded decimal-rounded constants
     (rounded_centroids) so the DuckDB oracle recomputes identical
     assignments from the same literals; pass centroids= for the
-    production path (fit by train_centroids on a reservoir sample).
+    production path (fit on a reservoir sample).
     """
     cents = (
         centroids

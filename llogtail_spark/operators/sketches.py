@@ -490,9 +490,7 @@ def hll_registers(df: DataFrame, text_col: str = "text",
     """The register file of hll_distinct: (grp, bucket, m_b) — the
     mergeable fixed-size summary itself. Merging two corpora's
     register files is max(m_b) per (grp, bucket): idempotent and
-    commutative, which is what makes the streaming ingest twin
-    replay-exact (re-committing a batch's registers is a no-op under
-    max)."""
+    commutative, so re-merging a batch's registers is a no-op."""
     toks = df.select(
         F.col(group_col).alias("grp"),
         F.explode(
@@ -783,9 +781,8 @@ def hll_sliding_dau(df: DataFrame, user_col: str = "user_id",
     DAU. The exact twin (active_users_7d) re-touches every (user,
     day) pair per window; here each day is summarized ONCE into m=64
     registers and every window estimate is a register-wise MAX over
-    the trailing days (HLL union = pointwise max — the semilattice
-    property the streaming ingest twin already exploits), so the
-    window stage costs O(n_days * m) regardless of user count.
+    the trailing days (HLL union = pointwise max, a semilattice), so
+    the window stage costs O(n_days * m) regardless of user count.
 
     User ids pass through the quadratic mix before the order hash:
     they are SEQUENTIAL integers, exactly the affine-lattice input
@@ -812,8 +809,7 @@ def user_day_registers(df: DataFrame, user_col: str = "user_id",
     """The (day, bucket, m_b) register file of hll_sliding_dau — the
     mergeable unit: register files from any partition of the input
     (micro-batches, shards, replays) combine by max per (day,
-    bucket), which is what makes the streaming ingest twin
-    replay-exact for free."""
+    bucket), so a replayed batch changes nothing."""
     day = F.floor(
         F.col(ts_col).cast("timestamp").cast("long") / 86400
     ).cast("long")

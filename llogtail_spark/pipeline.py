@@ -87,6 +87,10 @@ class RunResult:
 
 def _prepare(spark: SparkSession, conf: PipelineConf, files: list[str]) -> DataFrame:
     df = reader.read_files(spark, files)
+    if conf.lookup_path and "source" not in df.columns:
+        raise ValueError(
+            f"lookup_path is set but the input {conf.input_path!r} has no "
+            "'source' column to enrich on")
     df = reader.with_partition_id(df)
     df = parse_stage(df, conf.grok)
     if conf.lookup_path:
@@ -139,12 +143,41 @@ def local_dir(path: str) -> str:
     return local
 
 
+def check_layout(conf: PipelineConf, workdir: str) -> None:
+    """Refuse sink paths that overlap each other, the input, or the
+    workdir's staging and manifest dirs (equal or nested either way).
+    Each of these corrupts silently: two sinks on one path keep only
+    the last ship, a sink under staging is deleted with it, a sink in
+    the input is read back as input. Sinks elsewhere under the workdir
+    (e.g. <workdir>/out) are fine. Iceberg sink paths are table
+    identifiers, so only the unique names (PipelineConf) apply."""
+    if conf.ship_mode == "iceberg":
+        return
+
+    def resolved(path: str) -> str | None:
+        local = reader.local_path(path)
+        return None if local is None else os.path.realpath(local)
+
+    taken = {"the input path": resolved(conf.input_path),
+             "the staging dir": resolved(os.path.join(workdir, "staging")),
+             "the manifest dir": resolved(conf.manifest_dir)}
+    for rule in conf.sinks:
+        path = resolved(rule.path)
+        for what, other in taken.items():
+            if path and other and os.path.commonpath([path, other]) in (path, other):
+                raise ValueError(
+                    f"sink {rule.name!r} path {rule.path!r} overlaps {what} "
+                    f"({other}); give every sink a path of its own")
+        taken[f"sink {rule.name!r}"] = path
+
+
 def run_pipeline(
     spark: SparkSession,
     conf: PipelineConf,
     failpoint: Failpoint | None = None,
 ) -> RunResult:
     workdir = local_dir(conf.workdir)
+    check_layout(conf, workdir)
     with mf.lease(workdir):
         return _run(spark, conf, workdir, failpoint)
 

@@ -199,6 +199,7 @@ def stream_pipeline(
     by the stream itself (see module header for the trade).
     """
     workdir = pipeline.local_dir(conf.workdir)
+    pipeline.check_layout(conf, workdir)
     # the rescan's stat ledger lives for the stream's lifetime
     ledger: dict | None = {} if rescan else None
     return start_file_stream(
@@ -208,74 +209,3 @@ def stream_pipeline(
         available_now, max_files_per_trigger,
     )
 
-
-def windowed_severity_counts(
-    events: DataFrame, window: str = "5 minutes", slide: str | None = None,
-    watermark: str = "10 minutes",
-):
-    """Streaming windowed aggregation with late-data handling — the
-    generic severity/rate rollup (tumbling when slide is None)."""
-    win = F.window("ts", window, slide) if slide else F.window("ts", window)
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(win, "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("value_sum"))
-    )
-
-
-def stream_interval_join(
-    purchases: DataFrame,
-    events: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    horizon: str = "1 hour",
-    watermark: str = "2 hours",
-):
-    """Stream-stream interval join: attach to each purchase the
-    follow-on events of the same user within `horizon` — the
-    streaming twin of the batch `range_join_purchase_window` query.
-
-    Both sides carry watermarks and the join condition bounds event
-    time on BOTH ends (p.ts < e.ts <= p.ts + horizon), which is what
-    lets Spark evict join state: a buffered purchase can be dropped
-    once the event-side watermark passes its horizon, so state is
-    O(in-flight window), not O(stream). Without the time bound the
-    state store grows forever — the streaming analog of an unbounded
-    shuffle. llogtail anchor: the collector correlates lines only
-    within a file's active tail window, never across the whole
-    history (log_watcher.go tail loop).
-
-    Returns (purchase_id, user_id, purchase_ts, event_id, event_ts);
-    inner join — purchases with no follow-on events don't appear
-    (counting them needs an outer interval join, which Spark emits
-    only after watermark close; the batch twin covers that census).
-    """
-    p = (
-        purchases.withWatermark(ts_col, watermark)
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col(key).alias("p_user"),
-            F.col(ts_col).alias("p_ts"),
-        )
-    )
-    e = (
-        events.withWatermark(ts_col, watermark)
-        .select(
-            F.col("event_id").alias("event_id"),
-            F.col(key).alias("e_user"),
-            F.col(ts_col).alias("e_ts"),
-        )
-    )
-    return p.join(
-        e,
-        (F.col("p_user") == F.col("e_user"))
-        & (F.col("e_ts") > F.col("p_ts"))
-        & (F.col("e_ts") <= F.col("p_ts") + F.expr(f"INTERVAL {horizon}")),
-        "inner",
-    ).select(
-        "purchase_id",
-        F.col("p_user").alias("user_id"),
-        F.col("p_ts").alias("purchase_ts"),
-        "event_id",
-        F.col("e_ts").alias("event_ts"),
-    )

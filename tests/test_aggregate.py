@@ -1,18 +1,16 @@
-"""Aggregate correctness: salted == plain (exact), partition stats
-consistency, checksum order-insensitivity."""
+"""Aggregate correctness: salted == plain (exact), checksum
+order-insensitivity."""
 
 import os
 
 from pyspark.sql import functions as F
 
 from llogtail_spark.operators.aggregate import (
-    partition_stats,
     salted_sink_aggregates,
     sink_aggregates,
 )
 from llogtail_spark.operators.parse import parse_stage
 from llogtail_spark.operators.route import SinkRule, explode_routed
-from llogtail_spark.sources.reader import with_partition_id
 
 RULES = [
     SinkRule("errors", "level_num >= 40", "/tmp/x/e"),
@@ -64,14 +62,6 @@ def test_checksum_detects_content_change(spark):
     c1 = sink_aggregates(df1).first()["checksum"]
     c2 = sink_aggregates(df2).first()["checksum"]
     assert c1 != c2
-
-
-def test_partition_stats_sum_to_totals(spark, data_dir, oracle_pdf):
-    df = with_partition_id(spark.read.parquet(os.path.join(data_dir, "sequences")))
-    stats = partition_stats(df).toPandas()
-    assert stats["row_count"].sum() == len(oracle_pdf)
-    assert stats["tok_total"].sum() == int(oracle_pdf["n_tok"].sum())
-    assert len(stats) == 6  # one row per input file
 
 
 def test_salted_event_rollup_equals_plain(spark):

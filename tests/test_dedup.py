@@ -8,7 +8,6 @@ from llogtail_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard,
-    simhash64,
 )
 
 BASE = (
@@ -55,17 +54,6 @@ def test_ngram_jaccard_values(spark):
     got = [r["jaccard_x10000"] for r in ngram_jaccard(df, "a", "b").collect()]
     assert got[0] == 10000  # identical
     assert got[1] == 0      # disjoint shingles
-
-
-def test_simhash_near_texts_close(spark, corpus):
-    sh = {r["doc_id"]: r["simhash"] for r in simhash64(corpus).collect()}
-    assert sh[1] == sh[2] == sh[3]  # identical normalized word sets
-
-    def hamming(a, b):
-        return bin((a ^ b) & ((1 << 64) - 1)).count("1")
-
-    assert hamming(sh[1], sh[4]) < hamming(sh[1], sh[5])
-    assert hamming(sh[1], sh[4]) <= 12  # one-word edit stays close
 
 
 def test_embedding_near_dup_planted(spark):
@@ -341,50 +329,6 @@ def test_normalize_whitespace_class_consistent_with_duckdb(spark):
     assert spark_norm["n"] == duck_norm == py_norm == "a b c d e"
 
 
-def test_incremental_dedup_against_history(spark, tmp_path):
-    """Batch 2 drops repeats of batch 1 (via the persistent index) and
-    repeats of itself; crash-before-commit re-processes idempotently."""
-    from llogtail_spark.operators.dedup import incremental_dedup
-
-    idx = str(tmp_path / "fp_index")
-
-    b1 = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma  DELTA"), (3, "alpha beta")],
-        "doc_id long, text string",
-    )
-    s1, commit1 = incremental_dedup(b1, idx)
-    got1 = sorted(r["doc_id"] for r in s1.collect())
-    assert got1 == [1, 2]  # within-batch dup 3 dropped
-    commit1(s1)
-
-    b2 = spark.createDataFrame(
-        [
-            (10, "ALPHA   beta"),   # repeat of history (normalized)
-            (11, "epsilon zeta"),   # new
-            (12, "epsilon  ZETA"),  # within-batch repeat of 11
-            (13, "gamma delta"),    # repeat of history
-        ],
-        "doc_id long, text string",
-    )
-    s2, commit2 = incremental_dedup(b2, idx)
-    got2 = sorted(r["doc_id"] for r in s2.collect())
-    assert got2 == [11]
-
-    # crash BEFORE commit: re-running the same batch yields the same
-    # survivors (no index mutation happened)
-    s2b, commit2b = incremental_dedup(b2, idx)
-    assert sorted(r["doc_id"] for r in s2b.collect()) == [11]
-    commit2b(s2b)
-
-    # after commit, the batch is fully absorbed: nothing survives
-    s2c, _ = incremental_dedup(b2, idx)
-    assert s2c.count() == 0
-
-    # index holds fingerprints only (16B/doc at scale), not documents
-    assert spark.read.parquet(idx).columns == ["fp"]
-    assert spark.read.parquet(idx).distinct().count() == 3
-
-
 def test_resolve_components_nonconvergence_raises(spark):
     """ADVICE r02: exhausting max_iter with labels still moving must
     fail loudly — silently returning unconverged labels under-dedups
@@ -402,103 +346,6 @@ def test_resolve_components_nonconvergence_raises(spark):
         # driver_edge_threshold=0 forces the iterative path the guard
         # protects (the union-find path cannot fail to converge)
         resolve_components(pairs, nodes, max_iter=2, driver_edge_threshold=0)
-
-
-def test_index_compaction_bounds_files_same_antijoin(spark, tmp_path):
-    """VERDICT r02 next-round #7: per-batch appends grow the
-    fingerprint index without bound; compaction must rewrite to <=K
-    files while leaving the anti-join result identical."""
-    import glob
-
-    from llogtail_spark.operators.dedup import compact_index
-
-    idx = str(tmp_path / "fpidx")
-    for b in range(12):
-        spark.createDataFrame(
-            [(b * 10 + i,) for i in range(10)], "fp long"
-        ).write.mode("append").parquet(idx)
-    n_before = len(glob.glob(idx + "/*.parquet"))
-    assert n_before >= 12
-    probe = spark.createDataFrame(
-        [(5,), (117,), (9999,), (42,)], "fp long"
-    )
-    before = sorted(
-        r["fp"] for r in probe.join(
-            spark.read.parquet(idx), "fp", "left_anti").collect()
-    )
-    assert compact_index(spark, idx, target_files=4, trigger_files=8)
-    n_after = len(glob.glob(idx + "/*.parquet"))
-    assert n_after <= 4, n_after
-    after = sorted(
-        r["fp"] for r in probe.join(
-            spark.read.parquet(idx), "fp", "left_anti").collect()
-    )
-    assert after == before == [9999]
-    assert spark.read.parquet(idx).distinct().count() == 120
-    # below trigger: no-op
-    assert not compact_index(spark, idx, target_files=4, trigger_files=8)
-
-
-def test_index_compaction_crash_window_is_superset(spark, tmp_path):
-    """Crash-safety contract: compacted files land IN the live dir
-    before old files are deleted, so every crash window leaves the
-    index a superset of the truth — duplicates never change an
-    anti-join, while a directory swap would have a no-index window
-    that ships the whole corpus history as duplicates."""
-    import glob
-    import os
-
-    from llogtail_spark.operators.dedup import compact_index
-
-    idx = str(tmp_path / "fpidx")
-    for b in range(10):
-        spark.createDataFrame(
-            [(b,)], "fp long").write.mode("append").parquet(idx)
-    old = set(glob.glob(idx + "/*.parquet"))
-    # simulate the crash: monkey-run compaction but restore the old
-    # files afterwards (as if unlink never happened)
-    import shutil
-
-    backup = tmp_path / "bk"
-    shutil.copytree(idx, backup)
-    compact_index(spark, idx, target_files=2, trigger_files=4)
-    for f in os.listdir(backup):
-        if f.endswith(".parquet") and not os.path.exists(os.path.join(idx, f)):
-            shutil.copy(os.path.join(backup, f), os.path.join(idx, f))
-    # index now holds compacted + resurrected originals: duplicates
-    got = sorted(r["fp"] for r in spark.read.parquet(idx).distinct().collect())
-    assert got == list(range(10))
-    probe = spark.createDataFrame([(3,), (99,)], "fp long")
-    kept = [r["fp"] for r in probe.join(
-        spark.read.parquet(idx), "fp", "left_anti").collect()]
-    assert kept == [99]
-    # re-compaction converges back to <= target
-    assert compact_index(spark, idx, target_files=2, trigger_files=4)
-    assert len(glob.glob(idx + "/*.parquet")) <= 2
-
-
-def test_incremental_dedup_commit_autocompacts(spark, tmp_path, monkeypatch):
-    """commit_fn triggers compaction once the index crosses the file
-    threshold (defaults lowered here to keep the test fast)."""
-    import glob
-
-    import llogtail_spark.operators.dedup as D
-
-    idx = str(tmp_path / "fpidx")
-    orig = D.compact_index
-    monkeypatch.setattr(
-        D, "compact_index",
-        lambda spark, p: orig(spark, p, target_files=2, trigger_files=3),
-    )
-    for b in range(6):
-        docs = spark.createDataFrame(
-            [(b * 10 + i, f"doc {b} {i}") for i in range(3)],
-            "doc_id long, text string",
-        )
-        survivors, commit = D.incremental_dedup(docs, idx)
-        commit(survivors)
-    assert len(glob.glob(idx + "/*.parquet")) <= 3
-    assert spark.read.parquet(idx).distinct().count() == 18
 
 
 def test_contamination_hits_semantics(spark):

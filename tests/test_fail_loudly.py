@@ -1,0 +1,114 @@
+"""Layouts and inputs that used to corrupt silently or crash obscurely
+now fail before anything ships, with a message naming the conflict."""
+
+import os
+import re
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from llogtail_spark import manifest as mf
+from llogtail_spark.config import PipelineConf
+from llogtail_spark.generate import generate_sequences
+from llogtail_spark.operators.route import SinkRule
+from llogtail_spark.pipeline import run_pipeline
+from llogtail_spark.streaming.tail import stream_pipeline
+
+
+def _conf(data_dir, workdir, sinks, input_path=None) -> PipelineConf:
+    return PipelineConf(
+        input_path=input_path or os.path.join(data_dir, "sequences"),
+        lookup_path=os.path.join(data_dir, "lookup_sources.parquet"),
+        workdir=str(workdir), sinks=sinks)
+
+
+def _listing(path) -> list[str]:
+    return sorted(os.listdir(path)) if os.path.isdir(path) else []
+
+
+def _run(start, spark, conf):
+    if start == "stream":
+        stream_pipeline(spark, conf).awaitTermination(120)
+    else:
+        run_pipeline(spark, conf)
+
+
+@pytest.mark.parametrize("start", ["batch", "stream"])
+def test_two_rules_sharing_a_path_are_refused(spark, data_dir, tmp_path, start):
+    out = str(tmp_path / "out" / "shared")
+    conf = _conf(data_dir, tmp_path / "w", [SinkRule("errors", "level_num >= 40", out),
+                                            SinkRule("firehose", "true", out)])
+    with pytest.raises(ValueError, match="sink 'firehose'.*overlaps sink 'errors'"):
+        _run(start, spark, conf)
+    assert not os.path.exists(out)
+    assert mf.read_all(conf.manifest_dir) == []
+
+
+def test_duplicate_sink_names_are_refused_by_the_conf(data_dir, tmp_path):
+    sinks = [SinkRule("errors", "level_num >= 40", str(tmp_path / "out" / "a")),
+             SinkRule("errors", "true", str(tmp_path / "out" / "b"))]
+    with pytest.raises(ValueError, match="duplicate sink names"):
+        _conf(data_dir, tmp_path / "w", sinks)
+    assert _listing(tmp_path) == []
+    PipelineConf("", None, "", [])  # the empty conf still builds
+
+
+@pytest.mark.parametrize("start", ["batch", "stream"])
+def test_sink_under_staging_is_refused(spark, data_dir, tmp_path, start):
+    wd = tmp_path / "w"
+    out = str(wd / "staging" / "errors")
+    conf = _conf(data_dir, wd, [SinkRule("errors", "level_num >= 40", out)])
+    with pytest.raises(ValueError, match="sink 'errors'.*overlaps the staging dir"):
+        _run(start, spark, conf)
+    assert not os.path.exists(out)
+    assert mf.read_all(conf.manifest_dir) == []
+
+
+@pytest.mark.parametrize("start", ["batch", "stream"])
+def test_sink_equal_to_the_input_path_is_refused(spark, data_dir, tmp_path, start):
+    inp = os.path.join(data_dir, "sequences")
+    before = _listing(inp)
+    conf = _conf(data_dir, tmp_path / "w", [SinkRule("firehose", "true", inp)])
+    with pytest.raises(ValueError, match="sink 'firehose'.*overlaps the input path"):
+        _run(start, spark, conf)
+    assert _listing(inp) == before
+    assert mf.read_all(conf.manifest_dir) == []
+
+
+def _write_part(path, table):
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(table, path)
+
+
+@pytest.mark.parametrize("bad_id", [50257, -1])
+def test_out_of_vocab_token_id_names_the_id_and_vocab_size(spark, data_dir, tmp_path, bad_id):
+    table = generate_sequences(20, seed=7)
+    toks = table.column("tokens").to_pylist()
+    toks[3] = toks[3][:2] + [bad_id] + toks[3][3:]
+    table = table.set_column(table.schema.get_field_index("tokens"), "tokens",
+                             pa.array(toks, type=table.schema.field("tokens").type))
+    inp = str(tmp_path / "in")
+    _write_part(os.path.join(inp, "part-00000.parquet"), table)
+    out = str(tmp_path / "out" / "firehose")
+    conf = _conf(data_dir, tmp_path / "w", [SinkRule("firehose", "true", out)], inp)
+    with pytest.raises(Exception) as err:
+        run_pipeline(spark, conf)
+    msg = str(err.value)
+    assert re.search(rf"token id {bad_id}\b", msg), msg[-2000:]
+    assert "50257" in msg.replace(str(bad_id), "", 1), msg[-2000:]
+    assert not os.path.exists(out)
+    assert mf.read_all(conf.manifest_dir) == []
+
+
+def test_lookup_without_a_source_column_names_the_input(spark, data_dir, tmp_path):
+    inp = str(tmp_path / "in")
+    _write_part(os.path.join(inp, "part-00000.parquet"),
+                generate_sequences(20, seed=7).drop_columns(["source"]))
+    out = str(tmp_path / "out" / "firehose")
+    conf = _conf(data_dir, tmp_path / "w", [SinkRule("firehose", "true", out)], inp)
+    with pytest.raises(ValueError) as err:
+        run_pipeline(spark, conf)
+    assert "source" in str(err.value) and inp in str(err.value)
+    assert not os.path.exists(out)
+    assert mf.read_all(conf.manifest_dir) == []

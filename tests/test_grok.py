@@ -4,7 +4,7 @@ import re
 
 import pytest
 
-from llogtail_spark.functions.grok import BASE_PATTERNS, compile_grok, group_names
+from llogtail_spark.functions.grok import BASE_PATTERNS, compile_grok
 
 
 def test_simple_named_groups():
@@ -31,10 +31,6 @@ def test_nested_custom_pattern():
 def test_unknown_pattern_raises():
     with pytest.raises(KeyError):
         compile_grok(r"%{NOPE:x}")
-
-
-def test_group_names_ordered():
-    assert group_names(r"%{WORD:a} %{INT:b} %{DATA:c}.") == ["a", "b", "c"]
 
 
 def test_number_and_ip():

@@ -6,11 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from llogtail_spark.operators.multimodal import (
-    FEATURE_DIM,
     MEDIA_SCHEMA,
-    extract_features,
-    media_stats,
-    resize_images,
     sample_frames,
     synth_media,
 )
@@ -32,37 +28,6 @@ def test_synth_media_schema_and_determinism(spark, media):
     assert p1 == p2
 
 
-def test_extract_features_shape(media):
-    out = extract_features(media).collect()
-    assert len(out) == 30
-    for r in out:
-        assert len(r["features"]) == FEATURE_DIM
-        assert all(0.0 <= v <= 1.0 for v in r["features"])
-    assert "payload" not in extract_features(media).columns
-
-
-def test_extract_features_deterministic(media):
-    a = {r["media_id"]: list(r["features"]) for r in extract_features(media).collect()}
-    b = {r["media_id"]: list(r["features"]) for r in extract_features(media).collect()}
-    assert a == b
-
-
-def test_resize_images(media):
-    out = resize_images(media, out_w=8, out_h=8)
-    assert out.schema == MEDIA_SCHEMA
-    rows = out.filter(F.col("kind") == "image").collect()
-    assert rows
-    for r in rows:
-        assert r["width"] == 8 and r["height"] == 8
-        assert len(bytes(r["payload"])) == 8 * 8 * 3
-    # non-image rows untouched
-    audio = out.filter(F.col("kind") == "audio").collect()
-    orig = {r["media_id"]: bytes(r["payload"])
-            for r in media.filter(F.col("kind") == "audio").collect()}
-    for r in audio:
-        assert bytes(r["payload"]) == orig[r["media_id"]]
-
-
 def test_sample_frames(media):
     out = sample_frames(media, every=8).collect()
     vids = {r["media_id"]: r["n_frames"]
@@ -72,19 +37,6 @@ def test_sample_frames(media):
     for r in out:
         assert r["frame_idx"] % 8 == 0
         assert len(bytes(r["frame_payload"])) == 32
-
-
-def test_media_stats_prunes_payload(spark, media, tmp_path):
-    stats = media_stats(media)
-    got = {(r["kind"], r["source"]): r["n"] for r in stats.collect()}
-    assert sum(got.values()) == 30
-    # column pruning: a metadata-only rollup over the parquet table
-    # must not read the payload column at all
-    p = str(tmp_path / "media.parquet")
-    media.write.parquet(p)
-    slim = spark.read.parquet(p).groupBy("kind").count()
-    plan = slim._jdf.queryExecution().executedPlan().toString()
-    assert "ReadSchema" in plan and "payload" not in plan
 
 
 def test_frame_digest_matches_hashlib(spark):

@@ -5,7 +5,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from llogtail_spark.operators.parse import detokenize, parse_stage
+from llogtail_spark.operators.parse import parse_stage
 from tests.conftest import assert_same_rows
 
 
@@ -30,20 +30,6 @@ def test_parse_no_row_dropped_or_duplicated(spark, data_dir):
     p = parse_stage(df)
     assert p.count() == df.count()
     assert p.select("doc_id").distinct().count() == df.count()
-
-
-def test_detokenize_round_trip(spark, oracle_pdf):
-    from llogtail_spark.generate import build_vocab
-
-    sample = oracle_pdf.head(50)
-    df = spark.createDataFrame(sample[["doc_id", "tokens"]])
-    got = {
-        r["doc_id"]: r["text"]
-        for r in df.withColumn("text", detokenize("tokens")).collect()
-    }
-    vocab = build_vocab()
-    for _, row in sample.iterrows():
-        assert got[row["doc_id"]] == " ".join(vocab[row["tokens"]])
 
 
 def test_unparseable_rows_yield_nulls(spark):

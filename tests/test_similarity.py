@@ -203,43 +203,6 @@ def test_ivf_plan_no_cartesian_and_broadcast(emb):
     assert "BroadcastHashJoin" in plan
 
 
-def test_train_centroids_deterministic_and_improves(emb_np):
-    """The k-means fit is seeded-deterministic and beats random
-    centroids on spherical inertia (mean max-dot to nearest cell)."""
-    from llogtail_spark.operators.similarity import (
-        rounded_centroids,
-        train_centroids,
-    )
-
-    a = train_centroids(emb_np, n_cells=8, seed=11)
-    b = train_centroids(emb_np, n_cells=8, seed=11)
-    assert np.array_equal(a, b)
-
-    m = emb_np.astype(np.float64)
-    m = m / np.linalg.norm(m, axis=1, keepdims=True)
-    fit_q = (m @ a.T).max(axis=1).mean()
-    rand_q = (m @ rounded_centroids(DIM, 8, 11).T).max(axis=1).mean()
-    assert fit_q > rand_q
-
-
-def test_train_centroids_empty_cells_reseed_distinct():
-    """A degenerate sample (two tight clusters, many cells) forces
-    empty cells every round. Each empty cell must reseed from a
-    DISTINCT worst-covered point — reseeding them all from the same
-    argmin produced duplicate centroids that stayed memberless forever
-    (ties resolve to the lowest cell id), silently shrinking the
-    codebook."""
-    from llogtail_spark.operators.similarity import train_centroids
-
-    rng = np.random.default_rng(7)
-    base = rng.standard_normal((2, 16))
-    # 40 points in 2 tight clusters; 16 requested cells -> most empty
-    pts = np.repeat(base, 20, axis=0) + 0.01 * rng.standard_normal((40, 16))
-    cents = train_centroids(pts, n_cells=16, seed=3, iters=5)
-    # no duplicated centroid rows (exact duplicates were the bug)
-    assert len(np.unique(np.round(cents, 9), axis=0)) == len(cents)
-
-
 def test_ivf_cell_margins_robust():
     """Oracle parity for ann_ivf needs numpy and DuckDB to agree on
     the cell RANKING per vector. Assert the score gaps at the decision
