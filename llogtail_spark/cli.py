@@ -16,7 +16,7 @@ import json
 import sys
 
 from llogtail_spark.config import load_config
-from llogtail_spark.pipeline import run_pipeline
+from llogtail_spark.pipeline import run_pipeline, validate_manifest
 from llogtail_spark.session import get_spark
 
 
@@ -29,7 +29,8 @@ def main(argv: list[str] | None = None) -> int:
                          "pack->ship with per-stage resume instead of the "
                          "log pipeline)")
     ap.add_argument("--validate", action="store_true",
-                    help="re-validate manifest identities before resume "
+                    help="first drop manifest entries whose input part is "
+                         "gone or changed, so the run reprocesses them "
                          "(the corpus pipeline always validates)")
     args = ap.parse_args(argv)
     if bool(args.conf) == bool(args.corpus_conf):
@@ -59,7 +60,7 @@ def main(argv: list[str] | None = None) -> int:
 
     conf = load_config(args.conf)
     if args.validate:
-        conf.validate_on_start = True
+        validate_manifest(conf)
     spark = get_spark("llogtail_spark.cli")
     result = run_pipeline(spark, conf)
     report = {

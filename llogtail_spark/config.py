@@ -17,10 +17,13 @@ keeps the config-file-drives-everything shape:
   "ship_mode":   "rename"                # or "iceberg" (table sinks)
 }
 
-A run stages every pending (sink, part), reconciles the staged
-readback against the write's own observation, ships, then commits the
-manifest under `workdir`, holding `workdir`'s lease throughout
-(`manifest.py`).
+`input_path` is a flat local dir of *.parquet parts (or one file),
+listed on the driver by `reader.list_parts`. A run stages every
+pending (sink, part), reconciles the staged readback against the
+write's own observation, ships, then commits the manifest under
+`workdir`, holding `workdir`'s lease throughout (`manifest.py`). A
+run does not re-check committed parts against their inputs; that is
+`pipeline.validate_manifest`, run first by `cli --validate`.
 """
 
 from __future__ import annotations
@@ -44,7 +47,6 @@ class PipelineConf:
         default_factory=lambda: {"facility": "unknown", "team": "unassigned", "min_level": 0}
     )
     committed_at: str = "1970-01-01T00:00:00Z"  # injected, deterministic tests
-    validate_on_start: bool = False
     # ship_mode:
     #   "rename"  — stage + per-part directory rename (default; local /
     #               HDFS-style filesystems)

@@ -10,6 +10,11 @@ contract as the log pipeline (`pipeline.py`):
 - the whole run holds the workdir lease (`manifest.lease`); the
   workdir and out_path go through the log pipeline's local-dir guard
   (`pipeline.local_dir`), so a 'file:' URI behaves as its path;
+- before the lease, an out_path that equals or nests with the input,
+  the benchmark or a workdir dir is refused (`pipeline.check_disjoint`,
+  the check the log sinks get); the input is listed once on the driver
+  (`reader.list_parts`), and its footer identity and its scan cover
+  exactly the listed files;
 - the run walks ONE ordered stage table, `STAGES` (stage -> transform
   and the CorpusConf knobs its params fingerprint reads); the lazy
   composition and the eager funnel walk the same table;
@@ -86,7 +91,7 @@ from pyspark.sql.types import StructType
 
 from llogtail_spark import manifest as mf
 from llogtail_spark.manifest import StageManifest, commit_stage, read_stage
-from llogtail_spark.pipeline import local_dir
+from llogtail_spark.pipeline import check_disjoint, local_dir
 from llogtail_spark.sources import reader
 
 # default mixture targets (basis points, sum 10000) over the `lang`
@@ -374,27 +379,22 @@ class CorpusRunResult:
     stage_timings: dict[str, float]  # wall sec per recomputed stage
 
 
-def _input_identity(path: str) -> tuple[int, int]:
-    """(rows, checksum) of the raw corpus input from parquet FOOTER
-    metadata only (reader.file_identity — no data scan; an Iceberg
-    deployment reads the snapshot id instead)."""
-    import glob
-
-    lp = reader.local_path(path)
-    if lp is None:
-        raise NotImplementedError(
-            f"corpus input must be a local path here (got {path!r}); on "
-            "a cluster, identity comes from the Iceberg snapshot id")
-    files = sorted(glob.glob(os.path.join(lp, "*.parquet"))) \
-        if os.path.isdir(lp) else [lp]
-    if not files:
-        raise FileNotFoundError(f"no parquet under {path}")
+def _input_identity(files: dict[str, str]) -> tuple[int, int]:
+    """(rows, checksum) of the listed input parts ({part: file}, from
+    `reader.list_parts`) from parquet FOOTER metadata only (no data
+    scan; an Iceberg deployment reads the snapshot id instead): row
+    counts sum, each file's footer checksum XORs in with its name's."""
     rows, crc = 0, 0
-    for fp in files:
-        r, c = reader.file_identity(fp)
+    for fp, (r, c) in zip(files.values(), reader.files_identity(files).values()):
         rows += r
         crc ^= c ^ zlib.crc32(os.path.basename(fp).encode())
     return rows, crc
+
+
+def _read_input(spark: SparkSession, path: str) -> tuple[DataFrame, tuple[int, int]]:
+    """Scan and identity of exactly the parts `reader.list_parts` lists."""
+    files = reader.list_parts(path)
+    return reader.read_files(spark, list(files.values())), _input_identity(files)
 
 
 def _read_benchmark(spark: SparkSession, docs: DataFrame,
@@ -404,8 +404,7 @@ def _read_benchmark(spark: SparkSession, docs: DataFrame,
     eval set (decontaminate_docs convention) and is EXCLUDED from the
     corpus."""
     if conf.benchmark_path is not None:
-        bench = spark.read.parquet(conf.benchmark_path)
-        _, crc = _input_identity(conf.benchmark_path)
+        bench, (_, crc) = _read_input(spark, conf.benchmark_path)
         return docs, bench, crc
     mod = F.col(conf.id_col) % conf.benchmark_mod
     return (docs.filter(mod != 0), docs.filter(mod == 0),
@@ -417,14 +416,17 @@ def run_corpus_pipeline(
     conf: CorpusConf,
     failpoint: Failpoint | None = None,
 ) -> CorpusRunResult:
+    check_disjoint("out_path", conf.out_path, {
+        "input_path": conf.input_path, "benchmark_path": conf.benchmark_path,
+        "stages_dir": conf.stages_dir, "manifest_dir": conf.manifest_dir,
+        "stage_manifest_dir": conf.stage_manifest_dir})
     with mf.lease(local_dir(conf.workdir)):
         return _run(spark, conf, failpoint)
 
 
 def _run(spark: SparkSession, conf: CorpusConf,
          failpoint: Failpoint | None) -> CorpusRunResult:
-    in_rows, in_crc = _input_identity(conf.input_path)
-    docs0 = spark.read.parquet(conf.input_path)
+    docs0, (in_rows, in_crc) = _read_input(spark, conf.input_path)
     corpus, benchmark, bench_crc = _read_benchmark(spark, docs0, conf)
 
     stages_run: list[str] = []

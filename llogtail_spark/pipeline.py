@@ -8,9 +8,12 @@ declarative DAG per run: the Iceberg/parquet snapshot IS the set of
 un-consumed bytes; there is nothing to poll.
 
 A run has two parts:
-- the plan (`_run`): ONE input listing and ONE manifest read, shared
-  by the optional validation, every sink's pending set and the
-  metrics; footer identities only for the pending parts;
+- the plan (`_run`): ONE driver-side input listing
+  (`reader.list_parts`, no Spark job) and ONE manifest read, shared by
+  every sink's pending set and the metrics; footer identities only for
+  the pending parts, so a run with nothing pending starts no Spark job.
+  Re-validating committed parts against changed inputs is a separate
+  call, `validate_manifest` (`cli --validate`);
 - the core (`stage_and_ship`), the package's one writer of log-sink
   lineage. The streaming tail (`streaming/tail.py`) calls it too, per
   micro-batch and per rescan, so stream and batch sinks get the same
@@ -99,28 +102,24 @@ def _prepare(spark: SparkSession, conf: PipelineConf, files: list[str]) -> DataF
     return df
 
 
-def validate_manifest(spark: SparkSession, conf: PipelineConf) -> list[str]:
+def validate_manifest(conf: PipelineConf) -> list[str]:
     """Recompute input-partition identities (parquet footer metadata,
-    no scan) and drop stale manifest entries (validateCpt analog,
-    utils.go:128-133). Returns the parts invalidated."""
-    entries = mf.read_all(conf.manifest_dir)
-    if not entries:
-        return []
-    live = reader.files_identity(reader.list_parts(spark, conf.input_path))
-    return [f"{e.sink}/{e.part}"
-            for e in _invalidate_stale(conf.manifest_dir, entries, live)]
-
-
-def _invalidate_stale(manifest_dir: str, entries: list[mf.ManifestEntry],
-                      live: dict[str, tuple[int, int]]) -> list[mf.ManifestEntry]:
-    """Drop the entries whose input part is gone or changed; returns them."""
-    stale = []
-    for e in entries:
-        got = live.get(e.part)
-        if got is None or not mf.validate(e, got[0], got[1]):
-            mf.invalidate(manifest_dir, e.sink, e.part)
-            stale.append(e)
-    return stale
+    no scan, no Spark job) and drop the manifest entries whose input
+    part is gone or changed (validateCpt analog, utils.go:128-133), so
+    the next run reprocesses them. Holds the workdir lease. Returns
+    the parts invalidated."""
+    with mf.lease(local_dir(conf.workdir)):
+        entries = mf.read_all(conf.manifest_dir)
+        if not entries:
+            return []
+        live = reader.files_identity(reader.list_parts(conf.input_path))
+        stale = []
+        for e in entries:
+            got = live.get(e.part)
+            if got is None or not mf.validate(e, got[0], got[1]):
+                mf.invalidate(conf.manifest_dir, e.sink, e.part)
+                stale.append(f"{e.sink}/{e.part}")
+        return stale
 
 
 def local_dir(path: str) -> str:
@@ -143,6 +142,24 @@ def local_dir(path: str) -> str:
     return local
 
 
+def check_disjoint(what: str, path: str, taken: dict[str, str | None]) -> None:
+    """Refuse an output `path` that equals or nests (either way) with
+    any path of `taken` ({description: path or None}), naming both.
+    Paths resolve through `reader.local_path` + realpath; a remote
+    path is not compared."""
+    def resolved(p: str | None) -> str | None:
+        local = p and reader.local_path(p)
+        return local and os.path.realpath(local)
+
+    mine = resolved(path)
+    for other_what, other in taken.items():
+        other = resolved(other)
+        if mine and other and os.path.commonpath([mine, other]) in (mine, other):
+            raise ValueError(
+                f"{what} {path!r} overlaps {other_what} ({other}); "
+                "give every output a path of its own")
+
+
 def check_layout(conf: PipelineConf, workdir: str) -> None:
     """Refuse sink paths that overlap each other, the input, or the
     workdir's staging and manifest dirs (equal or nested either way).
@@ -153,22 +170,12 @@ def check_layout(conf: PipelineConf, workdir: str) -> None:
     identifiers, so only the unique names (PipelineConf) apply."""
     if conf.ship_mode == "iceberg":
         return
-
-    def resolved(path: str) -> str | None:
-        local = reader.local_path(path)
-        return None if local is None else os.path.realpath(local)
-
-    taken = {"the input path": resolved(conf.input_path),
-             "the staging dir": resolved(os.path.join(workdir, "staging")),
-             "the manifest dir": resolved(conf.manifest_dir)}
+    taken = {"the input path": conf.input_path,
+             "the staging dir": os.path.join(workdir, "staging"),
+             "the manifest dir": conf.manifest_dir}
     for rule in conf.sinks:
-        path = resolved(rule.path)
-        for what, other in taken.items():
-            if path and other and os.path.commonpath([path, other]) in (path, other):
-                raise ValueError(
-                    f"sink {rule.name!r} path {rule.path!r} overlaps {what} "
-                    f"({other}); give every sink a path of its own")
-        taken[f"sink {rule.name!r}"] = path
+        check_disjoint(f"sink {rule.name!r} path", rule.path, taken)
+        taken[f"sink {rule.name!r}"] = rule.path
 
 
 def run_pipeline(
@@ -184,16 +191,10 @@ def run_pipeline(
 
 def _run(spark: SparkSession, conf: PipelineConf, workdir: str,
          failpoint: Failpoint | None) -> RunResult:
-    # --- the plan: ONE listing and ONE manifest read, shared by the
-    # validation, every sink's pending set and the metrics
-    parts = reader.list_parts(spark, conf.input_path)  # {part: file}
+    # --- the plan: ONE driver-side listing and ONE manifest read,
+    # shared by every sink's pending set and the metrics
+    parts = reader.list_parts(conf.input_path)  # {part: file}
     entries = mf.read_all(conf.manifest_dir)
-    identity: dict[str, tuple[int, int]] = {}
-    if conf.validate_on_start and entries:
-        identity = reader.files_identity(parts)
-        stale = set(_invalidate_stale(conf.manifest_dir, entries, identity))
-        entries = [e for e in entries if e not in stale]
-
     pending: dict[str, list[str]] = {}
     skipped: dict[str, list[str]] = {}
     for rule in conf.sinks:
@@ -210,8 +211,7 @@ def _run(spark: SparkSession, conf: PipelineConf, workdir: str,
     # (driver-side parallel footer reads, no scan, no Spark job) —
     # the validateCpt analog (utils.go:128-133). At cluster scale
     # these stats come from the Iceberg manifest.
-    if not identity:
-        identity = reader.files_identity(files)
+    identity = reader.files_identity(files)
 
     committed = stage_and_ship(spark, conf, workdir, files, identity, pending,
                                failpoint)

@@ -1,2 +1,3 @@
-"""Input connectors: parquet today, Iceberg behind an import-try
-(the jars are not in this image — see reader.read_table)."""
+"""Input connectors: a local parquet dir, listed on the driver by
+`reader.list_parts`. An Iceberg source would list its parts from the
+table manifest instead (the jars are not in this image)."""

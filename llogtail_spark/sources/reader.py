@@ -1,11 +1,13 @@
-"""Table readers + partition identity.
+"""Input listing, readers + partition identity.
 
 The reference discovers sources by glob (findFiles, utils.go:48-71)
 and identifies each by (dev, inode, first-1KB-MD5) (log_watcher.go:
-65-70). Here the source set is the file list of a parquet/Iceberg
-table; the stable partition identity is the file basename (cheap,
-rename-stable within a table directory), with the content checksum in
-the manifest playing the MD5 role.
+65-70). Here `list_parts` is the one definition of the source set:
+the flat *.parquet files of a local input dir, listed on the driver
+with os.scandir (no Spark job) by the log pipeline, the corpus
+pipeline and the stream's rescan alike. The stable partition identity
+is the file basename (cheap, rename-stable within a table directory),
+with the footer checksum (`file_identity`) playing the MD5 role.
 
 `list_parts` + an explicit pruned file list into `read_files` is the
 resume fast path: committed partitions are excluded from the scan
@@ -29,13 +31,40 @@ def part_of(path: str) -> str:
     return base[:-8] if base.endswith(".parquet") else base
 
 
-def list_parts(spark: SparkSession, path: str) -> dict[str, str]:
-    """{partition_id: file_path} for every data file of the table.
+def list_parts(path: str) -> dict[str, str]:
+    """{partition_id: file_path} for every part of the input — the
+    package's one definition of an input part, listed on the driver
+    with no Spark job (findFiles' glob, utils.go:48-71).
 
-    Metadata-only (file listing / Iceberg manifest scan) — errors if
-    empty, matching findFiles' zero-match error (utils.go:66-69).
-    """
-    files = spark.read.parquet(path).inputFiles()
+    A part is a regular *.parquet file directly under the local dir
+    `path`, or `path` itself when it is a file. Names starting with
+    '_' or '.' are hidden (Spark's rule: _SUCCESS, .crc). Refused,
+    naming the path: a non-hidden subdirectory (nested or k=v layouts
+    would merge same-named parts; ValueError), a remote URI (footer
+    identity reads every file on the driver; NotImplementedError) and
+    an empty match (findFiles' zero-match error, utils.go:66-69;
+    FileNotFoundError)."""
+    local = local_path(path)
+    if local is None:
+        raise NotImplementedError(
+            f"input {path!r} must be a local path; on a cluster, list the "
+            "parts from the Iceberg manifest instead")
+    if os.path.isfile(local):
+        return {part_of(local): local}
+    files = []
+    try:
+        with os.scandir(local) as it:
+            for e in it:
+                if e.name.startswith(("_", ".")):
+                    continue
+                if e.is_dir():
+                    raise ValueError(
+                        f"input {path!r} has a subdirectory {e.name!r}; nested "
+                        "and k=v layouts are not supported, list one flat dir")
+                if e.name.endswith(".parquet") and e.is_file():
+                    files.append(e.path)
+    except FileNotFoundError:
+        pass
     if not files:
         raise FileNotFoundError(f"no input files under {path}")
     return {part_of(f): f for f in sorted(files)}
@@ -123,42 +152,6 @@ def files_identity(files: dict[str, str]) -> dict[str, tuple[int, int]]:
     with ThreadPoolExecutor(max_workers=16) as ex:
         vals = list(ex.map(file_identity, files.values()))
     return dict(zip(files.keys(), vals))
-
-
-def read_table(
-    spark: SparkSession, path: str, fmt: str = "parquet",
-    parquet_fallback: bool = False,
-) -> DataFrame:
-    """Format-dispatching reader.
-
-    fmt='iceberg' requires the iceberg-spark-runtime jar on the
-    classpath (it is NOT in this image). The fallback to plain parquet
-    is EXPLICIT opt-in (parquet_fallback=True) and logged — a silent
-    fallback would hide that snapshot isolation, manifest-level
-    pruning, and schema evolution are gone. On a real deployment, add
-    `--packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13` and
-    a catalog config; the rest of the pipeline is storage-agnostic
-    (file lists + footer identities come from reader.list_parts /
-    files_identity, which an Iceberg manifest would replace)."""
-    if fmt == "iceberg":
-        try:
-            return spark.read.format("iceberg").load(path)
-        except Exception as e:
-            if not parquet_fallback:
-                raise RuntimeError(
-                    "iceberg read failed (runtime jar/catalog missing?); "
-                    "pass parquet_fallback=True for the documented "
-                    "parquet-only sandbox mode"
-                ) from e
-            import sys
-
-            print(
-                f"llogtail_spark: iceberg unavailable ({type(e).__name__}); "
-                f"reading {path} as plain parquet (explicit fallback)",
-                file=sys.stderr,
-            )
-            return spark.read.parquet(path)
-    return spark.read.format(fmt).load(path)
 
 
 def write_bucketed(

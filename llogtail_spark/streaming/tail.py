@@ -30,11 +30,12 @@ IN-PLACE ROTATION (log_watcher.go:228-261): Spark's file-stream
 source assumes files are IMMUTABLE once seen, so a file rewritten in
 place under a running stream would stay shipped with its OLD content
 forever. Two coverage modes:
-- default (rescan=False): the BATCH path's identity validation
-  (pipeline.validate_manifest + footer identity) detects and
-  reprocesses the replaced partition on the next batch run. The
-  stream itself never re-ships, which preserves the strict
-  O(batch)-per-trigger driver-work guarantee
+- default (rescan=False): the BATCH path's identity validation,
+  `pipeline.validate_manifest` (`cli --validate`), drops the replaced
+  partition's entries so the next `run_pipeline` reprocesses it; a
+  plain `run_pipeline` does not validate, and ships nothing for an
+  in-place rewrite. The stream itself never re-ships, which preserves
+  the strict O(batch)-per-trigger driver-work guarantee
   (test_stream_identity_work_is_per_batch_not_per_table) — the right
   default under the north rule's immutable token-table partitions.
 - rescan=True: `rescan_rewritten` runs after each micro-batch — the
@@ -60,7 +61,6 @@ from llogtail_spark import manifest as mf
 from llogtail_spark import pipeline
 from llogtail_spark.config import PipelineConf
 from llogtail_spark.sources import reader
-from llogtail_spark.streaming import start_file_stream
 
 SEQUENCES_SCHEMA = T.StructType(
     [
@@ -124,17 +124,18 @@ def rescan_rewritten(spark: SparkSession, conf: PipelineConf,
 
     Spark's file-stream source never re-delivers a seen path, so a
     file rewritten in place would otherwise keep its OLD content in
-    every sink forever. This rescan stat-scans the input dir (O(table)
-    driver stat() calls — the poller analog, metadata only), footer-
-    reads only parts whose stat moved since the ledger saw them
-    (O(changed); a cold ledger — fresh stream or restart — pays one
-    metadata-only footer sweep over committed parts, exactly the
-    batch validate_manifest cost), and ships just the rewritten
-    files to every sink through the batch core with the identities it
-    already read. A file mid-rewrite (unreadable footer) is skipped
-    this round and re-checked next rescan — the writer is still
-    active, the same wait-for-quiesce the watcher applies to a file
-    growing under its tail.
+    every sink forever. This rescan lists the input with the batch
+    run's own definition of a part (`reader.list_parts`) and stats
+    every part (O(table) driver stat() calls — the poller analog,
+    metadata only), footer-reads only parts whose stat moved since the
+    ledger saw them (O(changed); a cold ledger — fresh stream or
+    restart — pays one metadata-only footer sweep over committed
+    parts, exactly the batch validate_manifest cost), and ships just
+    the rewritten files to every sink through the batch core with the
+    identities it already read. A file mid-rewrite (unreadable footer)
+    is skipped this round and re-checked next rescan — the writer is
+    still active, the same wait-for-quiesce the watcher applies to a
+    file growing under its tail.
 
     Returns the sorted list of re-shipped partition ids."""
     workdir = pipeline.local_dir(conf.workdir)
@@ -144,26 +145,13 @@ def rescan_rewritten(spark: SparkSession, conf: PipelineConf,
         by_part.setdefault(e.part, e)  # input identity is per-part, not per-sink
     if not by_part:
         return []
-    local_root = reader.local_path(conf.input_path)
-    if local_root is None:
-        # loud, never silent: a remote landing dir can't be stat-scanned
-        # driver-side; schedule pipeline.validate_manifest + run_pipeline
-        # (or an Iceberg snapshot-diff feed) instead.
-        raise NotImplementedError(
-            "rescan_rewritten requires a local input dir; for remote "
-            "landing dirs run the batch validate path on a schedule"
-        )
     ledger = {} if ledger is None else ledger
     changed: dict[str, str] = {}
     ids: dict[str, tuple[int, int]] = {}
-    for name in sorted(os.listdir(local_root)):
-        if not name.endswith(".parquet"):
-            continue
-        part = reader.part_of(name)
+    for part, path in reader.list_parts(conf.input_path).items():
         e = by_part.get(part)
         if e is None:
             continue  # never shipped — the file source will deliver it
-        path = os.path.join(local_root, name)
         st = _stat_of(path)
         if st is not None and ledger.get(part) == st:
             continue  # stat unchanged since last look: no footer read
@@ -202,10 +190,13 @@ def stream_pipeline(
     pipeline.check_layout(conf, workdir)
     # the rescan's stat ledger lives for the stream's lifetime
     ledger: dict | None = {} if rescan else None
-    return start_file_stream(
-        spark, SEQUENCES_SCHEMA, conf.input_path,
-        os.path.join(conf.workdir, "stream_cpt"),
-        lambda bdf, _: _process_batch(spark, conf, workdir, bdf, ledger),
-        available_now, max_files_per_trigger,
-    )
+    stream = spark.readStream.schema(SEQUENCES_SCHEMA)
+    if max_files_per_trigger:
+        stream = stream.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    writer = stream.parquet(conf.input_path).writeStream.foreachBatch(
+        lambda bdf, _: _process_batch(spark, conf, workdir, bdf, ledger)
+    ).option("checkpointLocation", os.path.join(conf.workdir, "stream_cpt"))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 

@@ -158,6 +158,31 @@ def test_params_crc_is_pinned():
     assert conf.params_crc("sample") == 427346920
 
 
+def test_input_identity_is_pinned(tmp_path):
+    """The raw input's identity heads every stage manifest's chain: a
+    change to its fold would recompute every committed workdir. The
+    corpus docs written by pyarrow into three named parts, with a
+    hidden _SUCCESS beside them."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from llogtail_spark.corpus_pipeline import _input_identity
+    from llogtail_spark.sources.reader import list_parts
+
+    rows = [_doc(i) for i in range(1, N_DOCS + 1)]
+    for k in range(3):
+        cols = list(zip(*rows[k::3]))
+        pq.write_table(pa.table({
+            "doc_id": pa.array(cols[0], pa.int64()), "text": cols[1],
+            "lang": cols[2], "source": cols[3],
+            "n_chars": pa.array(cols[4], pa.int64())}),
+            str(tmp_path / f"part-{k:05d}.parquet"))
+    (tmp_path / "_SUCCESS").touch()
+    assert _input_identity(list_parts(str(tmp_path))) == (200, 3269959492)
+    one = str(tmp_path / "part-00001.parquet")
+    assert _input_identity(list_parts(one)) == (67, 3558289383)
+
+
 def test_file_uri_workdir_and_out_path(spark, corpus_input, tmp_path,
                                        golden, monkeypatch):
     """'file:' URIs for workdir and out_path behave as their paths:

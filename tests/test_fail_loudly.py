@@ -112,3 +112,34 @@ def test_lookup_without_a_source_column_names_the_input(spark, data_dir, tmp_pat
     assert "source" in str(err.value) and inp in str(err.value)
     assert not os.path.exists(out)
     assert mf.read_all(conf.manifest_dir) == []
+
+
+def test_a_hive_style_input_is_refused(spark, data_dir, tmp_path):
+    """date=1/part-0 and date=2/part-0 would share the part id
+    'part-0'; one of them would never ship."""
+    inp = str(tmp_path / "in")
+    for d in ("date=1", "date=2"):
+        _write_part(os.path.join(inp, d, "part-0.parquet"), generate_sequences(20, seed=7))
+    out = str(tmp_path / "out" / "firehose")
+    conf = _conf(data_dir, tmp_path / "w", [SinkRule("firehose", "true", out)], inp)
+    with pytest.raises(ValueError, match=r"subdirectory 'date=[12]'") as err:
+        run_pipeline(spark, conf)
+    assert inp in str(err.value)
+    assert not os.path.exists(out)
+    assert mf.read_all(conf.manifest_dir) == []
+
+
+@pytest.mark.parametrize("where", ["input", "inside_input", "workdir"])
+def test_corpus_out_path_overlapping_its_input_or_workdir_is_refused(spark, tmp_path, where):
+    from llogtail_spark.corpus_pipeline import CorpusConf, run_corpus_pipeline
+
+    inp, wd = str(tmp_path / "in"), str(tmp_path / "w")
+    _write_part(os.path.join(inp, "part-0.parquet"), pa.table({"doc_id": [1]}))
+    out = {"input": inp, "inside_input": os.path.join(inp, "packed"), "workdir": wd}[where]
+    conf = CorpusConf(input_path=inp, workdir=wd, out_path=out)
+    with pytest.raises(ValueError, match="out_path") as err:
+        run_corpus_pipeline(spark, conf)
+    assert out in str(err.value)
+    assert (inp if where != "workdir" else conf.stages_dir) in str(err.value)
+    assert _listing(inp) == ["part-0.parquet"]
+    assert not os.path.exists(wd)

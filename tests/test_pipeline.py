@@ -73,6 +73,18 @@ def test_rerun_is_noop(spark, data_dir, tmp_path):
     assert res2.metrics is None
 
 
+def test_a_run_with_nothing_pending_starts_no_spark_job(spark, data_dir, tmp_path):
+    """The plan lists the input on the driver (no Spark job), so a
+    resume with every part committed never reaches Spark."""
+    conf = make_conf(data_dir, tmp_path / "w-idle")
+    run_pipeline(spark, conf)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    res = run_pipeline(spark, conf)
+    assert all(len(v) == 0 for v in res.processed.values())
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+
+
 class Boom(Exception):
     pass
 
@@ -117,7 +129,7 @@ def test_validate_detects_changed_input(spark, data_dir, tmp_path):
     # tamper one entry's recorded input identity -> stale
     e = [x for x in mf.read_all(conf.manifest_dir) if x.sink == "errors"][0]
     mf.commit(conf.manifest_dir, mf.ManifestEntry(**{**e.__dict__, "in_checksum": 1}))
-    stale = validate_manifest(spark, conf)
+    stale = validate_manifest(conf)
     assert stale == [f"errors/{e.part}"]
     res = run_pipeline(spark, conf)
     assert res.processed["errors"] == [e.part]

@@ -7,9 +7,11 @@ through the definitions they use, transitively. A use is a name that
 resolves to a package definition (directly, or through the module's
 `from ... import`), an attribute with the definition's name, or a
 string constant equal to it (getattr, monkeypatch and the benchmark's
-attribute wrappers name things by string). An import alone is not a
-use. Module-level statements other than definitions run on import and
-count as roots.
+attribute wrappers name things by string). An attribute of a name
+bound by an import of a module outside the package (`pq.read_table`,
+`np.`, `F.`, `os.`) belongs to that module and is not a use. An
+import alone is not a use. Module-level statements other than
+definitions run on import and count as roots.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ PKG = "llogtail_spark"
 KEPT = {
     # public readers: the documented way to read a run's outputs
     "pipeline.read_sink", "corpus_pipeline.read_packed",
-    "manifest.committed_parts", "pipeline.validate_manifest",
+    "manifest.committed_parts",
     # the stream tail: llogtail's live loop, started by the application
     # that embeds the package, not by the CLI
     "streaming.tail.stream_pipeline", "streaming.tail.rescan_rewritten",
@@ -43,20 +45,25 @@ def _module_name(path: str) -> str:
     return rel[: -len(".__init__")] if rel.endswith("__init__") else rel
 
 
-def _imports(tree: ast.Module) -> dict[str, set[tuple[str, str]]]:
-    """local name -> {(package module, name)} for the `from ... import`s
+def _imports(tree: ast.Module) -> tuple[dict[str, set[tuple[str, str]]], set[str]]:
+    """(local name -> {(package module, name)} for the `from ... import`s
     of package modules anywhere in the file (function-local imports
-    may bind one name to different modules)."""
+    may bind one name to different modules), the names bound only by
+    imports of modules outside the package)."""
     out: dict[str, set[tuple[str, str]]] = {}
+    foreign: set[str] = set()
     for node in ast.walk(tree):
-        if not isinstance(node, ast.ImportFrom):
-            continue
-        if not node.module or node.module.split(".")[0] != PKG:
-            continue
-        src = node.module[len(PKG) + 1:]
-        for a in node.names:
-            out.setdefault(a.asname or a.name, set()).add((src, a.name))
-    return out
+        if isinstance(node, ast.Import):
+            foreign |= {a.asname or a.name.split(".")[0] for a in node.names
+                        if a.name.split(".")[0] != PKG}
+        elif isinstance(node, ast.ImportFrom):
+            if not node.module or node.module.split(".")[0] != PKG:
+                foreign |= {a.asname or a.name for a in node.names}
+                continue
+            src = node.module[len(PKG) + 1:]
+            for a in node.names:
+                out.setdefault(a.asname or a.name, set()).add((src, a.name))
+    return out, foreign - set(out)
 
 
 def _defined(stmt: ast.stmt) -> list[str]:
@@ -96,18 +103,20 @@ def scan(extra_roots=frozenset()) -> tuple[set[str], set[str]]:
             return set()
         # a re-export: follow the module's own import of the name
         return set().union(*(resolve(m, n, depth + 1)
-                             for m, n in modules[mod][1].get(name, ())))
+                             for m, n in modules[mod][1][0].get(name, ())))
 
-    def uses(node: ast.AST, mod: str | None, imports: dict) -> set[str]:
+    def uses(node: ast.AST, mod: str | None, imports: tuple) -> set[str]:
+        pkg_imports, foreign = imports
         out = set()
         for n in ast.walk(node):
             if isinstance(n, ast.Name):
                 if mod is not None and f"{mod}.{n.id}" in defs:
                     out.add(f"{mod}.{n.id}")
-                for m, name in imports.get(n.id, ()):
+                for m, name in pkg_imports.get(n.id, ()):
                     out |= resolve(m, name)
             elif isinstance(n, ast.Attribute):
-                out |= by_name.get(n.attr, set())
+                if not (isinstance(n.value, ast.Name) and n.value.id in foreign):
+                    out |= by_name.get(n.attr, set())
             elif isinstance(n, ast.Constant) and isinstance(n.value, str):
                 out |= by_name.get(n.value, set())
         return out

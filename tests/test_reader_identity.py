@@ -1,14 +1,17 @@
-"""Footer-metadata input identity (reader.file_identity) — the
-validateCpt analog (utils.go:128-133): cheap, metadata-only, and
+"""The input listing (reader.list_parts) and footer-metadata input
+identity (reader.file_identity) — the findFiles and validateCpt
+analogs (utils.go:48-71, 128-133): cheap, metadata-only, and
 sensitive to the changes that matter (row count, content layout)."""
 
 import os
+import re
 import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
-from llogtail_spark.sources.reader import file_identity, files_identity
+from llogtail_spark.sources.reader import file_identity, files_identity, list_parts
 
 
 def _write(path, ids, toks):
@@ -55,24 +58,36 @@ def test_files_identity_batch_and_uri_scheme(tmp_path):
     assert out["part-a"] == out["part-b"]
 
 
-def test_read_table_iceberg_mode_is_explicit(spark, data_dir):
-    """fmt='iceberg' without the runtime jar must FAIL LOUDLY unless
-    the caller explicitly opts into the documented parquet-only
-    sandbox fallback — a silent downgrade would hide that snapshot
-    isolation and manifest pruning are gone."""
-    import pytest
+def _touch(path) -> str:
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    open(path, "wb").close()
+    return str(path)
 
-    from llogtail_spark.sources.reader import read_table
 
-    path = os.path.join(data_dir, "sequences")
+def test_list_parts_skips_hidden_names(tmp_path):
+    """Spark's hidden-file rule: names starting with '_' or '.' are not
+    parts, and a hidden subdirectory is not a nested layout."""
+    keep = _touch(tmp_path / "part-0.parquet")
+    for name in ("_x.parquet", ".x.parquet", "_SUCCESS", ".part-0.parquet.crc",
+                 "_temporary/part-1.parquet", "notes.txt"):
+        _touch(tmp_path / name)
+    assert list_parts(str(tmp_path)) == {"part-0": keep}
 
-    with pytest.raises(RuntimeError, match="iceberg"):
-        read_table(spark, path, fmt="iceberg")
 
-    df = read_table(spark, path, fmt="iceberg", parquet_fallback=True)
-    assert df.count() == spark.read.parquet(path).count()
+def test_list_parts_single_file_is_one_part(tmp_path):
+    f = _touch(tmp_path / "in" / "part-7.parquet")
+    _touch(tmp_path / "in" / "part-8.parquet")
+    assert list_parts(f) == {"part-7": f}
+    assert list_parts("file://" + f) == {"part-7": f}
 
-    assert read_table(spark, path).count() == df.count()
+
+def test_list_parts_refuses_remote_and_empty(tmp_path):
+    with pytest.raises(NotImplementedError, match="hdfs://nn/x"):
+        list_parts("hdfs://nn/x")
+    _touch(tmp_path / "_SUCCESS")
+    for path in (str(tmp_path), str(tmp_path / "missing")):
+        with pytest.raises(FileNotFoundError, match=re.escape(path)):
+            list_parts(path)
 
 
 def test_ensure_parallelism_gate(spark):

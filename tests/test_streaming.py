@@ -82,7 +82,7 @@ def test_stream_manifest_validates_clean(spark, tmp_path):
     q = stream_pipeline(spark, conf)
     q.awaitTermination(120)
     assert len(mf.read_all(conf.manifest_dir)) == 4  # 2 sinks x 2 parts
-    assert validate_manifest(spark, conf) == []  # nothing stale
+    assert validate_manifest(conf) == []  # nothing stale
 
 
 def test_stream_sinks_carry_row_hash_like_batch(spark, tmp_path):
@@ -180,7 +180,7 @@ def test_inplace_rotation_stream_limit_batch_detects(spark, tmp_path):
 
     # the batch path detects the changed footer identity and
     # reprocesses exactly the rotated partition
-    stale = validate_manifest(spark, conf)
+    stale = validate_manifest(conf)
     assert sorted(stale) == ["errors/part-00001", "firehose/part-00001"]
     res = run_pipeline(spark, conf)
     assert res.processed["firehose"] == ["part-00001"]
@@ -228,7 +228,7 @@ def test_rescan_rewritten_reships_only_changed_part(spark, tmp_path, monkeypatch
     assert fire.count() == 350  # 100 + 150 rewritten + 100 untouched
     assert fire.filter(F.col("part") == "part-00001").count() == 150
     # manifest recommitted with the new identity: batch validate is clean
-    assert validate_manifest(spark, conf) == []
+    assert validate_manifest(conf) == []
 
     # warm ledger + unchanged stats: no footer reads at all, no re-ship
     footer_reads.clear()
@@ -301,7 +301,7 @@ def test_rescan_clears_a_sink_the_rewrite_no_longer_routes_to(spark, tmp_path):
     assert err.filter(F.col("part") == "part-00001").count() == 0
     fire = spark.read.parquet(conf.sinks[1].path)
     assert fire.filter(F.col("part") == "part-00001").count() == quiet.num_rows
-    assert validate_manifest(spark, conf) == []
+    assert validate_manifest(conf) == []
 
 
 def test_rescan_of_a_truncated_part_clears_every_sink(spark, tmp_path):
@@ -321,7 +321,7 @@ def test_rescan_of_a_truncated_part_clears_every_sink(spark, tmp_path):
     got = [e for e in mf.read_all(conf.manifest_dir) if e.part == "part-00001"]
     assert sorted(e.sink for e in got) == ["errors", "firehose"]
     assert all(e.in_row_count == 0 and e.row_count == 0 for e in got)
-    assert validate_manifest(spark, conf) == []
+    assert validate_manifest(conf) == []
 
 
 def test_stream_refuses_a_held_workdir(spark, tmp_path):
