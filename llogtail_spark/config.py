@@ -10,11 +10,9 @@ keeps the config-file-drives-everything shape:
   "lookup_path": ".../lookup_sources.parquet",
   "workdir":     ".../work",             # manifest lives here (was offset/)
   "grok":        "^%{LOGLEVEL:level} %{WORD:component} %{GREEDYDATA:msg}$",
-  "sinks": [ {"name": "...", "predicate": "...", "path": "...",
-              "format": "parquet"}, ... ],
+  "sinks": [ {"name": "...", "predicate": "...", "path": "..."}, ... ],
   "enrich_defaults": {"facility": "unknown", "team": "unassigned",
-                      "min_level": 0},
-  "ship_mode":   "rename"                # or "iceberg" (table sinks)
+                      "min_level": 0}
 }
 
 `input_path` is a flat local dir of *.parquet parts (or one file),
@@ -23,7 +21,10 @@ pending (sink, part), reconciles the staged readback against the
 write's own observation, ships, then commits the manifest under
 `workdir`, holding `workdir`'s lease throughout (`manifest.py`). A
 run does not re-check committed parts against their inputs; that is
-`pipeline.validate_manifest`, run first by `cli --validate`.
+`pipeline.validate_manifest`, run first by `cli --validate`. Every
+sink holds parquet `part=<id>` dirs in one layout
+(`pipeline.STAGE_OPTS`). The grok must capture `level`, `component`
+and `msg` and compile under RE2, or the conf refuses to build.
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ import json
 import os
 from dataclasses import dataclass, field
 
-from llogtail_spark.operators.parse import DEFAULT_GROK
+from llogtail_spark.operators.parse import DEFAULT_GROK, check_grok
 from llogtail_spark.operators.route import SinkRule, check_unique_names, load_rules
 
 
@@ -47,17 +48,10 @@ class PipelineConf:
         default_factory=lambda: {"facility": "unknown", "team": "unassigned", "min_level": 0}
     )
     committed_at: str = "1970-01-01T00:00:00Z"  # injected, deterministic tests
-    # ship_mode:
-    #   "rename"  — stage + per-part directory rename (default; local /
-    #               HDFS-style filesystems)
-    #   "iceberg" — stage + ONE atomic Iceberg overwritePartitions
-    #               commit per sink (sink paths are table identifiers;
-    #               requires the iceberg-spark-runtime jar). The
-    #               cluster-scale answer to 10^6 serial driver renames.
-    ship_mode: str = "rename"
 
     def __post_init__(self) -> None:
         check_unique_names(self.sinks)
+        check_grok(self.grok)
 
     @property
     def manifest_dir(self) -> str:

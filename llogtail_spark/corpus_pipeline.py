@@ -56,12 +56,12 @@ shapes — hash-window exact dedup, banded LSH with capped buckets,
 broadcast benchmark grams, scan-stage quality expressions, dim-sized
 quota arithmetic, one nshards-way packing shuffle. Materialization
 boundaries are the standard trillion-token-pipeline checkpoint design:
-on a cluster each stage dir is an Iceberg table and the dir rename
-becomes a snapshot commit (see pipeline.py's iceberg ship path); the
-stage manifest then reads identity from the table snapshot id instead
-of parquet footers. Stage outputs carry only the SURVIVING corpus, so
-each subsequent stage scans strictly less data — the funnel is also
-the cost curve.
+each stage dir is one reconciled parquet write. A table format's
+snapshot commit could replace the dir, with the stage manifest reading
+identity from the snapshot id instead of parquet footers; nothing here
+builds that. Stage outputs carry only the SURVIVING corpus, so each
+subsequent stage scans strictly less data — the funnel is also the
+cost curve.
 
 Two-cluster-size scaling conf (measured, round 5): the stage chain is
 shuffle-fed end-to-end, so AQE's parallelism-first coalescing (which
@@ -503,9 +503,7 @@ def _run(spark: SparkSession, conf: CorpusConf,
     # ---- ship: per-shard COPY out of the pack stage dir + manifest
     # commit (sink="packed"). Copy, not rename: the stage dir stays
     # intact as the resume source of truth, and the pack table is
-    # metadata-sized next to the corpus (56 B/doc vs KBs of text). On
-    # a cluster this whole step is ONE Iceberg overwritePartitions
-    # commit (pipeline._ship_sink_iceberg).
+    # metadata-sized next to the corpus (56 B/doc vs KBs of text).
     pack_dir = os.path.join(conf.stages_dir, "pack")
     out_path = local_dir(conf.out_path)
     # a ship entry is valid only against the CURRENT pack output (the

@@ -32,35 +32,17 @@ BASE_PATTERNS: dict[str, str] = {
 _GROK_REF = re.compile(r"%\{(\w+)(?::(\w+))?\}")
 
 
-def compile_grok(pattern: str, extra: dict[str, str] | None = None) -> re.Pattern:
+def compile_grok(pattern: str) -> re.Pattern:
     """Expand %{NAME:field} refs into named groups and compile.
 
-    Unnamed refs (%{NAME}) become non-capturing groups. Nested custom
-    patterns may reference base patterns.
+    Unnamed refs (%{NAME}) become non-capturing groups. Base patterns
+    hold no refs, so one substitution pass expands everything.
     """
-    table = dict(BASE_PATTERNS)
-    if extra:
-        for k, v in extra.items():
-            table[k] = _expand(v, table)
-
-    return re.compile(_expand(pattern, table))
-
-
-def _expand(pattern: str, table: dict[str, str]) -> str:
     def sub(m: re.Match) -> str:
         name, field = m.group(1), m.group(2)
-        if name not in table:
+        if name not in BASE_PATTERNS:
             raise KeyError(f"unknown grok pattern %{{{name}}}")
-        body = table[name]
-        if field:
-            return f"(?P<{field}>{body})"
-        return f"(?:{body})"
+        body = BASE_PATTERNS[name]
+        return f"(?P<{field}>{body})" if field else f"(?:{body})"
 
-    prev = None
-    out = pattern
-    # resolve nested refs to a fixed point (grok patterns may nest)
-    while prev != out:
-        prev = out
-        out = _GROK_REF.sub(sub, out)
-    return out
-
+    return re.compile(_GROK_REF.sub(sub, pattern))

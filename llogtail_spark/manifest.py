@@ -307,27 +307,28 @@ def reconcile(what: str, observed, rows: Iterable[Row]) -> None:
 
 def write_reconciled(
     what: str, df: DataFrame, path: str, tok, ck, keys: tuple[str, ...] = (),
-    fmt: str = "parquet", options: dict | None = None,
+    options: dict | None = None,
     hook: Callable[[], None] | None = None,
 ) -> tuple[Row, dict[tuple, Row]]:
-    """Write `df` to `path` partitioned by `keys` and reconcile what
-    landed: returns (the write's observed lineage, the per-`keys`
-    readback). `path` is removed first: under dynamic partition
-    overwrite a smaller output would otherwise keep stale partition
-    dirs, and the readback would count them. `hook()` runs between the
-    write and the readback (the failpoint tests corrupt files there).
-    The readback uses `df.schema`, so an output with no data files
-    reads as zero rows instead of failing schema inference."""
+    """Write `df` as parquet to `path` partitioned by `keys`, with the
+    writer `options`, and reconcile what landed: returns (the write's
+    observed lineage, the per-`keys` readback). `path` is removed
+    first: under dynamic partition overwrite a smaller output would
+    otherwise keep stale partition dirs, and the readback would count
+    them. `hook()` runs between the write and the readback (the
+    failpoint tests corrupt files there). The readback uses
+    `df.schema`, so an output with no data files reads as zero rows
+    instead of failing schema inference."""
     shutil.rmtree(path, ignore_errors=True)
     # observe(): lineage accumulated BY the write job itself — no extra
     # scan; the readback below must reproduce it from the files
     obs = Observation(what)
-    df.observe(obs, *lineage(tok, ck)).write.format(fmt).mode("overwrite") \
+    df.observe(obs, *lineage(tok, ck)).write.format("parquet").mode("overwrite") \
         .partitionBy(*keys).options(**(options or {})).save(path)
     observed = obs.get
     if hook:
         hook()
-    stats = readback(df.sparkSession.read.format(fmt).schema(df.schema).load(path),
+    stats = readback(df.sparkSession.read.schema(df.schema).parquet(path),
                      tok, ck, keys)
     reconcile(what, observed, stats.values())
     return observed, stats
@@ -353,17 +354,17 @@ def lineage_entry(sink: str, part: str, stats: Row | None,
 def ship_and_commit(
     manifest_dir: str,
     entries: list[ManifestEntry],
-    move: Callable[[str], None] | None,
+    move: Callable[[str], None],
     hook: Callable[[str, str], None] | None = None,
 ) -> list[str]:
     """Push-then-checkpoint for one batch of partitions: `move` every
-    entry's part to its destination from a thread pool (None: the
-    caller already shipped them), THEN commit the entries in order.
-    A crash mid-ship commits nothing, so the re-run re-ships the same
-    dirs idempotently. `hook(phase, part)` runs around each commit —
-    the failpoint tests kill there. Returns the committed parts."""
+    entry's part to its destination from a thread pool, THEN commit
+    the entries in order. A crash mid-ship commits nothing, so the
+    re-run re-ships the same dirs idempotently. `hook(phase, part)`
+    runs around each commit — the failpoint tests kill there. Returns
+    the committed parts."""
     parts = [e.part for e in entries]
-    if move is not None and parts:
+    if parts:
         with ThreadPoolExecutor(SHIP_WORKERS) as ex:
             list(ex.map(move, parts))
     for e in entries:

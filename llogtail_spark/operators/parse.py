@@ -19,6 +19,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -32,6 +34,8 @@ from llogtail_spark.generate import LEVEL_NUMS, LEVELS, build_vocab
 
 # "<LEVEL> <component> <msg>" — the shape generate.py emits
 DEFAULT_GROK = r"^%{LOGLEVEL:level} %{WORD:component} %{GREEDYDATA:msg}$"
+# the grok captures the parse kernel reads
+GROK_GROUPS = ("level", "component", "msg")
 
 PARSED_SCHEMA = T.StructType(
     [
@@ -144,6 +148,24 @@ def _parse_kernel(tokens: pa.Array, rx: str, code_rx: str,
         ],
         names=["level", "level_num", "component", "code", "msg_ntok", "tok_hash"],
     )
+
+
+def check_grok(pattern: str) -> None:
+    """Refuse, on the driver, a grok the parse kernel cannot run: it
+    must expand and compile, capture every `GROK_GROUPS` name, and
+    compile under RE2 (`pc.extract_regex`, which has no lookaround,
+    backreferences or unnamed groups). Without this the pattern fails
+    inside the staged write, as a worker traceback."""
+    try:
+        rx = compile_grok(pattern)
+        pc.extract_regex(pa.array([], pa.string()), rx.pattern)
+    except (KeyError, re.error, pa.ArrowInvalid) as e:
+        raise ValueError(f"grok {pattern!r} does not compile for the parse "
+                         f"kernel: {e}") from None
+    missing = [g for g in GROK_GROUPS if g not in rx.groupindex]
+    if missing:
+        raise ValueError(f"grok {pattern!r} lacks the named groups {missing}; "
+                         f"the parse kernel reads {list(GROK_GROUPS)}")
 
 
 def make_parse_udf(grok_pattern: str = DEFAULT_GROK):

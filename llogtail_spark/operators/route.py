@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import json
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -35,8 +35,6 @@ class SinkRule:
     name: str
     predicate: str
     path: str
-    format: str = "parquet"
-    options: dict[str, str] = field(default_factory=dict)
 
     def __post_init__(self) -> None:
         if not SAFE_NAME.match(self.name):

@@ -3,7 +3,7 @@
 
 This is the LogCollector.handleEvent/listenEvent analog
 (log_collector.go:134-221) with the event loop replaced by one
-declarative DAG per run: the Iceberg/parquet snapshot IS the set of
+declarative DAG per run: the listed parquet parts ARE the set of
 "modify events"; partitions above the committed manifest are the
 un-consumed bytes; there is nothing to poll.
 
@@ -17,7 +17,7 @@ A run has two parts:
 - the core (`stage_and_ship`), the package's one writer of log-sink
   lineage. The streaming tail (`streaming/tail.py`) calls it too, per
   micro-batch and per rescan, so stream and batch sinks get the same
-  format, reconcile, empty-partition clearing and ship mode.
+  files, reconcile, empty-partition clearing and ship.
 
 The core follows `manifest.py`'s commit protocol, shared with the
 corpus pipeline, and its caller holds the workdir lease:
@@ -39,8 +39,11 @@ corpus pipeline, and its caller holds the workdir lease:
   partition cols, megabytes not data) gives the per-(sink, part)
   lineage, which must fold to the observation (nothing staged reads
   as zero rows, so lost staging output fails the reconcile);
+- claim: each sink path's `_owner` file names the one workdir that
+  ships to it; a path another workdir owns is refused before any
+  ship;
 - ship: per sink, a thread pool renames staging/sink=X/part=Y ->
-  sink_path/part=Y (metadata-only), or ONE Iceberg commit;
+  sink_path/part=Y (metadata-only);
 - commit: then the sink's manifest entries, in order
   (push-then-checkpoint, log_collector.go:208-215).
 
@@ -71,14 +74,17 @@ from llogtail_spark.operators.parse import parse_stage
 from llogtail_spark.operators.route import SAFE_NAME, explode_routed
 from llogtail_spark.sources import reader
 
-# Parquet writer options for the staged write, under each rule's own
-# options. Ship renames the staged files, so the sinks get this format
-# too; readers need parquet v2 page and DELTA support.
+# Parquet writer options for the staged write. Ship renames the staged
+# files, so every sink holds this layout; readers need parquet v2 page
+# and DELTA support.
 STAGE_OPTS = {"parquet.writer.version": "v2", "parquet.enable.dictionary": "false"}
 
 # failpoint(stage, sink, part) — tests inject crashes between the sink
 # write and the manifest commit to prove effectively-once resume.
 Failpoint = Callable[[str, str, str], None]
+
+# the file in each sink path that names the workdir shipping to it
+OWNER = "_owner"
 
 
 @dataclass
@@ -127,17 +133,16 @@ def local_dir(path: str) -> str:
 
     The staging/ship/manifest machinery walks and renames these dirs
     with local filesystem calls; a remote URI would silently find no
-    staged files and commit zero-count manifests over real data (the
-    cluster-scale path is Iceberg data-file commits). Callers use the
-    resolved path throughout: a 'file:' URI passes, but paths joined
-    onto the raw string would be written by Spark under the resolved
-    /path while os-level calls on the literal 'file:/...' saw a
-    different (cwd-relative) tree (ADVICE r02)."""
+    staged files and commit zero-count manifests over real data.
+    Callers use the resolved path throughout: a 'file:' URI passes,
+    but paths joined onto the raw string would be written by Spark
+    under the resolved /path while os-level calls on the literal
+    'file:/...' saw a different (cwd-relative) tree (ADVICE r02)."""
     local = reader.local_path(path)
     if local is None:
         raise NotImplementedError(
             f"workdir and output dirs must be local paths (got {path!r}); "
-            "on a cluster, stage to an Iceberg table commit instead"
+            "the staged ship renames local directories"
         )
     return local
 
@@ -166,10 +171,7 @@ def check_layout(conf: PipelineConf, workdir: str) -> None:
     Each of these corrupts silently: two sinks on one path keep only
     the last ship, a sink under staging is deleted with it, a sink in
     the input is read back as input. Sinks elsewhere under the workdir
-    (e.g. <workdir>/out) are fine. Iceberg sink paths are table
-    identifiers, so only the unique names (PipelineConf) apply."""
-    if conf.ship_mode == "iceberg":
-        return
+    (e.g. <workdir>/out) are fine."""
     taken = {"the input path": conf.input_path,
              "the staging dir": os.path.join(workdir, "staging"),
              "the manifest dir": conf.manifest_dir}
@@ -209,8 +211,7 @@ def _run(spark: SparkSession, conf: PipelineConf, workdir: str,
     files = {p: parts[p] for p in union_parts}
     # --- input-partition identity from parquet FOOTER metadata only
     # (driver-side parallel footer reads, no scan, no Spark job) —
-    # the validateCpt analog (utils.go:128-133). At cluster scale
-    # these stats come from the Iceberg manifest.
+    # the validateCpt analog (utils.go:128-133).
     identity = reader.files_identity(files)
 
     committed = stage_and_ship(spark, conf, workdir, files, identity, pending,
@@ -230,25 +231,17 @@ def stage_and_ship(
     """The one writer of log-sink lineage: stage, reconcile, ship and
     commit `pending` ({sink: [part]}) from `files` ({part: file}),
     recording each part's input `identity` ({part: (rows, checksum)}).
-    The caller holds the workdir lease. A pending part that routes no
-    row to a sink clears that sink's partition. Returns the committed
-    entries per sink, in rule order."""
+    The caller holds the workdir lease; the sink paths are claimed for
+    the workdir (`claim_sinks`) after the reconcile and before the
+    first ship. A pending part that routes no row to a sink clears that
+    sink's partition. Returns the committed entries per sink, in rule
+    order."""
     bad = [p for p in files if not SAFE_NAME.match(p)]
     if bad:
         raise ValueError(
             f"partition ids {bad[:3]} contain characters Spark would "
             "escape in partition paths; rename the input files"
         )
-
-    fmts = {(r.format, tuple(sorted(r.options.items()))) for r in conf.sinks}
-    if len(fmts) != 1:
-        raise NotImplementedError(
-            "mixed sink formats/options: run one pipeline per format group "
-            "(the reference likewise has a single sink type, sink.go:3-13)"
-        )
-    fmt, fmt_opts = conf.sinks[0].format, conf.sinks[0].options
-    if fmt == "parquet":
-        fmt_opts = {**STAGE_OPTS, **fmt_opts}
 
     df = _prepare(spark, conf, [files[p] for p in sorted(files)])
 
@@ -277,31 +270,55 @@ def stage_and_ship(
     staging = os.path.join(workdir, "staging")
     _, stats = mf.write_reconciled(
         "staged sinks", routed.filter(pair_pred), staging, "n_tok", "row_hash",
-        keys=("sink", "part"), fmt=fmt, options=fmt_opts,
+        keys=("sink", "part"), options=STAGE_OPTS,
         hook=failpoint and (lambda: failpoint("after_stage", "", "")))
 
+    claim_sinks(conf, workdir)
     # --- ship + commit, per sink in rule order (push-then-checkpoint).
     # Idempotent: a re-run replaces the same partitions exactly
     # (effectively-once).
     committed: dict[str, list[mf.ManifestEntry]] = {}
     for rule in conf.sinks:
         todo = pending[rule.name]
-        move = functools.partial(_ship_part, staging, rule)
-        if conf.ship_mode == "iceberg":
-            move = None  # one atomic table commit for the whole sink
-            if todo:
-                _ship_sink_iceberg(spark, staging, rule, todo)
         committed[rule.name] = [
             mf.lineage_entry(rule.name, p, stats.get((rule.name, p)),
                              identity.get(p), conf.committed_at)
             for p in todo
         ]
         mf.ship_and_commit(
-            conf.manifest_dir, committed[rule.name], move,
+            conf.manifest_dir, committed[rule.name],
+            functools.partial(_ship_part, staging, rule),
             failpoint and (lambda phase, p: failpoint(phase, rule.name, p)),
         )
     shutil.rmtree(staging, ignore_errors=True)
     return committed
+
+
+def claim_sinks(conf: PipelineConf, workdir: str) -> None:
+    """Claim every sink path for `workdir` with a `<path>/_owner` file
+    that holds the resolved workdir (created O_EXCL; readers skip `_`
+    files). The lease covers the workdir, not the sink: a second
+    workdir shipping to the same path would replace the first one's
+    partitions while the first one's manifest still vouches for them.
+    A path another workdir owns is refused, naming both workdirs and
+    the file to delete."""
+    me = os.path.realpath(workdir)
+    for rule in conf.sinks:
+        owner = os.path.join(rule.path, OWNER)
+        os.makedirs(rule.path, exist_ok=True)
+        try:
+            fd = os.open(owner, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
+        except FileExistsError:
+            with open(owner) as f:
+                held = f.read()
+            if held != me:
+                raise ValueError(
+                    f"sink {rule.name!r} path {rule.path!r} is owned by "
+                    f"workdir {held!r}, not {me!r}; give this sink a path "
+                    f"of its own, or delete {owner} to hand it over") from None
+        else:
+            with os.fdopen(fd, "w") as f:
+                f.write(me)
 
 
 def _ship_part(staging: str, rule, p: str) -> None:
@@ -320,58 +337,6 @@ def _ship_part(staging: str, rule, p: str) -> None:
             shutil.move(src_dir, dst_dir)
     else:
         shutil.rmtree(dst_dir, ignore_errors=True)
-
-
-def _ship_sink_iceberg(spark: SparkSession, staging: str, rule, todo: list[str]) -> None:
-    """Ship one sink's staged partitions as ONE atomic Iceberg commit:
-    `overwritePartitions` replaces exactly the partitions present in
-    the staged frame in a single snapshot — the cluster-scale
-    replacement for 10^6 serial driver renames (and the coded form of
-    what the rename path's docstrings previously only described).
-    rule.path is an Iceberg table identifier (catalog.db.table).
-
-    Requires iceberg-spark-runtime on the classpath + a catalog conf;
-    without them this raises loudly with setup guidance — shipping
-    must never silently fall back, because the manifest would then
-    record commits that no table received. Reference anchor: one
-    atomic checkpoint write per push (utils.go:233-250)."""
-    sink_dir = os.path.join(staging, f"sink={rule.name}")
-    staged = [p for p in todo
-              if os.path.isdir(os.path.join(sink_dir, f"part={p}"))]
-    staged_set = set(staged)  # list membership would be O(|todo|^2) at 10^6 parts
-    empty = [p for p in todo if p not in staged_set]
-    try:
-        if staged:
-            df = spark.read.option("basePath", sink_dir).parquet(
-                *[os.path.join(sink_dir, f"part={p}") for p in staged]
-            )
-            try:
-                df.writeTo(rule.path).overwritePartitions()
-            except Exception as e:
-                if "TABLE_OR_VIEW_NOT_FOUND" not in str(e):
-                    raise
-                df.writeTo(rule.path).partitionedBy(F.col("part")).create()
-        if empty:
-            # partitions with zero routed rows this run: clear stale
-            # data (the rename path's rmtree analog), one metadata op
-            parts_in = ", ".join(f"'{p}'" for p in empty)
-            try:
-                spark.sql(f"DELETE FROM {rule.path} WHERE part IN ({parts_in})")
-            except Exception as e:
-                # first-ever run with an all-empty sink: no table was
-                # created above, so there is no stale data to clear —
-                # anything else (jar/catalog/perm) must still surface
-                if "TABLE_OR_VIEW_NOT_FOUND" not in str(e):
-                    raise
-    except Exception as e:
-        raise RuntimeError(
-            f"iceberg ship failed for sink {rule.name!r} (table "
-            f"{rule.path!r}): {type(e).__name__}. The iceberg-spark-"
-            "runtime jar and a catalog config are required, e.g. "
-            "--packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13 "
-            "--conf spark.sql.catalog.lake=org.apache.iceberg.spark.SparkCatalog; "
-            "use ship_mode='rename' for plain filesystems"
-        ) from e
 
 
 def _metrics_from_manifest(
@@ -417,8 +382,4 @@ def _metrics_from_manifest(
 
 def read_sink(spark: SparkSession, conf: PipelineConf, sink: str) -> DataFrame:
     rule = next(r for r in conf.sinks if r.name == sink)
-    if conf.ship_mode == "iceberg":
-        # rule.format stays the STAGING format (parquet); the sink
-        # itself is an Iceberg table named by rule.path
-        return spark.read.format("iceberg").load(rule.path)
-    return spark.read.format(rule.format).load(rule.path)
+    return spark.read.parquet(rule.path)

@@ -1,6 +1,8 @@
 """Layouts and inputs that used to corrupt silently or crash obscurely
 now fail before anything ships, with a message naming the conflict."""
 
+import glob
+import json
 import os
 import re
 
@@ -9,7 +11,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from llogtail_spark import manifest as mf
-from llogtail_spark.config import PipelineConf
+from llogtail_spark.config import PipelineConf, load_config
 from llogtail_spark.generate import generate_sequences
 from llogtail_spark.operators.route import SinkRule
 from llogtail_spark.pipeline import run_pipeline
@@ -143,3 +145,64 @@ def test_corpus_out_path_overlapping_its_input_or_workdir_is_refused(spark, tmp_
     assert (inp if where != "workdir" else conf.stages_dir) in str(err.value)
     assert _listing(inp) == ["part-0.parquet"]
     assert not os.path.exists(wd)
+
+
+@pytest.mark.parametrize("grok,why", [
+    (r"^%{LOGLEVEL:level} %{WORD} %{GREEDYDATA:msg}$", r"named groups \['component'\]"),
+    (r"^%{LOGLEVEL:level} (?<= )%{WORD:component} %{GREEDYDATA:msg}$",
+     "does not compile for the parse kernel.*perl operator"),
+], ids=["no_component_group", "lookbehind"])
+def test_a_grok_the_parse_kernel_cannot_run_is_refused_by_the_conf(
+        spark, data_dir, tmp_path, grok, why):
+    """Without the driver-side check both patterns fail inside the
+    staged write, as a worker traceback, after staging was created."""
+    wd, out = tmp_path / "w", str(tmp_path / "out" / "firehose")
+    with pytest.raises(ValueError, match=why) as err:
+        run_pipeline(spark, PipelineConf(
+            input_path=os.path.join(data_dir, "sequences"), lookup_path=None,
+            workdir=str(wd), sinks=[SinkRule("firehose", "true", out)], grok=grok))
+    assert grok in str(err.value)
+    assert _listing(tmp_path) == []
+
+
+@pytest.mark.parametrize("start", ["batch", "stream"])
+def test_a_second_workdir_shipping_to_a_claimed_sink_path_is_refused(
+        spark, data_dir, tmp_path, start):
+    """The lease covers one workdir: without the `_owner` claim, B's
+    ship replaces A's partitions and A's manifest vouches for B's rows."""
+    from pyspark.errors import StreamingQueryException
+
+    out = str(tmp_path / "out" / "errors")
+    conf_a = _conf(data_dir, tmp_path / "a", [SinkRule("errors", "level_num >= 40", out)])
+    run_pipeline(spark, conf_a)
+    owner = os.path.join(out, "_owner")
+    wd_a = os.path.realpath(conf_a.workdir)
+    with open(owner) as f:
+        assert f.read() == wd_a
+    before = sorted(glob.glob(os.path.join(out, "part=*", "*")))
+    assert before
+
+    # B routes a different row set to the same path
+    conf_b = _conf(data_dir, tmp_path / "b", [SinkRule("errors", "true", out)])
+    refused = ValueError if start == "batch" else StreamingQueryException
+    with pytest.raises(refused, match="is owned by workdir") as err:
+        _run(start, spark, conf_b)
+    for named in (wd_a, os.path.realpath(conf_b.workdir), owner):
+        assert named in str(err.value), str(err.value)[-2000:]
+    assert sorted(glob.glob(os.path.join(out, "part=*", "*"))) == before
+    assert mf.read_all(conf_b.manifest_dir) == []
+
+
+@pytest.mark.parametrize("where,key,value", [("conf", "ship_mode", "rename"),
+                                             ("sink", "format", "parquet"),
+                                             ("sink", "options", {})])
+def test_a_config_with_a_removed_sink_key_names_the_key(data_dir, tmp_path, where, key, value):
+    sink = {"name": "errors", "predicate": "level_num >= 40",
+            "path": str(tmp_path / "out" / "errors")}
+    raw = {"input_path": os.path.join(data_dir, "sequences"), "lookup_path": None,
+           "workdir": str(tmp_path / "w"), "sinks": [sink]}
+    (raw if where == "conf" else sink)[key] = value
+    path = tmp_path / "pipeline.json"
+    path.write_text(json.dumps(raw))
+    with pytest.raises(TypeError, match=f"'{key}'"):
+        load_config(str(path))

@@ -21,13 +21,6 @@ def test_unnamed_refs_do_not_capture():
     assert m.groupdict() == {"c": "db"}
 
 
-def test_nested_custom_pattern():
-    rx = compile_grok(
-        r"%{HOSTPORT:hp}", extra={"HOSTPORT": r"%{WORD}:%{INT}"}
-    )
-    assert rx.match("web1:8080").group("hp") == "web1:8080"
-
-
 def test_unknown_pattern_raises():
     with pytest.raises(KeyError):
         compile_grok(r"%{NOPE:x}")

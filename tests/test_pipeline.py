@@ -328,68 +328,6 @@ def test_parallel_ship_crash_before_commit_resumes(spark, data_dir, tmp_path):
     assert got.select("doc_id").distinct().count() == got.count()
 
 
-def _has_iceberg(spark) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
-
-
-def test_iceberg_ship_fails_loudly_without_runtime(spark, data_dir, tmp_path):
-    """ship_mode='iceberg' must never silently fall back: without the
-    runtime jar the ship raises with setup guidance BEFORE any
-    manifest row is committed (a committed manifest over a commit no
-    table received would be data loss on resume)."""
-    import pytest
-
-    if _has_iceberg(spark):
-        pytest.skip("iceberg runtime present; the loud-failure branch "
-                    "is unreachable — covered by the round-trip test")
-    wd = tmp_path / "w"
-    base = make_conf(data_dir, wd)
-    conf = PipelineConf(
-        input_path=base.input_path, lookup_path=base.lookup_path,
-        workdir=str(wd),
-        sinks=[SinkRule("all", "true", "lake.db.routed_all")],
-        ship_mode="iceberg",
-    )
-    with pytest.raises(RuntimeError, match="iceberg ship failed"):
-        run_pipeline(spark, conf)
-    assert mf.committed_parts(conf.manifest_dir, "all") == set()
-
-
-def test_iceberg_ship_roundtrip(spark, data_dir, tmp_path):
-    """Jar-gated integration: with iceberg-spark-runtime + a catalog
-    configured, ship_mode='iceberg' commits each sink as ONE atomic
-    overwritePartitions snapshot and read_sink reads it back equal to
-    the rename path's output."""
-    import pytest
-
-    if not _has_iceberg(spark):
-        pytest.skip("iceberg-spark-runtime jar not on classpath "
-                    "(sandbox image); runs on a real deployment via "
-                    "--packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13")
-    wd = tmp_path / "w"
-    base = make_conf(data_dir, wd)
-    conf = PipelineConf(
-        input_path=base.input_path, lookup_path=base.lookup_path,
-        workdir=str(wd),
-        sinks=[SinkRule("all", "true", "lake.db.routed_all")],
-        ship_mode="iceberg",
-    )
-    res = run_pipeline(spark, conf)
-    assert len(res.processed["all"]) == 6
-    got = read_sink(spark, conf, "all")
-    want = spark.read.parquet(os.path.join(data_dir, "sequences"))
-    assert got.count() == want.count()
-    # idempotent re-run: same snapshot content, all skipped
-    res2 = run_pipeline(spark, conf)
-    assert res2.processed["all"] == []
-
-
 def test_observe_readback_reconciliation_catches_lost_staged_file(
     spark, data_dir, tmp_path
 ):
@@ -463,18 +401,9 @@ def _chunk_encodings(path, column):
     return out
 
 
-def _with_options(conf, options):
-    import dataclasses
-
-    return dataclasses.replace(conf, sinks=[
-        dataclasses.replace(r, options=options) for r in conf.sinks
-    ])
-
-
 def test_staged_parquet_is_v2_delta_without_dictionary(spark, data_dir, tmp_path):
     """Sink files are staged as parquet v2 pages with no dictionary:
-    token ids DELTA_BINARY_PACKED, strings DELTA_BYTE_ARRAY. A rule's
-    own writer options still win over the staged defaults."""
+    token ids DELTA_BINARY_PACKED, strings DELTA_BYTE_ARRAY."""
     dicts = {"PLAIN_DICTIONARY", "RLE_DICTIONARY"}
     conf = make_conf(data_dir, tmp_path / "wenc")
     run_pipeline(spark, conf)
@@ -484,17 +413,6 @@ def test_staged_parquet_is_v2_delta_without_dictionary(spark, data_dir, tmp_path
             src = _chunk_encodings(f, "source")
             assert "DELTA_BINARY_PACKED" in tok and not tok & dicts, (f, tok)
             assert "DELTA_BYTE_ARRAY" in src and not src & dicts, (f, src)
-
-    # the token dictionary falls back to PLAIN on small files even with
-    # v1 defaults, so the override is pinned on `source`
-    conf = _with_options(
-        make_conf(data_dir, tmp_path / "wenc_v1"),
-        {"parquet.writer.version": "v1", "parquet.enable.dictionary": "true"},
-    )
-    run_pipeline(spark, conf)
-    for rule in conf.sinks:
-        for f in _sink_files(conf, rule.name):
-            assert "PLAIN_DICTIONARY" in _chunk_encodings(f, "source"), f
 
 
 def test_sinks_readable_by_duckdb_and_pyarrow(spark, data_dir, tmp_path):

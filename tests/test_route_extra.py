@@ -28,22 +28,6 @@ def test_assign_sinks_overlap(spark):
     assert sorted(got) == ["all", "hot"]
 
 
-def test_mixed_sink_formats_rejected(spark, data_dir, tmp_path):
-    conf = PipelineConf(
-        input_path=os.path.join(data_dir, "sequences"),
-        lookup_path=None,
-        workdir=str(tmp_path / "w"),
-        sinks=[
-            SinkRule("a", "true", str(tmp_path / "a"), format="parquet"),
-            SinkRule("b", "true", str(tmp_path / "b"), format="json"),
-        ],
-    )
-    import pytest
-
-    with pytest.raises(NotImplementedError):
-        run_pipeline(spark, conf)
-
-
 def test_zero_row_sink_commits_empty(spark, data_dir, tmp_path):
     """A sink whose predicate matches nothing still commits manifest
     rows (row_count=0) and reruns as a no-op."""
