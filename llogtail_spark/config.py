@@ -15,8 +15,12 @@ keeps the config-file-drives-everything shape:
                       "min_level": 0}
 }
 
+Every path is resolved once, when the conf is built (`resolve_path`):
+a 'file:' URI becomes its absolute path, and a remote URI raises
+`NotImplementedError` naming the field.
 `input_path` is a flat local dir of *.parquet parts (or one file),
-listed on the driver by `reader.list_parts`. A run stages every
+listed on the driver by `reader.list_parts`; `lookup_path` is one
+parquet file. A run stages every
 pending (sink, part), reconciles the staged readback against the
 write's own observation, ships, then commits the manifest under
 `workdir`, holding `workdir`'s lease throughout (`manifest.py`). A
@@ -31,10 +35,24 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from llogtail_spark.operators.parse import DEFAULT_GROK, check_grok
 from llogtail_spark.operators.route import SinkRule, check_unique_names, load_rules
+from llogtail_spark.sources.reader import local_path
+
+
+def resolve_path(what: str, path: str) -> str:
+    """`path` as the absolute local path (symlinks resolved) that every
+    caller joins onto, renames and compares. A remote URI is refused,
+    naming `what`: on it the local staging, ship and manifest calls
+    would silently see nothing."""
+    local = local_path(path)
+    if local is None:
+        raise NotImplementedError(
+            f"{what} must be a local path (got {path!r}); the pipelines list, "
+            "stage, rename and commit with local filesystem calls")
+    return os.path.realpath(local)
 
 
 @dataclass
@@ -48,22 +66,18 @@ class PipelineConf:
         default_factory=lambda: {"facility": "unknown", "team": "unassigned", "min_level": 0}
     )
     committed_at: str = "1970-01-01T00:00:00Z"  # injected, deterministic tests
+    manifest_dir: str = field(init=False)  # <workdir>/manifest
 
     def __post_init__(self) -> None:
         check_unique_names(self.sinks)
         check_grok(self.grok)
-
-    @property
-    def manifest_dir(self) -> str:
-        # resolve 'file:' URIs to the local path BEFORE joining: the
-        # manifest module does raw os-level I/O, and joining onto the
-        # raw URI string would silently read/write a literal
-        # 'file:/...' directory relative to the cwd (observed: a test
-        # run left a ./file:/tmp/... tree in the repo root)
-        from llogtail_spark.sources.reader import local_path
-
-        wd = local_path(self.workdir)
-        return os.path.join(wd if wd is not None else self.workdir, "manifest")
+        self.input_path = resolve_path("input_path", self.input_path)
+        if self.lookup_path:
+            self.lookup_path = resolve_path("lookup_path", self.lookup_path)
+        self.workdir = resolve_path("workdir", self.workdir)
+        self.sinks = [replace(r, path=resolve_path(f"sink {r.name!r} path", r.path))
+                      for r in self.sinks]
+        self.manifest_dir = os.path.join(self.workdir, "manifest")
 
 
 def load_config(path: str) -> PipelineConf:

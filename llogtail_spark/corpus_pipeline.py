@@ -7,9 +7,12 @@ independent query; this module COMPOSES them into the one pipeline a
 pretraining-data team actually runs, with the same consistency
 contract as the log pipeline (`pipeline.py`):
 
-- the whole run holds the workdir lease (`manifest.lease`); the
-  workdir and out_path go through the log pipeline's local-dir guard
-  (`pipeline.local_dir`), so a 'file:' URI behaves as its path;
+- the conf resolves every path once, when it is built
+  (`config.resolve_path`, as `PipelineConf` does): a 'file:' URI
+  behaves as its path, a remote URI is refused naming the field, and
+  `stages_dir`, `manifest_dir` and `stage_manifest_dir` are derived
+  from the resolved workdir; the whole run holds the workdir lease
+  (`manifest.lease`);
 - before the lease, an out_path that equals or nests with the input,
   the benchmark or a workdir dir is refused (`pipeline.check_disjoint`,
   the check the log sinks get); the input is listed once on the driver
@@ -91,7 +94,8 @@ from pyspark.sql.types import StructType
 
 from llogtail_spark import manifest as mf
 from llogtail_spark.manifest import StageManifest, commit_stage, read_stage
-from llogtail_spark.pipeline import check_disjoint, local_dir
+from llogtail_spark.config import resolve_path
+from llogtail_spark.pipeline import check_disjoint
 from llogtail_spark.sources import reader
 
 # default mixture targets (basis points, sum 10000) over the `lang`
@@ -162,21 +166,24 @@ class CorpusConf:
             sort_keys=True).encode()
         return zlib.crc32(blob)
 
-    @property
-    def stages_dir(self) -> str:
-        return os.path.join(local_dir(self.workdir), "corpus_stages")
+    # set by __post_init__; stage manifests get a dir of their own, as
+    # mf.read_all parses every *.json under the (ship) manifest_dir
+    benchmark_resolved: str | None = field(init=False)
+    stages_dir: str = field(init=False)
+    manifest_dir: str = field(init=False)
+    stage_manifest_dir: str = field(init=False)
 
-    @property
-    def manifest_dir(self) -> str:
-        """Ship (per-shard) manifest entries — mf.ManifestEntry files."""
-        return os.path.join(local_dir(self.workdir), "corpus_manifest")
-
-    @property
-    def stage_manifest_dir(self) -> str:
-        """Stage manifests live in their OWN dir: mf.read_all parses
-        every *.json under manifest_dir, and a stage manifest is not a
-        ManifestEntry."""
-        return os.path.join(local_dir(self.workdir), "stage_manifest")
+    def __post_init__(self) -> None:
+        for name in ("input_path", "workdir", "out_path"):
+            setattr(self, name, resolve_path(name, getattr(self, name)))
+        # benchmark_path stays as written: the decontaminate params
+        # fingerprint hashes it, and committed stage manifests hold
+        # that fingerprint
+        self.benchmark_resolved = self.benchmark_path and resolve_path(
+            "benchmark_path", self.benchmark_path)
+        self.stages_dir = os.path.join(self.workdir, "corpus_stages")
+        self.manifest_dir = os.path.join(self.workdir, "corpus_manifest")
+        self.stage_manifest_dir = os.path.join(self.workdir, "stage_manifest")
 
 
 # ---------------------------------------------------------------- stages
@@ -404,7 +411,7 @@ def _read_benchmark(spark: SparkSession, docs: DataFrame,
     eval set (decontaminate_docs convention) and is EXCLUDED from the
     corpus."""
     if conf.benchmark_path is not None:
-        bench, (_, crc) = _read_input(spark, conf.benchmark_path)
+        bench, (_, crc) = _read_input(spark, conf.benchmark_resolved)
         return docs, bench, crc
     mod = F.col(conf.id_col) % conf.benchmark_mod
     return (docs.filter(mod != 0), docs.filter(mod == 0),
@@ -417,10 +424,10 @@ def run_corpus_pipeline(
     failpoint: Failpoint | None = None,
 ) -> CorpusRunResult:
     check_disjoint("out_path", conf.out_path, {
-        "input_path": conf.input_path, "benchmark_path": conf.benchmark_path,
+        "input_path": conf.input_path, "benchmark_path": conf.benchmark_resolved,
         "stages_dir": conf.stages_dir, "manifest_dir": conf.manifest_dir,
         "stage_manifest_dir": conf.stage_manifest_dir})
-    with mf.lease(local_dir(conf.workdir)):
+    with mf.lease(conf.workdir):
         return _run(spark, conf, failpoint)
 
 
@@ -505,7 +512,6 @@ def _run(spark: SparkSession, conf: CorpusConf,
     # intact as the resume source of truth, and the pack table is
     # metadata-sized next to the corpus (56 B/doc vs KBs of text).
     pack_dir = os.path.join(conf.stages_dir, "pack")
-    out_path = local_dir(conf.out_path)
     # a ship entry is valid only against the CURRENT pack output (the
     # chain's last identity): its in_checksum recorded the pack output
     # it shipped from, so a recomputed pack stage (new params, new
@@ -527,8 +533,8 @@ def _run(spark: SparkSession, conf: CorpusConf,
     # recompute) is a stale product — read_packed would return its
     # phantom rows. Remove it and its manifest entry.
     live = set(shards)
-    if os.path.isdir(out_path):
-        for e in os.scandir(out_path):
+    if os.path.isdir(conf.out_path):
+        for e in os.scandir(conf.out_path):
             part = e.name.removeprefix("shard=")
             if e.name.startswith("shard=") and part not in live:
                 shutil.rmtree(e.path, ignore_errors=True)
@@ -541,12 +547,12 @@ def _run(spark: SparkSession, conf: CorpusConf,
 
     def _copy_shard(part: str) -> None:
         src = os.path.join(pack_dir, f"shard={part}")
-        dst = os.path.join(out_path, f"shard={part}")
+        dst = os.path.join(conf.out_path, f"shard={part}")
         shutil.rmtree(dst, ignore_errors=True)
         shutil.copytree(src, dst)
 
     if pending:
-        os.makedirs(out_path, exist_ok=True)
+        os.makedirs(conf.out_path, exist_ok=True)
     committed = mf.ship_and_commit(
         conf.manifest_dir,
         [mf.lineage_entry("packed", p, stats.get((p,)), identity,

@@ -6,9 +6,8 @@ The reference resolves metadata per path at registration time
 against a small lookup table — no shuffle of the big side, which is
 what makes this free at 100 TB (the lookup rides to executors once).
 
-Unknown sources: default mode is a LEFT join with optional fill
-defaults (graceful); strict mode raises, matching the reference's
-error-on-unknown behavior.
+Unknown sources do not fail the run: the join is a LEFT join, and the
+conf's `enrich_defaults` fill the lookup columns where it missed.
 """
 
 from __future__ import annotations
@@ -20,33 +19,13 @@ from pyspark.sql import functions as F
 def enrich_stage(
     df: DataFrame,
     lookup: DataFrame,
-    on: str = "source",
     defaults: dict[str, object] | None = None,
-    strict: bool = False,
 ) -> DataFrame:
-    """Left broadcast join df with lookup on `on`.
+    """Left broadcast join df with lookup on `source`.
 
     defaults: {column: value} applied where the lookup missed.
-    strict: if True, raise ValueError when any row missed the lookup
-      (costs one aggregate action — only use in validation runs).
     """
-    lookup_cols = [c for c in lookup.columns if c != on]
-    out = df.join(F.broadcast(lookup), on=on, how="left")
-    if strict:
-        probe = lookup_cols[0]
-        misses = out.filter(F.col(probe).isNull()).limit(1).count()
-        if misses:
-            missing = (
-                out.filter(F.col(probe).isNull())
-                .select(on)
-                .distinct()
-                .limit(5)
-                .collect()
-            )
-            raise ValueError(
-                f"strict enrich: sources missing from lookup: "
-                f"{[r[0] for r in missing]}"
-            )
+    out = df.join(F.broadcast(lookup), on="source", how="left")
     if defaults:
         out = out.fillna(defaults)
     return out

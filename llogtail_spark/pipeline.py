@@ -21,6 +21,10 @@ A run has two parts:
 
 The core follows `manifest.py`'s commit protocol, shared with the
 corpus pipeline, and its caller holds the workdir lease:
+- check, on the driver before any Spark job: a sink path whose
+  `_owner` names another workdir is refused, and the input and lookup
+  get their parquet footers' schemas (`reader.read_files`: no
+  inference job; a part unlike the first part is refused);
 - stage: ONE heavy pass — scan -> Arrow parse UDF -> broadcast enrich
   -> route-explode -> write partitionBy(sink, part) to staging; one
   stage, no shuffle, no persist (a persist+K-writes variant REGRESSED
@@ -40,8 +44,7 @@ corpus pipeline, and its caller holds the workdir lease:
   lineage, which must fold to the observation (nothing staged reads
   as zero rows, so lost staging output fails the reconcile);
 - claim: each sink path's `_owner` file names the one workdir that
-  ships to it; a path another workdir owns is refused before any
-  ship;
+  ships to it; a run that fails before this leaves no sink dir;
 - ship: per sink, a thread pool renames staging/sink=X/part=Y ->
   sink_path/part=Y (metadata-only);
 - commit: then the sink's manifest entries, in order
@@ -58,6 +61,7 @@ Consistency contract preserved (SURVEY.md §3.5):
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import os
 import shutil
@@ -103,7 +107,7 @@ def _prepare(spark: SparkSession, conf: PipelineConf, files: list[str]) -> DataF
     df = reader.with_partition_id(df)
     df = parse_stage(df, conf.grok)
     if conf.lookup_path:
-        lookup = spark.read.parquet(conf.lookup_path)
+        lookup = reader.read_files(spark, [conf.lookup_path])
         df = enrich_stage(df, lookup, defaults=conf.enrich_defaults)
     return df
 
@@ -114,7 +118,7 @@ def validate_manifest(conf: PipelineConf) -> list[str]:
     part is gone or changed (validateCpt analog, utils.go:128-133), so
     the next run reprocesses them. Holds the workdir lease. Returns
     the parts invalidated."""
-    with mf.lease(local_dir(conf.workdir)):
+    with mf.lease(conf.workdir):
         entries = mf.read_all(conf.manifest_dir)
         if not entries:
             return []
@@ -128,44 +132,18 @@ def validate_manifest(conf: PipelineConf) -> list[str]:
         return stale
 
 
-def local_dir(path: str) -> str:
-    """A workdir or output dir as a local path, or a loud failure.
-
-    The staging/ship/manifest machinery walks and renames these dirs
-    with local filesystem calls; a remote URI would silently find no
-    staged files and commit zero-count manifests over real data.
-    Callers use the resolved path throughout: a 'file:' URI passes,
-    but paths joined onto the raw string would be written by Spark
-    under the resolved /path while os-level calls on the literal
-    'file:/...' saw a different (cwd-relative) tree (ADVICE r02)."""
-    local = reader.local_path(path)
-    if local is None:
-        raise NotImplementedError(
-            f"workdir and output dirs must be local paths (got {path!r}); "
-            "the staged ship renames local directories"
-        )
-    return local
-
-
 def check_disjoint(what: str, path: str, taken: dict[str, str | None]) -> None:
     """Refuse an output `path` that equals or nests (either way) with
     any path of `taken` ({description: path or None}), naming both.
-    Paths resolve through `reader.local_path` + realpath; a remote
-    path is not compared."""
-    def resolved(p: str | None) -> str | None:
-        local = p and reader.local_path(p)
-        return local and os.path.realpath(local)
-
-    mine = resolved(path)
+    The paths are the conf's, resolved when it was built."""
     for other_what, other in taken.items():
-        other = resolved(other)
-        if mine and other and os.path.commonpath([mine, other]) in (mine, other):
+        if other and os.path.commonpath([path, other]) in (path, other):
             raise ValueError(
                 f"{what} {path!r} overlaps {other_what} ({other}); "
                 "give every output a path of its own")
 
 
-def check_layout(conf: PipelineConf, workdir: str) -> None:
+def check_layout(conf: PipelineConf) -> None:
     """Refuse sink paths that overlap each other, the input, or the
     workdir's staging and manifest dirs (equal or nested either way).
     Each of these corrupts silently: two sinks on one path keep only
@@ -173,7 +151,7 @@ def check_layout(conf: PipelineConf, workdir: str) -> None:
     the input is read back as input. Sinks elsewhere under the workdir
     (e.g. <workdir>/out) are fine."""
     taken = {"the input path": conf.input_path,
-             "the staging dir": os.path.join(workdir, "staging"),
+             "the staging dir": os.path.join(conf.workdir, "staging"),
              "the manifest dir": conf.manifest_dir}
     for rule in conf.sinks:
         check_disjoint(f"sink {rule.name!r} path", rule.path, taken)
@@ -185,13 +163,12 @@ def run_pipeline(
     conf: PipelineConf,
     failpoint: Failpoint | None = None,
 ) -> RunResult:
-    workdir = local_dir(conf.workdir)
-    check_layout(conf, workdir)
-    with mf.lease(workdir):
-        return _run(spark, conf, workdir, failpoint)
+    check_layout(conf)
+    with mf.lease(conf.workdir):
+        return _run(spark, conf, failpoint)
 
 
-def _run(spark: SparkSession, conf: PipelineConf, workdir: str,
+def _run(spark: SparkSession, conf: PipelineConf,
          failpoint: Failpoint | None) -> RunResult:
     # --- the plan: ONE driver-side listing and ONE manifest read,
     # shared by every sink's pending set and the metrics
@@ -214,8 +191,7 @@ def _run(spark: SparkSession, conf: PipelineConf, workdir: str,
     # the validateCpt analog (utils.go:128-133).
     identity = reader.files_identity(files)
 
-    committed = stage_and_ship(spark, conf, workdir, files, identity, pending,
-                               failpoint)
+    committed = stage_and_ship(spark, conf, files, identity, pending, failpoint)
     entries += [e for es in committed.values() for e in es]
     metrics = _metrics_from_manifest(spark, conf, entries, live_parts=set(parts))
     return RunResult(
@@ -224,18 +200,21 @@ def _run(spark: SparkSession, conf: PipelineConf, workdir: str,
 
 
 def stage_and_ship(
-    spark: SparkSession, conf: PipelineConf, workdir: str,
+    spark: SparkSession, conf: PipelineConf,
     files: dict[str, str], identity: dict[str, tuple[int, int]],
     pending: dict[str, list[str]], failpoint: Failpoint | None = None,
 ) -> dict[str, list[mf.ManifestEntry]]:
     """The one writer of log-sink lineage: stage, reconcile, ship and
     commit `pending` ({sink: [part]}) from `files` ({part: file}),
     recording each part's input `identity` ({part: (rows, checksum)}).
-    The caller holds the workdir lease; the sink paths are claimed for
-    the workdir (`claim_sinks`) after the reconcile and before the
-    first ship. A pending part that routes no row to a sink clears that
-    sink's partition. Returns the committed entries per sink, in rule
-    order."""
+    The caller holds the workdir lease. Before the first Spark job the
+    sink paths' `_owner` files are checked (`claim_sinks`), so a run
+    refused by another workdir starts no job and leaves no staging; the
+    claim itself is made after the reconcile, before the first ship,
+    so a run that fails before shipping leaves no sink dir, and one
+    that fails after its claim keeps it. A pending part that routes no
+    row to a sink clears that sink's partition. Returns the committed
+    entries per sink, in rule order."""
     bad = [p for p in files if not SAFE_NAME.match(p)]
     if bad:
         raise ValueError(
@@ -243,6 +222,7 @@ def stage_and_ship(
             "escape in partition paths; rename the input files"
         )
 
+    claim_sinks(conf, check_only=True)
     df = _prepare(spark, conf, [files[p] for p in sorted(files)])
 
     # --- stage (the ONE heavy pass): parse -> enrich -> route-explode
@@ -267,13 +247,13 @@ def stage_and_ship(
     # staged files themselves, reconciled before anything ships. Tests
     # corrupt staged files at the after_stage failpoint to prove the
     # reconciliation refuses to commit.
-    staging = os.path.join(workdir, "staging")
+    staging = os.path.join(conf.workdir, "staging")
     _, stats = mf.write_reconciled(
         "staged sinks", routed.filter(pair_pred), staging, "n_tok", "row_hash",
         keys=("sink", "part"), options=STAGE_OPTS,
         hook=failpoint and (lambda: failpoint("after_stage", "", "")))
 
-    claim_sinks(conf, workdir)
+    claim_sinks(conf)
     # --- ship + commit, per sink in rule order (push-then-checkpoint).
     # Idempotent: a re-run replaces the same partitions exactly
     # (effectively-once).
@@ -294,31 +274,31 @@ def stage_and_ship(
     return committed
 
 
-def claim_sinks(conf: PipelineConf, workdir: str) -> None:
-    """Claim every sink path for `workdir` with a `<path>/_owner` file
-    that holds the resolved workdir (created O_EXCL; readers skip `_`
-    files). The lease covers the workdir, not the sink: a second
-    workdir shipping to the same path would replace the first one's
-    partitions while the first one's manifest still vouches for them.
-    A path another workdir owns is refused, naming both workdirs and
-    the file to delete."""
-    me = os.path.realpath(workdir)
+def claim_sinks(conf: PipelineConf, check_only: bool = False) -> None:
+    """Claim every sink path for the conf's workdir with a
+    `<path>/_owner` file that holds the workdir (created O_EXCL;
+    readers skip `_` files). The lease covers the workdir, not the
+    sink: a second workdir shipping to the same path would replace the
+    first one's partitions while the first one's manifest still vouches
+    for them. A path another workdir owns is refused, naming both
+    workdirs and the file to delete. `check_only` refuses the same way
+    but creates nothing."""
     for rule in conf.sinks:
         owner = os.path.join(rule.path, OWNER)
-        os.makedirs(rule.path, exist_ok=True)
+        if not check_only:
+            os.makedirs(rule.path, exist_ok=True)
+            with contextlib.suppress(FileExistsError), open(owner, "x") as f:
+                f.write(conf.workdir)
         try:
-            fd = os.open(owner, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
-        except FileExistsError:
             with open(owner) as f:
                 held = f.read()
-            if held != me:
-                raise ValueError(
-                    f"sink {rule.name!r} path {rule.path!r} is owned by "
-                    f"workdir {held!r}, not {me!r}; give this sink a path "
-                    f"of its own, or delete {owner} to hand it over") from None
-        else:
-            with os.fdopen(fd, "w") as f:
-                f.write(me)
+        except FileNotFoundError:
+            continue
+        if held != conf.workdir:
+            raise ValueError(
+                f"sink {rule.name!r} path {rule.path!r} is owned by "
+                f"workdir {held!r}, not {conf.workdir!r}; give this sink a path "
+                f"of its own, or delete {owner} to hand it over")
 
 
 def _ship_part(staging: str, rule, p: str) -> None:

@@ -12,7 +12,10 @@ with the footer checksum (`file_identity`) playing the MD5 role.
 `list_parts` + an explicit pruned file list into `read_files` is the
 resume fast path: committed partitions are excluded from the scan
 itself (never read), the batch analog of seeking to the checkpoint
-offset (collector.go:74-78).
+offset (collector.go:74-78). `read_files` takes the scan's schema from
+the parts' parquet footers on the driver, so neither the input nor the
+lookup costs a schema-inference job, and it refuses a part whose
+schema differs from the first part's.
 """
 
 from __future__ import annotations
@@ -71,10 +74,29 @@ def list_parts(path: str) -> dict[str, str]:
 
 
 def read_files(spark: SparkSession, files: list[str]) -> DataFrame:
-    """Scan exactly these files (pruned resume scan)."""
+    """Scan exactly these files (pruned resume scan) with the schema of
+    their parquet footers, read on the driver: no schema-inference job.
+    Spark's inference takes one file's schema, so a later part missing
+    a column would read it as NULL; here every part must carry the
+    first part's columns and types, or the read is refused naming the
+    part and the fields that differ."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
     if not files:
         raise ValueError("empty file list")
-    return spark.read.parquet(*files)
+    with ThreadPoolExecutor(max_workers=16) as ex:
+        schemas = [from_arrow_schema(s) for s in ex.map(pq.read_schema, files)]
+    want = {f.name: f.dataType.simpleString() for f in schemas[0]}
+    for path, schema in zip(files, schemas):
+        got = {f.name: f.dataType.simpleString() for f in schema}
+        diff = [f"{n} ({want.get(n, 'absent')} vs {got.get(n, 'absent')})"
+                for n in sorted(want.keys() | got.keys()) if want.get(n) != got.get(n)]
+        if diff:
+            raise ValueError(
+                f"parquet part {path!r} does not match the schema of {files[0]!r}: "
+                f"{', '.join(diff)}; rewrite the part or read it separately")
+    return spark.read.schema(schemas[0]).parquet(*files)
 
 
 def ensure_parallelism(df: DataFrame, *key_cols: str) -> DataFrame:

@@ -72,15 +72,15 @@ SEQUENCES_SCHEMA = T.StructType(
 )
 
 
-def _ship_all(spark: SparkSession, conf: PipelineConf, workdir: str,
+def _ship_all(spark: SparkSession, conf: PipelineConf,
               files: dict[str, str], identity: dict[str, tuple[int, int]]) -> None:
     """Ship every part of `files` to every sink through the batch core."""
-    with mf.lease(workdir):
-        pipeline.stage_and_ship(spark, conf, workdir, files, identity,
+    with mf.lease(conf.workdir):
+        pipeline.stage_and_ship(spark, conf, files, identity,
                                 {r.name: sorted(files) for r in conf.sinks})
 
 
-def _process_batch(spark: SparkSession, conf: PipelineConf, workdir: str,
+def _process_batch(spark: SparkSession, conf: PipelineConf,
                    batch_df: DataFrame, ledger: dict | None) -> None:
     """One micro-batch: its files through the batch core, then the
     rescan when in-place rotation handling is on (`ledger` not None)."""
@@ -91,7 +91,7 @@ def _process_batch(spark: SparkSession, conf: PipelineConf, workdir: str,
     if files:
         # input identity from parquet FOOTER metadata — the SAME
         # definition validate_manifest recomputes
-        _ship_all(spark, conf, workdir, files, reader.files_identity(files))
+        _ship_all(spark, conf, files, reader.files_identity(files))
     if ledger is not None:
         # seed the ledger with this batch's just-committed files so the
         # rescan's footer reads stay O(changed), not O(committed)
@@ -101,15 +101,11 @@ def _process_batch(spark: SparkSession, conf: PipelineConf, workdir: str,
 
 
 def _stat_of(path: str):
-    """(mtime_ns, size) for a local file, None when not statable
-    (remote URI or vanished) — the cheap pre-filter before a footer
-    read, the analog of the watcher's (dev, inode, size) check
-    (utils.go:128-133)."""
-    lp = reader.local_path(path)
-    if lp is None:
-        return None
+    """(mtime_ns, size) for a local file, None when it vanished — the
+    cheap pre-filter before a footer read, the analog of the watcher's
+    (dev, inode, size) check (utils.go:128-133)."""
     try:
-        st = os.stat(lp)
+        st = os.stat(path)
     except OSError:
         return None
     return (st.st_mtime_ns, st.st_size)
@@ -138,7 +134,6 @@ def rescan_rewritten(spark: SparkSession, conf: PipelineConf,
     file growing under its tail.
 
     Returns the sorted list of re-shipped partition ids."""
-    workdir = pipeline.local_dir(conf.workdir)
     entries = mf.read_all(conf.manifest_dir)
     by_part: dict[str, mf.ManifestEntry] = {}
     for e in entries:
@@ -167,7 +162,7 @@ def rescan_rewritten(spark: SparkSession, conf: PipelineConf,
             changed[part] = path
             ids[part] = (rc, ck)
     if changed:
-        _ship_all(spark, conf, workdir, changed, ids)
+        _ship_all(spark, conf, changed, ids)
     return sorted(changed)
 
 
@@ -186,15 +181,14 @@ def stream_pipeline(
     micro-batch — in-place-rewritten files are detected and re-shipped
     by the stream itself (see module header for the trade).
     """
-    workdir = pipeline.local_dir(conf.workdir)
-    pipeline.check_layout(conf, workdir)
+    pipeline.check_layout(conf)
     # the rescan's stat ledger lives for the stream's lifetime
     ledger: dict | None = {} if rescan else None
     stream = spark.readStream.schema(SEQUENCES_SCHEMA)
     if max_files_per_trigger:
         stream = stream.option("maxFilesPerTrigger", str(max_files_per_trigger))
     writer = stream.parquet(conf.input_path).writeStream.foreachBatch(
-        lambda bdf, _: _process_batch(spark, conf, workdir, bdf, ledger)
+        lambda bdf, _: _process_batch(spark, conf, bdf, ledger)
     ).option("checkpointLocation", os.path.join(conf.workdir, "stream_cpt"))
     if available_now:
         writer = writer.trigger(availableNow=True)

@@ -6,6 +6,7 @@ independent recompute the reference's golden byte-equality tests use
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import numpy as np
@@ -31,6 +32,27 @@ def spark():
 
     s = get_spark("llogtail_spark-tests", cores=8, shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def jobs_in(spark):
+    """jobs_in(group): a context manager that runs its block in the
+    Spark job group `group` and then appends the number of jobs the
+    block started to the list it yields."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def count(group: str):
+        counted: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield counted
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+            counted.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    return count
 
 
 @pytest.fixture(scope="session")

@@ -1,9 +1,8 @@
-"""Enrichment join semantics: broadcast plan, null handling, strict
-mode (unknown-path analog, log_watcher.go:288-291)."""
+"""Enrichment join semantics: broadcast plan and the fill defaults for
+unknown sources (unknown-path analog, log_watcher.go:288-291)."""
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from llogtail_spark.operators.enrich import enrich_stage
@@ -33,19 +32,6 @@ def test_ghost_lookup_row_has_no_effect(spark, data_dir):
     df, lk = _frames(spark, data_dir)
     out = enrich_stage(df, lk)
     assert out.filter(F.col("source") == "ghost.log").count() == 0
-
-
-def test_strict_mode_raises_on_missing_source(spark, data_dir):
-    df, lk = _frames(spark, data_dir)
-    with pytest.raises(ValueError, match="warn.log"):
-        enrich_stage(df, lk, strict=True)
-
-
-def test_strict_mode_ok_when_complete(spark, data_dir):
-    df, lk = _frames(spark, data_dir)
-    complete = df.filter(F.col("source") != "warn.log")
-    out = enrich_stage(complete, lk, strict=True)
-    assert out.count() == complete.count()
 
 
 def test_join_is_broadcast(spark, data_dir):

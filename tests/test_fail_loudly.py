@@ -116,6 +116,32 @@ def test_lookup_without_a_source_column_names_the_input(spark, data_dir, tmp_pat
     assert mf.read_all(conf.manifest_dir) == []
 
 
+@pytest.mark.parametrize("field", ["source", "n_tok"])
+def test_a_later_part_with_another_schema_is_refused_by_name(
+        spark, data_dir, tmp_path, jobs_in, field):
+    """Spark's schema inference takes one part's schema: a later part
+    without `source` read as NULL and shipped with the enrich defaults,
+    and a later int64 `n_tok` failed inside the scan."""
+    inp = str(tmp_path / "in")
+    _write_part(os.path.join(inp, "part-00000.parquet"), generate_sequences(20, seed=7))
+    later = generate_sequences(20, seed=8)
+    if field == "source":
+        later = later.drop_columns(["source"])
+    else:
+        i = later.schema.get_field_index("n_tok")
+        later = later.set_column(i, "n_tok", later.column(i).cast(pa.int64()))
+    bad = os.path.join(inp, "part-00001.parquet")
+    _write_part(bad, later)
+    out = str(tmp_path / "out" / "firehose")
+    conf = _conf(data_dir, tmp_path / "w", [SinkRule("firehose", "true", out)], inp)
+    with jobs_in(f"schema-{tmp_path}") as jobs, pytest.raises(ValueError) as err:
+        run_pipeline(spark, conf)
+    assert bad in str(err.value) and field in str(err.value), str(err.value)
+    assert jobs == [0]
+    assert not os.path.exists(out)
+    assert mf.read_all(conf.manifest_dir) == []
+
+
 def test_a_hive_style_input_is_refused(spark, data_dir, tmp_path):
     """date=1/part-0 and date=2/part-0 would share the part id
     'part-0'; one of them would never ship."""
@@ -167,9 +193,11 @@ def test_a_grok_the_parse_kernel_cannot_run_is_refused_by_the_conf(
 
 @pytest.mark.parametrize("start", ["batch", "stream"])
 def test_a_second_workdir_shipping_to_a_claimed_sink_path_is_refused(
-        spark, data_dir, tmp_path, start):
+        spark, data_dir, tmp_path, jobs_in, start):
     """The lease covers one workdir: without the `_owner` claim, B's
-    ship replaces A's partitions and A's manifest vouches for B's rows."""
+    ship replaces A's partitions and A's manifest vouches for B's rows.
+    The claim is checked before the heavy pass: B stages nothing and,
+    in batch, starts no Spark job."""
     from pyspark.errors import StreamingQueryException
 
     out = str(tmp_path / "out" / "errors")
@@ -185,8 +213,12 @@ def test_a_second_workdir_shipping_to_a_claimed_sink_path_is_refused(
     # B routes a different row set to the same path
     conf_b = _conf(data_dir, tmp_path / "b", [SinkRule("errors", "true", out)])
     refused = ValueError if start == "batch" else StreamingQueryException
-    with pytest.raises(refused, match="is owned by workdir") as err:
+    with jobs_in(f"claimed-{tmp_path}") as jobs, \
+            pytest.raises(refused, match="is owned by workdir") as err:
         _run(start, spark, conf_b)
+    assert not os.path.exists(os.path.join(conf_b.workdir, "staging"))
+    if start == "batch":
+        assert jobs == [0]
     for named in (wd_a, os.path.realpath(conf_b.workdir), owner):
         assert named in str(err.value), str(err.value)[-2000:]
     assert sorted(glob.glob(os.path.join(out, "part=*", "*"))) == before

@@ -5,6 +5,7 @@ the commented-out restart test :102-135, which we make real).
 Oracle: pure pandas recompute from the seeded generator (conftest),
 never Spark."""
 
+import glob
 import os
 
 import numpy as np
@@ -83,6 +84,23 @@ def test_a_run_with_nothing_pending_starts_no_spark_job(spark, data_dir, tmp_pat
     res = run_pipeline(spark, conf)
     assert all(len(v) == 0 for v in res.processed.values())
     assert set(tracker.getJobIdsForGroup(None)) - before == set()
+
+
+@pytest.mark.parametrize("lookup,most", [(True, 4), (False, 3)],
+                         ids=["lookup", "no_lookup"])
+def test_a_fresh_run_starts_no_schema_inference_job(
+        spark, data_dir, tmp_path, jobs_in, lookup, most):
+    """The input and lookup schemas come from the parquet footers on
+    the driver: a fresh run starts the broadcast (with a lookup), the
+    staged write and the 2-job readback, and no inference job (with
+    inference it started 6 jobs, and 4 without a lookup)."""
+    conf = make_conf(data_dir, tmp_path / "w")
+    if not lookup:
+        conf = PipelineConf(conf.input_path, None, conf.workdir, conf.sinks)
+    with jobs_in(f"fresh-{tmp_path}") as jobs:
+        res = run_pipeline(spark, conf)
+    assert all(len(v) == 6 for v in res.processed.values())
+    assert jobs[0] <= most, jobs
 
 
 class Boom(Exception):
@@ -255,48 +273,53 @@ def test_partition_layout_invariance(spark, tmp_path):
 
 
 def test_remote_workdir_rejected_loudly(spark, data_dir, tmp_path):
-    """A remote workdir URI would make the local staging walk find
-    nothing and commit zero-count manifests over real data — it must
-    be rejected up front instead."""
-    import pytest
+    """A remote workdir or output URI would make the local staging walk
+    find nothing and commit zero-count manifests over real data — the
+    conf refuses it when it is built, naming the field."""
+    from llogtail_spark.corpus_pipeline import CorpusConf
 
-    from llogtail_spark.config import PipelineConf
-    from llogtail_spark.operators.route import SinkRule
-    from llogtail_spark.pipeline import run_pipeline
-    from llogtail_spark.streaming.tail import stream_pipeline
-
-    conf = PipelineConf(
-        input_path=os.path.join(data_dir, "sequences"),
-        lookup_path=None,
-        workdir="hdfs://nn/flow/work",
-        sinks=[SinkRule("all", "true", str(tmp_path / "out"))],
-    )
-    for run in (run_pipeline, stream_pipeline):
-        with pytest.raises(NotImplementedError, match="workdir"):
-            run(spark, conf)
+    inp = os.path.join(data_dir, "sequences")
+    builds = {
+        "workdir": lambda: PipelineConf(
+            input_path=inp, lookup_path=None, workdir="hdfs://nn/flow/work",
+            sinks=[SinkRule("all", "true", str(tmp_path / "out"))]),
+        "out_path": lambda: CorpusConf(
+            input_path=inp, workdir=str(tmp_path / "w"), out_path="hdfs://nn/flow/out"),
+    }
+    for field, build in builds.items():
+        with pytest.raises(NotImplementedError, match=field):
+            build()
 
 
-def test_file_uri_workdir_resolves_not_corrupts(spark, data_dir, tmp_path, oracle_pdf):
+def test_file_uri_workdir_resolves_not_corrupts(
+        spark, data_dir, tmp_path, oracle_pdf, monkeypatch):
     """ADVICE r02: a 'file:' URI workdir passes the local-path guard,
     but if staging were built on the raw URI string, Spark would write
     under the RESOLVED path while os.scandir on the literal string
     found nothing — staged_any=False, zero-count manifests, and sink
     dirs rmtree'd over real data. The URI must behave exactly like the
-    plain path."""
-    wd = tmp_path / "w_uri"
-    conf = make_conf(data_dir, wd)
-    conf = PipelineConf(
-        input_path=conf.input_path, lookup_path=conf.lookup_path,
-        workdir="file://" + str(wd), sinks=conf.sinks,
-    )
-    res = run_pipeline(spark, conf)
-    assert all(len(v) == 6 for v in res.processed.values())
-    for sink, want in _expected(oracle_pdf).items():
-        _assert_sink_equals_oracle(spark, conf, sink, want)
-    # the manifest must land under the RESOLVED workdir, not under a
-    # literal './file:/...' directory relative to the cwd
-    assert (wd / "manifest").is_dir()
-    assert not os.path.exists("file:")
+    plain path, and so must a 'file:' URI sink path, which once
+    shipped into a cwd-relative './file:/...' tree."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    for uri_sinks in (False, True):
+        wd = tmp_path / f"w_uri_{uri_sinks}"
+        conf = make_conf(data_dir, wd)
+        sinks = [SinkRule(r.name, r.predicate, "file://" + r.path) for r in conf.sinks]
+        conf = PipelineConf(
+            input_path=conf.input_path, lookup_path=conf.lookup_path,
+            workdir="file://" + str(wd), sinks=sinks if uri_sinks else conf.sinks,
+        )
+        res = run_pipeline(spark, conf)
+        assert all(len(v) == 6 for v in res.processed.values())
+        for sink, want in _expected(oracle_pdf).items():
+            _assert_sink_equals_oracle(spark, conf, sink, want)
+            assert glob.glob(str(wd / "out" / sink / "part=*" / "*.parquet")), sink
+        # the manifest must land under the RESOLVED workdir, not under a
+        # literal './file:/...' directory relative to the cwd
+        assert (wd / "manifest").is_dir()
+        assert os.listdir(cwd) == []
 
 
 def test_parallel_ship_crash_before_commit_resumes(spark, data_dir, tmp_path):

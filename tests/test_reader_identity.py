@@ -1,7 +1,8 @@
-"""The input listing (reader.list_parts) and footer-metadata input
-identity (reader.file_identity) — the findFiles and validateCpt
-analogs (utils.go:48-71, 128-133): cheap, metadata-only, and
-sensitive to the changes that matter (row count, content layout)."""
+"""The input listing (reader.list_parts), the footer-schema scan
+(reader.read_files) and footer-metadata input identity
+(reader.file_identity) — the findFiles and validateCpt analogs
+(utils.go:48-71, 128-133): cheap, metadata-only, and sensitive to the
+changes that matter (row count, content layout)."""
 
 import os
 import re
@@ -11,7 +12,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from llogtail_spark.sources.reader import file_identity, files_identity, list_parts
+from llogtail_spark.sources.reader import file_identity, files_identity, list_parts, read_files
 
 
 def _write(path, ids, toks):
@@ -104,3 +105,19 @@ def test_ensure_parallelism_gate(spark):
         assert sorted(r["id"] for r in up.collect()) == list(range(100))
     wide = spark.range(100).repartition(target + 4, "id")
     assert ensure_parallelism(wide, "id") is wide
+
+
+@pytest.mark.parametrize("which", ["log_fixture", "lookup", "corpus_input"])
+def test_footer_schema_equals_the_inferred_schema(spark, data_dir, tmp_path, which):
+    """read_files scans with the parts' footer schema instead of asking
+    Spark to infer one; on the package's inputs the two agree."""
+    if which == "corpus_input":
+        from test_corpus_pipeline import _write_input
+
+        path = str(tmp_path / "docs")
+        _write_input(spark, path)
+    else:
+        path = os.path.join(data_dir, {"log_fixture": "sequences",
+                                       "lookup": "lookup_sources.parquet"}[which])
+    files = list(list_parts(path).values())
+    assert read_files(spark, files).schema == spark.read.parquet(*files).schema

@@ -124,7 +124,7 @@ def test_stream_identity_work_is_per_batch_not_per_table(spark, tmp_path, monkey
     )
     monkeypatch.setattr(
         rd, "list_parts",
-        lambda spark_, path: (list_calls.append(path), real_list_parts(spark_, path))[1],
+        lambda path: (list_calls.append(path), real_list_parts(path))[1],
     )
 
     q = stream_pipeline(spark, conf)
