@@ -5,8 +5,9 @@
 
 Reads the pipeline config (LogConf analog), runs one batch pass with
 skip-committed resume, prints per-sink metrics, exits. Re-running the
-same command after a crash resumes exactly (the poller/restart loop
-of the reference, log_watcher.go:167-212, collapsed into re-invoke).
+same command after a crash resumes exactly. The reference's poller
+(log_watcher.go:167-212) is `pipeline.follow`: `--validate` and a
+run, on an interval.
 """
 
 from __future__ import annotations

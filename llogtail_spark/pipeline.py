@@ -5,7 +5,7 @@ This is the LogCollector.handleEvent/listenEvent analog
 (log_collector.go:134-221) with the event loop replaced by one
 declarative DAG per run: the listed parquet parts ARE the set of
 "modify events"; partitions above the committed manifest are the
-un-consumed bytes; there is nothing to poll.
+un-consumed bytes.
 
 A run has two parts:
 - the plan (`_run`): ONE driver-side input listing
@@ -15,9 +15,10 @@ A run has two parts:
   Re-validating committed parts against changed inputs is a separate
   call, `validate_manifest` (`cli --validate`);
 - the core (`stage_and_ship`), the package's one writer of log-sink
-  lineage. The streaming tail (`streaming/tail.py`) calls it too, per
-  micro-batch and per rescan, so stream and batch sinks get the same
-  files, reconcile, empty-partition clearing and ship.
+  lineage.
+
+The live tail, `follow`, is llogtail's poller (log_watcher.go:167-212):
+`validate_manifest` then `run_pipeline`, on an interval.
 
 The core follows `manifest.py`'s commit protocol, shared with the
 corpus pipeline, and its caller holds the workdir lease:
@@ -65,6 +66,7 @@ import contextlib
 import functools
 import os
 import shutil
+import threading
 from dataclasses import dataclass
 from typing import Callable
 
@@ -112,24 +114,52 @@ def _prepare(spark: SparkSession, conf: PipelineConf, files: list[str]) -> DataF
     return df
 
 
-def validate_manifest(conf: PipelineConf) -> list[str]:
-    """Recompute input-partition identities (parquet footer metadata,
-    no scan, no Spark job) and drop the manifest entries whose input
-    part is gone or changed (validateCpt analog, utils.go:128-133), so
-    the next run reprocesses them. Holds the workdir lease. Returns
-    the parts invalidated."""
+def validate_manifest(conf: PipelineConf, ledger: dict | None = None) -> list[str]:
+    """Drop the manifest entries whose input part is gone or changed
+    (validateCpt analog, utils.go:128-133), so the next run reprocesses
+    them; returns them as 'sink/part'. Holds the workdir lease. Only
+    committed parts whose (mtime_ns, size) differs from `ledger`
+    ({part: stat}, updated in place) have their identity recomputed
+    from the parquet footer (no scan, no Spark job)."""
+    ledger = {} if ledger is None else ledger
     with mf.lease(conf.workdir):
         entries = mf.read_all(conf.manifest_dir)
         if not entries:
             return []
-        live = reader.files_identity(reader.list_parts(conf.input_path))
+        parts = reader.list_parts(conf.input_path)
+        stats = {}
+        for p in {e.part for e in entries} & parts.keys():
+            st = os.stat(parts[p])  # the watcher's (dev, inode, size) check, utils.go:128-133
+            stats[p] = (st.st_mtime_ns, st.st_size)
+        live = reader.files_identity(
+            {p: parts[p] for p, st in stats.items() if ledger.get(p) != st})
         stale = []
         for e in entries:
             got = live.get(e.part)
-            if got is None or not mf.validate(e, got[0], got[1]):
+            if e.part not in parts or (got is not None and not mf.validate(e, *got)):
                 mf.invalidate(conf.manifest_dir, e.sink, e.part)
                 stale.append(f"{e.sink}/{e.part}")
+        for p in ledger.keys() - parts.keys():
+            del ledger[p]
+        # stats predate the footer reads: a later rewrite is seen next cycle
+        ledger.update((p, stats[p]) for p in live)
         return stale
+
+
+def follow(spark: SparkSession, conf: PipelineConf, interval_s: float,
+           stop: threading.Event) -> None:
+    """llogtail's live loop (log_watcher.go:167-212): each cycle drops
+    the entries of parts rewritten in place (`validate_manifest`),
+    ships new and dropped parts (`run_pipeline`), then waits
+    `interval_s`, until `stop` is set; a set `stop` runs one cycle. The
+    stat ledger lives for the loop, so an idle cycle reads no footer
+    and starts no Spark job. A failed cycle raises."""
+    ledger: dict[str, tuple[int, int]] = {}
+    while True:
+        validate_manifest(conf, ledger)
+        run_pipeline(spark, conf)
+        if stop.wait(interval_s):
+            return
 
 
 def check_disjoint(what: str, path: str, taken: dict[str, str | None]) -> None:

@@ -4,10 +4,11 @@ The reference discovers sources by glob (findFiles, utils.go:48-71)
 and identifies each by (dev, inode, first-1KB-MD5) (log_watcher.go:
 65-70). Here `list_parts` is the one definition of the source set:
 the flat *.parquet files of a local input dir, listed on the driver
-with os.scandir (no Spark job) by the log pipeline, the corpus
-pipeline and the stream's rescan alike. The stable partition identity
-is the file basename (cheap, rename-stable within a table directory),
-with the footer checksum (`file_identity`) playing the MD5 role.
+with os.scandir (no Spark job) by the log pipeline, its live loop
+(`pipeline.follow`) and the corpus pipeline alike. The stable
+partition identity is the file basename (cheap, rename-stable within a
+table directory), with the footer checksum (`file_identity`) playing
+the MD5 role.
 
 `list_parts` + an explicit pruned file list into `read_files` is the
 resume fast path: committed partitions are excluded from the scan
@@ -26,6 +27,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def part_of(path: str) -> str:
@@ -81,12 +83,11 @@ def read_files(spark: SparkSession, files: list[str]) -> DataFrame:
     first part's columns and types, or the read is refused naming the
     part and the fields that differ."""
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
 
     if not files:
         raise ValueError("empty file list")
     with ThreadPoolExecutor(max_workers=16) as ex:
-        schemas = [from_arrow_schema(s) for s in ex.map(pq.read_schema, files)]
+        schemas = [_spark_schema(p, s) for p, s in zip(files, ex.map(pq.read_schema, files))]
     want = {f.name: f.dataType.simpleString() for f in schemas[0]}
     for path, schema in zip(files, schemas):
         got = {f.name: f.dataType.simpleString() for f in schema}
@@ -97,6 +98,22 @@ def read_files(spark: SparkSession, files: list[str]) -> DataFrame:
                 f"parquet part {path!r} does not match the schema of {files[0]!r}: "
                 f"{', '.join(diff)}; rewrite the part or read it separately")
     return spark.read.schema(schemas[0]).parquet(*files)
+
+
+def _spark_schema(path: str, arrow) -> T.StructType:
+    """The Spark schema of the footer schema `arrow` of the part `path`;
+    a column Spark cannot take (an unsigned int, say) is refused."""
+    from pyspark.errors import PySparkTypeError
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    fields = []
+    for f in arrow:
+        try:
+            fields.append(T.StructField(f.name, from_arrow_type(f.type), f.nullable))
+        except PySparkTypeError as err:
+            raise ValueError(f"parquet part {path!r} column {f.name!r} has type {f.type}, "
+                             f"which Spark cannot read ({err}); rewrite the part") from err
+    return T.StructType(fields)
 
 
 def ensure_parallelism(df: DataFrame, *key_cols: str) -> DataFrame:
@@ -131,9 +148,8 @@ def with_partition_id(df: DataFrame, col: str = "part") -> DataFrame:
 
 
 def local_path(path: str) -> str | None:
-    """Local filesystem path for `path`, or None if it lives on a
-    remote filesystem (hdfs://, s3a://, ...). Shared by every caller
-    that wants to os.stat/read a listed file directly."""
+    """Local filesystem path for `path` (a `file:` URI unescaped), or
+    None if it lives on a remote filesystem (hdfs://, s3a://, ...)."""
     if path.startswith("file:"):
         from urllib.parse import unquote, urlparse
 
@@ -150,13 +166,14 @@ def file_identity(path: str) -> tuple[int, int]:
     exact analog of validateCpt's (dev, inode, offset <= size) check
     (utils.go:128-133) — cheap identity, content-hash left to the
     per-sink checksums. At cluster scale these stats come straight
-    from the Iceberg manifest; here we read footers driver-side."""
+    from the Iceberg manifest; here we read local footers driver-side
+    and refuse an unreadable one by path."""
     import pyarrow.parquet as pq
 
-    lp = local_path(path)
-    if lp is not None:
-        path = lp
-    md = pq.read_metadata(path)
+    try:
+        md = pq.read_metadata(path)
+    except (OSError, ValueError) as err:  # ArrowInvalid is a ValueError
+        raise ValueError(f"input part {path!r} has no readable parquet footer: {err}") from err
     idx = md.schema.to_arrow_schema().get_field_index("doc_id")
     parts = [str(md.num_rows)]
     for rg in range(md.num_row_groups):

@@ -5,6 +5,7 @@ import glob
 import json
 import os
 import re
+import threading
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -14,8 +15,7 @@ from llogtail_spark import manifest as mf
 from llogtail_spark.config import PipelineConf, load_config
 from llogtail_spark.generate import generate_sequences
 from llogtail_spark.operators.route import SinkRule
-from llogtail_spark.pipeline import run_pipeline
-from llogtail_spark.streaming.tail import stream_pipeline
+from llogtail_spark.pipeline import follow, run_pipeline
 
 
 def _conf(data_dir, workdir, sinks, input_path=None) -> PipelineConf:
@@ -30,13 +30,15 @@ def _listing(path) -> list[str]:
 
 
 def _run(start, spark, conf):
-    if start == "stream":
-        stream_pipeline(spark, conf).awaitTermination(120)
+    if start == "follow":
+        stop = threading.Event()
+        stop.set()  # one cycle
+        follow(spark, conf, 0, stop)
     else:
         run_pipeline(spark, conf)
 
 
-@pytest.mark.parametrize("start", ["batch", "stream"])
+@pytest.mark.parametrize("start", ["batch", "follow"])
 def test_two_rules_sharing_a_path_are_refused(spark, data_dir, tmp_path, start):
     out = str(tmp_path / "out" / "shared")
     conf = _conf(data_dir, tmp_path / "w", [SinkRule("errors", "level_num >= 40", out),
@@ -56,7 +58,7 @@ def test_duplicate_sink_names_are_refused_by_the_conf(data_dir, tmp_path):
     PipelineConf("", None, "", [])  # the empty conf still builds
 
 
-@pytest.mark.parametrize("start", ["batch", "stream"])
+@pytest.mark.parametrize("start", ["batch", "follow"])
 def test_sink_under_staging_is_refused(spark, data_dir, tmp_path, start):
     wd = tmp_path / "w"
     out = str(wd / "staging" / "errors")
@@ -67,7 +69,7 @@ def test_sink_under_staging_is_refused(spark, data_dir, tmp_path, start):
     assert mf.read_all(conf.manifest_dir) == []
 
 
-@pytest.mark.parametrize("start", ["batch", "stream"])
+@pytest.mark.parametrize("start", ["batch", "follow"])
 def test_sink_equal_to_the_input_path_is_refused(spark, data_dir, tmp_path, start):
     inp = os.path.join(data_dir, "sequences")
     before = _listing(inp)
@@ -116,20 +118,23 @@ def test_lookup_without_a_source_column_names_the_input(spark, data_dir, tmp_pat
     assert mf.read_all(conf.manifest_dir) == []
 
 
-@pytest.mark.parametrize("field", ["source", "n_tok"])
+@pytest.mark.parametrize("field", ["source", "n_tok", "tokens"])
 def test_a_later_part_with_another_schema_is_refused_by_name(
         spark, data_dir, tmp_path, jobs_in, field):
     """Spark's schema inference takes one part's schema: a later part
     without `source` read as NULL and shipped with the enrich defaults,
-    and a later int64 `n_tok` failed inside the scan."""
+    a later int64 `n_tok` failed inside the scan, and a list<uint16>
+    `tokens` failed the Arrow conversion naming neither part nor
+    column."""
     inp = str(tmp_path / "in")
     _write_part(os.path.join(inp, "part-00000.parquet"), generate_sequences(20, seed=7))
     later = generate_sequences(20, seed=8)
     if field == "source":
         later = later.drop_columns(["source"])
     else:
-        i = later.schema.get_field_index("n_tok")
-        later = later.set_column(i, "n_tok", later.column(i).cast(pa.int64()))
+        i = later.schema.get_field_index(field)
+        to = pa.int64() if field == "n_tok" else pa.list_(pa.uint16())
+        later = later.set_column(i, field, later.column(i).cast(to))
     bad = os.path.join(inp, "part-00001.parquet")
     _write_part(bad, later)
     out = str(tmp_path / "out" / "firehose")
@@ -191,15 +196,13 @@ def test_a_grok_the_parse_kernel_cannot_run_is_refused_by_the_conf(
     assert _listing(tmp_path) == []
 
 
-@pytest.mark.parametrize("start", ["batch", "stream"])
+@pytest.mark.parametrize("start", ["batch", "follow"])
 def test_a_second_workdir_shipping_to_a_claimed_sink_path_is_refused(
         spark, data_dir, tmp_path, jobs_in, start):
     """The lease covers one workdir: without the `_owner` claim, B's
     ship replaces A's partitions and A's manifest vouches for B's rows.
-    The claim is checked before the heavy pass: B stages nothing and,
-    in batch, starts no Spark job."""
-    from pyspark.errors import StreamingQueryException
-
+    The claim is checked before the heavy pass: B stages nothing and
+    starts no Spark job."""
     out = str(tmp_path / "out" / "errors")
     conf_a = _conf(data_dir, tmp_path / "a", [SinkRule("errors", "level_num >= 40", out)])
     run_pipeline(spark, conf_a)
@@ -212,13 +215,11 @@ def test_a_second_workdir_shipping_to_a_claimed_sink_path_is_refused(
 
     # B routes a different row set to the same path
     conf_b = _conf(data_dir, tmp_path / "b", [SinkRule("errors", "true", out)])
-    refused = ValueError if start == "batch" else StreamingQueryException
     with jobs_in(f"claimed-{tmp_path}") as jobs, \
-            pytest.raises(refused, match="is owned by workdir") as err:
+            pytest.raises(ValueError, match="is owned by workdir") as err:
         _run(start, spark, conf_b)
     assert not os.path.exists(os.path.join(conf_b.workdir, "staging"))
-    if start == "batch":
-        assert jobs == [0]
+    assert jobs == [0]
     for named in (wd_a, os.path.realpath(conf_b.workdir), owner):
         assert named in str(err.value), str(err.value)[-2000:]
     assert sorted(glob.glob(os.path.join(out, "part=*", "*"))) == before

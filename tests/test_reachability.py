@@ -26,9 +26,9 @@ KEPT = {
     # public readers: the documented way to read a run's outputs
     "pipeline.read_sink", "corpus_pipeline.read_packed",
     "manifest.committed_parts",
-    # the stream tail: llogtail's live loop, started by the application
+    # the live tail: llogtail's poller loop, started by the application
     # that embeds the package, not by the CLI
-    "streaming.tail.stream_pipeline", "streaming.tail.rescan_rewritten",
+    "pipeline.follow",
     # cache releases for a long-lived session
     "operators.dedup.release_fuzzy_caches", "operators.joins.release_bloom_broadcasts",
     "operators.corpus.release_kn_caches", "operators.corpus.release_kl_caches",

@@ -53,10 +53,17 @@ def test_identity_detects_doc_id_change(tmp_path):
 
 
 def test_files_identity_batch_and_uri_scheme(tmp_path):
-    p = str(tmp_path / "a.parquet")
-    _write(p, ["a"], [[7]])
-    out = files_identity({"part-a": "file://" + p, "part-b": p})
-    assert out["part-a"] == out["part-b"]
+    """A file: input URI is resolved by list_parts, so files_identity
+    only ever sees local paths."""
+    d = tmp_path / "in"
+    d.mkdir()
+    for name, ids in (("part-a", ["a"]), ("part-b", ["a", "b"])):
+        _write(str(d / f"{name}.parquet"), ids, [[7]] * len(ids))
+    out = files_identity(list_parts("file://" + str(d)))
+    assert out == files_identity(list_parts(str(d)))
+    assert out == {"part-a": file_identity(str(d / "part-a.parquet")),
+                   "part-b": file_identity(str(d / "part-b.parquet"))}
+    assert out["part-a"] != out["part-b"]
 
 
 def _touch(path) -> str:

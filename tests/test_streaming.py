@@ -1,21 +1,27 @@
-"""Streaming tail: incremental file discovery == the inotify loop.
+"""The live tail, `pipeline.follow`: llogtail's poller loop.
 
 Mirrors the reference's watcher tests (log_watcher_test.go:115-287):
 register -> discover existing files -> new file appears -> only the
-new data flows -> restart resumes from the stream checkpoint."""
+new data flows -> a file rewritten in place is shipped again -> a
+restart resumes from the manifest. Each cycle is `validate_manifest`
+then `run_pipeline`; a stop event that is already set runs one cycle."""
 
+import contextlib
+import glob
 import os
 import re
-import shutil
+import threading
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from llogtail_spark import manifest as mf
 from llogtail_spark.config import PipelineConf
 from llogtail_spark.generate import generate_sequences, write_fixture
 from llogtail_spark.operators.route import SinkRule
-from llogtail_spark.streaming.tail import stream_pipeline
-from llogtail_spark import manifest as mf
+from llogtail_spark.pipeline import follow, validate_manifest
+from llogtail_spark.sources import reader
 
 
 def _conf(data_dir, workdir) -> PipelineConf:
@@ -31,155 +37,144 @@ def _conf(data_dir, workdir) -> PipelineConf:
     )
 
 
+def _stopped() -> threading.Event:
+    stop = threading.Event()
+    stop.set()
+    return stop
+
+
+def _one_cycle(spark, conf) -> None:
+    follow(spark, conf, 0, _stopped())
+
+
+def _sink_files(conf, part="*") -> list[str]:
+    return sorted(f for r in conf.sinks
+                  for f in glob.glob(os.path.join(r.path, f"part={part}", "*")))
+
+
 def test_stream_drains_then_discovers_new_files(spark, tmp_path):
+    """The first cycle ships every part; after a new file lands, the
+    next cycle ships only it: the old parts' sink files are untouched."""
     data = str(tmp_path / "data")
     write_fixture(data, 600, seed=11, n_files=3)
     conf = _conf(data, tmp_path / "w")
 
-    q = stream_pipeline(spark, conf)
-    q.awaitTermination(120)
-    fire = spark.read.parquet(conf.sinks[1].path)
-    assert fire.count() == 600
+    _one_cycle(spark, conf)
+    assert spark.read.parquet(conf.sinks[1].path).count() == 600
     assert len(mf.committed_parts(conf.manifest_dir, "firehose")) == 3
+    before = _sink_files(conf)
 
     # a new file lands (the Discover event) — only it is processed
-    import pyarrow.parquet as pq
-
-    extra = generate_sequences(100, seed=99)
-    pq.write_table(extra, os.path.join(data, "sequences", "part-99999.parquet"))
-
-    q2 = stream_pipeline(spark, conf)
-    q2.awaitTermination(120)
-    fire2 = spark.read.parquet(conf.sinks[1].path)
-    assert fire2.count() == 700
+    pq.write_table(generate_sequences(100, seed=99),
+                   os.path.join(data, "sequences", "part-99999.parquet"))
+    _one_cycle(spark, conf)
+    fire = spark.read.parquet(conf.sinks[1].path)
+    assert fire.count() == 700
     assert len(mf.committed_parts(conf.manifest_dir, "firehose")) == 4
-    # no duplicates: doc_ids unique per (part), and the original parts
-    # were not rewritten with duplicate content
-    assert fire2.select("part", "doc_id").distinct().count() == 700
+    assert sorted(set(_sink_files(conf)) - set(_sink_files(conf, "part-99999"))) == before
+    assert not os.path.exists(os.path.join(conf.workdir, "stream_cpt"))
 
 
-def test_stream_routing_matches_batch_semantics(spark, tmp_path):
+def test_follow_restart_does_not_duplicate_rows(spark, tmp_path):
+    """A loop that runs cycles on an interval, stopped and started
+    again, resumes from the manifest: every row is shipped once."""
     data = str(tmp_path / "data")
-    write_fixture(data, 400, seed=12, n_files=2)
+    write_fixture(data, 300, seed=12, n_files=3)
     conf = _conf(data, tmp_path / "w")
-    q = stream_pipeline(spark, conf)
-    q.awaitTermination(120)
-    err = spark.read.parquet(conf.sinks[0].path)
-    assert err.filter(F.col("level_num") < 40).count() == 0
-    total = spark.read.parquet(conf.sinks[1].path).count()
-    assert total == 400
+
+    stop = threading.Event()
+    cycles = []
+    real_wait = stop.wait
+
+    def wait(timeout):  # stop after the third cycle
+        cycles.append(timeout)
+        if len(cycles) == 3:
+            stop.set()
+        return real_wait(0)
+
+    stop.wait = wait
+    follow(spark, conf, 0.01, stop)
+    assert cycles == [0.01] * 3
+    shipped = _sink_files(conf)
+    _one_cycle(spark, conf)  # the restart re-ships nothing
+    assert _sink_files(conf) == shipped
+    fire = spark.read.parquet(conf.sinks[1].path)
+    assert fire.count() == 300
+    assert fire.select("part", "doc_id").distinct().count() == 300
+    assert len(mf.read_all(conf.manifest_dir)) == 6  # 2 sinks x 3 parts
 
 
 def test_stream_manifest_validates_clean(spark, tmp_path):
-    """Entries committed by the streaming path must carry the SAME
-    input-identity definition validate_manifest recomputes (footer
-    metadata) — otherwise every streamed partition looks stale."""
-    from llogtail_spark.pipeline import validate_manifest
-
+    """Entries committed by the loop carry the SAME input-identity
+    definition validate_manifest recomputes (footer metadata) —
+    otherwise every shipped partition looks stale."""
     data = str(tmp_path / "data")
     write_fixture(data, 300, seed=7, n_files=2)
     conf = _conf(data, tmp_path / "wv")
-    q = stream_pipeline(spark, conf)
-    q.awaitTermination(120)
+    _one_cycle(spark, conf)
     assert len(mf.read_all(conf.manifest_dir)) == 4  # 2 sinks x 2 parts
     assert validate_manifest(conf) == []  # nothing stale
 
 
-def test_stream_sinks_carry_row_hash_like_batch(spark, tmp_path):
-    """Batch sinks ship a row_hash data column; the streaming twin
-    must write the same schema so a sink fed by both stays
-    single-schema (read_sink resolves schema from one footer)."""
-    data = str(tmp_path / "data")
-    write_fixture(data, 200, seed=21, n_files=2)
-    conf = _conf(data, tmp_path / "w")
-    q = stream_pipeline(spark, conf)
-    q.awaitTermination(120)
-    fire = spark.read.parquet(conf.sinks[1].path)
-    assert "row_hash" in fire.columns
-    assert fire.filter(F.col("row_hash").isNull()).count() == 0
-    # same definition as the batch path: xxhash64(doc_id, tok_hash)
-    bad = fire.filter(
-        F.col("row_hash") != F.xxhash64("doc_id", "tok_hash")
-    ).count()
-    assert bad == 0
-
-
-def test_stream_identity_work_is_per_batch_not_per_table(spark, tmp_path, monkeypatch):
-    """Per micro-batch, footer-identity reads must cover only the
-    batch's own files, and the common path must not re-list the whole
-    table (O(batch), not O(table), driver work per trigger)."""
-    from llogtail_spark.sources import reader as rd
-
+def test_stream_identity_work_is_per_batch_not_per_table(spark, tmp_path, monkeypatch, jobs_in):
+    """A cycle reads footers only of the parts that are pending or
+    whose stat the ledger has not seen: an idle cycle with a warm
+    ledger reads no footer and starts no Spark job."""
     data = str(tmp_path / "data")
     write_fixture(data, 600, seed=31, n_files=3)
     conf = _conf(data, tmp_path / "w")
 
-    identity_calls: list[list[str]] = []
-    list_calls: list[str] = []
-    real_files_identity = rd.files_identity
-    real_list_parts = rd.list_parts
-    monkeypatch.setattr(
-        rd, "files_identity",
-        lambda files: (identity_calls.append(sorted(files)), real_files_identity(files))[1],
-    )
-    monkeypatch.setattr(
-        rd, "list_parts",
-        lambda path: (list_calls.append(path), real_list_parts(path))[1],
-    )
+    footer_reads: list[str] = []
+    real_identity = reader.file_identity
+    monkeypatch.setattr(reader, "file_identity",
+                        lambda p: (footer_reads.append(reader.part_of(p)), real_identity(p))[1])
 
-    q = stream_pipeline(spark, conf)
-    q.awaitTermination(120)
-    assert identity_calls and all(len(c) <= 3 for c in identity_calls)
-    assert list_calls == []  # direct path construction, no table listing
+    stop = threading.Event()
+    per_cycle: list[list[str]] = []
+    idle = contextlib.ExitStack()
+    idle_jobs: list[list[int]] = []
 
-    # one new file lands; the next batch touches ONLY its footer
-    import pyarrow.parquet as pq
+    def wait(timeout):
+        per_cycle.append(sorted(footer_reads))
+        footer_reads.clear()
+        if len(per_cycle) == 2:  # a new file lands after the second cycle
+            pq.write_table(generate_sequences(50, seed=77),
+                           os.path.join(conf.input_path, "part-99999.parquet"))
+        elif len(per_cycle) == 4:  # the fifth cycle has nothing to do
+            idle_jobs.append(idle.enter_context(jobs_in(f"idle-{tmp_path}")))
+        elif len(per_cycle) == 5:
+            idle.close()
+            stop.set()
+        return stop.is_set()
 
-    extra = generate_sequences(50, seed=77)
-    pq.write_table(extra, os.path.join(data, "sequences", "part-99999.parquet"))
-    identity_calls.clear()
-    q2 = stream_pipeline(spark, conf)
-    q2.awaitTermination(120)
-    assert identity_calls == [["part-99999"]]
-    assert list_calls == []
+    stop.wait = wait
+    follow(spark, conf, 0, stop)
+    first = ["part-00000", "part-00001", "part-00002"]
+    assert per_cycle == [first,  # pending: shipped
+                         first,  # committed, stat not seen yet
+                         ["part-99999"],  # the new pending part
+                         ["part-99999"],  # its first stat check
+                         []]  # idle, warm ledger
+    assert idle_jobs == [[0]]
 
 
-def test_inplace_rotation_stream_limit_batch_detects(spark, tmp_path):
-    """VERDICT r02 next-round #8: pin the documented streaming limit
-    (tail.py module header). llogtail's live loop detects in-place
-    rotation of a file it already tailed (log_watcher.go:228-261);
-    Spark's file-stream source assumes seen files are immutable, so
-    the stream must NOT re-ship a rewritten file — and the BATCH
-    path's identity validation (validate_manifest + parquet footer
-    identity) must detect the replacement and reprocess exactly that
-    partition on the next run."""
-    import pyarrow.parquet as pq
-
-    from llogtail_spark.pipeline import run_pipeline, validate_manifest
+def test_inplace_rotation_batch_detects(spark, tmp_path):
+    """llogtail's live loop detects in-place rotation of a file it
+    already tailed (log_watcher.go:228-261). The batch path's identity
+    validation (validate_manifest with no ledger + parquet footer
+    identity, `cli --validate`) detects the replacement and the next
+    run reprocesses exactly that partition."""
+    from llogtail_spark.pipeline import run_pipeline
 
     data = str(tmp_path / "data")
     write_fixture(data, 300, seed=21, n_files=3)
     conf = _conf(data, tmp_path / "w")
-
-    q = stream_pipeline(spark, conf)
-    q.awaitTermination(120)
+    run_pipeline(spark, conf)
     assert spark.read.parquet(conf.sinks[1].path).count() == 300
 
     # rotation: the SAME path is rewritten in place with new content
-    rotated = os.path.join(data, "sequences", "part-00001.parquet")
-    replacement = generate_sequences(150, seed=77)
-    pq.write_table(replacement, rotated)
-
-    # the stream does not re-ship (the pinned limit): same totals
-    q2 = stream_pipeline(spark, conf)
-    q2.awaitTermination(120)
-    fire = spark.read.parquet(conf.sinks[1].path)
-    assert fire.count() == 300
-    old_part1 = fire.filter(F.col("part") == "part-00001").count()
-    assert old_part1 == 100  # still the pre-rotation rows
-
-    # the batch path detects the changed footer identity and
-    # reprocesses exactly the rotated partition
+    pq.write_table(generate_sequences(150, seed=77),
+                   os.path.join(data, "sequences", "part-00001.parquet"))
     stale = validate_manifest(conf)
     assert sorted(stale) == ["errors/part-00001", "firehose/part-00001"]
     res = run_pipeline(spark, conf)
@@ -190,92 +185,13 @@ def test_inplace_rotation_stream_limit_batch_detects(spark, tmp_path):
     assert fire2.filter(F.col("part") == "part-00001").count() == 150
 
 
-def test_rescan_rewritten_reships_only_changed_part(spark, tmp_path, monkeypatch):
-    """llogtail's in-place rotation branch (log_watcher.go:228-261) in
-    the STREAMING twin: rescan_rewritten detects a file rewritten in
-    place after the stream shipped it and re-ships exactly that
-    partition; its footer reads are stat-gated (a warm ledger does
-    ZERO footer reads when nothing changed)."""
-    import pyarrow.parquet as pq
-
-    from llogtail_spark.pipeline import validate_manifest
-    from llogtail_spark.sources import reader as rd
-    from llogtail_spark.streaming.tail import rescan_rewritten
-
-    data = str(tmp_path / "data")
-    write_fixture(data, 300, seed=43, n_files=3)
-    conf = _conf(data, tmp_path / "w")
-    q = stream_pipeline(spark, conf)
-    q.awaitTermination(120)
-    assert spark.read.parquet(conf.sinks[1].path).count() == 300
-
-    rotated = os.path.join(data, "sequences", "part-00001.parquet")
-    pq.write_table(generate_sequences(150, seed=88), rotated)
-
-    footer_reads: list[str] = []
-    real_identity = rd.file_identity
-    monkeypatch.setattr(
-        rd, "file_identity",
-        lambda p: (footer_reads.append(p), real_identity(p))[1],
-    )
-
-    # cold ledger: one metadata-only sweep over the 3 committed parts,
-    # exactly ONE part flagged and re-shipped
-    ledger: dict = {}
-    assert rescan_rewritten(spark, conf, ledger) == ["part-00001"]
-    assert len(footer_reads) == 3
-    fire = spark.read.parquet(conf.sinks[1].path)
-    assert fire.count() == 350  # 100 + 150 rewritten + 100 untouched
-    assert fire.filter(F.col("part") == "part-00001").count() == 150
-    # manifest recommitted with the new identity: batch validate is clean
-    assert validate_manifest(conf) == []
-
-    # warm ledger + unchanged stats: no footer reads at all, no re-ship
-    footer_reads.clear()
-    assert rescan_rewritten(spark, conf, ledger) == []
-    assert footer_reads == []
-
-
-def test_stream_rescan_reships_rewritten_during_stream(spark, tmp_path):
-    """stream_pipeline(rescan=True): a micro-batch that discovers a NEW
-    file also re-ships a file rewritten in place since the last batch —
-    the stream covers rotation without waiting for a batch run."""
-    import pyarrow.parquet as pq
-
-    data = str(tmp_path / "data")
-    write_fixture(data, 300, seed=44, n_files=3)
-    conf = _conf(data, tmp_path / "w")
-    q = stream_pipeline(spark, conf, rescan=True)
-    q.awaitTermination(120)
-    assert spark.read.parquet(conf.sinks[1].path).count() == 300
-
-    # one file is rewritten in place AND one new file lands
-    rotated = os.path.join(data, "sequences", "part-00001.parquet")
-    pq.write_table(generate_sequences(150, seed=89), rotated)
-    pq.write_table(
-        generate_sequences(50, seed=90),
-        os.path.join(data, "sequences", "part-99999.parquet"),
-    )
-
-    q2 = stream_pipeline(spark, conf, rescan=True)
-    q2.awaitTermination(120)
-    fire = spark.read.parquet(conf.sinks[1].path)
-    # 100 + 150 (rewritten, re-shipped by the rescan) + 100 + 50 (new)
-    assert fire.count() == 400
-    assert fire.filter(F.col("part") == "part-00001").count() == 150
-    assert fire.filter(F.col("part") == "part-99999").count() == 50
-    # every shipped row is committed and consistent
-    assert len(mf.committed_parts(conf.manifest_dir, "firehose")) == 4
-
-
-def _stream_then_rewrite(spark, tmp_path, seed, table):
-    """Stream 3 parts, then rewrite part-00001 in place with `table`."""
-    import pyarrow.parquet as pq
-
+def _ship_then_rewrite(spark, tmp_path, seed, table):
+    """Ship 3 parts in one cycle, then rewrite part-00001 in place with
+    `table`."""
     data = str(tmp_path / "data")
     write_fixture(data, 300, seed=seed, n_files=3)
     conf = _conf(data, tmp_path / "w")
-    stream_pipeline(spark, conf).awaitTermination(120)
+    _one_cycle(spark, conf)
     for rule in conf.sinks:
         sink = spark.read.parquet(rule.path)
         assert sink.filter(F.col("part") == "part-00001").count() > 0
@@ -283,20 +199,52 @@ def _stream_then_rewrite(spark, tmp_path, seed, table):
     return conf
 
 
+def test_rescan_rewritten_reships_only_changed_part(spark, tmp_path):
+    """llogtail's in-place rotation branch (log_watcher.go:228-261): in
+    a running loop whose ledger has seen every part, the cycle after a
+    part is rewritten in place re-ships exactly that part, together
+    with a file that landed in the same interval; the untouched parts'
+    sink files stay as they were."""
+    data = str(tmp_path / "data")
+    write_fixture(data, 300, seed=43, n_files=3)
+    conf = _conf(data, tmp_path / "w")
+    stop = threading.Event()
+    cycles, untouched = [], []
+
+    def wait(timeout):
+        cycles.append(timeout)
+        if len(cycles) == 2:  # the ledger has seen every part's stat
+            untouched.extend(_sink_files(conf, "part-0000[02]"))
+            pq.write_table(generate_sequences(150, seed=88),
+                           os.path.join(conf.input_path, "part-00001.parquet"))
+            pq.write_table(generate_sequences(50, seed=90),
+                           os.path.join(conf.input_path, "part-99999.parquet"))
+        return len(cycles) == 3
+
+    stop.wait = wait
+    follow(spark, conf, 0, stop)
+    fire = spark.read.parquet(conf.sinks[1].path)
+    # 100 + 150 (rewritten, re-shipped) + 100 + 50 (new)
+    assert fire.count() == 400
+    assert fire.filter(F.col("part") == "part-00001").count() == 150
+    assert fire.filter(F.col("part") == "part-99999").count() == 50
+    assert untouched and _sink_files(conf, "part-0000[02]") == untouched
+    assert len(mf.committed_parts(conf.manifest_dir, "firehose")) == 4
+    # manifest recommitted with the new identity: batch validate is clean
+    assert validate_manifest(conf) == []
+
+
 def test_rescan_clears_a_sink_the_rewrite_no_longer_routes_to(spark, tmp_path):
     """A part rewritten with rows that route none to `errors` must
-    leave no `errors` rows for it: the rescan ships the part to every
-    sink, and a sink that stages nothing is cleared."""
+    leave no `errors` rows for it: the re-ship covers every sink, and
+    a sink that stages nothing is cleared."""
     import pyarrow.compute as pc
-
-    from llogtail_spark.pipeline import validate_manifest
-    from llogtail_spark.streaming.tail import rescan_rewritten
 
     t = generate_sequences(150, seed=91)
     quiet = t.filter(pc.less(pc.list_element(t["tokens"], 0), 4))  # below ERROR
-    conf = _stream_then_rewrite(spark, tmp_path, 45, quiet)
+    conf = _ship_then_rewrite(spark, tmp_path, 45, quiet)
 
-    assert rescan_rewritten(spark, conf) == ["part-00001"]
+    _one_cycle(spark, conf)
     err = spark.read.parquet(conf.sinks[0].path)
     assert err.filter(F.col("part") == "part-00001").count() == 0
     fire = spark.read.parquet(conf.sinks[1].path)
@@ -308,13 +256,10 @@ def test_rescan_of_a_truncated_part_clears_every_sink(spark, tmp_path):
     """llogtail's copytruncate case: a part truncated to an empty
     parquet file is cleared from every sink and re-committed with its
     new (empty) identity."""
-    from llogtail_spark.pipeline import validate_manifest
-    from llogtail_spark.streaming.tail import rescan_rewritten
-
     empty = generate_sequences(10, seed=92).slice(0, 0)
-    conf = _stream_then_rewrite(spark, tmp_path, 46, empty)
+    conf = _ship_then_rewrite(spark, tmp_path, 46, empty)
 
-    assert rescan_rewritten(spark, conf) == ["part-00001"]
+    _one_cycle(spark, conf)
     for rule in conf.sinks:
         sink = spark.read.parquet(rule.path)
         assert sink.filter(F.col("part") == "part-00001").count() == 0, rule.name
@@ -324,17 +269,30 @@ def test_rescan_of_a_truncated_part_clears_every_sink(spark, tmp_path):
     assert validate_manifest(conf) == []
 
 
-def test_stream_refuses_a_held_workdir(spark, tmp_path):
-    """A stream on a workdir another run holds fails loudly, naming
-    the workdir, and writes no sink and no manifest entry."""
-    from pyspark.errors import StreamingQueryException
+def test_follow_refuses_a_rewrite_with_an_unreadable_footer(spark, tmp_path):
+    """A part rewritten mid-write (no parquet footer yet) fails the
+    cycle, naming the part, and its committed rows stay shipped."""
+    data = str(tmp_path / "data")
+    write_fixture(data, 300, seed=48, n_files=3)
+    conf = _conf(data, tmp_path / "w")
+    _one_cycle(spark, conf)
+    shipped = _sink_files(conf)
+    bad = os.path.join(data, "sequences", "part-00001.parquet")
+    with open(bad, "wb") as f:
+        f.write(b"PAR1")
+    with pytest.raises(ValueError, match=re.escape(bad)):
+        _one_cycle(spark, conf)
+    assert _sink_files(conf) == shipped
+    assert len(mf.read_all(conf.manifest_dir)) == 6
 
+
+def test_stream_refuses_a_held_workdir(spark, tmp_path):
+    """A loop on a workdir another run holds fails loudly, naming the
+    workdir, and writes no sink and no manifest entry."""
     data = str(tmp_path / "data")
     write_fixture(data, 200, seed=47, n_files=2)
     conf = _conf(data, tmp_path / "w")
-    with mf.lease(conf.workdir):
-        q = stream_pipeline(spark, conf)
-        with pytest.raises(StreamingQueryException, match=re.escape(conf.workdir)):
-            q.awaitTermination(120)
+    with mf.lease(conf.workdir), pytest.raises(RuntimeError, match=re.escape(conf.workdir)):
+        _one_cycle(spark, conf)
     assert not any(os.path.exists(r.path) for r in conf.sinks)
     assert mf.read_all(conf.manifest_dir) == []
