@@ -199,38 +199,67 @@ def _ship_then_rewrite(spark, tmp_path, seed, table):
     return conf
 
 
-def test_rescan_rewritten_reships_only_changed_part(spark, tmp_path):
-    """llogtail's in-place rotation branch (log_watcher.go:228-261): in
-    a running loop whose ledger has seen every part, the cycle after a
-    part is rewritten in place re-ships exactly that part, together
-    with a file that landed in the same interval; the untouched parts'
-    sink files stay as they were."""
-    data = str(tmp_path / "data")
-    write_fixture(data, 300, seed=43, n_files=3)
-    conf = _conf(data, tmp_path / "w")
+def _follow_landing_after_second_cycle(spark, conf, land) -> list[str]:
+    """Run three cycles of a loop; after the second (the ledger has
+    seen every part's stat) call `land()`. Returns the sink files of
+    the parts `land` leaves alone, as they were before it ran."""
     stop = threading.Event()
     cycles, untouched = [], []
 
     def wait(timeout):
         cycles.append(timeout)
-        if len(cycles) == 2:  # the ledger has seen every part's stat
+        if len(cycles) == 2:
             untouched.extend(_sink_files(conf, "part-0000[02]"))
-            pq.write_table(generate_sequences(150, seed=88),
-                           os.path.join(conf.input_path, "part-00001.parquet"))
-            pq.write_table(generate_sequences(50, seed=90),
-                           os.path.join(conf.input_path, "part-99999.parquet"))
+            land()
         return len(cycles) == 3
 
     stop.wait = wait
     follow(spark, conf, 0, stop)
+    assert untouched
+    return untouched
+
+
+def test_rescan_rewritten_reships_only_changed_part(spark, tmp_path):
+    """llogtail's in-place rotation branch (log_watcher.go:228-261): in
+    a running loop whose ledger has seen every part, the cycle after a
+    part is rewritten in place re-ships exactly that part; the
+    untouched parts' sink files stay as they were."""
+    data = str(tmp_path / "data")
+    write_fixture(data, 300, seed=43, n_files=3)
+    conf = _conf(data, tmp_path / "w")
+    untouched = _follow_landing_after_second_cycle(spark, conf, lambda: pq.write_table(
+        generate_sequences(150, seed=88), os.path.join(conf.input_path, "part-00001.parquet")))
+    fire = spark.read.parquet(conf.sinks[1].path)
+    assert fire.count() == 350  # 100 + 150 rewritten + 100 untouched
+    assert fire.filter(F.col("part") == "part-00001").count() == 150
+    assert _sink_files(conf, "part-0000[02]") == untouched
+    # manifest recommitted with the new identity: batch validate is clean
+    assert validate_manifest(conf) == []
+
+
+def test_stream_rescan_reships_rewritten_during_stream(spark, tmp_path):
+    """A cycle of a running loop that discovers a NEW file also
+    re-ships a file rewritten in place in the same interval: the loop
+    covers rotation without waiting for a batch run."""
+    data = str(tmp_path / "data")
+    write_fixture(data, 300, seed=44, n_files=3)
+    conf = _conf(data, tmp_path / "w")
+
+    def land():  # one file is rewritten in place AND one new file lands
+        pq.write_table(generate_sequences(150, seed=89),
+                       os.path.join(conf.input_path, "part-00001.parquet"))
+        pq.write_table(generate_sequences(50, seed=90),
+                       os.path.join(conf.input_path, "part-99999.parquet"))
+
+    untouched = _follow_landing_after_second_cycle(spark, conf, land)
     fire = spark.read.parquet(conf.sinks[1].path)
     # 100 + 150 (rewritten, re-shipped) + 100 + 50 (new)
     assert fire.count() == 400
     assert fire.filter(F.col("part") == "part-00001").count() == 150
     assert fire.filter(F.col("part") == "part-99999").count() == 50
-    assert untouched and _sink_files(conf, "part-0000[02]") == untouched
+    assert _sink_files(conf, "part-0000[02]") == untouched
+    # every shipped row is committed and consistent
     assert len(mf.committed_parts(conf.manifest_dir, "firehose")) == 4
-    # manifest recommitted with the new identity: batch validate is clean
     assert validate_manifest(conf) == []
 
 
