@@ -5,9 +5,10 @@
 
 Reads the pipeline config (LogConf analog), runs one batch pass with
 skip-committed resume, prints per-sink metrics, exits. Re-running the
-same command after a crash resumes exactly. The reference's poller
-(log_watcher.go:167-212) is `pipeline.follow`: `--validate` and a
-run, on an interval.
+same command after a crash resumes exactly, and re-ships the parts
+rewritten in place since their commit. The reference's poller
+(log_watcher.go:167-212) is `pipeline.follow`: this run, on an
+interval.
 """
 
 from __future__ import annotations
@@ -17,7 +18,7 @@ import json
 import sys
 
 from llogtail_spark.config import load_config
-from llogtail_spark.pipeline import run_pipeline, validate_manifest
+from llogtail_spark.pipeline import run_pipeline
 from llogtail_spark.session import get_spark
 
 
@@ -29,10 +30,6 @@ def main(argv: list[str] | None = None) -> int:
                          "runs dedup->decontaminate->quality->sample->"
                          "pack->ship with per-stage resume instead of the "
                          "log pipeline)")
-    ap.add_argument("--validate", action="store_true",
-                    help="first drop manifest entries whose input part is "
-                         "gone or changed, so the run reprocesses them "
-                         "(the corpus pipeline always validates)")
     args = ap.parse_args(argv)
     if bool(args.conf) == bool(args.corpus_conf):
         ap.error("exactly one of --conf / --corpus-conf is required")
@@ -60,8 +57,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     conf = load_config(args.conf)
-    if args.validate:
-        validate_manifest(conf)
     spark = get_spark("llogtail_spark.cli")
     result = run_pipeline(spark, conf)
     report = {

@@ -24,9 +24,9 @@ parquet file. A run stages every
 pending (sink, part), reconciles the staged readback against the
 write's own observation, ships, then commits the manifest under
 `workdir`, holding `workdir`'s lease throughout (`manifest.py`). A
-run does not re-check committed parts against their inputs; that is
-`pipeline.validate_manifest`, run first by `cli --validate`. Every
-sink holds parquet `part=<id>` dirs in one layout
+run first re-checks committed parts against their inputs, so a part
+rewritten in place ships again and a deleted part's records are
+dropped. Every sink holds parquet `part=<id>` dirs in one layout
 (`pipeline.STAGE_OPTS`). The grok must capture `level`, `component`
 and `msg` and compile under RE2, or the conf refuses to build.
 """

@@ -555,7 +555,7 @@ def _run(spark: SparkSession, conf: CorpusConf,
         os.makedirs(conf.out_path, exist_ok=True)
     committed = mf.ship_and_commit(
         conf.manifest_dir,
-        [mf.lineage_entry("packed", p, stats.get((p,)), identity,
+        [mf.lineage_entry("packed", p, stats.get((p,)), (*identity, ""),
                           conf.committed_at)
          for p in pending],
         _copy_shard,

@@ -39,7 +39,8 @@ Reference semantics being preserved:
 - validateCpt: (dev, inode) match and offset <= size
   (utils.go:128-133)  ->  validate(): recorded input identity must
   match the recomputed one; mismatch means the input changed under us
-  -> reprocess from scratch.
+  -> reprocess from scratch. The log plan recomputes it only for a
+  part whose stat moved off the record's `in_stat`.
 
 At cluster scale the manifest is metadata-sized (one tiny JSON per
 input file per sink), read once on the driver at job start — the
@@ -77,13 +78,15 @@ class ManifestEntry:
     row_count: int  # rows shipped to this sink from this partition
     tok_total: int
     checksum: int  # order-insensitive BIT_XOR(xxhash64(doc_id, tokens)) of shipped rows
-    watermark_offset: int  # input rows consumed (all-or-nothing per partition)
     committed_at: str  # injected by caller, never wall-clock in tests
     # identity of the INPUT partition at commit time — what validate()
     # compares, exactly as validateCpt checks file identity rather
     # than shipped bytes (utils.go:128-133)
     in_row_count: int = 0
     in_checksum: int = 0
+    # the input part's `reader.file_stat`, taken before its footer was
+    # read: a plan reads the footer only when the stat moved
+    in_stat: str = ""
 
 
 @dataclass
@@ -335,19 +338,19 @@ def write_reconciled(
 
 
 def lineage_entry(sink: str, part: str, stats: Row | None,
-                  identity: tuple[int, int] | None,
+                  identity: tuple[int, int, str],
                   committed_at: str) -> ManifestEntry:
     """The record for one shipped partition: its readback lineage
-    (zeros when nothing was staged for it) and the input identity it
-    was computed from."""
-    in_rows, in_ck = identity or (0, 0)
+    (zeros when nothing was staged for it) and the input identity
+    (rows, checksum, stat) it was computed from."""
+    in_rows, in_ck, in_stat = identity
     return ManifestEntry(
         sink=sink, part=part,
         row_count=int(stats["rows"]) if stats else 0,
         tok_total=int(stats["tok_total"]) if stats else 0,
         checksum=int(stats["checksum"]) if stats else 0,
-        watermark_offset=int(in_rows), committed_at=committed_at,
-        in_row_count=int(in_rows), in_checksum=int(in_ck),
+        committed_at=committed_at,
+        in_row_count=int(in_rows), in_checksum=int(in_ck), in_stat=in_stat,
     )
 
 

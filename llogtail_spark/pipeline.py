@@ -10,15 +10,19 @@ un-consumed bytes.
 A run has two parts:
 - the plan (`_run`): ONE driver-side input listing
   (`reader.list_parts`, no Spark job) and ONE manifest read, shared by
-  every sink's pending set and the metrics; footer identities only for
-  the pending parts, so a run with nothing pending starts no Spark job.
-  Re-validating committed parts against changed inputs is a separate
-  call, `validate_manifest` (`cli --validate`);
+  the re-check of committed parts, every sink's pending set and the
+  metrics. The re-check (validateCpt, utils.go:128-133) stats every
+  listed part; a part whose stat moved off its records' `in_stat` has
+  its footer identity read, and its records are dropped (re-shipped in
+  this run) if the identity changed, or re-committed with the new stat
+  if not; the records of an unlisted part are dropped. Footers are
+  otherwise read only for pending parts, once each, so a run with
+  nothing pending starts no Spark job;
 - the core (`stage_and_ship`), the package's one writer of log-sink
   lineage.
 
 The live tail, `follow`, is llogtail's poller (log_watcher.go:167-212):
-`validate_manifest` then `run_pipeline`, on an interval.
+`run_pipeline` on an interval.
 
 The core follows `manifest.py`'s commit protocol, shared with the
 corpus pipeline, and its caller holds the workdir lease:
@@ -67,7 +71,7 @@ import functools
 import os
 import shutil
 import threading
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -114,49 +118,14 @@ def _prepare(spark: SparkSession, conf: PipelineConf, files: list[str]) -> DataF
     return df
 
 
-def validate_manifest(conf: PipelineConf, ledger: dict | None = None) -> list[str]:
-    """Drop the manifest entries whose input part is gone or changed
-    (validateCpt analog, utils.go:128-133), so the next run reprocesses
-    them; returns them as 'sink/part'. Holds the workdir lease. Only
-    committed parts whose (mtime_ns, size) differs from `ledger`
-    ({part: stat}, updated in place) have their identity recomputed
-    from the parquet footer (no scan, no Spark job)."""
-    ledger = {} if ledger is None else ledger
-    with mf.lease(conf.workdir):
-        entries = mf.read_all(conf.manifest_dir)
-        if not entries:
-            return []
-        parts = reader.list_parts(conf.input_path)
-        stats = {}
-        for p in {e.part for e in entries} & parts.keys():
-            st = os.stat(parts[p])  # the watcher's (dev, inode, size) check, utils.go:128-133
-            stats[p] = (st.st_mtime_ns, st.st_size)
-        live = reader.files_identity(
-            {p: parts[p] for p, st in stats.items() if ledger.get(p) != st})
-        stale = []
-        for e in entries:
-            got = live.get(e.part)
-            if e.part not in parts or (got is not None and not mf.validate(e, *got)):
-                mf.invalidate(conf.manifest_dir, e.sink, e.part)
-                stale.append(f"{e.sink}/{e.part}")
-        for p in ledger.keys() - parts.keys():
-            del ledger[p]
-        # stats predate the footer reads: a later rewrite is seen next cycle
-        ledger.update((p, stats[p]) for p in live)
-        return stale
-
-
 def follow(spark: SparkSession, conf: PipelineConf, interval_s: float,
            stop: threading.Event) -> None:
-    """llogtail's live loop (log_watcher.go:167-212): each cycle drops
-    the entries of parts rewritten in place (`validate_manifest`),
-    ships new and dropped parts (`run_pipeline`), then waits
-    `interval_s`, until `stop` is set; a set `stop` runs one cycle. The
-    stat ledger lives for the loop, so an idle cycle reads no footer
-    and starts no Spark job. A failed cycle raises."""
-    ledger: dict[str, tuple[int, int]] = {}
+    """llogtail's live loop (log_watcher.go:167-212): each cycle is one
+    `run_pipeline` (which re-ships new, rewritten and dropped parts),
+    then a wait of `interval_s`, until `stop` is set; a set `stop` runs
+    one cycle. An idle cycle reads no footer and starts no Spark job.
+    A failed cycle raises."""
     while True:
-        validate_manifest(conf, ledger)
         run_pipeline(spark, conf)
         if stop.wait(interval_s):
             return
@@ -201,9 +170,25 @@ def run_pipeline(
 def _run(spark: SparkSession, conf: PipelineConf,
          failpoint: Failpoint | None) -> RunResult:
     # --- the plan: ONE driver-side listing and ONE manifest read,
-    # shared by every sink's pending set and the metrics
+    # shared by the re-check, every sink's pending set and the metrics
     parts = reader.list_parts(conf.input_path)  # {part: file}
     entries = mf.read_all(conf.manifest_dir)
+    # --- re-check committed parts (validateCpt, utils.go:128-133):
+    # footer identity (driver-side parallel footer reads, no scan, no
+    # Spark job) only where the stat, taken first, moved off the record
+    stat = {p: reader.file_stat(f) for p, f in parts.items()}
+    identity = reader.files_identity({e.part: parts[e.part] for e in entries
+                                      if e.part in parts and e.in_stat != stat[e.part]})
+    kept = []
+    for e in entries:
+        if e.in_stat != stat.get(e.part):
+            if e.part not in identity or not mf.validate(e, *identity[e.part]):
+                mf.invalidate(conf.manifest_dir, e.sink, e.part)  # changed or deleted
+                continue
+            e = replace(e, in_stat=stat[e.part])  # touch, chmod, an older record
+            mf.commit(conf.manifest_dir, e)
+        kept.append(e)
+    entries = kept
     pending: dict[str, list[str]] = {}
     skipped: dict[str, list[str]] = {}
     for rule in conf.sinks:
@@ -216,14 +201,13 @@ def _run(spark: SparkSession, conf: PipelineConf,
         return RunResult(processed={r.name: [] for r in conf.sinks},
                          skipped=skipped, metrics=None)
     files = {p: parts[p] for p in union_parts}
-    # --- input-partition identity from parquet FOOTER metadata only
-    # (driver-side parallel footer reads, no scan, no Spark job) —
-    # the validateCpt analog (utils.go:128-133).
-    identity = reader.files_identity(files)
-
-    committed = stage_and_ship(spark, conf, files, identity, pending, failpoint)
+    identity.update(reader.files_identity({p: f for p, f in files.items()
+                                           if p not in identity}))
+    committed = stage_and_ship(
+        spark, conf, files, {p: (*identity[p], stat[p]) for p in files},
+        pending, failpoint)
     entries += [e for es in committed.values() for e in es]
-    metrics = _metrics_from_manifest(spark, conf, entries, live_parts=set(parts))
+    metrics = _metrics_from_manifest(spark, conf, entries)
     return RunResult(
         processed={s: [e.part for e in es] for s, es in committed.items()},
         skipped=skipped, metrics=metrics)
@@ -231,12 +215,13 @@ def _run(spark: SparkSession, conf: PipelineConf,
 
 def stage_and_ship(
     spark: SparkSession, conf: PipelineConf,
-    files: dict[str, str], identity: dict[str, tuple[int, int]],
+    files: dict[str, str], identity: dict[str, tuple[int, int, str]],
     pending: dict[str, list[str]], failpoint: Failpoint | None = None,
 ) -> dict[str, list[mf.ManifestEntry]]:
     """The one writer of log-sink lineage: stage, reconcile, ship and
     commit `pending` ({sink: [part]}) from `files` ({part: file}),
-    recording each part's input `identity` ({part: (rows, checksum)}).
+    recording each part's input `identity` ({part: (rows, checksum,
+    stat)}).
     The caller holds the workdir lease. Before the first Spark job the
     sink paths' `_owner` files are checked (`claim_sinks`), so a run
     refused by another workdir starts no job and leaves no staging; the
@@ -292,7 +277,7 @@ def stage_and_ship(
         todo = pending[rule.name]
         committed[rule.name] = [
             mf.lineage_entry(rule.name, p, stats.get((rule.name, p)),
-                             identity.get(p), conf.committed_at)
+                             identity[p], conf.committed_at)
             for p in todo
         ]
         mf.ship_and_commit(
@@ -351,7 +336,6 @@ def _ship_part(staging: str, rule, p: str) -> None:
 
 def _metrics_from_manifest(
     spark: SparkSession, conf: PipelineConf, entries: list[mf.ManifestEntry],
-    live_parts: set[str],
 ) -> DataFrame:
     """Per-sink rollups derived from the lineage manifest `entries` (as
     read at the start of the run plus this run's commits) — zero data
@@ -363,14 +347,13 @@ def _metrics_from_manifest(
     would re-read the entire table just to report metrics)."""
     from llogtail_spark.operators.aggregate import BYTES_PER_TOKEN
 
-    # scope to THIS pipeline's sinks and the CURRENT input partitions:
-    # a shared/stale manifest dir may hold entries for removed sink
-    # rules or deleted input parts, which are lineage history, not
-    # current-run metrics
+    # scope to THIS pipeline's sinks: a shared/stale manifest dir may
+    # hold entries for removed sink rules, which are lineage history,
+    # not current-run metrics (the plan already dropped deleted parts)
     live_sinks = {r.name for r in conf.sinks}
     per_sink: dict[str, dict[str, int]] = {}
     for e in entries:
-        if e.sink not in live_sinks or e.part not in live_parts:
+        if e.sink not in live_sinks:
             continue
         m = per_sink.setdefault(
             e.sink, {"row_count": 0, "tok_total": 0, "checksum": 0, "n_parts": 0}

@@ -186,6 +186,14 @@ def file_identity(path: str) -> tuple[int, int]:
     return int(md.num_rows), zlib.crc32(blob)
 
 
+def file_stat(path: str) -> str:
+    """'inode:size:ctime_ns' of one input file — the watcher's stat
+    check (utils.go:128-133). ctime, not mtime: every write moves it,
+    also a same-size rewrite whose mtime was restored (cp -p, rsync -a)."""
+    st = os.stat(path)
+    return f"{st.st_ino}:{st.st_size}:{st.st_ctime_ns}"
+
+
 def files_identity(files: dict[str, str]) -> dict[str, tuple[int, int]]:
     """{part: (row_count, checksum)} via parallel footer reads."""
     with ThreadPoolExecutor(max_workers=16) as ex:

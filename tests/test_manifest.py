@@ -7,8 +7,7 @@ from llogtail_spark import manifest as mf
 def _entry(sink="s", part="p-0", rc=10, cks=123, irc=20, icks=456):
     return mf.ManifestEntry(
         sink=sink, part=part, row_count=rc, tok_total=100, checksum=cks,
-        watermark_offset=irc, committed_at="1970-01-01T00:00:00Z",
-        in_row_count=irc, in_checksum=icks,
+        committed_at="1970-01-01T00:00:00Z", in_row_count=irc, in_checksum=icks,
     )
 
 
@@ -120,8 +119,8 @@ def test_entry_filenames_unambiguous(tmp_path):
     distinct entries (the old '__' separator collided them onto one
     file, each commit orphaning the other)."""
     d = str(tmp_path / "m")
-    e1 = mf.ManifestEntry("a__b", "c", 1, 1, 1, 1, "t")
-    e2 = mf.ManifestEntry("a", "b__c", 2, 2, 2, 2, "t")
+    e1 = mf.ManifestEntry("a__b", "c", 1, 1, 1, "t")
+    e2 = mf.ManifestEntry("a", "b__c", 2, 2, 2, "t")
     mf.commit(d, e1)
     mf.commit(d, e2)
     got = {(e.sink, e.part) for e in mf.read_all(d)}

@@ -6,16 +6,21 @@ Oracle: pure pandas recompute from the seeded generator (conftest),
 never Spark."""
 
 import glob
+import json
 import os
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from llogtail_spark import cli
 from llogtail_spark import manifest as mf
 from llogtail_spark.config import PipelineConf
+from llogtail_spark.generate import generate_sequences, write_fixture
 from llogtail_spark.operators.route import SinkRule
-from llogtail_spark.pipeline import read_sink, run_pipeline, validate_manifest
+from llogtail_spark.pipeline import read_sink, run_pipeline
+from llogtail_spark.sources import reader
 
 
 def make_conf(data_dir, workdir) -> PipelineConf:
@@ -142,15 +147,127 @@ def test_crash_resume_effectively_once(spark, data_dir, oracle_pdf, tmp_path, st
 
 
 def test_validate_detects_changed_input(spark, data_dir, tmp_path):
+    """A record whose stat and identity both differ from its part's
+    (the input changed under it) ships that part again; the stat alone
+    moves the footer read, the identity compare decides."""
     conf = make_conf(data_dir, tmp_path / "w4")
     run_pipeline(spark, conf)
-    # tamper one entry's recorded input identity -> stale
     e = [x for x in mf.read_all(conf.manifest_dir) if x.sink == "errors"][0]
-    mf.commit(conf.manifest_dir, mf.ManifestEntry(**{**e.__dict__, "in_checksum": 1}))
-    stale = validate_manifest(conf)
-    assert stale == [f"errors/{e.part}"]
+    mf.commit(conf.manifest_dir,
+              mf.ManifestEntry(**{**e.__dict__, "in_checksum": 1, "in_stat": "0:0:0"}))
     res = run_pipeline(spark, conf)
-    assert res.processed["errors"] == [e.part]
+    assert res.processed == {"errors": [e.part], "warnings": [], "firehose": []}
+
+
+def _small_run(spark, tmp_path, seed):
+    """A committed run over 3 parts of 100 rows each."""
+    data = str(tmp_path / "data")
+    write_fixture(data, 300, seed=seed, n_files=3)
+    conf = make_conf(data, tmp_path / "w")
+    run_pipeline(spark, conf)
+    return conf
+
+
+def _footer_reads(monkeypatch) -> list[str]:
+    """The parts whose footers are read from now on, in read order."""
+    reads: list[str] = []
+    real = reader.file_identity
+    monkeypatch.setattr(reader, "file_identity",
+                        lambda p: (reads.append(reader.part_of(p)), real(p))[1])
+    return reads
+
+
+def _idle(conf) -> dict[str, list[str]]:
+    return {r.name: [] for r in conf.sinks}
+
+
+def test_a_touched_part_is_footer_checked_once_and_not_reshipped(
+        spark, tmp_path, monkeypatch, jobs_in):
+    """A stat-only change (touch) reads the part's footer once, finds
+    its identity unchanged and re-commits its records with the new
+    stat: nothing ships, no Spark job starts, and the next run reads
+    no footer."""
+    conf = _small_run(spark, tmp_path, 51)
+    reads = _footer_reads(monkeypatch)
+    part = os.path.join(conf.input_path, "part-00001.parquet")
+    os.utime(part)
+    with jobs_in(f"touch-{tmp_path}") as jobs:
+        res = run_pipeline(spark, conf)
+    assert res.processed == _idle(conf)
+    assert reads == ["part-00001"] and jobs == [0]
+    assert {e.in_stat for e in mf.read_all(conf.manifest_dir)
+            if e.part == "part-00001"} == {reader.file_stat(part)}
+    reads.clear()
+    assert run_pipeline(spark, conf).processed == _idle(conf)
+    assert reads == []
+
+
+def test_a_record_without_a_stat_is_footer_checked_once_and_recommitted(
+        spark, tmp_path, monkeypatch):
+    """A record written before records carried `in_stat` (and with the
+    old `watermark_offset` key) loads, has its part's footer read once
+    for all its sinks, and is re-committed with the stat, not
+    re-shipped."""
+    conf = _small_run(spark, tmp_path, 52)
+    for path in glob.glob(os.path.join(conf.manifest_dir, "*.json")):
+        with open(path) as f:
+            d = json.load(f)
+        d["watermark_offset"] = d["in_row_count"]
+        del d["in_stat"]
+        with open(path, "w") as f:
+            json.dump(d, f)
+    reads = _footer_reads(monkeypatch)
+    assert run_pipeline(spark, conf).processed == _idle(conf)
+    assert sorted(reads) == ["part-00000", "part-00001", "part-00002"]
+    parts = reader.list_parts(conf.input_path)
+    assert all(e.in_stat == reader.file_stat(parts[e.part])
+               for e in mf.read_all(conf.manifest_dir))
+    reads.clear()
+    assert run_pipeline(spark, conf).processed == _idle(conf)
+    assert reads == []
+
+
+def test_a_deleted_part_loses_its_records(spark, tmp_path):
+    """A part deleted from the input drops out of the manifest in the
+    next plain run (validateCpt: the checkpoint's file is gone)."""
+    conf = _small_run(spark, tmp_path, 54)
+    os.remove(os.path.join(conf.input_path, "part-00001.parquet"))
+    assert run_pipeline(spark, conf).processed == _idle(conf)
+    assert {e.part for e in mf.read_all(conf.manifest_dir)} == {"part-00000", "part-00002"}
+
+
+def test_cli_round_trip_reships_only_a_rewritten_part(spark, tmp_path, monkeypatch, capsys):
+    """`cli --conf` twice: the second run skips every part. After one
+    part is rewritten in place, a third run processes exactly it."""
+    data = str(tmp_path / "data")
+    write_fixture(data, 300, seed=55, n_files=3)
+    wd = str(tmp_path / "w")
+    path = str(tmp_path / "pipeline.json")
+    with open(path, "w") as f:
+        json.dump({"input_path": os.path.join(data, "sequences"),
+                   "lookup_path": os.path.join(data, "lookup_sources.parquet"),
+                   "workdir": wd,
+                   "sinks": [{"name": "errors", "predicate": "level_num >= 40",
+                              "path": os.path.join(wd, "out/errors")},
+                             {"name": "firehose", "predicate": "true",
+                              "path": os.path.join(wd, "out/firehose")}]}, f)
+    monkeypatch.setattr(cli, "get_spark", lambda name: spark)
+
+    def run() -> dict:
+        assert cli.main(["--conf", path]) == 0
+        return json.loads(capsys.readouterr().out.splitlines()[-1])
+
+    assert run()["processed"] == {"errors": 3, "firehose": 3}
+    again = run()
+    assert (again["processed"], again["skipped"]) == ({"errors": 0, "firehose": 0},
+                                                      {"errors": 3, "firehose": 3})
+    pq.write_table(generate_sequences(150, seed=56),
+                   os.path.join(data, "sequences", "part-00001.parquet"))
+    third = run()
+    assert (third["processed"], third["skipped"]) == ({"errors": 1, "firehose": 1},
+                                                      {"errors": 2, "firehose": 2})
+    fire = next(m for m in third["metrics"] if m["sink"] == "firehose")
+    assert fire["row_count"] == 350  # 100 + 150 rewritten + 100
 
 
 def test_zero_match_input_raises(spark, tmp_path):

@@ -12,7 +12,13 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from llogtail_spark.sources.reader import file_identity, files_identity, list_parts, read_files
+from llogtail_spark.sources.reader import (
+    file_identity,
+    file_stat,
+    files_identity,
+    list_parts,
+    read_files,
+)
 
 
 def _write(path, ids, toks):
@@ -36,6 +42,20 @@ def test_identity_stable_across_rewrites(tmp_path):
     rc2, ck2 = file_identity(p)
     assert (rc1, ck1) == (rc2, ck2)
     assert rc1 == 2
+
+
+def test_a_same_size_rewrite_with_its_mtime_restored_changes_the_stat(tmp_path):
+    """The stat that gates a footer re-check moves on every write: a
+    rewrite in place with the same size and its mtime restored (cp -p,
+    rsync -a) leaves (size, mtime_ns) as they were, but not the stat."""
+    p = str(tmp_path / "a.parquet")
+    _write(p, ["a", "b"], [[1, 2], [3]])
+    before, st = file_stat(p), os.stat(p)
+    _write(p, ["a", "b"], [[1, 2], [3]])
+    os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
+    after = os.stat(p)
+    assert (after.st_size, after.st_mtime_ns) == (st.st_size, st.st_mtime_ns)
+    assert file_stat(p) != before
 
 
 def test_identity_detects_row_count_change(tmp_path):

@@ -3,8 +3,9 @@
 Mirrors the reference's watcher tests (log_watcher_test.go:115-287):
 register -> discover existing files -> new file appears -> only the
 new data flows -> a file rewritten in place is shipped again -> a
-restart resumes from the manifest. Each cycle is `validate_manifest`
-then `run_pipeline`; a stop event that is already set runs one cycle."""
+restart resumes from the manifest. Each cycle is one `run_pipeline`,
+whose plan re-checks the committed parts; a stop event that is
+already set runs one cycle."""
 
 import contextlib
 import glob
@@ -20,7 +21,7 @@ from llogtail_spark import manifest as mf
 from llogtail_spark.config import PipelineConf
 from llogtail_spark.generate import generate_sequences, write_fixture
 from llogtail_spark.operators.route import SinkRule
-from llogtail_spark.pipeline import follow, validate_manifest
+from llogtail_spark.pipeline import follow, run_pipeline
 from llogtail_spark.sources import reader
 
 
@@ -45,6 +46,13 @@ def _stopped() -> threading.Event:
 
 def _one_cycle(spark, conf) -> None:
     follow(spark, conf, 0, _stopped())
+
+
+def _assert_idle(spark, conf) -> None:
+    """A further run finds every committed part unchanged: it ships
+    nothing."""
+    res = run_pipeline(spark, conf)
+    assert res.processed == {r.name: [] for r in conf.sinks}
 
 
 def _sink_files(conf, part="*") -> list[str]:
@@ -106,20 +114,23 @@ def test_follow_restart_does_not_duplicate_rows(spark, tmp_path):
 
 def test_stream_manifest_validates_clean(spark, tmp_path):
     """Entries committed by the loop carry the SAME input-identity
-    definition validate_manifest recomputes (footer metadata) —
-    otherwise every shipped partition looks stale."""
+    definition the plan recomputes (footer metadata) — otherwise every
+    shipped partition looks stale once its stat moves."""
     data = str(tmp_path / "data")
     write_fixture(data, 300, seed=7, n_files=2)
     conf = _conf(data, tmp_path / "wv")
     _one_cycle(spark, conf)
     assert len(mf.read_all(conf.manifest_dir)) == 4  # 2 sinks x 2 parts
-    assert validate_manifest(conf) == []  # nothing stale
+    for f in reader.list_parts(conf.input_path).values():
+        os.utime(f)  # move every stat, so the plan compares footers
+    _assert_idle(spark, conf)  # nothing stale
 
 
 def test_stream_identity_work_is_per_batch_not_per_table(spark, tmp_path, monkeypatch, jobs_in):
     """A cycle reads footers only of the parts that are pending or
-    whose stat the ledger has not seen: an idle cycle with a warm
-    ledger reads no footer and starts no Spark job."""
+    whose stat moved off their records: each new part's footer is read
+    once, by the cycle that ships it, and an idle cycle reads no
+    footer and starts no Spark job."""
     data = str(tmp_path / "data")
     write_fixture(data, 600, seed=31, n_files=3)
     conf = _conf(data, tmp_path / "w")
@@ -151,21 +162,18 @@ def test_stream_identity_work_is_per_batch_not_per_table(spark, tmp_path, monkey
     follow(spark, conf, 0, stop)
     first = ["part-00000", "part-00001", "part-00002"]
     assert per_cycle == [first,  # pending: shipped
-                         first,  # committed, stat not seen yet
+                         [],  # committed, stats unchanged
                          ["part-99999"],  # the new pending part
-                         ["part-99999"],  # its first stat check
-                         []]  # idle, warm ledger
+                         [],
+                         []]  # idle
     assert idle_jobs == [[0]]
 
 
 def test_inplace_rotation_batch_detects(spark, tmp_path):
     """llogtail's live loop detects in-place rotation of a file it
-    already tailed (log_watcher.go:228-261). The batch path's identity
-    validation (validate_manifest with no ledger + parquet footer
-    identity, `cli --validate`) detects the replacement and the next
-    run reprocesses exactly that partition."""
-    from llogtail_spark.pipeline import run_pipeline
-
+    already tailed (log_watcher.go:228-261). A plain batch run's plan
+    sees the part's stat move, compares its parquet footer identity and
+    reprocesses exactly that partition."""
     data = str(tmp_path / "data")
     write_fixture(data, 300, seed=21, n_files=3)
     conf = _conf(data, tmp_path / "w")
@@ -175,10 +183,8 @@ def test_inplace_rotation_batch_detects(spark, tmp_path):
     # rotation: the SAME path is rewritten in place with new content
     pq.write_table(generate_sequences(150, seed=77),
                    os.path.join(data, "sequences", "part-00001.parquet"))
-    stale = validate_manifest(conf)
-    assert sorted(stale) == ["errors/part-00001", "firehose/part-00001"]
     res = run_pipeline(spark, conf)
-    assert res.processed["firehose"] == ["part-00001"]
+    assert res.processed == {"errors": ["part-00001"], "firehose": ["part-00001"]}
     assert sorted(res.skipped["firehose"]) == ["part-00000", "part-00002"]
     fire2 = spark.read.parquet(conf.sinks[1].path)
     assert fire2.count() == 350  # 100 + 100 untouched + 150 rotated
@@ -200,8 +206,8 @@ def _ship_then_rewrite(spark, tmp_path, seed, table):
 
 
 def _follow_landing_after_second_cycle(spark, conf, land) -> list[str]:
-    """Run three cycles of a loop; after the second (the ledger has
-    seen every part's stat) call `land()`. Returns the sink files of
+    """Run three cycles of a loop; after the second (every part
+    committed with its stat) call `land()`. Returns the sink files of
     the parts `land` leaves alone, as they were before it ran."""
     stop = threading.Event()
     cycles, untouched = [], []
@@ -221,7 +227,7 @@ def _follow_landing_after_second_cycle(spark, conf, land) -> list[str]:
 
 def test_rescan_rewritten_reships_only_changed_part(spark, tmp_path):
     """llogtail's in-place rotation branch (log_watcher.go:228-261): in
-    a running loop whose ledger has seen every part, the cycle after a
+    a running loop that has committed every part, the cycle after a
     part is rewritten in place re-ships exactly that part; the
     untouched parts' sink files stay as they were."""
     data = str(tmp_path / "data")
@@ -233,8 +239,8 @@ def test_rescan_rewritten_reships_only_changed_part(spark, tmp_path):
     assert fire.count() == 350  # 100 + 150 rewritten + 100 untouched
     assert fire.filter(F.col("part") == "part-00001").count() == 150
     assert _sink_files(conf, "part-0000[02]") == untouched
-    # manifest recommitted with the new identity: batch validate is clean
-    assert validate_manifest(conf) == []
+    # manifest recommitted with the new identity: a further run is idle
+    _assert_idle(spark, conf)
 
 
 def test_stream_rescan_reships_rewritten_during_stream(spark, tmp_path):
@@ -260,7 +266,7 @@ def test_stream_rescan_reships_rewritten_during_stream(spark, tmp_path):
     assert _sink_files(conf, "part-0000[02]") == untouched
     # every shipped row is committed and consistent
     assert len(mf.committed_parts(conf.manifest_dir, "firehose")) == 4
-    assert validate_manifest(conf) == []
+    _assert_idle(spark, conf)
 
 
 def test_rescan_clears_a_sink_the_rewrite_no_longer_routes_to(spark, tmp_path):
@@ -278,7 +284,7 @@ def test_rescan_clears_a_sink_the_rewrite_no_longer_routes_to(spark, tmp_path):
     assert err.filter(F.col("part") == "part-00001").count() == 0
     fire = spark.read.parquet(conf.sinks[1].path)
     assert fire.filter(F.col("part") == "part-00001").count() == quiet.num_rows
-    assert validate_manifest(conf) == []
+    _assert_idle(spark, conf)
 
 
 def test_rescan_of_a_truncated_part_clears_every_sink(spark, tmp_path):
@@ -295,7 +301,7 @@ def test_rescan_of_a_truncated_part_clears_every_sink(spark, tmp_path):
     got = [e for e in mf.read_all(conf.manifest_dir) if e.part == "part-00001"]
     assert sorted(e.sink for e in got) == ["errors", "firehose"]
     assert all(e.in_row_count == 0 and e.row_count == 0 for e in got)
-    assert validate_manifest(conf) == []
+    _assert_idle(spark, conf)
 
 
 def test_follow_refuses_a_rewrite_with_an_unreadable_footer(spark, tmp_path):
