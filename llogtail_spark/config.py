@@ -25,8 +25,8 @@ pending (sink, part), reconciles the staged readback against the
 write's own observation, ships, then commits the manifest under
 `workdir`, holding `workdir`'s lease throughout (`manifest.py`). A
 run first re-checks committed parts against their inputs, so a part
-rewritten in place ships again and a deleted part's records are
-dropped. Every sink holds parquet `part=<id>` dirs in one layout
+rewritten in place ships again and a deleted part leaves every sink,
+then its records are dropped. Every sink holds parquet `part=<id>` dirs in one layout
 (`pipeline.STAGE_OPTS`). The grok must capture `level`, `component`
 and `msg` and compile under RE2, or the conf refuses to build.
 """

@@ -573,14 +573,15 @@ def _run(spark: SparkSession, conf: CorpusConf,
 
 def _metrics(spark: SparkSession, conf: CorpusConf) -> DataFrame:
     """Per-shard rollups straight from the lineage manifest — zero
-    data scans (the pipeline._metrics_from_manifest discipline)."""
+    data scans, and a local relation, so collecting them starts no
+    Spark job (the pipeline._metrics_from_manifest discipline)."""
     rows = [
         (e.part, e.row_count, e.tok_total, e.checksum)
         for e in mf.read_all(conf.manifest_dir)
         if e.sink == "packed"
     ]
-    return spark.createDataFrame(
-        sorted(rows),
+    return mf.records_frame(
+        spark, sorted(rows),
         "shard string, row_count long, tok_total long, checksum long")
 
 

@@ -6,6 +6,8 @@ pattern strings (`%{LOGLEVEL:level} %{WORD:component} ...`) into
 ordinary Python regexes with named groups, which the vectorized parse
 stage (operators/parse.py) applies with Arrow's `pc.extract_regex`
 (RE2) — one C++ pass per Arrow batch, no per-row Python.
+`token_layout` recognizes the patterns that match tokens one by one,
+which the parse stage runs on token ids without decoding any text.
 
 Only the pattern-compilation logic lives here so it is trivially
 unit-testable without Spark.
@@ -29,6 +31,11 @@ BASE_PATTERNS: dict[str, str] = {
     "UUID": r"[0-9a-fA-F]{8}(?:-[0-9a-fA-F]{4}){3}-[0-9a-fA-F]{12}",
 }
 
+# base patterns whose every match is a non-empty run of non-space
+# characters: in text made of words joined by single spaces, such a
+# capture between two spaces (or a space and an anchor) is one word
+TOKEN_PATTERNS = frozenset({"WORD", "NOTSPACE", "INT", "NUMBER", "LOGLEVEL", "IP", "UUID"})
+
 _GROK_REF = re.compile(r"%\{(\w+)(?::(\w+))?\}")
 
 
@@ -46,3 +53,25 @@ def compile_grok(pattern: str) -> re.Pattern:
         return f"(?P<{field}>{body})" if field else f"(?:{body})"
 
     return re.compile(_GROK_REF.sub(sub, pattern))
+
+
+def token_layout(pattern: str) -> tuple[list[tuple[str, str]], str | None] | None:
+    """The word-by-word layout of a token-aligned grok: `^`, named
+    `TOKEN_PATTERNS` captures separated by single spaces, an optional
+    ` %{GREEDYDATA:<field>}` tail, then `$`.
+
+    On text made of non-empty words without spaces or newlines joined
+    by single spaces, such a pattern matches iff word i fully matches
+    capture i, and the word count equals the capture count (no tail)
+    or exceeds it (tail). Returns ([(field, capture regex)] by word
+    position, the tail's field or None), or None for any other pattern.
+    """
+    if not (pattern.startswith("^") and pattern.endswith("$")):
+        return None
+    refs = [_GROK_REF.fullmatch(p) for p in pattern[1:-1].split(" ")]
+    if not all(r and r.group(2) for r in refs):
+        return None
+    tail = refs.pop().group(2) if refs[-1].group(1) == "GREEDYDATA" else None
+    if not refs or any(r.group(1) not in TOKEN_PATTERNS for r in refs):
+        return None
+    return [(r.group(2), BASE_PATTERNS[r.group(1)]) for r in refs], tail

@@ -63,8 +63,10 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass
 from typing import Callable, Iterable
 
-from pyspark.sql import DataFrame, Observation, Row
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # renames/copies of distinct partition dirs are independent metadata
 # ops; at 10^6 input partitions a serial driver loop is the bottleneck
@@ -352,6 +354,17 @@ def lineage_entry(sink: str, part: str, stats: Row | None,
         committed_at=committed_at,
         in_row_count=int(in_rows), in_checksum=int(in_ck), in_stat=in_stat,
     )
+
+
+def records_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """`rows` (rollups of lineage records) as a DataFrame of the `ddl`
+    schema over a local relation built from Arrow: collecting it starts
+    no Spark job and no Python worker, where a DataFrame made from the
+    tuples themselves is a Python RDD whose collect starts both."""
+    schema = StructType.fromDDL(ddl)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.table([pa.array(c) for c in cols], names=schema.names)
+    return spark.createDataFrame(table, schema)
 
 
 def ship_and_commit(

@@ -15,9 +15,10 @@ A run has two parts:
   listed part; a part whose stat moved off its records' `in_stat` has
   its footer identity read, and its records are dropped (re-shipped in
   this run) if the identity changed, or re-committed with the new stat
-  if not; the records of an unlisted part are dropped. Footers are
-  otherwise read only for pending parts, once each, so a run with
-  nothing pending starts no Spark job;
+  if not; an unlisted (deleted) part's dir is removed from every sink,
+  then its records are dropped. Footers are otherwise read only for
+  pending parts, once each, so a run with nothing pending starts no
+  Spark job;
 - the core (`stage_and_ship`), the package's one writer of log-sink
   lineage.
 
@@ -179,6 +180,15 @@ def _run(spark: SparkSession, conf: PipelineConf,
     stat = {p: reader.file_stat(f) for p, f in parts.items()}
     identity = reader.files_identity({e.part: parts[e.part] for e in entries
                                       if e.part in parts and e.in_stat != stat[e.part]})
+    # a deleted part's rows leave every sink before its records go, so
+    # each sink keeps one clean run's content (a crash in between
+    # leaves records that the next plan drops the same way)
+    gone = sorted({e.part for e in entries if e.part not in parts})
+    if gone:
+        claim_sinks(conf, check_only=True)
+    for p in gone:
+        for rule in conf.sinks:
+            _clear_part(rule, p)
     kept = []
     for e in entries:
         if e.in_stat != stat.get(e.part):
@@ -322,16 +332,19 @@ def _ship_part(staging: str, rule, p: str) -> None:
     staged rows clears any stale sink data from a crashed earlier
     attempt so sink == staged truth."""
     src_dir = os.path.join(staging, f"sink={rule.name}", f"part={p}")
-    dst_dir = os.path.join(rule.path, f"part={p}")
+    _clear_part(rule, p)
     if os.path.isdir(src_dir):
         os.makedirs(rule.path, exist_ok=True)
-        shutil.rmtree(dst_dir, ignore_errors=True)
+        dst_dir = os.path.join(rule.path, f"part={p}")
         try:
             os.rename(src_dir, dst_dir)
         except OSError:  # cross-device: copy fallback
             shutil.move(src_dir, dst_dir)
-    else:
-        shutil.rmtree(dst_dir, ignore_errors=True)
+
+
+def _clear_part(rule, p: str) -> None:
+    """Remove part `p`'s dir from the sink path, if it is there."""
+    shutil.rmtree(os.path.join(rule.path, f"part={p}"), ignore_errors=True)
 
 
 def _metrics_from_manifest(
@@ -339,12 +352,14 @@ def _metrics_from_manifest(
 ) -> DataFrame:
     """Per-sink rollups derived from the lineage manifest `entries` (as
     read at the start of the run plus this run's commits) — zero data
-    scans. The manifest rows ARE the job-3 readback stats (row_count,
-    tok_total, checksum per (sink, part)), so folding them reproduces
-    sink_aggregates' totals exactly (sum/sum/XOR are decomposable)
-    without the full-table re-parse a second aggregation pass would
-    cost (on a 100 TB table with a 1-partition increment, that re-parse
-    would re-read the entire table just to report metrics)."""
+    scans, and a local relation (`mf.records_frame`), so collecting
+    them starts no Spark job. Each record holds its (sink, part)'s
+    readback lineage (row_count, tok_total, checksum) from the run that
+    shipped it, so folding them reproduces sink_aggregates' totals
+    exactly (sum/sum/XOR are decomposable) without the full-table
+    re-parse a second aggregation pass would cost (on a 100 TB table
+    with a 1-partition increment, that re-parse would re-read the
+    entire table just to report metrics)."""
     from llogtail_spark.operators.aggregate import BYTES_PER_TOKEN
 
     # scope to THIS pipeline's sinks: a shared/stale manifest dir may
@@ -367,10 +382,9 @@ def _metrics_from_manifest(
          m["checksum"], m["n_parts"])
         for s, m in sorted(per_sink.items())
     ]
-    return spark.createDataFrame(
-        rows, "sink string, row_count long, tok_total long, byte_total long, "
-              "checksum long, n_parts long",
-    )
+    return mf.records_frame(
+        spark, rows, "sink string, row_count long, tok_total long, byte_total long, "
+                     "checksum long, n_parts long")
 
 
 def read_sink(spark: SparkSession, conf: PipelineConf, sink: str) -> DataFrame:

@@ -431,6 +431,26 @@ def test_empty_funnel_completes(spark, corpus_input, tmp_path):
     assert res2.stages_skipped == list(CORPUS_STAGES)
 
 
+def test_collecting_run_metrics_starts_no_spark_job(
+        spark, golden, corpus_input, tmp_path, jobs_in):
+    """The per-shard metrics are a local relation built from Arrow:
+    collecting them starts no Spark job, and a run that ships no
+    packed shard gets the same schema with 0 rows."""
+    conf = _conf(corpus_input, str(tmp_path))
+    conf.min_toks = 10**6  # nothing survives quality
+    _, res, _ = golden
+    assert res.shards_committed
+    for metrics, n in ((res.metrics, len(res.shards_committed)),
+                       (run_corpus_pipeline(spark, conf).metrics, 0)):
+        assert metrics._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"
+        with jobs_in(f"corpus-metrics-{n}-{tmp_path}") as jobs:
+            rows = metrics.collect()
+        assert jobs == [0]
+        assert len(rows) == n
+        assert metrics.schema.simpleString() == (
+            "struct<shard:string,row_count:bigint,tok_total:bigint,checksum:bigint>")
+
+
 def test_cli_corpus_conf_roundtrip(spark, corpus_input, tmp_path):
     """The --corpus-conf CLI surface: conf JSON -> full run report ->
     resume no-op, matching the library API (in-process main() — the

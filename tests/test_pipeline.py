@@ -236,6 +236,42 @@ def test_a_deleted_part_loses_its_records(spark, tmp_path):
     assert {e.part for e in mf.read_all(conf.manifest_dir)} == {"part-00000", "part-00002"}
 
 
+def test_a_deleted_part_leaves_every_sink(spark, tmp_path):
+    """A deleted part's dir leaves every sink before its records go, so
+    a sink read holds none of its rows and agrees with the metrics of a
+    run that ships a new part (with the dir kept, `read_sink` returned
+    the deleted part's rows that neither the manifest nor the metrics
+    count)."""
+    conf = _small_run(spark, tmp_path, 56)
+    os.remove(os.path.join(conf.input_path, "part-00001.parquet"))
+    pq.write_table(generate_sequences(50, seed=9),
+                   os.path.join(conf.input_path, "part-00003.parquet"))
+    res = run_pipeline(spark, conf)
+    assert res.processed == {r.name: ["part-00003"] for r in conf.sinks}
+    metrics = {r["sink"]: r for r in res.metrics.collect()}
+    for rule in conf.sinks:
+        got = read_sink(spark, conf, rule.name)
+        assert got.filter(F.col("part") == "part-00001").count() == 0, rule.name
+        assert got.count() == metrics[rule.name]["row_count"], rule.name
+        assert metrics[rule.name]["n_parts"] == 3
+        assert not os.path.exists(os.path.join(rule.path, "part=part-00001"))
+
+
+def test_collecting_run_metrics_starts_no_spark_job(spark, data_dir, tmp_path, jobs_in):
+    """The metrics are a local relation built from Arrow: collecting
+    them starts no Spark job (a frame made from a list of tuples is a
+    Python RDD, and its collect started one job and a Python worker)."""
+    res = run_pipeline(spark, make_conf(data_dir, tmp_path / "w"))
+    assert res.metrics._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"
+    with jobs_in(f"metrics-{tmp_path}") as jobs:
+        rows = res.metrics.collect()
+    assert jobs == [0]
+    assert [r["sink"] for r in rows] == ["errors", "firehose", "warnings"]
+    assert res.metrics.schema.simpleString() == (
+        "struct<sink:string,row_count:bigint,tok_total:bigint,byte_total:bigint,"
+        "checksum:bigint,n_parts:bigint>")
+
+
 def test_cli_round_trip_reships_only_a_rewritten_part(spark, tmp_path, monkeypatch, capsys):
     """`cli --conf` twice: the second run skips every part. After one
     part is rewritten in place, a third run processes exactly it."""
