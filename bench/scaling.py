@@ -179,8 +179,9 @@ Method notes:
   xxhash64 over array<int> was ~30x slower); native Arrow UDF parse
   (zero-copy list access, no pandas materialization); fixed-size
   pre-touched ParallelGC heap (G1 commit/uncommit caused page-fault
-  storms); 32 MB input splits (128 MB packing capped scan
-  parallelism); footer-metadata input identity (no identity scan).
+  storms); footer-metadata input identity (no identity scan). Scan
+  splits follow Spark's rule, min(128 MB, bytes per core), which
+  gives at least one split per core on these inputs.
 
 Reproduce: `python bench/scaling.py --rows {args.rows} --n {small} --pairs {args.pairs}`
 """)

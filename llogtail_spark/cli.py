@@ -51,8 +51,7 @@ def main(argv: list[str] | None = None) -> int:
             "shards_skipped": res.shards_skipped,
             "funnel": res.funnel,
             "stage_timings_sec": res.stage_timings,
-            "metrics": [r.asDict() for r in res.metrics.collect()]
-            if res.metrics is not None else [],
+            "metrics": [r.asDict() for r in res.metrics.collect()],
         }, default=str))
         return 0
 
@@ -62,9 +61,7 @@ def main(argv: list[str] | None = None) -> int:
     report = {
         "processed": {k: len(v) for k, v in result.processed.items()},
         "skipped": {k: len(v) for k, v in result.skipped.items()},
-        "metrics": [r.asDict() for r in result.metrics.collect()]
-        if result.metrics is not None
-        else [],
+        "metrics": [r.asDict() for r in result.metrics.collect()],
     }
     print(json.dumps(report, default=str))
     return 0

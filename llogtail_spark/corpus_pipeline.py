@@ -382,7 +382,7 @@ class CorpusRunResult:
     shards_committed: list[str]
     shards_skipped: list[str]
     funnel: dict[str, int]  # stage -> surviving rows
-    metrics: DataFrame | None  # per-shard rollup from the manifest
+    metrics: DataFrame  # per-shard rollup from the manifest
     stage_timings: dict[str, float]  # wall sec per recomputed stage
 
 

@@ -15,7 +15,7 @@ Skew: per-sink aggregation keys on `sink` — very low cardinality, so
 one hot sink (the reference's one noisy log) would bottleneck a
 single reducer. `salted_sink_aggregates` pre-aggregates on
 (sink, salt) then folds salts — two narrow shuffles, no hot reducer.
-AQE skew handling stays on as belt-and-braces (session.py).
+Spark's AQE skew handling (on by default) is belt-and-braces.
 """
 
 from __future__ import annotations

@@ -8,17 +8,20 @@ declarative DAG per run: the listed parquet parts ARE the set of
 un-consumed bytes.
 
 A run has two parts:
-- the plan (`_run`): ONE driver-side input listing
-  (`reader.list_parts`, no Spark job) and ONE manifest read, shared by
-  the re-check of committed parts, every sink's pending set and the
-  metrics. The re-check (validateCpt, utils.go:128-133) stats every
-  listed part; a part whose stat moved off its records' `in_stat` has
-  its footer identity read, and its records are dropped (re-shipped in
-  this run) if the identity changed, or re-committed with the new stat
-  if not; an unlisted (deleted) part's dir is removed from every sink,
-  then its records are dropped. Footers are otherwise read only for
-  pending parts, once each, so a run with nothing pending starts no
-  Spark job;
+- the plan (`_run`): ONE read-only `_owner` check (a sink path whose
+  `_owner` names another workdir is refused before any sink changes),
+  ONE driver-side input listing (`reader.list_parts`, no Spark job) and
+  ONE manifest read, shared by the re-check of committed parts, every
+  sink's pending set and the metrics. The re-check (validateCpt,
+  utils.go:128-133) stats every listed part; a part whose stat moved
+  off its records' `in_stat` has its footer identity read, and its
+  records are dropped (re-shipped in this run) if the identity
+  changed, or re-committed with the new stat if not; an unlisted
+  (deleted) part's dir is removed from every sink, then its records
+  are dropped. Footers are otherwise read only for pending parts, once
+  each, so a run with nothing pending starts no Spark job; it still
+  returns the committed totals (a local relation, no job to build or
+  collect);
 - the core (`stage_and_ship`), the package's one writer of log-sink
   lineage.
 
@@ -27,8 +30,7 @@ The live tail, `follow`, is llogtail's poller (log_watcher.go:167-212):
 
 The core follows `manifest.py`'s commit protocol, shared with the
 corpus pipeline, and its caller holds the workdir lease:
-- check, on the driver before any Spark job: a sink path whose
-  `_owner` names another workdir is refused, and the input and lookup
+- schemas, on the driver before any Spark job: the input and lookup
   get their parquet footers' schemas (`reader.read_files`: no
   inference job; a part unlike the first part is refused);
 - stage: ONE heavy pass — scan -> Arrow parse UDF -> broadcast enrich
@@ -102,7 +104,7 @@ OWNER = "_owner"
 class RunResult:
     processed: dict[str, list[str]]  # sink -> newly committed parts
     skipped: dict[str, list[str]]  # sink -> parts already committed
-    metrics: DataFrame | None  # per-sink aggregates (None if no-op run)
+    metrics: DataFrame  # per-sink aggregates of every committed part
 
 
 def _prepare(spark: SparkSession, conf: PipelineConf, files: list[str]) -> DataFrame:
@@ -170,8 +172,11 @@ def run_pipeline(
 
 def _run(spark: SparkSession, conf: PipelineConf,
          failpoint: Failpoint | None) -> RunResult:
-    # --- the plan: ONE driver-side listing and ONE manifest read,
-    # shared by the re-check, every sink's pending set and the metrics
+    # --- the plan: ONE read-only `_owner` check (local files, before
+    # any sink is cleared or any Spark job starts), then ONE driver-side
+    # listing and ONE manifest read, shared by the re-check, every
+    # sink's pending set and the metrics
+    claim_sinks(conf, check_only=True)
     parts = reader.list_parts(conf.input_path)  # {part: file}
     entries = mf.read_all(conf.manifest_dir)
     # --- re-check committed parts (validateCpt, utils.go:128-133):
@@ -183,10 +188,7 @@ def _run(spark: SparkSession, conf: PipelineConf,
     # a deleted part's rows leave every sink before its records go, so
     # each sink keeps one clean run's content (a crash in between
     # leaves records that the next plan drops the same way)
-    gone = sorted({e.part for e in entries if e.part not in parts})
-    if gone:
-        claim_sinks(conf, check_only=True)
-    for p in gone:
+    for p in sorted({e.part for e in entries if e.part not in parts}):
         for rule in conf.sinks:
             _clear_part(rule, p)
     kept = []
@@ -206,21 +208,19 @@ def _run(spark: SparkSession, conf: PipelineConf,
         pending[rule.name] = sorted(set(parts) - done)
         skipped[rule.name] = sorted(set(parts) & done)
 
+    committed: dict[str, list[mf.ManifestEntry]] = {r.name: [] for r in conf.sinks}
     union_parts = sorted({p for ps in pending.values() for p in ps})
-    if not union_parts:
-        return RunResult(processed={r.name: [] for r in conf.sinks},
-                         skipped=skipped, metrics=None)
-    files = {p: parts[p] for p in union_parts}
-    identity.update(reader.files_identity({p: f for p, f in files.items()
-                                           if p not in identity}))
-    committed = stage_and_ship(
-        spark, conf, files, {p: (*identity[p], stat[p]) for p in files},
-        pending, failpoint)
-    entries += [e for es in committed.values() for e in es]
-    metrics = _metrics_from_manifest(spark, conf, entries)
+    if union_parts:
+        files = {p: parts[p] for p in union_parts}
+        identity.update(reader.files_identity({p: f for p, f in files.items()
+                                               if p not in identity}))
+        committed = stage_and_ship(
+            spark, conf, files, {p: (*identity[p], stat[p]) for p in files},
+            pending, failpoint)
+        entries += [e for es in committed.values() for e in es]
     return RunResult(
         processed={s: [e.part for e in es] for s, es in committed.items()},
-        skipped=skipped, metrics=metrics)
+        skipped=skipped, metrics=_metrics_from_manifest(spark, conf, entries))
 
 
 def stage_and_ship(
@@ -232,12 +232,12 @@ def stage_and_ship(
     commit `pending` ({sink: [part]}) from `files` ({part: file}),
     recording each part's input `identity` ({part: (rows, checksum,
     stat)}).
-    The caller holds the workdir lease. Before the first Spark job the
-    sink paths' `_owner` files are checked (`claim_sinks`), so a run
-    refused by another workdir starts no job and leaves no staging; the
-    claim itself is made after the reconcile, before the first ship,
-    so a run that fails before shipping leaves no sink dir, and one
-    that fails after its claim keeps it. A pending part that routes no
+    The caller holds the workdir lease and has checked the sink paths'
+    `_owner` files (`claim_sinks(check_only=True)`), so a run refused by
+    another workdir starts no job and leaves no staging; the claim
+    itself is made after the reconcile, before the first ship, so a run
+    that fails before shipping leaves no sink dir, and one that fails
+    after its claim keeps it. A pending part that routes no
     row to a sink clears that sink's partition. Returns the committed
     entries per sink, in rule order."""
     bad = [p for p in files if not SAFE_NAME.match(p)]
@@ -247,7 +247,6 @@ def stage_and_ship(
             "escape in partition paths; rename the input files"
         )
 
-    claim_sinks(conf, check_only=True)
     df = _prepare(spark, conf, [files[p] for p in sorted(files)])
 
     # --- stage (the ONE heavy pass): parse -> enrich -> route-explode

@@ -1,9 +1,11 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory.
 
-Local mode here is a stand-in for a multi-executor cluster: every
-config below is chosen to survive a 1000-executor / 100 TB scale-up
-(AQE on, skew-join handling on, Arrow batching sized, dynamic
-partition overwrite for idempotent per-partition commits).
+`get_spark` sets only what the package relies on: the Arrow UDF batch
+bound, dynamic partition overwrite and the v1 committer (idempotent,
+non-duplicating per-partition commits), string partition values, UTC,
+and a fixed pre-touched heap. Everything else, AQE, the runtime bloom
+filter, the parquet codec and scan split sizing
+(min(128 MB, bytes per core)) among it, is Spark's default.
 """
 
 from __future__ import annotations
@@ -48,35 +50,13 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(n))
-        # AQE: runtime coalescing of small shuffle partitions + skew-join
-        # splitting — the batch analog of llogtail's event-storm debounce
-        # (log_watcher.go:17, 272-281): graceful degradation under skew.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Catalyst's runtime bloom filter: prune the big side of a
-        # shuffle join by the filtered build side's keys before the
-        # shuffle — the engine-native form of
-        # operators/joins.bloom_prune_probe, off by default upstream.
-        # Thresholds rarely trigger at test scale; at 10^12 rows this
-        # is the difference between shuffling the fact table and
-        # shuffling the ~matching rows. NOTE: the companion
-        # runtimeFilter.semiJoinReduction rewrite is deliberately NOT
-        # enabled — with it on, the pipeline test suite hangs (>9x
-        # its 1-minute runtime before the harness killed it; the
-        # injected in-subquery duplicates heavy subtrees under the
-        # dynamic-partition write). Bloom-only measured neutral.
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        # Arrow batches are the analog of the 4 MB BlockingBuffer fetch
-        # (buffer.go:31-36): bounded vectorized hand-off to pandas UDFs.
+        # runtimeFilter.semiJoinReduction hung the test suite when on;
+        # Spark 4.0 removed it (setting it is an error), so it stays off.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # the parse UDF's batch bound (the analog of the 4 MB
+        # BlockingBuffer fetch, buffer.go:31-36): a Python worker's peak
+        # memory grows with it, so a cluster default must not raise it
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Split sizing: default 128 MB packing coalesced 64 ~28 MB
-        # input files into ~16 splits, capping a local[32] scan stage
-        # at 16 tasks. 32 MB keeps scan parallelism >= cores on these
-        # inputs while staying a sane row-group multiple at cluster
-        # scale (Iceberg split planning would govern there).
-        .config("spark.sql.files.maxPartitionBytes", "33554432")
         # Idempotent per-partition overwrite: re-shipping a partition on
         # resume replaces rather than duplicates (upgrades llogtail's
         # at-least-once push-then-checkpoint to effectively-once).
@@ -97,7 +77,6 @@ def get_spark(
         # (3 sinks x couple parts) concurrent writers skip the sort.
         .config("spark.sql.maxConcurrentOutputFileWriters", "8")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", mem)
         # Fixed-size, pre-touched ParallelGC heap. Measured on this

@@ -72,11 +72,11 @@ def test_e2e_golden_equality(spark, data_dir, oracle_pdf, tmp_path):
 
 def test_rerun_is_noop(spark, data_dir, tmp_path):
     conf = make_conf(data_dir, tmp_path / "w2")
-    run_pipeline(spark, conf)
+    res1 = run_pipeline(spark, conf)
     res2 = run_pipeline(spark, conf)
     assert all(len(v) == 0 for v in res2.processed.values())
     assert all(len(v) == 6 for v in res2.skipped.values())
-    assert res2.metrics is None
+    assert res2.metrics.collect() == res1.metrics.collect()
 
 
 def test_a_run_with_nothing_pending_starts_no_spark_job(spark, data_dir, tmp_path):
@@ -255,6 +255,25 @@ def test_a_deleted_part_leaves_every_sink(spark, tmp_path):
         assert got.count() == metrics[rule.name]["row_count"], rule.name
         assert metrics[rule.name]["n_parts"] == 3
         assert not os.path.exists(os.path.join(rule.path, "part=part-00001"))
+
+
+def test_a_run_that_only_drops_a_deleted_part_reports_the_new_totals(
+        spark, tmp_path, jobs_in):
+    """A run whose plan only removes a deleted part (nothing pending)
+    returns the metrics of what the sinks now hold, and starts no Spark
+    job to build or collect them (it returned no metrics before, so the
+    CLI printed an empty list)."""
+    conf = _small_run(spark, tmp_path, 57)
+    os.remove(os.path.join(conf.input_path, "part-00001.parquet"))
+    with jobs_in(f"drop-{tmp_path}") as jobs:
+        res = run_pipeline(spark, conf)
+        metrics = {r["sink"]: r for r in res.metrics.collect()}
+    assert jobs == [0]
+    assert res.processed == _idle(conf)
+    assert sorted(metrics) == sorted(r.name for r in conf.sinks)
+    for rule in conf.sinks:
+        assert metrics[rule.name]["row_count"] == read_sink(spark, conf, rule.name).count()
+        assert metrics[rule.name]["n_parts"] == 2
 
 
 def test_collecting_run_metrics_starts_no_spark_job(spark, data_dir, tmp_path, jobs_in):
