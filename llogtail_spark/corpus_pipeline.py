@@ -131,9 +131,11 @@ class CorpusConf:
     text_col: str = "text"
     group_col: str = "lang"
     # near-dup (minhash_lsh_pairs). hash_mode: "xxhash64" is the
-    # engine-native production path (JVM hashes, no Arrow transfer);
-    # "portable" replicates in any ANSI engine — the oracle-paired
-    # query entry uses it so DuckDB can verify the pair set
+    # engine-native production path (JVM grams and hashes, no Arrow
+    # transfer: with it no stage starts a Python worker); "portable"
+    # replicates in any ANSI engine, through one band-key Arrow UDF —
+    # the oracle-paired query entry uses it so DuckDB can verify the
+    # pair set
     hash_mode: str = "xxhash64"
     num_hashes: int = 16
     bands: int = 8

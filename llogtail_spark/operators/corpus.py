@@ -1023,8 +1023,8 @@ def bpe_merges(df: DataFrame, text_col: str = "text",
     touches ~10^6 rows regardless of corpus size. Top-K is a
     TakeOrdered (never a global sort). Zero Python: the per-word pair
     array is a Catalyst transform whose lambda body is one substr per
-    element (O(1) — no re-evaluated regexp, the _word_grams_udf
-    pitfall does not apply).
+    element over the materialized word (O(1) — no regexp re-evaluated
+    per element, the same discipline as dedup.word_grams).
 
     Reference anchor: rolled-up identity counts drive the ship
     decision (collector.go:125-174); here the identity is the

@@ -34,8 +34,8 @@ from pyspark.sql import types as T
 
 # the one whitespace class, spelled explicitly: Java \s includes \x0b
 # but RE2 \s does not, and Python \s matches Unicode whitespace — an
-# explicit class makes Catalyst, DuckDB (RE2) and the Python UDF agree
-# byte-for-byte on word boundaries.
+# explicit class makes Catalyst, DuckDB (RE2) and the portable band-key
+# UDF agree byte-for-byte on word boundaries.
 WS_CLASS = "[ \\t\\n\\r\\f\\x0b]+"
 _WS_RE = re.compile("[ \t\n\r\f\x0b]+")
 
@@ -44,6 +44,35 @@ def normalize_text(col) -> "F.Column":
     """lower + collapse whitespace — the usual near-dup normalizer."""
     c = F.col(col) if isinstance(col, str) else col
     return F.trim(F.regexp_replace(F.lower(c), WS_CLASS, " "))
+
+
+def word_grams(df: DataFrame, text_col: str, n: int, out: str, *,
+               explode: bool = False) -> DataFrame:
+    """df plus column `out`: the word n-grams of normalize_text(text_col),
+    either one row per gram occurrence (explode=True; a NULL text yields
+    no row) or one array per row of its distinct grams in first-
+    occurrence order (NULL for a NULL text). A text of fewer than n
+    words is one gram, and "" is the gram "": the semantics of the
+    DuckDB twins' `range(1, greatest(len(ws) - (n-1), 1) + 1)` over
+    `ws[i:i+n-1]`.
+
+    The word array gets its own projection: the gram expression
+    references it twice (size and the lambda), so CollapseProject keeps
+    the regexp+split below it, evaluated once per row, not once per
+    gram (a HOF lambda body evaluates per element)."""
+    w = f"{out}_w"
+    grams = F.transform(
+        F.sequence(F.lit(1), F.greatest(F.size(w) - (n - 1), F.lit(1))),
+        lambda i: F.concat_ws(" ", F.slice(w, i, n)),
+    )
+    # size(NULL) is NULL and greatest skips it: guard NULL explicitly
+    grams = F.when(F.col(w).isNotNull(), grams)
+    return (
+        df.withColumn(w, F.split(normalize_text(text_col), " "))
+        .withColumn(out, F.explode(grams) if explode
+                    else F.array_distinct(grams))
+        .drop(w)
+    )
 
 
 def exact_dedup(df: DataFrame, key: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -189,14 +218,11 @@ def minhash_lsh_pairs(
             F.posexplode(band_udf(F.col(text_col))).alias("band", "h"),
         )
     elif hash_mode == "xxhash64":
-        # Arrow-UDF grams, not a split/transform expression: HOF
-        # lambda bodies evaluate per ELEMENT, so the expression form
-        # re-ran regexp+split once per shingle (measured 4.3s -> ~1s
-        # at sf0.1). No distinct: the seeded mins are invariant under
-        # duplicate shingles.
-        exploded = df.select(
-            F.col(id_col).alias("_id"),
-            F.explode(_word_grams_udf(shingle_n)(F.col(text_col))).alias("_s"),
+        # no distinct: the seeded mins are invariant under duplicate
+        # shingles
+        exploded = word_grams(
+            df.select(F.col(id_col).alias("_id"), text_col),
+            text_col, shingle_n, "_s", explode=True,
         )
         mins = exploded.groupBy("_id").agg(
             *[F.min(F.xxhash64("_s", F.lit(i))).alias(f"_m{i}") for i in range(num_hashes)]
@@ -276,15 +302,10 @@ def ngram_jaccard(df_pairs: DataFrame, a_col: str, b_col: str, n: int = 3) -> Da
     """Exact word-n-gram Jaccard (x10000, integer) for explicit pairs.
     Expects columns a_col/b_col holding the two texts.
 
-    The shingle arrays come from one Arrow UDF per side (materialized
-    by the eval node) rather than a split/transform expression:
-    array_intersect AND array_union each reference both arrays, and a
-    Catalyst HOF expression would rebuild them — with regexp+split
-    re-run per element — once per reference."""
-    g = _word_grams_udf(n, distinct=True)
-    staged = df_pairs.withColumn("_sa", g(F.col(a_col))).withColumn(
-        "_sb", g(F.col(b_col))
-    )
+    Each side's distinct shingle array is its own projection
+    (word_grams): array_intersect AND array_union reference both, so
+    CollapseProject keeps them materialized once per row."""
+    staged = word_grams(word_grams(df_pairs, a_col, n, "_sa"), b_col, n, "_sb")
     inter = F.size(F.array_intersect(F.col("_sa"), F.col("_sb")))
     union = F.size(F.array_union(F.col("_sa"), F.col("_sb")))
     return staged.withColumn(
@@ -304,14 +325,10 @@ def shingle_containment(
     containment for exactly this case).
 
     Same evaluation discipline as ngram_jaccard: each side's shingle
-    array comes from one Arrow UDF (materialized by the eval node);
-    intersect/size are Catalyst expressions over the materialized
-    arrays. Scale: runs ONLY on LSH candidate pairs (O(R*k) under the
-    representative cap), never all pairs."""
-    g = _word_grams_udf(n, distinct=True)
-    staged = df_pairs.withColumn("_sa", g(F.col(a_col))).withColumn(
-        "_sb", g(F.col(b_col))
-    )
+    array is its own projection (word_grams); intersect/size read the
+    materialized arrays. Scale: runs ONLY on LSH candidate pairs
+    (O(R*k) under the representative cap), never all pairs."""
+    staged = word_grams(word_grams(df_pairs, a_col, n, "_sa"), b_col, n, "_sb")
     inter = F.size(F.array_intersect(F.col("_sa"), F.col("_sb")))
     low = F.least(F.size("_sa"), F.size("_sb"))
     return staged.withColumn(
@@ -631,36 +648,6 @@ def embedding_near_dup_pairs(
     )
 
 
-def _word_grams_udf(n: int, distinct: bool = False):
-    """Arrow UDF: text -> array of word n-gram strings (NOT distinct).
-
-    A UDF rather than a Catalyst split/transform expression because
-    expressions in a HOF lambda body are re-evaluated PER ELEMENT:
-    `transform(idx, i -> concat_ws(slice(split(regexp(text)),i,n)))`
-    re-runs the regexp+split once per gram — measured ~50x per doc and
-    ~5s of a 4.6s query at sf0.1. The eval node materializes the gram
-    array once per row. Normalization is byte-identical to
-    normalize_text / the SQL twins (same explicit whitespace class).
-    asNondeterministic bars constraint filters from re-inlining it
-    (same rationale as similarity.make_bucket_udf)."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def grams(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)  # null text -> null array -> explode drops
-                continue
-            ws = _WS_RE.sub(" ", t.lower()).strip(" ").split(" ")
-            k = max(len(ws) - (n - 1), 1)
-            gs = [" ".join(ws[i:i + n]) for i in range(k)]
-            # dict.fromkeys == array_distinct: dedup, first-occurrence order
-            out.append(list(dict.fromkeys(gs)) if distinct else gs)
-        return pd.Series(out)
-
-    return grams.asNondeterministic()
-
-
 def contamination_hits(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -685,18 +672,12 @@ def contamination_hits(
     n-grams, filtered to >= min_hits. Reference anchor:
     cheap-identity filtering before shipping (utils.go:36-46).
     """
-    # Arrow-UDF grams + countDistinct: the Catalyst HOF form re-ran
-    # regexp+split per gram (see _word_grams_udf), and a per-row
-    # array_distinct is an O(n_grams^2) string scan — the hash agg
-    # dedups for free instead
-    grams = _word_grams_udf(n)
-    d = docs.select(
-        F.col(id_col),
-        F.explode(grams(F.col(text_col))).alias("_g"),
-    )
-    b = benchmark.select(
-        F.explode(grams(F.col(text_col))).alias("_g")
-    ).distinct()
+    # exploded grams + countDistinct: a per-row array_distinct is an
+    # O(n_grams^2) string scan — the hash agg dedups for free instead
+    d = word_grams(docs.select(id_col, text_col), text_col, n, "_g",
+                   explode=True)
+    b = word_grams(benchmark.select(text_col), text_col, n, "_g",
+                   explode=True).select("_g").distinct()
     return (
         d.join(F.broadcast(b), "_g")
         .groupBy(id_col)

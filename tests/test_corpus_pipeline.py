@@ -143,6 +143,37 @@ def test_funnel_semantics(spark, golden):
     assert bad == []
 
 
+@pytest.mark.parametrize("hash_mode,n_evals", [("xxhash64", 0), ("portable", 1)])
+def test_the_funnel_plans_no_python_eval(spark, corpus_input, tmp_path,
+                                         monkeypatch, hash_mode, n_evals):
+    """With the default conf no stage plans a Python eval, so the
+    funnel starts no Python worker; only the portable near-dup hash
+    (the oracle-paired mode) plans its band-key UDF, in one frame: the
+    cut candidate-pair edges, whose union of the two pair directions
+    prints the pair subtree twice. The plans counted are every stage
+    frame and every frame a stage cuts (the near-dup candidate pairs
+    are computed behind such a cut)."""
+    from llogtail_spark.operators import ckpt
+
+    plans: list[str] = []
+    cut = ckpt.checkpoint
+
+    def recording_cut(df, eager=False):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return cut(df, eager=eager)
+
+    monkeypatch.setattr(ckpt, "checkpoint", recording_cut)
+    conf = _conf(corpus_input, str(tmp_path))
+    conf.hash_mode = hash_mode
+    docs = spark.read.parquet(corpus_input)
+    frames = corpus_stages(docs.filter(F.col("doc_id") % 50 != 0),
+                           docs.filter(F.col("doc_id") % 50 == 0), conf)
+    assert list(frames) == list(CORPUS_STAGES)
+    plans += [df._jdf.queryExecution().executedPlan().toString()
+              for df in frames.values()]
+    assert sum("EvalPython" in p for p in plans) == n_evals
+
+
 def test_params_crc_is_pinned():
     """Stage params fingerprints are stored in every stage manifest: a
     change to their values would recompute every committed chain."""

@@ -329,6 +329,64 @@ def test_normalize_whitespace_class_consistent_with_duckdb(spark):
     assert spark_norm["n"] == duck_norm == py_norm == "a b c d e"
 
 
+def _reference_grams(t, n, distinct):
+    """The pure-Python word n-gram loop the dedup operators used to
+    run in a pandas UDF: the reference word_grams must equal."""
+    import re
+
+    if t is None:
+        return None
+    ws = re.sub("[ \t\n\r\f\x0b]+", " ", t.lower()).strip(" ").split(" ")
+    k = max(len(ws) - (n - 1), 1)
+    gs = [" ".join(ws[i:i + n]) for i in range(k)]
+    # dict.fromkeys == array_distinct: dedup, first-occurrence order
+    return list(dict.fromkeys(gs)) if distinct else gs
+
+
+def test_word_grams_match_the_python_reference(spark):
+    """word_grams (JVM expressions) equals the Python reference row for
+    row: NULL, "", whitespace-only, docs shorter than n, every
+    whitespace-class character, NBSP (not whitespace here) and the
+    case-mapping edge cases, for n=3 and 5, as exploded rows and as
+    distinct arrays."""
+    import random
+    from collections import Counter
+
+    from llogtail_spark.operators.dedup import word_grams
+
+    ws_chars = [" ", "\t", "\n", "\r", "\f", "\x0b"]
+    # dotted capital I, capital and final sigma, sharp s, titlecase dz,
+    # the fi ligature, the Kelvin sign, NBSP inside a word
+    words = ["a", "B", "cd", "cd", "\u0130", "\u039f\u0394\u039f\u03a3",
+             "\u03a3", "\u00df", "\u01c5", "\ufb01", "\u212a",
+             "x\u00a0y", "\u00a0", "STRASSE", "dup", "dup"]
+    texts = [None, "", " ", "\t\n\r\f\x0b", "    ", "one", "one two",
+             "one two three four", "\u039f\u0394\u039f\u03a3. \u03a3\u03a3",
+             "\u0130stanbul \u01c5emal \ufb01le \u212aelvin Stra\u00dfe"]
+    texts += [f"{c}a{c}b{c}c{c}d{c}e{c}" for c in ws_chars]
+    rng = random.Random(7)
+    for _ in range(3000):
+        text = ""
+        for _ in range(rng.randrange(0, 12)):
+            text += rng.choice(words) + "".join(
+                rng.choice(ws_chars) for _ in range(rng.randrange(0, 3)))
+        texts.append(text)
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, text string")
+    for n in (3, 5):
+        arrays = word_grams(df, "text", n, "_dist")
+        exploded = word_grams(df, "text", n, "_g", explode=True)
+        got_rows = Counter((r["id"], r["_g"]) for r in exploded.collect())
+        want_rows = Counter(
+            (i, g) for i, t in enumerate(texts)
+            for g in _reference_grams(t, n, False) or [])
+        assert got_rows == want_rows, n
+        diffs = [
+            (r["id"], r["text"]) for r in arrays.collect()
+            if r["_dist"] != _reference_grams(r["text"], n, True)
+        ]
+        assert diffs == [], (n, diffs[:5])
+
+
 def test_resolve_components_nonconvergence_raises(spark):
     """ADVICE r02: exhausting max_iter with labels still moving must
     fail loudly — silently returning unconverged labels under-dedups
@@ -387,11 +445,13 @@ def test_contamination_plan_broadcasts_benchmark(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-    # the gram UDF runs once per side (Arrow eval), and every hash
-    # exchange is benchmark/result-sized (benchmark distinct + the
-    # two-phase per-doc distinct count over matching rows); the
+    # no Python; the grams' regexp+split is planned once per side
+    # (word_grams' own projection, not inlined per gram), and every
+    # hash exchange is benchmark/result-sized (benchmark distinct +
+    # the two-phase per-doc distinct count over matching rows); the
     # CORPUS scan feeds the broadcast join directly, no corpus shuffle
-    assert plan.count("ArrowEvalPython") == 2
+    assert plan.count("EvalPython") == 0
+    assert plan.count("split(") == 2
     assert plan.count("Exchange hashpartitioning") == 3
 
 

@@ -266,16 +266,18 @@ def test_capped_minhash_single_eval_no_join(spark):
     try:
         for thresh in ("10485760", "-1"):
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-            # both modes now carry exactly ONE Arrow eval: the portable
-            # band-key UDF resp. the shingle-gram UDF (the expression
-            # form re-ran regexp+split per shingle element)
-            for mode, n_eval_want in (("portable", 1), ("xxhash64", 1)):
+            # portable: ONE Arrow eval (the band-key UDF), which
+            # tokenizes in Python. xxhash64: no Python, and the grams'
+            # regexp+split planned once (word_grams' own projection),
+            # not inlined into the per-shingle lambda
+            for mode, n_eval_want, n_split_want in (("portable", 1, 0),
+                                                    ("xxhash64", 0, 1)):
                 df = minhash_lsh_pairs(docs, hash_mode=mode, cap_reps=4)
                 plan = _plan(df)
-                n_eval = plan.count("ArrowEvalPython") + plan.count(
-                    "BatchEvalPython"
-                )
+                n_eval = plan.count("EvalPython")
                 assert n_eval == n_eval_want, (mode, thresh, plan[:2000])
+                assert plan.count("split(") == n_split_want, (
+                    mode, thresh, plan[:2000])
                 for join_node in ("SortMergeJoin", "BroadcastHashJoin",
                                   "ShuffledHashJoin", "CartesianProduct",
                                   "BroadcastNestedLoopJoin"):
