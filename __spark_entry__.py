@@ -1898,7 +1898,7 @@ def _q_benford_digits(spark, sf):
 def _q_kn_bigram_lm(spark, sf):
     """Interpolated Kneser-Ney bigram probabilities (D = 1) in x12
     integer fixed point: all four statistics derive from ONE
-    persisted bigram-type table (release_kn_caches() frees it), and
+    lineage-cut bigram-type table (ckpt.checkpoint), and
     the final joins broadcast the 50-row candidate set so nothing
     vocab-sized shuffles after the count stage."""
     from llogtail_spark.operators.corpus import kn_bigram_lm
@@ -2103,8 +2103,8 @@ def _q_source_kl_matrix(spark, sf):
     between source unigram distributions over the shared top-200
     vocabulary, add-one smoothed, in exact integer eighth-bits
     (numerator and denominator ship separately — no engine ever
-    divides). One combinable count; the dense S x V grid persists
-    (both pair-join sides derive from it)."""
+    divides). One combinable count; the dense S x V grid is
+    lineage-cut once (both pair-join sides derive from it)."""
     from llogtail_spark.operators.corpus import source_kl_matrix
 
     return source_kl_matrix(_t(spark, sf, "documents"))

@@ -261,13 +261,9 @@ def stage_quality(df: DataFrame, benchmark: DataFrame,
         dup_fraction_x10000,
         pii_count,
     )
-    from llogtail_spark.operators.dedup import WS_CLASS
+    from llogtail_spark.operators.dedup import tokenize
 
-    toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col(conf.text_col), F.lit(""))),
-                WS_CLASS),
-        lambda x: x != "",
-    )
+    toks = tokenize(conf.text_col)
     txt = F.coalesce(F.col(conf.text_col), F.lit(""))
     pii = (pii_count(txt, EMAIL_RX) + pii_count(txt, IPV4_RX)
            + pii_count(txt, PHONE_RX))

@@ -20,6 +20,7 @@ cross-engine verification and costs nothing when unused.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import functions as F
 
 MOD = 1_000_000_007  # prime, < 2^30
@@ -42,6 +43,27 @@ def char_fold_hash(col) -> "F.Column":
         F.lit(0).cast("long"),
         lambda h, ch: (h * MULT + F.ascii(ch)) % MOD,
     )
+
+
+def char_fold_np(words: list[str]) -> np.ndarray:
+    """char_fold_hash of every word at once, in numpy (the Arrow UDFs'
+    twin): int64 folds of the exact codepoints. Words are visited
+    longest first, so step j touches only the words longer than j:
+    O(total chars), however long the longest word (a base64 blob) is."""
+    lens = np.fromiter(map(len, words), dtype=np.int64, count=len(words))
+    codes = np.frombuffer(
+        "".join(words).encode("utf-32-le"), dtype=np.uint32
+    ).astype(np.int64)
+    order = np.argsort(-lens, kind="stable")
+    starts = (np.cumsum(lens) - lens)[order]
+    # n_active[j] = how many words are longer than j
+    n_active = np.searchsorted(-lens[order], -np.arange(lens.max(initial=0)))
+    h = np.zeros(len(words), dtype=np.int64)
+    for j, n in enumerate(n_active):
+        h[:n] = (h[:n] * MULT + codes[starts[:n] + j]) % MOD
+    out = np.empty_like(h)
+    out[order] = h
+    return out
 
 
 def seeded_hash(h_col, i: int) -> "F.Column":

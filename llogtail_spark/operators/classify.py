@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from llogtail_spark.operators.dedup import WS_CLASS
+from llogtail_spark.operators.dedup import WS_CLASS, tokenize
 
 CLS_B = 4096          # hashed feature buckets
 CLS_SEED_UNI = 21     # hash family member: unigram bucketing
@@ -84,11 +84,7 @@ def quality_classifier(df: DataFrame, text_col: str = "text",
 
     toks = df.select(
         F.col(id_col),
-        F.filter(
-            F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    WS_CLASS),
-            lambda x: x != "",
-        ).alias("t"),
+        tokenize(text_col).alias("t"),
     ).where(F.size("t") > 0)
     th = toks.select(
         id_col,

@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from llogtail_spark.operators.dedup import WS_CLASS
+from llogtail_spark.operators.dedup import WS_CLASS, tokenize
 
 # Chunk width (tokens) used as the "paragraph" unit for boilerplate
 # detection. Real pipelines use newline-split lines (CCNet) or
@@ -46,13 +46,6 @@ from llogtail_spark.operators.dedup import WS_CLASS
 CHUNK_TOKENS = 4
 # A chunk appearing in >= this many distinct documents is boilerplate.
 BOILERPLATE_MIN_DOCS = 3
-
-
-def _tokens(text_col) -> Column:
-    return F.filter(
-        F.split(F.lower(F.coalesce(text_col, F.lit(""))), WS_CLASS),
-        lambda x: x != "",
-    )
 
 
 def doc_chunks(df: DataFrame, text_col: str = "text",
@@ -235,7 +228,7 @@ def token_budget_select(df: DataFrame, text_col: str = "text",
     from llogtail_spark.functions.text import dup_fraction_x10000
     from llogtail_spark.sources.reader import ensure_parallelism
 
-    toks = _tokens(F.col(text_col))
+    toks = tokenize(text_col)
     # tokenize + distinct-count is the heavy stage on every scan of
     # this operator; see doc_chunks on the row-group partition floor
     df = ensure_parallelism(df, id_col)
@@ -403,7 +396,7 @@ def vocab_coverage(df: DataFrame, text_col: str = "text",
     (collector.go:125-174) generalized to per-token-type corpus
     rollups with a coverage CDF.
     """
-    toks = _tokens(F.col(text_col))
+    toks = tokenize(text_col)
     total = df.select(
         F.coalesce(F.sum(F.size(toks)), F.lit(0))
         .cast("long").alias("total_tokens")
@@ -575,7 +568,7 @@ def context_chunks(df: DataFrame, text_col: str = "text",
     from llogtail_spark.functions.portable_hash import char_fold_hash
 
     base = (
-        df.select(F.col(id_col), _tokens(F.col(text_col)).alias("_toks"))
+        df.select(F.col(id_col), tokenize(text_col).alias("_toks"))
         .where(F.size("_toks") > 0)
     )
     starts = F.sequence(
@@ -643,7 +636,7 @@ def token_fertility(df: DataFrame, text_col: str = "text",
             F.count("*").cast("long").alias("n_docs"),
             F.sum(F.length(F.coalesce(F.col(text_col), F.lit(""))))
             .cast("long").alias("char_total"),
-            F.coalesce(F.sum(F.size(_tokens(F.col(text_col)))), F.lit(0))
+            F.coalesce(F.sum(F.size(tokenize(text_col))), F.lit(0))
             .cast("long").alias("tok_total"),
         )
     )
@@ -945,7 +938,7 @@ def oov_rate(df: DataFrame, text_col: str = "text",
     """
     hist = (
         df.select(F.col(key_col),
-                  F.explode(_tokens(F.col(text_col))).alias("token"))
+                  F.explode(tokenize(text_col)).alias("token"))
         .groupBy(key_col, "token")
         .agg(F.count("*").cast("long").alias("_n"))
     )
@@ -1031,7 +1024,7 @@ def bpe_merges(df: DataFrame, text_col: str = "text",
     character pair and the decision is the next merge.
     """
     hist = (
-        df.select(F.explode(_tokens(F.col(text_col))).alias("w"))
+        df.select(F.explode(tokenize(text_col)).alias("w"))
         .groupBy("w")
         .agg(F.count("*").cast("long").alias("_n"))
     )
@@ -1104,7 +1097,7 @@ def corpus_profile(df: DataFrame, text_col: str = "text",
     row/token/byte counts in the committed manifest
     (collector.go:125-174).
     """
-    ntok = F.size(_tokens(F.col(text_col)))
+    ntok = F.size(tokenize(text_col))
     base = df.select(
         F.coalesce(F.col(src_col), F.lit("")).alias("_src"),
         F.coalesce(F.col(lang_col), F.lit("")).alias("_lang"),
@@ -1216,7 +1209,7 @@ def source_entropy(df: DataFrame, text_col: str = "text",
     hist = (
         df.select(
             F.col(group_col).alias("src"),
-            F.explode(_tokens(F.col(text_col))).alias("tok"),
+            F.explode(tokenize(text_col)).alias("tok"),
         )
         .groupBy("src", "tok")
         .agg(F.count("*").cast("long").alias("cnt"))
@@ -1302,7 +1295,7 @@ def token_pmi(df: DataFrame, text_col: str = "text",
     joins on the token key, same correctness); final selection is
     TakeOrderedAndProject, never a global sort of the bigram table.
     """
-    toks = _tokens(F.col(text_col))
+    toks = tokenize(text_col)
     # zip_with over two slices (each argument evaluated once) — the
     # element_at-in-transform form re-inlines the split per element
     # (measured 8x slower; see __spark_entry__._toks_and_grams).
@@ -1415,7 +1408,7 @@ def tfidf_topterms(df: DataFrame, text_col: str = "text",
     broadcast back, and per-source selection via a rank-limit window
     (WindowGroupLimit heaps below the exchange). No global sort.
     """
-    toks = _tokens(F.col(text_col))
+    toks = tokenize(text_col)
     docs_tok = df.select(
         F.col(group_col).alias("src"),
         F.explode(F.array_distinct(toks)).alias("tok"),
@@ -1511,7 +1504,7 @@ def log_templates(df: DataFrame, text_col: str = "text",
     different (source, len) groups — the standard fixed-depth
     simplification, stated rather than hidden.
     """
-    toks = _tokens(F.col(text_col))
+    toks = tokenize(text_col)
     base = (
         df.select(F.col(group_col).alias("src"), toks.alias("ws"))
         .withColumn("n_tok", F.size("ws").cast("long"))
@@ -1647,7 +1640,7 @@ def bm25_topk(df: DataFrame, phrases: tuple = BM25_PHRASES,
     ships (collector.go:125-174); here the predicate is a relevance
     score and the sink is a curated top-k.
     """
-    toks = _tokens(F.col(text_col))
+    toks = tokenize(text_col)
     totals = df.agg(
         F.count("*").cast("long").alias("_N"),
         F.coalesce(F.sum(F.size(toks)), F.lit(0)).cast("long").alias("_T"),
@@ -1802,7 +1795,7 @@ def unigram_surprisal(df: DataFrame, text_col: str = "text",
     """
     toks = df.select(
         F.col(id_col), F.col(src_col),
-        F.explode(_tokens(F.col(text_col))).alias("token"),
+        F.explode(tokenize(text_col)).alias("token"),
     )
     hist = toks.groupBy("token").agg(F.count("*").alias("_n"))
     vocab = (
@@ -1993,10 +1986,7 @@ def cdc_chunking(df: DataFrame, text_col: str = "text",
     """
     from llogtail_spark.functions.portable_hash import char_fold_hash
 
-    toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), WS_CLASS),
-        lambda x: x != "",
-    )
+    toks = tokenize(text_col)
     base = df.select(F.col(id_col), toks.alias("ws")).filter(
         F.size("ws") > 0
     )
@@ -2130,13 +2120,7 @@ def seq_packing(df: DataFrame, text_col: str = "text",
     """
     toks = df.select(
         F.col(id_col),
-        F.size(
-            F.filter(
-                F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                        WS_CLASS),
-                lambda x: x != "",
-            )
-        ).cast("long").alias("n_tok"),
+        F.size(tokenize(text_col)).cast("long").alias("n_tok"),
         F.conv(
             F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
         ).cast("long").alias("h"),
@@ -2206,29 +2190,6 @@ DUP_WIN = 8  # duplicated-substring window length (tokens)
 _DUP_WIN_UDFS: dict = {}
 
 
-def _char_fold_np(words: list[str]) -> np.ndarray:
-    """fold(chars, 0, (h, c) -> (h*MULT + cp(c)) % MOD) of every word
-    at once. Words are visited longest first, so step j touches only
-    the words longer than j: O(total chars), however long the longest
-    word (a base64 blob) is."""
-    from llogtail_spark.functions import portable_hash as ph
-
-    lens = np.fromiter(map(len, words), dtype=np.int64, count=len(words))
-    codes = np.frombuffer(
-        "".join(words).encode("utf-32-le"), dtype=np.uint32
-    ).astype(np.int64)
-    order = np.argsort(-lens, kind="stable")
-    starts = (np.cumsum(lens) - lens)[order]
-    # n_active[j] = how many words are longer than j
-    n_active = np.searchsorted(-lens[order], -np.arange(lens.max(initial=0)))
-    h = np.zeros(len(words), dtype=np.int64)
-    for j, n in enumerate(n_active):
-        h[:n] = (h[:n] * ph.MULT + codes[starts[:n] + j]) % ph.MOD
-    out = np.empty_like(h)
-    out[order] = h
-    return out
-
-
 def _dup_win_hashes(k: int):
     """Arrow pandas_udf: token array -> struct(wh1, wh2) of the two
     k-window rolling fingerprints (dup_token_spans' scan stage),
@@ -2271,7 +2232,7 @@ def _dup_win_hashes(k: int):
         if ndocs == 0:
             return pd.DataFrame({"wh1": [], "wh2": []})
         nw = np.array([len(d) for d in docs], dtype=np.int64)
-        th = _char_fold_np([w for d in docs for w in d])
+        th = ph.char_fold_np([w for d in docs for w in d])
         th2 = (th * a2 + b2) % M
         # per-doc window starts, flattened: doc d owns nw[d]-k+1
         # windows beginning at its word offset
@@ -2339,11 +2300,7 @@ def dup_token_spans(df: DataFrame, text_col: str = "text",
     """
     toks = df.select(
         F.col(id_col),
-        F.filter(
-            F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    WS_CLASS),
-            lambda x: x != "",
-        ).alias("t"),
+        tokenize(text_col).alias("t"),
         # NULL ids out of scope: first-occurrence = min(id, off) and
         # the engines disagree on NULL ordering
     ).where((F.size("t") >= k) & F.col(id_col).isNotNull())
@@ -2547,11 +2504,7 @@ def dsir_weights(df: DataFrame, target_pred, text_col: str = "text",
     toks = df.select(
         F.col(id_col),
         target_pred.cast("boolean").alias("_is_t"),
-        F.filter(
-            F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    WS_CLASS),
-            lambda x: x != "",
-        ).alias("t"),
+        tokenize(text_col).alias("t"),
     ).where(F.size("t") > 0)
     th = toks.select(
         id_col, "_is_t",
@@ -2671,22 +2624,6 @@ def dsir_weights_sql(target_sql_pred: str, b: int = DSIR_B) -> str:
 KN_TOP = 50          # bigrams reported (by raw count)
 KN_SCALE = 1_000_000  # x6 fixed point; pkn is x12 (term1 and lam*pc)
 
-_KN_CACHES: list = []
-
-
-def release_kn_caches() -> int:
-    """Unpersist every bigram-type relation cached by kn_bigram_lm;
-    returns how many were released (the release_fuzzy_caches
-    discipline)."""
-    n = 0
-    while _KN_CACHES:
-        try:
-            _KN_CACHES.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
 
 def kn_bigram_lm(df: DataFrame, text_col: str = "text",
                  top: int = KN_TOP) -> DataFrame:
@@ -2710,22 +2647,18 @@ def kn_bigram_lm(df: DataFrame, text_col: str = "text",
 
     All four statistics (c2, c1 = sum_w2 c2, N1+(w1 .) = distinct
     followers, N1+(. w2) = distinct predecessors, nbig) derive from
-    the ONE bigram-type table, which is persisted and registered for
-    release_kn_caches() — otherwise each derived agg would re-derive
-    the tokenize+explode subtree (the fuzzy_join lesson). Every agg
+    the ONE bigram-type table, which is lineage-cut (ckpt.checkpoint)
+    — otherwise each derived agg would re-derive the tokenize+explode
+    subtree (the fuzzy_join lesson). Every agg
     is map-side combinable; the final joins broadcast the `top`-row
     candidate set against the token-keyed aggregates, so nothing
     vocab-sized shuffles after the count stage. Output:
     (w1, w2, c2:long, pkn_x12:long), top rows by (c2 DESC, w1, w2).
     """
-    from pyspark import StorageLevel
+    from llogtail_spark.operators.ckpt import checkpoint
 
     toks = df.select(
-        F.filter(
-            F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    WS_CLASS),
-            lambda x: x != "",
-        ).alias("t"),
+        tokenize(text_col).alias("t"),
     ).where(F.size("t") >= 2)
     pairs = toks.select(
         F.explode(
@@ -2738,12 +2671,10 @@ def kn_bigram_lm(df: DataFrame, text_col: str = "text",
             )
         ).alias("p")
     ).select("p.w1", "p.w2")
-    c2 = (
-        pairs.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c2"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    c2 = checkpoint(
+        pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2")),
+        eager=False,
     )
-    _KN_CACHES.append(c2)
     cand = (
         c2.orderBy(F.desc("c2"), F.asc("w1"), F.asc("w2"))
         .limit(top)
@@ -2833,21 +2764,17 @@ def doc_perplexity(df: DataFrame, text_col: str = "text",
     avg_nll_e8:long = floor(nll/n_bi) — the perplexity score; filter
     = drop docs above a threshold).
 
-    Shape: the bigram-type table (persisted, release_kn_caches())
+    Shape: the bigram-type table (lineage-cut, ckpt.checkpoint)
     feeds both the LM statistics and the per-doc join; all joins are
     token-keyed and combinable; per-doc bigram multiplicities
     collapse BEFORE the LM join so the join carries bigram TYPES per
     doc, not instances. One per-doc result exchange at the end.
     """
-    from pyspark import StorageLevel
+    from llogtail_spark.operators.ckpt import checkpoint
 
     toks = df.select(
         F.col(id_col).alias("_id"),
-        F.filter(
-            F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    WS_CLASS),
-            lambda x: x != "",
-        ).alias("t"),
+        tokenize(text_col).alias("t"),
     ).where(F.size("t") >= 2)
     dpairs = toks.select(
         "_id",
@@ -2863,18 +2790,16 @@ def doc_perplexity(df: DataFrame, text_col: str = "text",
     ).select("_id", "p.w1", "p.w2")
     # per-doc bigram-type multiplicities (collapse instances early).
     # round 6: dm feeds BOTH the LM-statistics branch (via c2) and
-    # the per-doc scoring join — pin it like c2 so the tokenize +
+    # the per-doc scoring join — cut it like c2 so the tokenize +
     # bigram-explode + (_id, w1, w2) shuffle runs once, not once per
-    # branch (same registry, released via release_kn_caches()).
-    dm = dpairs.groupBy("_id", "w1", "w2").agg(
-        F.count(F.lit(1)).alias("m")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _KN_CACHES.append(dm)
-    c2 = (
-        dm.groupBy("w1", "w2").agg(F.sum("m").alias("c2"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # branch.
+    dm = checkpoint(
+        dpairs.groupBy("_id", "w1", "w2").agg(F.count(F.lit(1)).alias("m")),
+        eager=False,
     )
-    _KN_CACHES.append(c2)
+    c2 = checkpoint(
+        dm.groupBy("w1", "w2").agg(F.sum("m").alias("c2")), eager=False
+    )
     c1 = c2.groupBy("w1").agg(
         F.sum("c2").alias("c1"), F.count(F.lit(1)).alias("nf1")
     )
@@ -3027,21 +2952,6 @@ def categorical_mi_sql(col_a: str = "lang", col_b: str = "source",
 
 KL_VOCAB = 200   # restricted support: top-V global tokens
 
-_KL_CACHES: list = []
-
-
-def release_kl_caches() -> int:
-    """Unpersist every dense-grid relation cached by
-    source_kl_matrix (the release_fuzzy_caches discipline)."""
-    n = 0
-    while _KL_CACHES:
-        try:
-            _KL_CACHES.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
 
 def source_kl_matrix(df: DataFrame, text_col: str = "text",
                      group_col: str = "source",
@@ -3064,19 +2974,19 @@ def source_kl_matrix(df: DataFrame, text_col: str = "text",
     Shape: ONE combinable (source, token) count over the corpus,
     vocabulary restricted by a broadcast top-V semi-join
     (TakeOrderedAndProject — the global vocab is never sorted); the
-    dense S x V grid (dim-sized by construction) is PERSISTED
-    (release_kl_caches()) because both sides of the pair join derive
+    dense S x V grid (dim-sized by construction) is lineage-cut
+    (ckpt.checkpoint) because both sides of the pair join derive
     from it; the pair stage is V*S^2 grid rows — for web-scale S,
     prefilter pairs (e.g. same-language only) before calling.
 
     Output: (src_a, src_b, n_a:long, kl_num_e8:long), one row per
     ORDERED pair a != b.
     """
-    from pyspark import StorageLevel
+    from llogtail_spark.operators.ckpt import checkpoint
 
     toks = df.select(
         F.col(group_col).alias("grp"),
-        F.explode(_tokens(F.col(text_col))).alias("tok"),
+        F.explode(tokenize(text_col)).alias("tok"),
     ).where(F.col("grp").isNotNull())
     cnt = toks.groupBy("grp", "tok").agg(F.count(F.lit(1)).alias("c"))
     vocab = (
@@ -3084,14 +2994,13 @@ def source_kl_matrix(df: DataFrame, text_col: str = "text",
         .orderBy(F.desc("n"), F.asc("tok")).limit(top_v)
         .select("tok")
     )
-    grid = (
+    grid = checkpoint(
         cnt.select("grp").distinct()
         .crossJoin(F.broadcast(vocab))
         .join(cnt, ["grp", "tok"], "left")
-        .select("grp", "tok", F.coalesce(F.col("c"), F.lit(0)).alias("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("grp", "tok", F.coalesce(F.col("c"), F.lit(0)).alias("c")),
+        eager=False,
     )
-    _KL_CACHES.append(grid)
     tot = grid.groupBy("grp").agg(F.sum("c").alias("n"))
     p, q = grid.alias("p"), grid.alias("q")
     pairs = p.join(

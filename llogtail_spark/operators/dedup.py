@@ -46,6 +46,18 @@ def normalize_text(col) -> "F.Column":
     return F.trim(F.regexp_replace(F.lower(c), WS_CLASS, " "))
 
 
+def tokenize(col) -> "F.Column":
+    """The lowercased non-empty words of a text (NULL counts as "") —
+    the one Catalyst tokenizer; the SQL twins spell it
+    `list_filter(string_split_regex(lower(coalesce(text, '')), WS_CLASS),
+    x -> x <> '')`."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.filter(
+        F.split(F.lower(F.coalesce(c, F.lit(""))), WS_CLASS),
+        lambda x: x != "",
+    )
+
+
 def word_grams(df: DataFrame, text_col: str, n: int, out: str, *,
                explode: bool = False) -> DataFrame:
     """df plus column `out`: the word n-grams of normalize_text(text_col),
@@ -93,15 +105,15 @@ def _portable_band_keys_udf(num_hashes: int, bands: int, shingle_n: int):
     """Vectorized Arrow UDF: text -> array<long> of `bands` LSH band
     keys on the portable hash family (functions/portable_hash.py).
 
-    One numpy pass per Arrow batch: codepoint matrix char-fold for all
-    words at once, shingle folds via shifted arrays, seeded mins via
+    One numpy pass per Arrow batch: ph.char_fold_np for all words at
+    once, shingle folds via shifted arrays, seeded mins via
     minimum.reduceat over per-doc segments, band folds vectorized over
     docs. Minhash mins are invariant under duplicate shingles, so no
     distinct step is needed (the SQL twin's list_distinct is a no-op
     for the min too)."""
     from llogtail_spark.functions import portable_hash as ph
 
-    M, MULT, BM = ph.MOD, ph.MULT, ph.BAND_MULT
+    M, BM = ph.MOD, ph.BAND_MULT
     seeds = [ph.seed_mults(i) for i in range(num_hashes)]
     rpb = num_hashes // bands
     P = shingle_n - 1
@@ -116,20 +128,8 @@ def _portable_band_keys_udf(num_hashes: int, bands: int, shingle_n: int):
         if ndocs == 0:
             return pd.Series([], dtype=object)
         nw = np.array([len(w) for w in docs_words], dtype=np.int64)
-        flat_words = [w for ws in docs_words for w in ws]
-        W = len(flat_words)
-        lens = np.fromiter((len(w) for w in flat_words), dtype=np.int64, count=W)
-        # exact codepoints (== ascii()/ord() in the SQL twins)
-        codes = np.frombuffer(
-            "".join(flat_words).encode("utf-32-le"), dtype=np.uint32
-        ).astype(np.int64)
-        ends = np.cumsum(lens)
-        starts = ends - lens
-        h = np.zeros(W, dtype=np.int64)
-        for j in range(int(lens.max()) if W else 0):
-            active = lens > j
-            idx = np.minimum(starts + j, max(len(codes) - 1, 0))
-            h = np.where(active, (h * MULT + codes[idx]) % M, h)
+        h = ph.char_fold_np([w for ws in docs_words for w in ws])
+        W = len(h)
         # per-doc word hashes with `P` zero-pads appended (short docs
         # fold against zeros, matching list_concat(hws, [0,0]))
         doc_starts = np.cumsum(nw) - nw
@@ -750,24 +750,6 @@ def dup_cluster_histogram_sql() -> str:
 FJ_Q = 3          # q-gram width for the edit-distance join
 FJ_MAXDIST = 2    # edit-distance threshold
 
-# prefix relations cached by fuzzy_join (see its docstring); callers
-# that build many fuzzy joins (bench loops) release them when done —
-# the release_bloom_broadcasts() discipline from operators/joins.py
-_FUZZY_CACHES: list = []
-
-
-def release_fuzzy_caches() -> int:
-    """Unpersist every prefix relation cached by fuzzy_join so far;
-    returns how many were released."""
-    n = 0
-    while _FUZZY_CACHES:
-        try:
-            _FUZZY_CACHES.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
 
 def fuzzy_join(df: DataFrame, text_col: str = "text",
                id_col: str = "doc_id", q: int = FJ_Q,
@@ -813,11 +795,9 @@ def fuzzy_join(df: DataFrame, text_col: str = "text",
     rows; texts rejoin by id for the Levenshtein verify, which runs
     only on candidates. No cartesian anywhere; every join is
     equi-keyed and AQE-skew-eligible. The prefix relation is
-    persisted (MEMORY_AND_DISK, lazy — no job at construction): the
-    self-join consumes it twice and re-deriving it (scan + explode +
-    frequency join + window) on both branches measured 5x slower
-    end-to-end at sf0.1; it is registered for release via
-    release_fuzzy_caches() (the release_bloom_broadcasts discipline).
+    lineage-cut (ckpt.checkpoint): the self-join consumes it twice
+    and re-deriving it (scan + explode + frequency join + window) on
+    both branches measured 5x slower end-to-end at sf0.1.
     Mass-duplicate caveat: k exact copies legitimately produce
     k*(k-1)/2 output pairs — run exact_dedup first at scale, as the
     docstring contract.
@@ -846,9 +826,7 @@ def fuzzy_join(df: DataFrame, text_col: str = "text",
         ).alias("gram"),
     )
     freq = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-    from pyspark.storagelevel import StorageLevel
-
-    from llogtail_spark.operators.ckpt import checkpoint, checkpoint_is_reliable
+    from llogtail_spark.operators.ckpt import checkpoint
 
     ranked = (
         grams.join(freq, "gram")
@@ -861,22 +839,8 @@ def fuzzy_join(df: DataFrame, text_col: str = "text",
         .where(F.col("rn") <= p)
         .select("_id", "gram")
     )
-    # the self-join consumes the prefix relation twice; pin it once.
-    # With sc.setCheckpointDir configured the pin is a reliable
-    # checkpoint (survives executor loss — the ckpt.py knob, same
-    # discipline as pagerank/triangle_counts, VERDICT r04 #8); the
-    # local/test default stays a lazy MEMORY_AND_DISK persist released
-    # via release_fuzzy_caches(). Checkpoint FILES are not tracked by
-    # the release registry (ADVICE r05 #3): long-lived sessions that
-    # call fuzzy_join repeatedly under a checkpoint dir should set
-    # spark.cleaner.referenceTracking.cleanCheckpoints=true so the
-    # ContextCleaner deletes each relation's checkpoint files when the
-    # DataFrame is garbage-collected.
-    if checkpoint_is_reliable(ranked):
-        ranked = checkpoint(ranked, eager=False)
-    else:
-        ranked = ranked.persist(StorageLevel.MEMORY_AND_DISK)
-        _FUZZY_CACHES.append(ranked)
+    # the self-join consumes the prefix relation twice; cut it once
+    ranked = checkpoint(ranked, eager=False)
     cand = (
         ranked.alias("a")
         .join(ranked.alias("b"), "gram")

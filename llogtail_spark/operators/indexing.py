@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from llogtail_spark.operators.corpus import _tokens
+from llogtail_spark.operators.dedup import tokenize
 
 POSTINGS_CAP = 10
 INDEX_TOP_TERMS = 20
@@ -70,7 +70,7 @@ def inverted_index(df: DataFrame, text_col: str = "text",
 
     pairs = (
         df.select(F.col(id_col).alias("doc"),
-                  F.explode(_tokens(F.col(text_col))).alias("term"))
+                  F.explode(tokenize(text_col)).alias("term"))
         .distinct()
     )
     counts = pairs.groupBy("term").agg(F.count("*").alias("df"))
@@ -576,7 +576,7 @@ def rrf_fuse(df: DataFrame, terms: tuple = RRF_TERMS,
     tf = (
         df.select(
             F.col(id_col).alias("doc"),
-            F.explode(_tokens(F.col(text_col))).alias("term"),
+            F.explode(tokenize(text_col)).alias("term"),
         )
         .where(F.col("term").isin(*terms) & F.col("doc").isNotNull())
         .groupBy("doc", "term")

@@ -204,27 +204,6 @@ BLOOM_N_HASHES = 8
 # that, skip pruning and let the plain shuffled join run.
 BLOOM_MAX_BUILD_KEYS = 4_000_000
 
-# broadcasts created by bloom_prune_probe, oldest first; see the
-# Lifetime note in its docstring
-_LIVE_BLOOM_BROADCASTS: list = []
-
-
-def release_bloom_broadcasts() -> int:
-    """Destroy every bloom bitset broadcast created so far and return
-    how many were released. Call once the DataFrames returned by
-    `bloom_prune_probe` are done executing — a destroyed broadcast
-    makes any later action on them fail, which is the correct loud
-    behavior for a use-after-release."""
-    n = len(_LIVE_BLOOM_BROADCASTS)
-    for bc in _LIVE_BLOOM_BROADCASTS:
-        try:
-            bc.destroy()
-        except Exception:
-            pass  # already destroyed / context gone — nothing to leak
-    _LIVE_BLOOM_BROADCASTS.clear()
-    return n
-
-
 def _splitmix64(x):
     """Vectorized splitmix64 finalizer (public-domain constants) over
     a np.uint64 array — the per-batch hash the probe-side Arrow UDF
@@ -283,12 +262,11 @@ def bloom_prune_probe(
 
     Lifetime (ADVICE r03): the build-side distinct+collect and the
     Spark broadcast happen EAGERLY here, at DataFrame-construction
-    time — the build cost lands outside any later timed action, and
-    the broadcast lives until released. Every broadcast is tracked in
-    `_LIVE_BLOOM_BROADCASTS`; loops that rebuild the query (bench
-    reps, retries) should call `release_bloom_broadcasts()` once the
-    consuming DataFrames are no longer needed, or executors
-    accumulate one dead bitset per construction.
+    time — the build cost lands outside any later timed action. The
+    returned frame's plan holds the UDF, and the UDF holds the
+    broadcast, so the bitset lives exactly as long as the frame:
+    once it is garbage-collected, Spark's ContextCleaner removes the
+    broadcast from the executors. Nothing needs releasing.
     """
     import numpy as np
 
@@ -317,7 +295,6 @@ def bloom_prune_probe(
             np.uint64(1) << (pos & np.uint64(63)),
         )
     bc = spark.sparkContext.broadcast(bitset)
-    _LIVE_BLOOM_BROADCASTS.append(bc)
 
     @F.pandas_udf("boolean")
     def _might_contain(s):

@@ -302,13 +302,13 @@ def temperature_mixture(df: DataFrame, text_col: str = "text",
     and bp arithmetic run over the dim-sized result (a broadcast
     1-row cross, never a corpus-wide window).
     """
-    from llogtail_spark.operators.corpus import _tokens
+    from llogtail_spark.operators.dedup import tokenize
 
     per = (
         df.groupBy(F.col(source_col).alias("source"))
         .agg(
             F.count("*").cast("long").alias("n_docs"),
-            F.coalesce(F.sum(F.size(_tokens(F.col(text_col)))), F.lit(0))
+            F.coalesce(F.sum(F.size(tokenize(text_col))), F.lit(0))
             .cast("long").alias("tok_total"),
         )
         .withColumn("w", F.floor(F.sqrt(F.col("tok_total"))).cast("long"))

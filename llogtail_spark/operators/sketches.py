@@ -49,7 +49,8 @@ from llogtail_spark.functions.portable_hash import (
     order_hash_sql,
     order_mults,
 )
-from llogtail_spark.operators.dedup import WS_CLASS
+from llogtail_spark.operators.ckpt import checkpoint
+from llogtail_spark.operators.dedup import WS_CLASS, tokenize
 
 KMV_K = 64        # sketch size: rel. error ~ 1/sqrt(K) ~ 12.5%
 KMV_SEED = 5      # order_hash family member (large multiplier: wraps MOD)
@@ -98,12 +99,7 @@ def kmv_distinct(
     """
     toks = df.select(
         F.col(group_col).alias("grp"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), WS_CLASS),
-                lambda x: x != "",
-            )
-        ).alias("tok"),
+        F.explode(tokenize(text_col)).alias("tok"),
     )
     hashed = toks.select(
         "grp", order_hash(_kmv_mix(char_fold_hash(F.col("tok"))), seed).alias("hv")
@@ -166,14 +162,7 @@ def countmin_freq(
     counting discipline compressed to sublinear space.
     """
     spark = df.sparkSession
-    toks = df.select(
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), WS_CLASS),
-                lambda x: x != "",
-            )
-        ).alias("tok")
-    )
+    toks = df.select(F.explode(tokenize(text_col)).alias("tok"))
     # collapse to the vocab-sized token histogram BEFORE hashing: the
     # cell depends only on the token, so sketch[cell] += count is
     # identical to per-instance increments — and the char-fold hash
@@ -340,15 +329,7 @@ def heavy_hitters(df: DataFrame, k: int = HH_K,
     """
     from pyspark.sql import types as T
 
-    tokens = df.select(
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                        WS_CLASS),
-                lambda x: x != "",
-            )
-        ).alias("token")
-    )
+    tokens = df.select(F.explode(tokenize(text_col)).alias("token"))
 
     out_schema = T.StructType([
         T.StructField("token", T.StringType()),   # NULL = partition-total row
@@ -493,13 +474,7 @@ def hll_registers(df: DataFrame, text_col: str = "text",
     commutative, so re-merging a batch's registers is a no-op."""
     toks = df.select(
         F.col(group_col).alias("grp"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                        WS_CLASS),
-                lambda x: x != "",
-            )
-        ).alias("tok"),
+        F.explode(tokenize(text_col)).alias("tok"),
     )
     hv = order_hash(char_fold_hash(F.col("tok")), HLL_SEED)
     hashed = toks.select(
@@ -595,23 +570,6 @@ def hll_distinct_sql(group_col: str = "source") -> str:
 # KMV set algebra (cross-source sketch union / intersection / Jaccard)
 # ---------------------------------------------------------------------------
 
-from pyspark import StorageLevel  # noqa: E402  (section-local dependency)
-
-_KMV_CACHES: list = []
-
-
-def release_kmv_caches() -> int:
-    """Unpersist every sketch relation cached by kmv_set_ops; returns
-    how many were released (the release_fuzzy_caches discipline)."""
-    n = 0
-    while _KMV_CACHES:
-        try:
-            _KMV_CACHES.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
 
 def kmv_set_ops(
     df: DataFrame,
@@ -649,11 +607,11 @@ def kmv_set_ops(
     combine, then a WindowGroupLimit bottom-k heap below the group
     exchange — so each source contributes ONE k-value array. The
     pair stage self-joins the S-row sketch table (S = #sources,
-    dim-sized; PERSISTED before the self-join — the a<b pair
-    condition plans a BroadcastNestedLoopJoin whose two branches do
-    NOT canonicalize to a reusable exchange, so without the persist
-    the whole corpus-scan sketch build would execute twice;
-    release_kmv_caches() frees it), with one side broadcast. For web-scale S the pair stage is
+    dim-sized; lineage-cut by ckpt.checkpoint before the self-join —
+    the a<b pair condition plans a BroadcastNestedLoopJoin whose two
+    branches do NOT canonicalize to a reusable exchange, so without
+    the cut the whole corpus-scan sketch build would execute twice),
+    with one side broadcast. For web-scale S the pair stage is
     S^2/2 rows of O(k) arrays — band the pairs or prefilter on
     min-hash equality before calling; the sketches themselves stay
     mergeable either way. Rel. error ~ 1/sqrt(k) on union; Jaccard
@@ -664,13 +622,7 @@ def kmv_set_ops(
     """
     toks = df.select(
         F.col(group_col).alias("grp"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                        WS_CLASS),
-                lambda x: x != "",
-            )
-        ).alias("tok"),
+        F.explode(tokenize(text_col)).alias("tok"),
     )
     hashed = toks.select(
         "grp", order_hash(_kmv_mix(char_fold_hash(F.col("tok"))), seed).alias("hv")
@@ -681,10 +633,11 @@ def kmv_set_ops(
         dedup.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
     )
-    sk = kept.groupBy("grp").agg(
-        F.array_sort(F.collect_list("hv")).alias("sk")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _KMV_CACHES.append(sk)
+    sk = checkpoint(
+        kept.groupBy("grp").agg(
+            F.array_sort(F.collect_list("hv")).alias("sk")),
+        eager=False,
+    )
     a, b = sk.alias("a"), sk.alias("b")
     pairs = a.join(
         F.broadcast(b), F.col("a.grp") < F.col("b.grp"), "inner"
@@ -919,21 +872,6 @@ CMJ_WIDTH = 256      # tail sketch width
 CMJ_SIGN_SEED = 40   # order_hash members for the +-1 sign hashes
 CMJ_HEAVY = 64       # exact heavy-hitter keys per side
 
-_CMJ_CACHES: list = []
-
-
-def release_cmj_caches() -> int:
-    """Unpersist every key histogram cached by cm_join_size; returns
-    how many were released (the release_fuzzy_caches discipline)."""
-    n = 0
-    while _CMJ_CACHES:
-        try:
-            _CMJ_CACHES.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
 
 def cm_join_size(dfa: DataFrame, key_a: str, dfb: DataFrame, key_b: str,
                  depth: int = CM_DEPTH, width: int = CMJ_WIDTH,
@@ -964,29 +902,24 @@ def cm_join_size(dfa: DataFrame, key_a: str, dfb: DataFrame, key_b: str,
 
     Shapes: each side's key histogram is ONE combinable shuffle and
     feeds BOTH the heavy top-k (TakeOrderedAndProject) and the tail
-    sketch (anti-join against the broadcast heavy set) — persisted
-    via the registry (release_cmj_caches()) so the corpus aggregates
-    once. Integer keys pass the quadratic mix (_kmv_mix) before cell
-    and sign hashing.
+    sketch (anti-join against the broadcast heavy set) — lineage-cut
+    (ckpt.checkpoint) so the corpus aggregates once. Integer keys
+    pass the quadratic mix (_kmv_mix) before cell and sign hashing.
 
     Output, depth rows: (row_i:int, inner_prod:long signed TAIL
     product for that hash row, est:long = exact_heavy +
     clamped-tail-median, repeated — per-row products stay visible so
     the oracle verifies every row, not just the final estimate).
     """
-    from pyspark import StorageLevel
-
     spark = dfa.sparkSession
 
     def hist(df, key):
-        h = (
+        return checkpoint(
             df.where(F.col(key).isNotNull())
             .groupBy(F.col(key).alias("k"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .agg(F.count(F.lit(1)).alias("n")),
+            eager=False,
         )
-        _CMJ_CACHES.append(h)
-        return h
 
     ha, hb = hist(dfa, key_a), hist(dfb, key_b)
     heavy_keys = (

@@ -69,9 +69,9 @@ def test_token_budget_histogram_matches_direct_greedy(spark):
 
     # direct greedy recompute on the same signals
     from llogtail_spark.functions.text import dup_fraction_x10000
-    from llogtail_spark.operators.corpus import _tokens
+    from llogtail_spark.operators.dedup import tokenize
 
-    toks = _tokens(F.col("text"))
+    toks = tokenize("text")
     sig = df.select(
         "doc_id",
         (F.lit(10000) - dup_fraction_x10000(toks)).cast("long").alias("qscore"),
@@ -1134,9 +1134,7 @@ def test_kn_bigram_lm_matches_bruteforce(spark):
     random corpus."""
     import random
 
-    from llogtail_spark.operators.corpus import (
-        KN_SCALE, kn_bigram_lm, release_kn_caches,
-    )
+    from llogtail_spark.operators.corpus import KN_SCALE, kn_bigram_lm
 
     rng = random.Random(7)
     vocab = [f"w{i}" for i in range(12)]
@@ -1145,7 +1143,6 @@ def test_kn_bigram_lm_matches_bruteforce(spark):
     df = spark.createDataFrame(docs, "doc_id long, source string, text string")
     got = {(r["w1"], r["w2"]): (r["c2"], r["pkn_x12"])
            for r in kn_bigram_lm(df, top=1000).collect()}
-    release_kn_caches()
 
     c2, c1, nf, nc = {}, {}, {}, {}
     for _, _, text in docs:
@@ -1169,15 +1166,12 @@ def test_kn_bigram_lm_probabilities_sum_below_one(spark):
     """For every context w1 the discounted mass plus the full
     continuation share must keep sum_w2 P(w2|w1) <= 1 (+ rounding):
     checked by summing the x12 fixed-point values per context."""
-    from llogtail_spark.operators.corpus import (
-        KN_SCALE, kn_bigram_lm, release_kn_caches,
-    )
+    from llogtail_spark.operators.corpus import KN_SCALE, kn_bigram_lm
 
     docs = [(1, "s", "a b a c a b b c a a"),
             (2, "s", "b a c c b a b a c b")]
     df = spark.createDataFrame(docs, "doc_id long, source string, text string")
     rows = kn_bigram_lm(df, top=1000).collect()
-    release_kn_caches()
     per_ctx = {}
     for r in rows:
         per_ctx[r["w1"]] = per_ctx.get(r["w1"], 0) + r["pkn_x12"]
@@ -1197,9 +1191,7 @@ def test_doc_perplexity_template_scores_lower(spark):
     """A document made of the corpus's dominant repeated bigram must
     score LOWER avg nll (more predictable) than a document of rare
     bigrams; identical documents score identically."""
-    from llogtail_spark.operators.corpus import (
-        doc_perplexity, release_kn_caches,
-    )
+    from llogtail_spark.operators.corpus import doc_perplexity
 
     common = "a b " * 30                       # bigram (a,b) dominates
     rare = " ".join(f"r{i}" for i in range(40))
@@ -1208,7 +1200,6 @@ def test_doc_perplexity_template_scores_lower(spark):
     docs += [(10 + i, "s", "a b c d e f g h") for i in range(5)]
     df = spark.createDataFrame(docs, "doc_id long, source string, text string")
     out = {r["doc_id"]: r for r in doc_perplexity(df).collect()}
-    release_kn_caches()
     assert out[1]["avg_nll_e8"] == out[2]["avg_nll_e8"]
     assert out[1]["avg_nll_e8"] < out[3]["avg_nll_e8"]
     # n_bi = token count - 1 per doc
@@ -1219,9 +1210,7 @@ def test_doc_perplexity_template_scores_lower(spark):
 def test_doc_perplexity_every_doc_covered(spark):
     """Self-trained LM: every document with >= 2 tokens gets a row
     (no bigram can be missing from its own training set)."""
-    from llogtail_spark.operators.corpus import (
-        doc_perplexity, release_kn_caches,
-    )
+    from llogtail_spark.operators.corpus import doc_perplexity
 
     docs = [(i, "s", " ".join(f"w{(i * 3 + j) % 17}" for j in range(10)))
             for i in range(30)]
@@ -1229,7 +1218,6 @@ def test_doc_perplexity_every_doc_covered(spark):
     docs.append((100, "s", None))           # NULL -> dropped
     df = spark.createDataFrame(docs, "doc_id long, source string, text string")
     got = {r["doc_id"] for r in doc_perplexity(df).collect()}
-    release_kn_caches()
     assert got == set(range(30))
 
 
@@ -1264,9 +1252,7 @@ def test_source_kl_matrix_identical_and_divergent(spark):
     ~1 eighth-bit per normalized unit); a source with disjoint
     vocabulary reads strongly positive KL in both directions, and
     KL is asymmetric between a narrow and a broad source."""
-    from llogtail_spark.operators.corpus import (
-        release_kl_caches, source_kl_matrix,
-    )
+    from llogtail_spark.operators.corpus import source_kl_matrix
 
     same = "alpha beta gamma delta " * 20
     rows = [(1, "a", same), (2, "b", same),
@@ -1275,7 +1261,6 @@ def test_source_kl_matrix_identical_and_divergent(spark):
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
     out = {(r["src_a"], r["src_b"]): r
            for r in source_kl_matrix(df).collect()}
-    release_kl_caches()
     ab = out[("a", "b")]
     # identical: |kl| <= ~2 eighth-bits per unit mass
     assert abs(ab["kl_num_e8"]) <= 2 * ab["n_a"], ab
@@ -1344,7 +1329,7 @@ def test_char_fold_with_a_base64_token_matches_per_word_fold():
     import numpy as np
 
     from llogtail_spark.functions.portable_hash import MOD, MULT
-    from llogtail_spark.operators.corpus import _char_fold_np
+    from llogtail_spark.functions.portable_hash import char_fold_np
 
     def fold(w):
         h = 0
@@ -1354,7 +1339,7 @@ def test_char_fold_with_a_base64_token_matches_per_word_fold():
 
     blob = base64.b64encode(np.random.default_rng(3).bytes(48_000)).decode()
     words = ["foo", "", "café", blob, "naïve", "x" * 40, "0", blob[:7]]
-    got = _char_fold_np(words)
+    got = char_fold_np(words)
     assert got.dtype == np.int64
     assert got.tolist() == [fold(w) for w in words]
-    assert _char_fold_np([]).tolist() == []
+    assert char_fold_np([]).tolist() == []

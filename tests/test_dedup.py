@@ -607,3 +607,74 @@ def test_fuzzy_join_plan_no_cartesian_no_python(spark):
     assert "CartesianProduct" not in plan
     assert "NestedLoop" not in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+# words for the numpy char fold: non-ASCII (BMP) letters, the empty
+# word and one 20,000-char token among short ones
+FOLD_WORDS = ["", "a", "café", "naïve", "Ωmega", "日本語", "x" * 20_000,
+              "ab" * 7, "", "zz9"]
+
+
+def test_char_fold_np_equals_char_fold_hash(spark):
+    """The Arrow UDFs' numpy fold and the Catalyst char_fold_hash
+    agree word for word."""
+    from llogtail_spark.functions.portable_hash import (
+        char_fold_hash, char_fold_np,
+    )
+
+    df = spark.createDataFrame([(i, w) for i, w in enumerate(FOLD_WORDS)],
+                               "i int, w string")
+    got = [r["h"] for r in
+           df.select("i", char_fold_hash("w").alias("h")).orderBy("i").collect()]
+    assert char_fold_np(FOLD_WORDS).tolist() == got
+
+
+def _band_keys_reference(text, num_hashes, bands, shingle_n):
+    """Per-doc pure-Python band keys, straight from the portable
+    family's recurrences (functions/portable_hash.py)."""
+    import re
+
+    from llogtail_spark.functions import portable_hash as ph
+
+    M, BM = ph.MOD, ph.BAND_MULT
+    words = re.sub("[ \t\n\r\f\x0b]+", " ", (text or "").lower()).strip(" ").split(" ")
+
+    def fold(w):
+        h = 0
+        for c in w:
+            h = (h * ph.MULT + ord(c)) % M
+        return h
+
+    P = shingle_n - 1
+    hw = [fold(w) for w in words] + [0] * P
+    shingles = []
+    for i in range(max(len(words) - P, 1)):
+        v = 0
+        for x in hw[i:i + shingle_n]:
+            v = (v * BM + x) % M
+        shingles.append(v)
+    sig = [min((v * a + b) % M for v in shingles)
+           for a, b in map(ph.seed_mults, range(num_hashes))]
+    rpb = num_hashes // bands
+    keys = []
+    for b in range(bands):
+        kv = 0
+        for r in range(rpb):
+            kv = (kv * BM + sig[b * rpb + r]) % M
+        keys.append(kv)
+    return keys
+
+
+def test_portable_band_keys_with_long_token_null_and_empty(spark):
+    """The portable band keys equal the per-doc reference on a batch
+    holding a 20,000-char token, a NULL text and "" beside ordinary
+    texts."""
+    from llogtail_spark.operators.dedup import _portable_band_keys_udf
+
+    texts = [BASE, "word " + "y" * 20_000 + " tail end", None, "",
+             "Café  naïve\tΩmega", "one", "two words"]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    udf = _portable_band_keys_udf(32, 8, 3)
+    got = [list(r["k"]) for r in
+           df.select("i", udf("text").alias("k")).orderBy("i").collect()]
+    assert got == [_band_keys_reference(t, 32, 8, 3) for t in texts]

@@ -838,9 +838,7 @@ def test_round4_ops_match_duckdb_on_random_texts(spark):
     from llogtail_spark.operators.corpus import (
         dup_token_spans, dup_token_spans_sql, seq_packing, seq_packing_sql,
     )
-    from llogtail_spark.operators.dedup import (
-        fuzzy_join, fuzzy_join_sql, release_fuzzy_caches,
-    )
+    from llogtail_spark.operators.dedup import fuzzy_join, fuzzy_join_sql
     from llogtail_spark.operators.sketches import (
         hll_distinct, hll_distinct_sql,
     )
@@ -878,14 +876,12 @@ def test_round4_ops_match_duckdb_on_random_texts(spark):
         got = sorted(map(tuple, df.collect()))
         want = sorted(map(tuple, con.execute(sql).fetchall()))
         assert got == want, name
-    release_fuzzy_caches()
 
     # the planted structures must actually be found
     spans = {r["doc_id"] for r in dup_token_spans(sdf).collect()}
     assert {301, 302, 303} <= spans  # later copies of the phrase
     fz = {(r["doc_a"], r["doc_b"]): r["dist"]
           for r in fuzzy_join(sdf).collect()}
-    release_fuzzy_caches()
     assert fz[(400, 401)] == 1 and fz[(400, 402)] == 1
 
 
@@ -900,12 +896,9 @@ def test_late_round4_text_ops_match_duckdb_on_random_texts(spark):
     )
     from llogtail_spark.operators.corpus import (
         doc_perplexity, doc_perplexity_sql, kn_bigram_lm, kn_bigram_lm_sql,
-        release_kl_caches, release_kn_caches, source_kl_matrix,
-        source_kl_matrix_sql,
+        source_kl_matrix, source_kl_matrix_sql,
     )
-    from llogtail_spark.operators.sketches import (
-        kmv_set_ops, kmv_set_ops_sql, release_kmv_caches,
-    )
+    from llogtail_spark.operators.sketches import kmv_set_ops, kmv_set_ops_sql
 
     rng = np.random.default_rng(SEED + 7)
     vocab = ["foo", "BAR", "baz,", "q-x", "the", "a!", "zz9", "..", "&",
@@ -937,9 +930,6 @@ def test_late_round4_text_ops_match_duckdb_on_random_texts(spark):
         got = sorted(map(tuple, df.collect()))
         want = sorted(map(tuple, con.execute(sql).fetchall()))
         assert got == want, name
-    release_kn_caches()
-    release_kl_caches()
-    release_kmv_caches()
 
 
 def test_late_round4_event_ops_match_duckdb_on_random_events(spark):

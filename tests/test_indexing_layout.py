@@ -173,37 +173,68 @@ def test_pagerank_reliable_checkpoint_knob(spark, tmp_path):
     assert sc.getCheckpointDir() is None
 
 
-def test_triangle_and_fuzzy_reliable_checkpoint_knob(spark, tmp_path):
-    """VERDICT r04 #8: the remaining lineage pins — triangle_counts'
-    two eager cuts and fuzzy_join's persisted prefix relation — honor
-    sc.setCheckpointDir like pagerank does: results identical, and
-    reliable checkpoint files appear under the dir."""
+def _pinning_cases(spark):
+    """name -> thunk building one frame per operator that pins an
+    intermediate read by two branches of its plan."""
+    from llogtail_spark.operators.corpus import (
+        doc_perplexity, kn_bigram_lm, source_kl_matrix,
+    )
     from llogtail_spark.operators.dedup import fuzzy_join
     from llogtail_spark.operators.indexing import triangle_counts
+    from llogtail_spark.operators.sketches import cm_join_size, kmv_set_ops
 
     edges = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (3, 4)], "u long, v long")
     docs = spark.createDataFrame(
-        [("a", "the quick brown fox"), ("b", "the quick brown fax"),
-         ("c", "completely different text")],
-        "doc_id string, text string")
-    base_tri = sorted(map(tuple, triangle_counts(edges).collect()))
-    base_fz = sorted(map(tuple, fuzzy_join(docs).collect()))
-    assert base_tri and base_fz  # planted triangle + planted near-pair
+        [("a", "s1", "the quick brown fox"), ("b", "s1", "the quick brown fax"),
+         ("c", "s2", "completely different text"),
+         ("d", "s3", "the brown text is quick")],
+        "doc_id string, source string, text string")
+    keys = spark.createDataFrame([(i % 7,) for i in range(50)], "k long")
+    return {
+        "triangle_counts": lambda: triangle_counts(edges),
+        "fuzzy_join": lambda: fuzzy_join(docs),
+        "kn_bigram_lm": lambda: kn_bigram_lm(docs),
+        "doc_perplexity": lambda: doc_perplexity(docs),
+        "kmv_set_ops": lambda: kmv_set_ops(docs),
+        "cm_join_size": lambda: cm_join_size(keys, "k", keys, "k"),
+        "source_kl_matrix": lambda: source_kl_matrix(docs),
+    }
+
+
+def test_triangle_and_fuzzy_reliable_checkpoint_knob(spark, tmp_path):
+    """VERDICT r04 #8: every lineage pin — triangle_counts' two eager
+    cuts, fuzzy_join's prefix relation and the sketch/LM operators'
+    shared intermediates — honors sc.setCheckpointDir like pagerank
+    does: results identical, and reliable checkpoint files appear
+    under the dir for each operator."""
+    cases = _pinning_cases(spark)
+    base = {n: sorted(map(tuple, f().collect())) for n, f in cases.items()}
+    assert base["triangle_counts"] and base["fuzzy_join"]  # planted
 
     sc = spark.sparkContext
-    ckdir = tmp_path / "reliable-ckpt"
-    sc.setCheckpointDir(str(ckdir))
     try:
-        got_tri = sorted(map(tuple, triangle_counts(edges).collect()))
-        got_fz = sorted(map(tuple, fuzzy_join(docs).collect()))
-        assert got_tri == base_tri
-        assert got_fz == base_fz
-        rdd_files = [p for p in ckdir.rglob("*") if p.is_file()]
-        assert rdd_files, "no reliable checkpoint files were written"
+        for n, f in cases.items():
+            ckdir = tmp_path / n
+            sc.setCheckpointDir(str(ckdir))
+            assert sorted(map(tuple, f().collect())) == base[n], n
+            rdd_files = [p for p in ckdir.rglob("*") if p.is_file()]
+            assert rdd_files, f"{n}: no reliable checkpoint files were written"
     finally:
         sc.setCheckpointDir(None)
     assert sc.getCheckpointDir() is None
+
+
+def test_pinning_operators_register_nothing_with_the_cache_manager(spark):
+    """The pins are lineage cuts owned by the returned frame: running
+    each operator leaves Spark's CacheManager empty, so nothing stays
+    pinned for the session's life and no later query is matched
+    against a stale cached plan."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # other modules' fixtures may cache
+    for n, f in _pinning_cases(spark).items():
+        f().collect()
+        assert cm.isEmpty(), n
 
 
 # ------------------------------------------------------------- SCD-2

@@ -269,23 +269,23 @@ def test_salted_join_rejects_outer(skewed):
 # ---------------------------------------------------------------------------
 
 
-def test_bloom_prune_broadcast_lifetime_release(spark):
-    """ADVICE r03: each bloom_prune_probe construction registers its
-    bitset broadcast; release_bloom_broadcasts() destroys and clears
-    them all, so rebuild loops (bench reps) don't accumulate dead
-    executor-side bitsets."""
-    from llogtail_spark.operators import joins as J
+def test_bloom_prune_frame_keeps_its_broadcast_across_gc(spark):
+    """The pruned frame's plan holds the probe UDF, and the UDF holds
+    the bitset broadcast: with no registry keeping a Python reference,
+    a full Python and JVM garbage collection leaves the frame's
+    broadcast alive, so it counts the same rows before and after."""
+    import gc
 
-    J.release_bloom_broadcasts()  # clean slate from earlier tests
-    probe = spark.createDataFrame([(1,), (2,)], "k long")
-    build = spark.createDataFrame([(1,)], "bk long")
-    df = J.bloom_prune_probe(probe, build, "k", "bk")
-    assert len(J._LIVE_BLOOM_BROADCASTS) == 1
-    assert df.count() >= 1  # usable while live
-    J.bloom_prune_probe(probe, build, "k", "bk")
-    assert len(J._LIVE_BLOOM_BROADCASTS) == 2
-    assert J.release_bloom_broadcasts() == 2
-    assert J._LIVE_BLOOM_BROADCASTS == []
+    from llogtail_spark.operators.joins import bloom_prune_probe
+
+    probe = spark.range(0, 4000).withColumnRenamed("id", "k")
+    build = spark.range(0, 4000, 3).withColumnRenamed("id", "bk")
+    df = bloom_prune_probe(probe, build, "k", "bk")
+    before = df.count()
+    assert before >= 1334  # no false negatives: every k % 3 == 0 survives
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    assert df.count() == before
 
 
 def test_bloom_prune_no_false_negatives_random_keys(spark):

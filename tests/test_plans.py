@@ -512,10 +512,7 @@ def test_late_round4_plan_shapes(spark):
     events = spark.read.parquet(f"{sf}/events.parquet")
     li = spark.read.parquet(f"{sf}/lineitem.parquet")
 
-    from llogtail_spark.operators.corpus import (
-        doc_perplexity, release_kl_caches, release_kn_caches,
-        source_kl_matrix,
-    )
+    from llogtail_spark.operators.corpus import doc_perplexity, source_kl_matrix
     from llogtail_spark.operators.indexing import copurchase_lift, rrf_fuse
     from llogtail_spark.operators.sketches import hll_sliding_dau
     from llogtail_spark.operators.telemetry import (
@@ -526,7 +523,7 @@ def test_late_round4_plan_shapes(spark):
         # sliding HLL: registers broadcast to the day x bucket grid;
         # never a shuffled join against anything event-sized
         "hll_sliding_dau": hll_sliding_dau(events),
-        # LM joins all hash/broadcast; the persisted bigram table
+        # LM joins all hash/broadcast; the lineage-cut bigram table
         # keeps the corpus scan single
         "doc_perplexity": doc_perplexity(docs),
         # candidate set broadcasts; pair counting is the co-keyed
@@ -549,5 +546,3 @@ def test_late_round4_plan_shapes(spark):
     # sliding HLL: the only joins are broadcast (grid <- registers)
     p = _plan(cases["hll_sliding_dau"])
     assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p
-    release_kn_caches()
-    release_kl_caches()

@@ -29,10 +29,6 @@ KEPT = {
     # the live tail: llogtail's poller loop, started by the application
     # that embeds the package, not by the CLI
     "pipeline.follow",
-    # cache releases for a long-lived session
-    "operators.dedup.release_fuzzy_caches", "operators.joins.release_bloom_broadcasts",
-    "operators.corpus.release_kn_caches", "operators.corpus.release_kl_caches",
-    "operators.sketches.release_kmv_caches", "operators.sketches.release_cmj_caches",
     # test references and fixtures
     "operators.aggregate.sink_aggregates", "operators.aggregate.salted_sink_aggregates",
     "operators.dedup.embedding_near_dup_pairs", "operators.multimodal.synth_media",

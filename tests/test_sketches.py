@@ -474,19 +474,18 @@ def test_cm_join_size_disjoint_keys(spark):
 def test_kmv_set_ops_sketch_built_once(spark):
     """The a<b pair condition plans a BroadcastNestedLoopJoin whose
     branches do not canonicalize to a reusable exchange — without the
-    persist the corpus-scan sketch build would execute TWICE. Pin:
-    both pair branches read the cached sketch relation."""
-    from llogtail_spark.operators.sketches import (
-        kmv_set_ops, release_kmv_caches,
-    )
+    lineage cut the corpus-scan sketch build would execute TWICE. Pin:
+    both pair branches scan the cut sketch relation, and the sketch
+    aggregate is not in the plan at all."""
+    from llogtail_spark.operators.sketches import kmv_set_ops
 
     rows = [(i, f"s{i % 3}", " ".join(f"w{j}" for j in range(i % 20)))
             for i in range(60)]
     df = kmv_set_ops(_docs(spark, rows))
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("InMemoryTableScan") == 2, plan
+    assert plan.count("Scan ExistingRDD") == 2, plan
+    assert plan.count("collect_list") == 0, plan
     assert df.count() == 3
-    assert release_kmv_caches() >= 1
 
 
 def test_cm_join_size_tail_engages_and_estimates(spark):
@@ -494,9 +493,7 @@ def test_cm_join_size_tail_engages_and_estimates(spark):
     the mass: the hybrid estimate must land within the tail-variance
     envelope of the true join size, far from the count-min collision
     floor."""
-    from llogtail_spark.operators.sketches import (
-        cm_join_size, release_cmj_caches,
-    )
+    from llogtail_spark.operators.sketches import cm_join_size
 
     # 2000 distinct keys per side, uniform counts (no heavy head):
     # true join = overlap(1000 keys) * 5 * 3
@@ -504,7 +501,6 @@ def test_cm_join_size_tail_engages_and_estimates(spark):
     b = spark.createDataFrame([(1000 + (i % 2000),) for i in range(6000)],
                               "j long")
     rows = cm_join_size(a, "k", b, "j").collect()
-    release_cmj_caches()
     true = 1000 * 5 * 3
     est = rows[0]["est"]
     # exact-heavy covers 128 keys; the remaining ~87% of the join

@@ -233,12 +233,12 @@ SHOWCASE = [
      "union is a RANGE-frame window MAX over the dim-sized register "
      "grid — O(days x 64) window work regardless of user count."),
     ("doc_perplexity",
-     "Bigram-LM perplexity filter: the persisted bigram-type table "
+     "Bigram-LM perplexity filter: the lineage-cut bigram-type table "
      "feeds the LM statistics and the per-doc join; per-doc "
      "multiplicities collapse BEFORE the LM join (types, not "
      "instances cross the wire); all token-keyed and combinable."),
     ("cm_join_size",
-     "Skew-aware join-size estimation: ONE persisted key histogram "
+     "Skew-aware join-size estimation: ONE lineage-cut key histogram "
      "per side feeds both the exact heavy top-k "
      "(TakeOrderedAndProject) and the signed AGMS tail sketch "
      "(anti-join vs the broadcast heavy set); the estimate "
