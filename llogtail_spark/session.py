@@ -2,10 +2,12 @@
 
 `get_spark` sets only what the package relies on: the Arrow UDF batch
 bound, dynamic partition overwrite and the v1 committer (idempotent,
-non-duplicating per-partition commits), string partition values, UTC,
-and a fixed pre-touched heap. Everything else, AQE, the runtime bloom
-filter, the parquet codec and scan split sizing
-(min(128 MB, bytes per core)) among it, is Spark's default.
+non-duplicating per-partition commits), string partition values, the
+bound on concurrent dynamic-partition writers, UTC, a codegen cache
+that holds the pipelines' generated classes, and a fixed pre-touched
+heap. Everything else, AQE, the runtime bloom filter, the parquet codec
+and scan split sizing (min(128 MB, bytes per core)) among it, is
+Spark's default.
 """
 
 from __future__ import annotations
@@ -13,6 +15,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Entries of the JVM-wide LRU cache of compiled whole-stage classes
+# (spark.sql.codegen.cache.maxEntries, a static conf; Spark's default
+# is 100). One corpus_funnel run needs about 153 distinct classes and
+# one bulk_fresh run 29, so at 100 every corpus run recompiled 137-139
+# of them with Janino (9.6% of the JVM's samples in a JFR profile of
+# one run). At 1000 no timed run of either workload compiles a class.
+# Generated bytecode averages about 2.3 KB per class: the metaspace
+# after set-up and 2 corpus runs was 164 MB, against 166 MB at 100.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -72,10 +84,16 @@ def get_spark(
         # name, input-file basename); inference would read a numeric
         # basename back as int/date and break manifest stat lookups.
         .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-        # dynamic-partition writes otherwise SORT each task's rows by
-        # partition key before writing; with <=8 open writers per task
-        # (3 sinks x couple parts) concurrent writers skip the sort.
+        # a dynamic-partition write task keeps up to 8 (sink, part)
+        # writers open at once; when a 9th key arrives it sorts the
+        # task's remaining rows by key instead. Each of bulk_fresh's 4
+        # write tasks reads 8 parts, so it meets up to 24 keys and sorts
+        # the rest of its rows (UnsafeExternalRowSorter.sort under
+        # DynamicPartitionDataConcurrentWriter in JFR). Sorting every
+        # row by key before the write (the planned-write sort) was
+        # measured and rejected.
         .config("spark.sql.maxConcurrentOutputFileWriters", "8")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", mem)

@@ -55,6 +55,16 @@ def jobs_in(spark):
     return count
 
 
+@pytest.fixture
+def compiled_classes(spark):
+    """compiled_classes(): how many generated classes the JVM has
+    compiled so far (Spark's CodegenMetrics). A class found in the
+    session's codegen cache is not compiled again."""
+    metric = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+              .METRIC_COMPILATION_TIME())
+    return lambda: metric.getCount()
+
+
 @pytest.fixture(scope="session")
 def data_dir(tmp_path_factory) -> str:
     d = str(tmp_path_factory.mktemp("fixture"))

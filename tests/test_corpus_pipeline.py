@@ -174,6 +174,19 @@ def test_the_funnel_plans_no_python_eval(spark, corpus_input, tmp_path,
     assert sum("EvalPython" in p for p in plans) == n_evals
 
 
+def test_a_second_run_compiles_no_generated_class(
+        spark, corpus_input, tmp_path, compiled_classes):
+    """A funnel run needs about 150 generated classes. The session's
+    codegen cache holds them all, so a second run over the same input,
+    in a fresh workdir, compiles none (with Spark's 100-entry cache
+    every run recompiled most of them)."""
+    run_corpus_pipeline(spark, _conf(corpus_input, str(tmp_path / "a")))
+    before = compiled_classes()
+    res = run_corpus_pipeline(spark, _conf(corpus_input, str(tmp_path / "b")))
+    assert res.stages_run == list(CORPUS_STAGES)
+    assert compiled_classes() == before
+
+
 def test_params_crc_is_pinned():
     """Stage params fingerprints are stored in every stage manifest: a
     change to their values would recompute every committed chain."""

@@ -108,6 +108,18 @@ def test_a_fresh_run_starts_no_schema_inference_job(
     assert jobs[0] <= most, jobs
 
 
+def test_a_second_run_compiles_no_generated_class(
+        spark, data_dir, tmp_path, compiled_classes):
+    """A log run's generated classes stay in the session's codegen
+    cache: a second run over the same input, in a fresh workdir,
+    compiles none."""
+    run_pipeline(spark, make_conf(data_dir, tmp_path / "a"))
+    before = compiled_classes()
+    res = run_pipeline(spark, make_conf(data_dir, tmp_path / "b"))
+    assert all(len(v) == 6 for v in res.processed.values())
+    assert compiled_classes() == before
+
+
 class Boom(Exception):
     pass
 
